@@ -188,7 +188,7 @@ object Merge {
     * the row, while a kept tombstone out-ranks it by seq. Read the live
     * view through [[cdcView]]; a retention pass (drop tombstones older
     * than a low-watermark seq once all producers passed it) is the
-    * compaction analog and composes with [[compact]].
+    * compaction analog and composes with [[Ledger.compact]].
     *
     * Contract: (key, seq) pairs are unique — the CDC source's ordering
     * guarantee (a log with two ops at the same key+seq has no defined
@@ -239,7 +239,7 @@ object Merge {
     * contract, proven as a MergeSpec property: for every batch whose rows
     * all carry seq ≥ watermark, the live view after applying to the
     * retained table equals the live view after applying to the full one.
-    * Compose with [[compact]] for the file-level rewrite. */
+    * Compose with [[Ledger.compact]] for the file-level rewrite. */
   def cdcRetain(table: DataFrame, seqCol: String, watermarkSeq: Long,
                 opCol: String = "op"): DataFrame =
     table.filter(!(col(opCol) === "D" && col(seqCol) < watermarkSeq))
@@ -300,9 +300,6 @@ object Merge {
 
   private def mergedWrite(incoming: DataFrame, key: String, path: String,
       merge: (DataFrame, DataFrame, String) => DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      incoming.sparkSession.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path)
     val incomingTypes =
       incoming.schema.fields.map(f => f.name -> f.dataType).toMap
     // Guard BOTH branches (ADVICE r7): a keyless incoming batch on a
@@ -313,7 +310,7 @@ object Merge {
       s"incoming batch has no merge-key column '$key' " +
       s"(incoming columns: ${incoming.columns.mkString(", ")})")
     val existing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
+      if (exists(incoming.sparkSession, path)) {
         // Read the sink under its OWN footer schema, never a forced
         // incoming.schema (ADVICE r5): forcing would silently null-fill a
         // renamed/dropped on-disk column and the first-wins merge would
@@ -372,13 +369,15 @@ object Merge {
     * append can drop the append with the old generation; production
     * placement is one maintenance owner per artifact, the same way the
     * streaming sinks serialize through their checkpoint. */
-  def writeAndSwap(df: DataFrame, path: String, token: String): Unit = {
+  def writeAndSwap(df: DataFrame, path: String, token: String,
+                   partitionBy: Option[String] = None): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     recoverSwap(fs, path)
     val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp-$token")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    val w = df.write.mode("overwrite")
+    partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
     if (fs.exists(target) && !fs.delete(target, true))
       throw new java.io.IOException(s"could not delete old sink $target")
     if (!fs.rename(tmp, target))
@@ -409,14 +408,8 @@ object Merge {
     * ledger (e.g. a collapsed count view) key their path on this so any
     * later append/retract to the ledger changes the key and forces a
     * rebuild instead of serving a stale view. */
-  def batchTag(s: org.apache.spark.sql.SparkSession, path: String): String = {
-    val mdir = new org.apache.hadoop.fs.Path(s"$path.batches")
-    val fs = mdir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ids =
-      if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).sorted
-      else Array.empty[String]
-    ids.mkString("_")
-  }
+  def batchTag(s: org.apache.spark.sql.SparkSession, path: String): String =
+    markedBatches(s, path).sorted.mkString("_")
 
   /** Process-lifetime memo of artifact SCHEMAS by path (r21, guide §1.2
     * fixed-cost audit): `read.parquet` without a schema runs a footer-
@@ -456,108 +449,63 @@ object Merge {
     * invalidates rather than silently serving stale bytes. */
   def materialize(s: org.apache.spark.sql.SparkSession, path: String,
                   df: => DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path) // adopt a crashed build first
-    if (!fs.exists(p)) recordBuild { writeAndSwap(df, path, "build") }
+    // adopt a crashed build first
+    if (!exists(s, path)) recordBuild { writeAndSwap(df, path, "build") }
     readArtifact(s, path)
   }
 
-  /** Offline COMPACTION of an append-maintained parquet directory — the
-    * missing half of append-only index maintenance (VERDICT r10 item 1):
-    * every appended batch lands as new small files, and an unbounded
-    * small-file population is the classic lake killer (listing cost,
-    * per-file open overhead, tiny row groups defeating both pruning and
-    * vectorized reads). This rewrites the directory into
-    * ceil(bytes / targetBytes) size-targeted files through the same
-    * crash-safe [[writeAndSwap]] the build used: readers see the old
-    * generation until the atomic rename, and a death mid-compaction
-    * leaves either the old directory or an adoptable orphan — never a
-    * half-compacted mix.
-    *
-    * ONE shuffle, two jobs done by it: rows hash-cluster on `clusterKey`
-    * (the probe join key, so the compacted files are probe-clustered),
-    * and because identical rows carry identical keys they land in the
-    * same partition, where the full-row dedup aggregate runs WITHOUT a
-    * second exchange (HashPartitioning on a subset of the grouping
-    * columns satisfies the aggregate's clustered distribution — the
-    * replayed-append duplicates q82's idempotence argument tolerates are
-    * garbage-collected here for free). Single-writer contract, like
-    * every maintenance op in this family.
-    *
-    * Returns (filesBefore, filesAfter) for the caller's telemetry;
-    * PrefixJaccardSpec proves probe-equality across a
-    * compaction and measures the file-count reduction. */
-  def compact(s: org.apache.spark.sql.SparkSession, path: String,
-              clusterKey: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.spark.sql.functions.col
+  /** Target bytes per file for every compaction: a rewrite lands in
+    * ceil(bytes / TargetFileBytes) files. */
+  private[etl] val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** The data files of an artifact directory (recursive, so partitioned
+    * layouts count too): everything but `_SUCCESS`-style and hidden
+    * `.crc` entries. The one listing every compaction reports with. */
+  private[etl] def dataFiles(s: org.apache.spark.sql.SparkSession,
+      path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path)
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    if (fs.exists(p)) {
       val it = fs.listFiles(p, /* recursive = */ true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
       while (it.hasNext) {
         val st = it.next()
         val n = st.getPath.getName
         if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) b += st
       }
-      b.result()
     }
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val compacted = s.read.parquet(path)
-      .repartition(nFiles, col(clusterKey))
-      .dropDuplicates()
-    writeAndSwap(compacted, path, "compact")
-    (before.size, dataFiles().size)
+    b.result()
   }
 
-  /** RETRACTION-AWARE [[compact]] — one copy of the physical-takedown
-    * contract shared by the row-grain ledger families (BM25 postings on
-    * term, phash ledger on hash, audio-fp ledger on fp): rows whose
-    * `keyCol` is tombstoned in `delPath` VANISH from the parquet (the
-    * takedown completing on disk — until this runs, the probes'
-    * anti-join masks them), replay duplicates GC'd by the same full-row
-    * dedup, output clustered on the probe's join key. The tombstone set
-    * is retention-bounded (O(deleted), broadcast). Count ledgers net
-    * instead of mask — their drop lives in the per-family
-    * `compact*LedgerNet`; the partitioned IVF postings keep their own
-    * layout-preserving variant. */
-  def compactRetract(s: org.apache.spark.sql.SparkSession, path: String,
-      delPath: String, keyCol: String, clusterKey: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+  /** Whether the swap-managed artifact at `path` exists, after adopting
+    * a crashed swap's orphan ([[recoverSwap]]). Every read-modify-swap
+    * asks this BEFORE reading its existing generation — asking the raw
+    * filesystem instead would bootstrap from empty over an adoptable
+    * orphan and drop the accumulated history (ADVICE r4). */
+  def exists(s: org.apache.spark.sql.SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     recoverSwap(fs, path)
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) b += st
-      }
-      b.result()
-    }
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    // repartition BEFORE the full-row dedup, [[compact]]'s order: the
-    // clusterKey hash partitioning is a subset of the distinct's
-    // all-column clustering, so the dedup aggregates in-partition — ONE
-    // exchange of the surviving ledger, and the written files keep both
-    // the nFiles budget and the probe-key clustering (dedup-first paid a
-    // second full exchange and let the all-column shuffle dictate layout)
-    val compacted = s.read.parquet(path)
-      .join(broadcast(s.read.parquet(delPath)
-        .select(col(keyCol)).distinct()), Seq(keyCol), "left_anti")
-      .repartition(nFiles, col(clusterKey))
-      .dropDuplicates()
-    writeAndSwap(compacted, path, "rcompact")
-    (before.size, dataFiles().size)
+    fs.exists(p)
+  }
+
+  /** The batch ids with a commit marker (`<path>.batches/<id>`). */
+  def markedBatches(s: org.apache.spark.sql.SparkSession,
+                    path: String): Seq[String] = {
+    val mdir = new org.apache.hadoop.fs.Path(s"$path.batches")
+    val fs = mdir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).toSeq
+    else Nil
+  }
+
+  /** Stamp batch `id`'s commit marker — strictly AFTER its data landed
+    * (see [[foldMissingBatches]] for the crash argument). */
+  def markBatch(s: org.apache.spark.sql.SparkSession, path: String,
+                id: String): Unit = {
+    val mdir = new org.apache.hadoop.fs.Path(s"$path.batches")
+    val fs = mdir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(mdir)
+    fs.create(new org.apache.hadoop.fs.Path(mdir, id), true).close()
   }
 
   /** If `path` is missing but a `$path.tmp-*` orphan exists, a previous
@@ -630,25 +578,19 @@ object Merge {
     * ids appended by THIS call. */
   def foldMissingBatches(s: org.apache.spark.sql.SparkSession, path: String,
       batches: Seq[(String, () => Unit)]): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, path)
     val mdir = new org.apache.hadoop.fs.Path(s"$path.batches")
+    val fs = mdir.getFileSystem(s.sparkContext.hadoopConfiguration)
     // Markers are only meaningful while their ledger exists: if the data
     // directory was deleted/retired but the sibling marker dir survived,
     // trusting the markers would skip every re-append and downstream
     // readers would throw on the missing path (ADVICE r18). A vanished
     // ledger drops its stale markers and rebuilds from scratch.
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)) && fs.exists(mdir))
-      fs.delete(mdir, true)
-    val have: Set[String] =
-      if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).toSet
-      else Set.empty
+    if (!exists(s, path) && fs.exists(mdir)) fs.delete(mdir, true)
+    val have = markedBatches(s, path).toSet
     val todo = batches.filterNot(b => have(b._1))
     todo.foreach { case (id, append) =>
       recordBuild { append() } // first-touch ledger builds are attributable
-      fs.mkdirs(mdir)
-      fs.create(new org.apache.hadoop.fs.Path(mdir, id), true).close()
+      markBatch(s, path, id)
     }
     todo.map(_._1)
   }

@@ -439,42 +439,31 @@ object Media {
     * Replayed appends re-derive byte-identical rows (the hash is a pure
     * function of the payload) and the reader's full-row dedup absorbs
     * them; compaction is the shared hash-clustered rewrite. */
+  val PhashLedger = graft.etl.Ledger(clusterKey = "hash_hi")
+
+  /** A batch's ledger rows: [[phashPerDoc]] of its doc ids. */
   private[graft] def appendPhashLedger(ledgerPath: String,
-      ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath) // adopt a crashed compaction
-    phashPerDoc(ids).withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+      ids: DataFrame, batchId: String): Unit =
+    PhashLedger.append(ledgerPath, phashPerDoc(ids), batchId)
 
-  /** The ledger in [[electPhashClusters]]'s shape: full-row dedup absorbs
-    * replayed appends (rows are a pure function of the payload). */
-  private[graft] def readPhashLedger(s: SparkSession,
-                                          ledgerPath: String): DataFrame =
-    s.read.parquet(ledgerPath).dropDuplicates()
-      .select(col("doc_id"), col("n_variants"), col("n_doc_hashes"),
-        col("hash_hi"), col("hash_lo"))
-
-  /** Hash-clustered ledger compaction — the standard lifecycle close. */
-  def compactPhashLedger(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, ledgerPath, "hash_hi", targetBytes)
+  /** The ledger in [[electPhashClusters]]'s shape. */
+  private def phashShape(ledger: DataFrame): DataFrame =
+    ledger.select(col("doc_id"), col("n_variants"), col("n_doc_hashes"),
+      col("hash_hi"), col("hash_lo"))
 
   def perceptualNearDupIncremental(s: SparkSession, d: String): DataFrame = {
     val ids = Tables.documents(s, d).select(col("doc_id"),
       pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
         lit(100L)).as("bucket"))
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_phash_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "phash",
+      Tables.datasetTag(s, d, "documents"))
     graft.etl.Merge.foldMissingBatches(s, path,
       Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
         .map { case (id, pred) => id -> (() =>
           appendPhashLedger(path, ids.filter(pred).select(col("doc_id")),
             id))
         })
-    electPhashClusters(readPhashLedger(s, path))
+    electPhashClusters(phashShape(PhashLedger.read(s, path)))
   }
 
   // ── q150: TAKEDOWN propagation through the phash ledger ────────────────
@@ -488,37 +477,12 @@ object Media {
     * ledger, cluster sizes and canonical ids RE-ELECT among survivors
     * automatically (a takedown of a cluster's canonical doc promotes the
     * next-lowest id, exactly what the reduced one-shot oracle computes).
-    * [[compactPhashRetract]] physically drops masked rows on the normal
+    * [[PhashLedger]]`.compact` with `del` physically drops masked rows on the normal
     * compaction cadence. Zero decodes anywhere in the retraction path. */
-  private[graft] def retractPhashBatch(ledgerPath: String,
-      delPath: String, ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    ids.select(col("doc_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-  }
-
-  private[graft] def readPhashTombstones(s: SparkSession,
-                                              delPath: String): DataFrame =
-    s.read.parquet(delPath).select(col("doc_id")).distinct()
-
   /** The ledger net of tombstones — what every q150 consumer reads. */
   private[graft] def readPhashLedgerNet(s: SparkSession,
       ledgerPath: String, delPath: String): DataFrame =
-    readPhashLedger(s, ledgerPath)
-      .join(broadcast(readPhashTombstones(s, delPath)),
-        Seq("doc_id"), "left_anti")
-
-  /** Hash-clustered compaction + physical takedown: tombstoned docs'
-    * rows vanish from the parquet. Same writeAndSwap lifecycle as
-    * [[compactPhashLedger]]. */
-  def compactPhashRetract(s: SparkSession, ledgerPath: String,
-      delPath: String, targetBytes: Long = 128L * 1024 * 1024)
-      : (Int, Int) =
-    graft.etl.Merge.compactRetract(s, ledgerPath, delPath, "doc_id",
-      "hash_hi", targetBytes)
+    phashShape(PhashLedger.readNet(s, ledgerPath, delPath))
 
   /** q150: perceptual dedup under takedown — two ingest batches fold in
     * (q142's decode-once lifecycle), the bucket-[20,30) slice retracts
@@ -528,15 +492,15 @@ object Media {
     val ids = Tables.documents(s, d).select(col("doc_id"),
       pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
         lit(100L)).as("bucket"))
-    val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_phashr_" +
-      Tables.datasetTag(s, d, "documents")
+    val root = graft.etl.Artifacts.path(s, "phashr",
+      Tables.datasetTag(s, d, "documents"))
     val (path, delPath) = (s"$root/led", s"$root/del")
     graft.etl.Merge.foldMissingBatches(s, path, Seq(
       "b0"  -> (() => appendPhashLedger(path,
         ids.filter(col("bucket") < 50).select(col("doc_id")), "b0")),
       "b1"  -> (() => appendPhashLedger(path,
         ids.filter(col("bucket") >= 50).select(col("doc_id")), "b1")),
-      "rm0" -> (() => retractPhashBatch(path, delPath,
+      "rm0" -> (() => PhashLedger.tombstone(path, delPath,
         ids.filter(col("bucket") >= 20 && col("bucket") < 30)
           .select(col("doc_id")), "rm0"))))
     electPhashClusters(readPhashLedgerNet(s, path, delPath))
@@ -674,39 +638,30 @@ object Media {
     * a pure function of the payload) and the reader's full-row dedup
     * absorbs them; compaction clusters on the fingerprint. Gated against
     * q113's ORACLE VERBATIM: fold ≡ one-shot. */
+  val AudioFpLedger = graft.etl.Ledger(clusterKey = "fp")
+
+  /** A batch's ledger rows: [[audioFpPerDoc]] of its doc ids. */
   private[graft] def appendAudioFpLedger(ledgerPath: String,
-      ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath) // adopt a crashed compaction
-    audioFpPerDoc(ids).withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+      ids: DataFrame, batchId: String): Unit =
+    AudioFpLedger.append(ledgerPath, audioFpPerDoc(ids), batchId)
 
-  private[graft] def readAudioFpLedger(s: SparkSession,
-                                            ledgerPath: String): DataFrame =
-    s.read.parquet(ledgerPath).dropDuplicates()
-      .select(col("doc_id"), col("n_doc_fps"), col("fp"))
-
-  /** Fp-clustered ledger compaction — the standard lifecycle close. */
-  def compactAudioFpLedger(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, ledgerPath, "fp", targetBytes)
+  /** The ledger in [[electAudioClusters]]'s shape. */
+  private def audioShape(ledger: DataFrame): DataFrame =
+    ledger.select(col("doc_id"), col("n_doc_fps"), col("fp"))
 
   def audioNearDupIncremental(s: SparkSession, d: String): DataFrame = {
     val ids = Tables.documents(s, d).select(col("doc_id"),
       pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
         lit(100L)).as("bucket"))
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_audiofp_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "audiofp",
+      Tables.datasetTag(s, d, "documents"))
     graft.etl.Merge.foldMissingBatches(s, path,
       Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
         .map { case (id, pred) => id -> (() =>
           appendAudioFpLedger(path, ids.filter(pred).select(col("doc_id")),
             id))
         })
-    electAudioClusters(readAudioFpLedger(s, path))
+    electAudioClusters(audioShape(AudioFpLedger.read(s, path)))
   }
 
   // ── q153: TAKEDOWN propagation through the audio-fp ledger ─────────────
@@ -716,42 +671,23 @@ object Media {
     * election is a pure function of the net ledger), and the rows drop
     * physically on the compaction cadence. Oracle = q113's one-shot on
     * the reduced corpus. */
-  private[graft] def retractAudioFpBatch(ledgerPath: String,
-      delPath: String, ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    ids.select(col("doc_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-  }
-
   private[graft] def readAudioFpLedgerNet(s: SparkSession,
       ledgerPath: String, delPath: String): DataFrame =
-    readAudioFpLedger(s, ledgerPath)
-      .join(broadcast(s.read.parquet(delPath)
-        .select(col("doc_id")).distinct()), Seq("doc_id"), "left_anti")
-
-  /** Fp-clustered compaction + physical takedown. */
-  def compactAudioFpRetract(s: SparkSession, ledgerPath: String,
-      delPath: String, targetBytes: Long = 128L * 1024 * 1024)
-      : (Int, Int) =
-    graft.etl.Merge.compactRetract(s, ledgerPath, delPath, "doc_id", "fp",
-      targetBytes)
+    audioShape(AudioFpLedger.readNet(s, ledgerPath, delPath))
 
   def audioNearDupRetract(s: SparkSession, d: String): DataFrame = {
     val ids = Tables.documents(s, d).select(col("doc_id"),
       pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
         lit(100L)).as("bucket"))
-    val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_audiofpr_" +
-      Tables.datasetTag(s, d, "documents")
+    val root = graft.etl.Artifacts.path(s, "audiofpr",
+      Tables.datasetTag(s, d, "documents"))
     val (path, delPath) = (s"$root/led", s"$root/del")
     graft.etl.Merge.foldMissingBatches(s, path, Seq(
       "b0"  -> (() => appendAudioFpLedger(path,
         ids.filter(col("bucket") < 50).select(col("doc_id")), "b0")),
       "b1"  -> (() => appendAudioFpLedger(path,
         ids.filter(col("bucket") >= 50).select(col("doc_id")), "b1")),
-      "rm0" -> (() => retractAudioFpBatch(path, delPath,
+      "rm0" -> (() => AudioFpLedger.tombstone(path, delPath,
         ids.filter(col("bucket") >= 20 && col("bucket") < 30)
           .select(col("doc_id")), "rm0"))))
     electAudioClusters(readAudioFpLedgerNet(s, path, delPath))

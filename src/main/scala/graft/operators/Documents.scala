@@ -429,13 +429,13 @@ object Documents {
     * result-idempotent without any swap machinery. */
   private[graft] def appendPrefixRows(idxPath: String, docs: DataFrame,
                                       dict: DataFrame): Unit =
-    prefixRows(docs, dict).write.mode("append").parquet(idxPath)
+    PrefixLedger.append(idxPath, prefixRows(docs, dict))
 
   /** COMPACTION for an append-maintained prefix index — the lifecycle
     * half [[appendPrefixRows]] needs (VERDICT r10 item 1): each appended
     * batch adds small files forever, so an offline maintenance pass
     * rewrites the index into size-targeted files via the crash-safe
-    * swap ([[graft.etl.Merge.compact]]), clustered on the probe join key
+    * swap ([[graft.etl.Ledger.compact]]), clustered on the probe join key
     * `t` (probes equi-join on the token, so token-clustered files give
     * tight row-group statistics on exactly the column the probe's
     * pushed filter hits). Full-row duplicates from replayed appends —
@@ -444,9 +444,7 @@ object Documents {
     * Probe answers are invariant: the index is a row SET under one
     * frozen order, and PrefixJaccardSpec proves probe-equality before vs
     * after plus the measured file-count reduction. */
-  def compactPrefixIndex(s: SparkSession, idxPath: String,
-                         targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, idxPath, "t", targetBytes)
+  val PrefixLedger = graft.etl.Ledger(clusterKey = "t")
 
   /** Probe a prefix index: incoming docs rank under the index's frozen
     * `dict`, candidates come from the probe-vs-index token equi-join, and
@@ -475,10 +473,10 @@ object Documents {
     // path + source tag (Tables.datasetTag): an in-place testdata
     // regeneration must invalidate the materialized index, never adopt it
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val dict = graft.etl.Merge.materialize(s, s"$wh/graft_pfx_dict_$tag",
-      freezeDict(corpus))
-    val idx = graft.etl.Merge.materialize(s, s"$wh/graft_pfx_idx_$tag",
+    val dict = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "pfx_dict", tag), freezeDict(corpus))
+    val idx = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "pfx_idx", tag),
       prefixRows(corpus, dict))
     prefixJaccardProbe(incoming, corpus, dict, idx)
       .orderBy(col("in_id"), col("corpus_id"))
@@ -513,7 +511,7 @@ object Documents {
     * per-doc-pure facts, so this is a TOMBSTONE family: the deleted
     * doc_id set appends to a `del` member, the probe masks the index
     * side with one broadcast anti-join, and
-    * [[compactPrefixRetract]] physically drops the rows on the normal
+    * [[PrefixLedger]]`.compact` with `del` physically drops the rows on the normal
     * cadence. Two properties make this takedown especially cheap:
     * (a) the frozen DICTIONARY is deliberately NOT retrained — the
     * total order it induces affects prefix SELECTIVITY, never which
@@ -523,23 +521,6 @@ object Documents {
     * rebuilt on the reduced corpus under the same dict, because prefix
     * rows are per-doc-pure — the gate proves it against the brute-force
     * oracle on the reduced corpus. */
-  private[graft] def retractPrefixBatch(idxPath: String, delPath: String,
-      ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, idxPath)
-    ids.select(col("doc_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-  }
-
-  /** Token-clustered compaction + physical takedown for the prefix
-    * index. */
-  private[graft] def compactPrefixRetract(s: SparkSession, idxPath: String,
-      delPath: String, targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compactRetract(s, idxPath, delPath, "doc_id", "t",
-      targetBytes)
-
   /** q155: the q82 probe under TAKEDOWN — the corpus indexes in two
     * appended batches under the frozen dict, the bucket-[20,30) slice
     * retracts as tombstones, and the probe candidates come from the
@@ -554,7 +535,7 @@ object Documents {
       .select(col("doc_id"), col("sh"))
     val corpus = base.filter(col("bucket") < 90)
     val tag = Tables.datasetTag(s, d, "documents")
-    val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_pfxrr_$tag"
+    val root = graft.etl.Artifacts.path(s, "pfxrr", tag)
     val (dictP, idxP, delP) = (s"$root/dict", s"$root/idx", s"$root/del")
     // dict frozen on the PRE-takedown corpus — retraction never retrains
     val dict = graft.etl.Merge.materialize(s, dictP,
@@ -565,11 +546,10 @@ object Documents {
     graft.etl.Merge.foldMissingBatches(s, idxP, Seq(
       "b0"  -> (() => appendPrefixRows(idxP, slice(0, 50), dict)),
       "b1"  -> (() => appendPrefixRows(idxP, slice(50, 90), dict)),
-      "rm0" -> (() => retractPrefixBatch(idxP, delP,
+      "rm0" -> (() => PrefixLedger.tombstone(idxP, delP,
         slice(20, 30).select(col("doc_id")), "rm0"))))
-    val idxNet = graft.etl.Merge.readArtifact(s, idxP)
-      .join(broadcast(graft.etl.Merge.readArtifact(s, delP)
-        .select(col("doc_id")).distinct()), Seq("doc_id"), "left_anti")
+    val idxNet = graft.etl.Ledger.mask(s,
+      graft.etl.Merge.readArtifact(s, idxP), delP)
     val corpusRed = corpus
       .filter(!(col("bucket") >= 20 && col("bucket") < 30))
       .select(col("doc_id"), col("sh"))
@@ -871,7 +851,7 @@ object Documents {
     val nodes = Tables.documents(s, d).select(col("doc_id"))
     val tag = Tables.datasetTag(s, d, "documents")
     val base = graft.etl.Merge.materialize(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_ccr_base0_$tag",
+      graft.etl.Artifacts.path(s, "ccr_base0", tag),
       connectedComponents(nodes,
         pairs.filter(col("ph") === 0).select("a_id", "b_id")))
     incrementalCC(base, nodes.limit(0),
@@ -999,13 +979,13 @@ object Documents {
     // batch-sized contract — plus the split projection, which is what
     // this query exists to price.
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val pairs = ccrPairs(s, d)
       .withColumn("ph", pmod(Text.portableHash(
           concat(col("a_id").cast("string"), lit(","),
             col("b_id").cast("string"))), lit(2L)))
     val nodes = Tables.documents(s, d).select(col("doc_id"))
-    val base = graft.etl.Merge.materialize(s, s"$wh/graft_ccr_base0_$tag",
+    val base = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "ccr_base0", tag),
       connectedComponents(nodes,
         pairs.filter(col("ph") === 0).select("a_id", "b_id")))
     val folded = incrementalCC(base, nodes.limit(0),
@@ -1152,9 +1132,9 @@ object Documents {
       : (DataFrame, DataFrame) = {
     val pairs = ccrPairs(s, d)
     val docs = Tables.documents(s, d).select(col("doc_id"))
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val standing = graft.etl.Merge.materialize(s,
-      s"$wh/graft_ccr_base_${Tables.datasetTag(s, d, "documents")}",
+      graft.etl.Artifacts.path(s, "ccr_base",
+        Tables.datasetTag(s, d, "documents")),
       connectedComponents(docs, pairs))
     (pairs, standing)
   }
@@ -1165,8 +1145,7 @@ object Documents {
     * ([[materialize]] is eager, so `ccrArtifacts(...)._1` would pay it). */
   private[graft] def ccrPairs(s: SparkSession, d: String): DataFrame = {
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    graft.etl.Merge.materialize(s, s"$wh/graft_ccr_pairs_$tag",
+    graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "ccr_pairs", tag),
       minhashNearDup(s, d).select(col("a_id"), col("b_id")))
   }
 
@@ -1612,7 +1591,7 @@ object Documents {
     * carries rows ∝ the probed terms' document frequency, never the
     * corpus.
     *
-    * Scale: the index is term-clustered by [[graft.etl.Merge.compact]]
+    * Scale: the index is term-clustered by [[graft.etl.Ledger.compact]]
     * (clusterKey = term), so at 100 TB a 3-term probe reads 3 clustered
     * file ranges; the per-doc AND rollup shuffles only those postings. */
   private[graft] def postings(docs: DataFrame): DataFrame =
@@ -1627,7 +1606,11 @@ object Documents {
     * contract); a replayed append only duplicates rows, which the probe's
     * dropDuplicates collapses. Compact on the usual cadence. */
   private[graft] def appendPostings(idxPath: String, docs: DataFrame): Unit =
-    postings(docs).write.mode("append").parquet(idxPath)
+    TermLedger.append(idxPath, postings(docs))
+
+  /** The term-clustered ROWS ledger of every posting index: q99's AND
+    * postings and q122's denormalized BM25 postings. */
+  val TermLedger = graft.etl.Ledger(clusterKey = "term")
 
   /** The probe: docs containing ALL `terms`, ranked by total tf. */
   private[graft] def searchIndex(idx: DataFrame, terms: Seq[String],
@@ -1643,14 +1626,14 @@ object Documents {
 
   def keywordSearch(s: SparkSession, d: String): DataFrame = {
     val tag = Tables.datasetTag(s, d, "documents") // stale-proof key
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     // postings AND a corpus snapshot publish as ONE [[graft.etl.Manifest]]
     // snapshot (r12): a consumer that searches the index then fetches the
     // hit documents resolves BOTH from the same publish — a concurrent
     // index refresh can no longer pair new postings with an old corpus
     // (each artifact's swap was individually atomic; the manifest makes
     // the PAIR atomic). The probe itself reads only the postings member.
-    val snap = graft.etl.Manifest.ensure(s, s"$wh/graft_search_$tag", Map(
+    val snap = graft.etl.Manifest.ensure(s,
+      graft.etl.Artifacts.path(s, "search", tag), Map(
       "corpus"   -> (() => Tables.documents(s, d)),
       "postings" -> (() => postings(Tables.documents(s, d)))))
     searchIndex(graft.etl.Merge.readArtifact(s, snap("postings")), Seq("hash", "join", "scan"),
@@ -1681,21 +1664,11 @@ object Documents {
     * dichotomy: the deleted doc_id set appends to a `del` member
     * (batch-keyed, replay-absorbed by distinct), every probe anti-joins
     * it (one broadcast of a retention-bounded set), and
-    * [[compactPostingsRetract]] physically drops the masked rows on the
+    * [[TermLedger]]`.compact` with `del` physically drops the masked rows on the
     * normal compaction cadence via the shared
-    * [[graft.etl.Merge.compactRetract]]. Unlike BM25 there is NO
+    * [[graft.etl.Ledger.compact]]. Unlike BM25 there is NO
     * statistics half — conjunctive tf ranking reads nothing
     * corpus-global — so the takedown is a single fail-safe write. */
-  private[graft] def retractPostingsBatch(idxPath: String, delPath: String,
-      ids: DataFrame, batchId: String): Unit = {
-    val s = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, idxPath)
-    ids.select(col("doc_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-  }
-
   /** [[searchIndex]] over a retraction-maintained index: tombstoned docs
     * are masked by one broadcast anti-join placed AFTER the pushed term
     * filter — the anti-join sees rows ∝ the probed terms' df, never the
@@ -1712,13 +1685,6 @@ object Documents {
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
 
-  /** Term-clustered compaction + physical takedown for the AND index. */
-  private[graft] def compactPostingsRetract(s: SparkSession,
-      idxPath: String, delPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compactRetract(s, idxPath, delPath, "doc_id", "term",
-      targetBytes)
-
   /** q154: conjunctive search under TAKEDOWN — corpus folds in as two
     * appended batches, the bucket-[20,30) slice retracts as tombstones,
     * the probe runs the net index. Gated against q99's one-shot SQL on
@@ -1727,7 +1693,7 @@ object Documents {
   def keywordSearchRetract(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
     val tag = Tables.datasetTag(s, d, "documents")
-    val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_postr_$tag"
+    val root = graft.etl.Artifacts.path(s, "postr", tag)
     val (idxP, delP) = (s"$root/post", s"$root/del")
     def slice(lo: Int, hi: Int): DataFrame =
       docs.filter(col("bucket") >= lo && col("bucket") < hi)
@@ -1735,10 +1701,10 @@ object Documents {
     graft.etl.Merge.foldMissingBatches(s, idxP, Seq(
       "b0"  -> (() => appendPostings(idxP, slice(0, 50))),
       "b1"  -> (() => appendPostings(idxP, slice(50, 100))),
-      "rm0" -> (() => retractPostingsBatch(idxP, delP,
+      "rm0" -> (() => TermLedger.tombstone(idxP, delP,
         slice(20, 30).select(col("doc_id")), "rm0"))))
     searchIndexNet(graft.etl.Merge.readArtifact(s, idxP),
-      graft.etl.Merge.readArtifact(s, delP).select(col("doc_id")).distinct(),
+      graft.etl.Ledger.tombstones(s, delP),
       Seq("hash", "join", "scan"), 20)
   }
 
@@ -1834,7 +1800,7 @@ object Documents {
     * [[bm25DfTotal]]'s dropDuplicates absorbs them — the same
     * replay-absorption [[appendPostings]] has. Compaction clusters on
     * `term` on the usual cadence, which also garbage-collects replay
-    * duplicates ([[graft.etl.Merge.compact]]'s documented dual use). */
+    * duplicates ([[graft.etl.Ledger.compact]]'s documented dual use). */
   private[graft] def bm25DfLedger(docs: DataFrame,
                                   batchId: String): DataFrame =
     postings(docs).groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1864,45 +1830,19 @@ object Documents {
     * Caller contract (same as every append here): `docs` are NEW doc_ids
     * — an already-indexed doc would coexist with its old rows. Compact
     * the postings AND the df ledger on the usual cadence via
-    * [[compactBm25Index]]. */
+    * [[TermLedger]]/[[Bm25DfLedger]]. */
   private[graft] def appendBm25(idxPath: String, statsPath: String,
                                 dfPath: String, docs: DataFrame,
                                 batchId: String): Unit = {
-    val s = docs.sparkSession
-    // Adopt crashed compactions of the APPEND-maintained members before
-    // appending (r19 review find): both idxPath and dfPath are rewritten
-    // by writeAndSwap-based compactions, and an append that lands while
-    // the target is missing would create a FRESH directory — recoverSwap
-    // then never fires (path exists) and the orphaned history is silently
-    // lost. statsPath already recovers below.
-    val fs0 = new org.apache.hadoop.fs.Path(idxPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs0, idxPath)
-    graft.etl.Merge.recoverSwap(fs0, dfPath)
-    bm25Postings(docs).write.mode("append").parquet(idxPath)
-    bm25DfLedger(docs, batchId).write.mode("append").parquet(dfPath)
-    val incoming = bm25StatsLedger(docs, batchId)
-    val target = new org.apache.hadoop.fs.Path(statsPath)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, statsPath)
-    val existing =
-      if (fs.exists(target))
-        s.read.schema(incoming.schema).parquet(statsPath)
-      else incoming.limit(0)
-    graft.etl.Merge.writeAndSwap(
-      graft.etl.Merge.firstWinsMerge(existing, incoming, "batch_id"),
-      statsPath, batchId)
+    TermLedger.append(idxPath, bm25Postings(docs))
+    Bm25DfLedger.append(dfPath, bm25DfLedger(docs, batchId))
+    graft.etl.Merge.mergeWrite(bm25StatsLedger(docs, batchId), "batch_id",
+      statsPath)
   }
 
-  /** Term-clustered compaction for an append-maintained BM25 index —
-    * identical lifecycle to [[compactPrefixIndex]]/q99: N per-batch
-    * small files rewrite into size-targeted files clustered on the
-    * probe's pushed-filter column, full-row duplicates from replayed
-    * appends garbage-collected by the same shuffle, probe rows
-    * invariant. */
-  private[graft] def compactBm25Index(s: SparkSession, idxPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, idxPath, "term", targetBytes)
+  /** The df member: (batch_id, term, df) partials, summed per term. */
+  val Bm25DfLedger = graft.etl.Ledger(clusterKey = "term",
+    rowKey = Seq("term"), sums = Seq("df"))
 
   // ── q144: TAKEDOWN propagation through the BM25 index triple ────────────
   /** The missing lifecycle verb (VERDICT r18 item 1): a
@@ -1936,30 +1876,14 @@ object Documents {
   private[graft] def retractBm25(idxPath: String, statsPath: String,
       dfPath: String, delPath: String, docs: DataFrame,
       batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, delPath)
-    graft.etl.Merge.recoverSwap(fs, dfPath)
     // tombstones FIRST — once a takedown lands, serving stops even if
     // the statistic retraction below dies mid-way (fail-safe order)
-    docs.select(col("doc_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-    bm25DfLedger(docs, batchId)
-      .select(col("batch_id"), col("term"), (-col("df")).as("df"))
-      .write.mode("append").parquet(dfPath)
-    val incoming = bm25StatsLedger(docs, batchId)
+    TermLedger.tombstone(idxPath, delPath, docs.select(col("doc_id")),
+      batchId)
+    Bm25DfLedger.negate(dfPath, bm25DfLedger(docs, batchId))
+    graft.etl.Merge.mergeWrite(bm25StatsLedger(docs, batchId)
       .select(col("batch_id"), (-col("n_docs")).as("n_docs"),
-        (-col("total_tokens")).as("total_tokens"))
-    graft.etl.Merge.recoverSwap(fs, statsPath)
-    val target = new org.apache.hadoop.fs.Path(statsPath)
-    val existing =
-      if (fs.exists(target))
-        s.read.schema(incoming.schema).parquet(statsPath)
-      else incoming.limit(0)
-    graft.etl.Merge.writeAndSwap(
-      graft.etl.Merge.firstWinsMerge(existing, incoming, "batch_id"),
-      statsPath, batchId)
+        (-col("total_tokens")).as("total_tokens")), "batch_id", statsPath)
   }
 
   /** The tombstone set in probe shape (distinct absorbs replayed
@@ -1969,18 +1893,16 @@ object Documents {
     * unconditionally safe). */
   private[graft] def readBm25Tombstones(s: SparkSession,
                                         delPath: String): DataFrame =
-    graft.etl.Merge.readArtifact(s, delPath).select(col("doc_id")).distinct()
+    graft.etl.Ledger.tombstones(s, delPath)
 
   /** Term-clustered compaction that also PHYSICALLY drops tombstoned
     * docs' posting rows — the takedown completing on the normal
     * compaction cadence (until it runs, the probe's anti-join masks
-    * them). Same writeAndSwap lifecycle as [[graft.etl.Merge.compact]];
+    * them). Same writeAndSwap lifecycle as [[graft.etl.Ledger.compact]];
     * replay duplicates GC'd by the same full-row dedup. */
   private[graft] def compactBm25Retract(s: SparkSession, idxPath: String,
-      delPath: String, targetBytes: Long = 128L * 1024 * 1024)
-      : (Int, Int) =
-    graft.etl.Merge.compactRetract(s, idxPath, delPath, "doc_id", "term",
-      targetBytes)
+      delPath: String): (Int, Int) =
+    TermLedger.compact(s, idxPath, Some(delPath))
 
   /** The BM25 probe over a denormalized index and its 1-row stats. */
   private[graft] def bm25Probe(idx: DataFrame, stats: DataFrame,
@@ -2044,7 +1966,7 @@ object Documents {
   def bm25SearchRetract(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
     val tag = Tables.datasetTag(s, d, "documents")
-    val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bm25r_$tag"
+    val root = graft.etl.Artifacts.path(s, "bm25r", tag)
     val (idxP, statsP, dfP, delP) =
       (s"$root/post", s"$root/stats", s"$root/df", s"$root/del")
     def slice(lo: Int, hi: Int): DataFrame =
@@ -2062,9 +1984,8 @@ object Documents {
 
   def bm25Search(s: SparkSession, d: String): DataFrame = {
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val snap = graft.etl.Manifest.ensureMembers(s,
-      s"$wh/graft_search_$tag", Map(
+      graft.etl.Artifacts.path(s, "search", tag), Map(
         "corpus"    -> (() => Tables.documents(s, d)),
         "postings"  -> (() => postings(Tables.documents(s, d))),
         "bm25"      -> (() => bm25Postings(Tables.documents(s, d))),
@@ -2334,11 +2255,10 @@ object Documents {
   private def frozenLm(s: SparkSession, d: String,
                        docs: DataFrame): (DataFrame, DataFrame) = {
     val tag = Tables.datasetTag(s, d, "documents") // stale-proof key
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     lazy val corpusBg = lmBigrams(docs.filter(col("bucket") < 90))
-    (graft.etl.Merge.materialize(s, s"$wh/graft_lm_bg_$tag",
+    (graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "lm_bg", tag),
        lmTrain(corpusBg)._1),
-     graft.etl.Merge.materialize(s, s"$wh/graft_lm_ctx_$tag",
+     graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "lm_ctx", tag),
        lmTrain(corpusBg)._2))
   }
   /** q87's oracle parameterized on the model-corpus predicate — q156
@@ -2399,32 +2319,21 @@ object Documents {
     * retraction can promote the next-ranked bigram exactly as a
     * reduced-corpus retrain would). Zero-net bigrams drop from the
     * model entirely — an OOV bigram backs off to the smoothing floor,
-    * which is what the reduced one-shot computes. [[compactLmLedgerNet]]
+    * which is what the reduced one-shot computes. [[LmLedger]]`.compactNet`
     * physically folds marked batches on the normal cadence. */
   private def lmLedgerPartials(docs: DataFrame): DataFrame =
     lmBigrams(docs).groupBy(col("bg")).agg(count(lit(1)).as("cb"))
 
+  val LmLedger = graft.etl.Ledger(clusterKey = "bg", rowKey = Seq("bg"),
+    sums = Seq("cb"))
+
   private[graft] def appendLmLedger(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    lmLedgerPartials(docs).withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    LmLedger.append(ledgerPath, lmLedgerPartials(docs), batchId)
 
   private[graft] def retractLmBatch(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    lmLedgerPartials(docs)
-      .select(col("bg"), (-col("cb")).as("cb"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    LmLedger.negate(ledgerPath, lmLedgerPartials(docs), batchId)
 
   /** The ledger collapsed to the (bgTop, ctxTop) pair the scorer
     * broadcasts: first-wins on (bg, batch_id) absorbs replayed appends,
@@ -2433,61 +2342,11 @@ object Documents {
     * [[lmTrain]]. */
   private[graft] def lmLedgerModel(s: SparkSession, ledgerPath: String)
       : (DataFrame, DataFrame) = {
-    val net = graft.etl.Merge.readArtifact(s, ledgerPath)
-      .groupBy(col("bg"), col("batch_id"))
-      .agg(min(col("cb")).as("p"))
-      .groupBy(col("bg")).agg(sum(col("p")).as("cb"))
-      .filter(col("cb") > 0)
+    val net = LmLedger.readNet(s, ledgerPath).filter(col("cb") > 0)
     (net.orderBy(col("cb").desc, col("bg").asc).limit(LmModelTopK),
      net.select(substring_index(col("bg"), " ", 1).as("w1"), col("cb"))
        .groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
        .orderBy(col("cu").desc, col("w1").asc).limit(LmModelTopK))
-  }
-
-  /** Reserved batch id for net-compacted LM rows. */
-  private[graft] val LmNetBatchId = "_net"
-
-  /** RETRACTION-AWARE LM-ledger compaction — [[compactGramLedgerNet]]'s
-    * lifecycle on the (bg, cb) shape: marked batches collapse to one net
-    * row per bigram under [[LmNetBatchId]], zero-net bigrams VANISH from
-    * the parquet, unmarked in-flight rows pass through verbatim. */
-  def compactLmLedgerNet(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    val mdir = new org.apache.hadoop.fs.Path(s"$ledgerPath.batches")
-    val marked: Set[String] =
-      (if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).toSet
-       else Set.empty[String]) + LmNetBatchId
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        val nm = st.getPath.getName
-        if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) b += st
-      }
-      b.result()
-    }
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val led = graft.etl.Merge.readArtifact(s, ledgerPath)
-    val isMarked = col("batch_id").isin(marked.toSeq: _*)
-    val net = led.filter(isMarked)
-      .groupBy(col("bg"), col("batch_id"))
-      .agg(min(col("cb")).as("p"))
-      .groupBy(col("bg")).agg(sum(col("p")).as("cb"))
-      .filter(col("cb") =!= 0L)
-      .select(col("bg"), col("cb"), lit(LmNetBatchId).as("batch_id"))
-    graft.etl.Merge.writeAndSwap(
-      net.unionByName(led.filter(!isMarked)).repartition(nFiles, col("bg")),
-      ledgerPath, "netcompact")
-    fs.mkdirs(mdir)
-    fs.create(new org.apache.hadoop.fs.Path(mdir, LmNetBatchId), true)
-      .close()
-    (before.size, dataFiles().size)
   }
 
   /** q156: q87's batch scoring under TAKEDOWN — the corpus side folds
@@ -2499,8 +2358,8 @@ object Documents {
     val docs = Tables.documents(s, d)
       .withColumn("bucket",
         pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_lmr_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "lmr",
+      Tables.datasetTag(s, d, "documents"))
     def slice(lo: Int, hi: Int): DataFrame =
       docs.filter(col("bucket") >= lo && col("bucket") < hi)
         .select(col("doc_id"), col("text"))
@@ -2971,8 +2830,8 @@ object Documents {
     * immutable; nothing renumbers on append). */
   def shardIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_shard_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "shard",
+      Tables.datasetTag(s, d, "documents"))
     graft.etl.Merge.foldMissingBatches(s, path,
       Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
         .map { case (id, pred) => id -> (() =>
@@ -3205,38 +3064,23 @@ object Documents {
   private def wordFreqPartials(docs: DataFrame): DataFrame =
     docWordsOf(docs).groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
+  val WfLedger = graft.etl.Ledger(clusterKey = "w", rowKey = Seq("w"),
+    sums = Seq("freq"))
+
   private[graft] def appendWfLedger(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    wordFreqPartials(docs).withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    WfLedger.append(ledgerPath, wordFreqPartials(docs), batchId)
 
   private[graft] def retractWfBatch(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    wordFreqPartials(docs)
-      .select(col("w"), (-col("freq")).as("freq"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    WfLedger.negate(ledgerPath, wordFreqPartials(docs), batchId)
 
   /** The net word-type frequency table the retrain consumes: first-wins
     * on (w, batch_id) absorbs replayed appends, frequencies SUM across
     * batches, zero-net types vanish. */
   private[graft] def wfLedgerNet(s: SparkSession,
                                  ledgerPath: String): DataFrame =
-    graft.etl.Merge.readArtifact(s, ledgerPath)
-      .groupBy(col("w"), col("batch_id"))
-      .agg(min(col("freq")).as("p"))
-      .groupBy(col("w")).agg(sum(col("p")).as("freq"))
-      .filter(col("freq") > 0)
+    WfLedger.readNet(s, ledgerPath).filter(col("freq") > 0)
 
   /** q157: the BPE trainer under TAKEDOWN — the corpus folds into the
     * word-frequency ledger as two appended batches, the bucket-[20,30)
@@ -3245,8 +3089,8 @@ object Documents {
     * on the REDUCED corpus. */
   def bpeTrainRetract(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_bper_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "bper",
+      Tables.datasetTag(s, d, "documents"))
     def slice(lo: Int, hi: Int): DataFrame =
       docs.filter(col("bucket") >= lo && col("bucket") < hi)
         .select(col("doc_id"), col("text"))
@@ -3366,13 +3210,9 @@ object Documents {
     * frozen vocab and watches compression drift. */
   private[graft] def bpeFreezeAt(s: SparkSession, mergesPath: String,
       typesPath: String, words: => DataFrame): (DataFrame, DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(mergesPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, mergesPath)
-    graft.etl.Merge.recoverSwap(fs, typesPath)
-    val need = !fs.exists(new org.apache.hadoop.fs.Path(mergesPath)) ||
-      !fs.exists(new org.apache.hadoop.fs.Path(typesPath))
-    if (need) {
+    // non-short-circuit `|`: both halves adopt their crashed swaps
+    if (!graft.etl.Merge.exists(s, mergesPath) |
+        !graft.etl.Merge.exists(s, typesPath)) {
       val (merges, types) = bpeTrainTypes(words, BpeMerges)
       graft.etl.Merge.writeAndSwap(merges, mergesPath, "build")
       graft.etl.Merge.writeAndSwap(types, typesPath, "build")
@@ -3386,9 +3226,8 @@ object Documents {
     * than serving stale bytes. */
   private def bpePaths(s: SparkSession, d: String): (String, String) = {
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    (s"$wh/graft_bpe_merges_${BpeMerges}_c90_$tag",
-     s"$wh/graft_bpe_types_${BpeMerges}_c90_$tag")
+    (graft.etl.Artifacts.path(s, "bpe_merges", BpeMerges, "c90", tag),
+     graft.etl.Artifacts.path(s, "bpe_types", BpeMerges, "c90", tag))
   }
 
   /** Encode a word stream under a FROZEN type table: seen words cost
@@ -3785,8 +3624,7 @@ object Documents {
         pmod(graft.functions.Text.portableHash(col("doc_id")
           .cast("string")), lit(100L)))
     val tag = Tables.datasetTag(s, d, "documents")
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}" +
-      s"/graft_spanled_${K}_$tag"
+    val path = graft.etl.Artifacts.path(s, "spanled", K, tag)
     def slice(lo: Int, hi: Int): DataFrame =
       docs.filter(col("bucket") >= lo && col("bucket") < hi)
         .select(col("doc_id"), col("text"))
@@ -3801,7 +3639,8 @@ object Documents {
     // duplicated-grams-sized parquet. Verdicts are unchanged: the
     // artifact IS gramLedgerCounts' ≥2 slice, materialized.
     val dup = graft.etl.Merge.materialize(s,
-      s"${path}_dup_${graft.etl.Merge.batchTag(s, path)}",
+      graft.etl.Artifacts.path(s, "spanled", K, tag, "dup",
+        graft.etl.Merge.batchTag(s, path)),
       gramLedgerCounts(s, path)
         .filter(col("n_idx") >= 2L).select(col("gram")))
     spanDedupCore(docs.select(col("doc_id"), col("text")), K,
@@ -3938,13 +3777,12 @@ object Documents {
     val corpus = base.filter(col("bucket") < 90)
     val incoming = base.filter(col("bucket") >= 90)
     val tag = Tables.datasetTag(s, d, "documents")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     // K is part of the artifact identity: a gram index built under a
     // different window length is a DIFFERENT index, and materialize only
     // rebuilds on absence (ADVICE r16 — tag-only keying would silently
     // serve the stale-K index).
     val idx = graft.etl.Merge.materialize(s,
-      s"$wh/graft_gram_idx_${K}_$tag", gramCounts(corpus, K))
+      graft.etl.Artifacts.path(s, "gram_idx", K, tag), gramCounts(corpus, K))
     dupSpanProbe(incoming, idx, K)
   }
 
@@ -3955,21 +3793,11 @@ object Documents {
     * byte-identical partials under the same id and is absorbed by the
     * reader's first-wins. */
   private[graft] def appendGramLedger(ledgerPath: String, docs: DataFrame,
-                                      K: Int, batchId: String): Unit = {
-    // Adopt a crashed compaction FIRST (ADVICE r16, the applyGridBatch
-    // guard): if compactGramLedger died in writeAndSwap's delete->rename
-    // window, the ledger dir is absent and only a .tmp-compact orphan
-    // holds the accumulated history — appending before adoption would
-    // recreate the dir and strand the orphan forever (recoverSwap no-ops
-    // once the path exists), silently dropping all pre-compaction counts.
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    gramCounts(docs, K)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                      K: Int, batchId: String): Unit =
+    GramLedger.append(ledgerPath, gramCounts(docs, K), batchId)
+
+  val GramLedger = graft.etl.Ledger(clusterKey = "gram",
+    rowKey = Seq("gram"), sums = Seq("n_idx"))
 
   /** The ledger collapsed to the probe's (gram, n_idx) view: first-wins
     * on the (gram, batch) identity absorbs replayed appends (a replay's
@@ -3983,26 +3811,17 @@ object Documents {
     * counts (it would double-count the batch against itself and flag
     * every position). */
   private[graft] def gramLedgerCounts(s: SparkSession, ledgerPath: String,
-      excludeBatch: Option[String] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath) // see appendGramLedger
-    val raw = graft.etl.Merge.readArtifact(s, ledgerPath)
-    excludeBatch.fold(raw)(b => raw.filter(col("batch_id") =!= b))
-      .groupBy(col("gram"), col("batch_id"))
-      .agg(min(col("n_idx")).as("n_part"))
-      .groupBy(col("gram")).agg(sum(col("n_part")).as("n_idx"))
-  }
+      excludeBatch: Option[String] = None): DataFrame =
+    GramLedger.readNet(s, ledgerPath, excludeBatch = excludeBatch)
 
-  /** Gram-clustered compaction for the ledger — [[compactPrefixIndex]]'s
+  /** Gram-clustered compaction for the ledger — the prefix index's
     * lifecycle: per-batch small files rewrite size-targeted on the
     * probe's join key; full-row duplicates from replayed appends (byte-
     * identical, batch id included) GC'd by the same shuffle; distinct
     * batches' legitimate equal counts survive because batch_id differs.
     * Probe answers invariant (DupSpansSpec). */
-  def compactGramLedger(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, ledgerPath, "gram", targetBytes)
+  def compactGramLedger(s: SparkSession, ledgerPath: String): (Int, Int) =
+    GramLedger.compact(s, ledgerPath)
 
   // ── q151: TAKEDOWN propagation through the gram-count ledger ───────────
   /** The retraction verb reaching the substring-dedup family: gram
@@ -4017,66 +3836,8 @@ object Documents {
     * and the retraction re-derives grams from the SAME text, so the
     * negatives cancel exactly. */
   private[graft] def retractGramBatch(ledgerPath: String, docs: DataFrame,
-                                      K: Int, batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    gramCounts(docs, K)
-      .select(col("gram"), (-col("n_idx")).as("n_idx"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
-
-  /** Reserved batch id for net-compacted gram rows — [[NbNetBatchId]]'s
-    * role for this ledger. */
-  private[graft] val GramNetBatchId = "_net"
-
-  /** RETRACTION-AWARE gram compaction ([[compactNbLedgerNet]]'s
-    * lifecycle): MARKED batches (commit marker present — can never
-    * replay) collapse to one net row per gram under [[GramNetBatchId]],
-    * zero-net grams VANISH from the parquet (the takedown completing on
-    * disk), and unmarked in-flight rows pass through verbatim so a
-    * crashed append's replay still first-wins-absorbs. */
-  def compactGramLedgerNet(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    val mdir = new org.apache.hadoop.fs.Path(s"$ledgerPath.batches")
-    val marked: Set[String] =
-      (if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).toSet
-       else Set.empty[String]) + GramNetBatchId
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        val nm = st.getPath.getName
-        if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) b += st
-      }
-      b.result()
-    }
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val led = graft.etl.Merge.readArtifact(s, ledgerPath)
-    val isMarked = col("batch_id").isin(marked.toSeq: _*)
-    val net = led.filter(isMarked)
-      .groupBy(col("gram"), col("batch_id"))
-      .agg(min(col("n_idx")).as("n_part"))
-      .groupBy(col("gram")).agg(sum(col("n_part")).as("n_idx"))
-      .filter(col("n_idx") =!= 0L)
-      .select(col("gram"), col("n_idx"), lit(GramNetBatchId).as("batch_id"))
-    graft.etl.Merge.writeAndSwap(
-      net.unionByName(led.filter(!isMarked))
-        .repartition(nFiles, col("gram")),
-      ledgerPath, "netcompact")
-    fs.mkdirs(mdir)
-    fs.create(new org.apache.hadoop.fs.Path(mdir, GramNetBatchId), true)
-      .close()
-    (before.size, dataFiles().size)
-  }
+                                      K: Int, batchId: String): Unit =
+    GramLedger.negate(ledgerPath, gramCounts(docs, K), batchId)
 
   /** q151: the substring-dedup probe under TAKEDOWN — the corpus folds
     * in as two gram-ledger batches, the bucket-[20,30) slice retracts as
@@ -4093,8 +3854,7 @@ object Documents {
           .cast("string")), lit(100L)))
     val incoming = base.filter(col("bucket") >= 90)
     val tag = Tables.datasetTag(s, d, "documents")
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}" +
-      s"/graft_gramr_${K}_$tag"
+    val path = graft.etl.Artifacts.path(s, "gramr", K, tag)
     def slice(lo: Int, hi: Int): DataFrame =
       base.filter(col("bucket") >= lo && col("bucket") < hi)
         .select(col("doc_id"), col("text"))
@@ -5404,8 +5164,7 @@ object Documents {
   private def frozenNb(s: SparkSession, d: String,
                        docs: DataFrame): DataFrame =
     graft.etl.Merge.materialize(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_nb_" +
-        Tables.datasetTag(s, d, "documents"),
+      graft.etl.Artifacts.path(s, "nb", Tables.datasetTag(s, d, "documents")),
       nbTrainModel(docs.filter(col("bucket") < 90)
         .select(col("doc_id"), col("text"), nbLabel.as("y"))))
 
@@ -5551,7 +5310,7 @@ object Documents {
     * model is the ledger summed per term and capped top-K. Append is
     * O(batch); a checkpoint-replayed append re-derives byte-identical
     * partials under the same id and the reader's first-wins absorbs it;
-    * compaction is the shared [[graft.etl.Merge.compact]] clustered on
+    * compaction is the shared [[graft.etl.Ledger.compact]] clustered on
     * the term. The registered query carves the training side into two
     * sub-batches (bucket <45 / 45–89), folds both through the ledger,
     * and scores the ≥90 batch — against q134's ORACLE VERBATIM: the
@@ -5570,16 +5329,12 @@ object Documents {
       .agg(sum(col("y")).as("c1"),
         (count(lit(1)) - sum(col("y"))).as("c0"))
 
+  val NbLedger = graft.etl.Ledger(clusterKey = "w", rowKey = Seq("w"),
+    sums = Seq("c1", "c0"))
+
   private[graft] def appendNbLedger(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath) // adopt a crashed compaction
-    nbPartials(docs)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    NbLedger.append(ledgerPath, nbPartials(docs), batchId)
 
   /** TAKEDOWN through the NB count ledger (VERDICT r18 item 1) — the
     * [[retractBm25]] move for the classifier: NB's statistics are
@@ -5592,16 +5347,8 @@ object Documents {
     * replay-absorbed by the same (w, batch_id) first-wins as appends.
     * Contract: retracted docs ⊆ previously appended docs. */
   private[graft] def retractNbBatch(ledgerPath: String, docs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    nbPartials(docs)
-      .select(col("w"), (-col("c1")).as("c1"), (-col("c0")).as("c0"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ledgerPath)
-  }
+                                    batchId: String): Unit =
+    NbLedger.negate(ledgerPath, nbPartials(docs), batchId)
 
   /** The ledger collapsed to the model the scorer broadcasts: first-wins
     * on (w, batch_id) absorbs replayed appends, counts SUM across
@@ -5609,79 +5356,13 @@ object Documents {
     * top-K cap as [[nbTrainModel]]. */
   private[graft] def nbLedgerModel(s: SparkSession, ledgerPath: String,
                                    topK: Int = NbModelTopK): DataFrame =
-    graft.etl.Merge.readArtifact(s, ledgerPath)
-      .groupBy(col("w"), col("batch_id"))
-      .agg(min(struct(col("c1"), col("c0"))).as("r"))
-      .groupBy(col("w"))
-      .agg(sum(col("r.c1")).as("c1"), sum(col("r.c0")).as("c0"))
+    NbLedger.readNet(s, ledgerPath)
       // zero-net terms (all occurrences retracted) must leave the model
       // entirely — an OOV term backs off to the prior, but a (0,0) row
       // would score a spurious 5000 bp; a no-op without retractions
       .filter(col("c1") + col("c0") > 0)
       .orderBy((col("c1") + col("c0")).desc, col("w").asc)
       .limit(topK)
-
-  /** Term-clustered ledger compaction — the standard lifecycle close. */
-  def compactNbLedger(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.etl.Merge.compact(s, ledgerPath, "w", targetBytes)
-
-  /** Reserved batch id for net-compacted ledger rows. Never in any
-    * fold's batch list, so its presence marker can't vouch for a real
-    * batch; marked so the NEXT net compaction folds it again. */
-  private[graft] val NbNetBatchId = "_net"
-
-  /** RETRACTION-AWARE compaction: physically drops retracted counts.
-    * Rows of MARKED batches (commit marker present — they can never
-    * replay) collapse to one net row per term under [[NbNetBatchId]],
-    * and terms whose net count is zero VANISH from the parquet — the
-    * takedown completing on disk, not just in the served view. Rows of
-    * UNMARKED batch ids pass through verbatim: an in-flight crashed
-    * append will replay in full and must still first-wins-absorb against
-    * its own partial rows, which folding them into the net would
-    * double-count. Same writeAndSwap lifecycle as [[graft.etl.Merge
-    * .compact]]; the net generation gets its own marker so successive
-    * compactions keep folding it. */
-  def compactNbLedgerNet(s: SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, ledgerPath)
-    val mdir = new org.apache.hadoop.fs.Path(s"$ledgerPath.batches")
-    val marked: Set[String] =
-      (if (fs.exists(mdir)) fs.listStatus(mdir).map(_.getPath.getName).toSet
-       else Set.empty[String]) + NbNetBatchId
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        val nm = st.getPath.getName
-        if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) b += st
-      }
-      b.result()
-    }
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val led = graft.etl.Merge.readArtifact(s, ledgerPath)
-    val isMarked = col("batch_id").isin(marked.toSeq: _*)
-    val net = led.filter(isMarked)
-      .groupBy(col("w"), col("batch_id"))
-      .agg(min(struct(col("c1"), col("c0"))).as("r"))
-      .groupBy(col("w"))
-      .agg(sum(col("r.c1")).as("c1"), sum(col("r.c0")).as("c0"))
-      .filter(col("c1") + col("c0") > 0)
-      .select(col("w"), col("c1"), col("c0"),
-        lit(NbNetBatchId).as("batch_id"))
-    graft.etl.Merge.writeAndSwap(
-      net.unionByName(led.filter(!isMarked)).repartition(nFiles, col("w")),
-      ledgerPath, "netcompact")
-    fs.mkdirs(mdir)
-    fs.create(new org.apache.hadoop.fs.Path(mdir, NbNetBatchId), true)
-      .close()
-    (before.size, dataFiles().size)
-  }
 
   /** q145: the q137 incremental classifier under TAKEDOWN — two training
     * batches fold in, the bucket-[20,30) slice retracts as negative
@@ -5693,8 +5374,8 @@ object Documents {
     * never re-scanned to forget. */
   def nbClassifierRetract(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_nb_rledger_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "nb_rledger",
+      Tables.datasetTag(s, d, "documents"))
     def train(pred: Column): DataFrame =
       docs.filter(pred).select(col("doc_id"), col("text"), nbLabel.as("y"))
     graft.etl.Merge.foldMissingBatches(s, path, Seq(
@@ -5709,8 +5390,8 @@ object Documents {
 
   def nbClassifierIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = bucketedDocs(s, d)
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_nb_ledger_" +
-      Tables.datasetTag(s, d, "documents")
+    val path = graft.etl.Artifacts.path(s, "nb_ledger",
+      Tables.datasetTag(s, d, "documents"))
     graft.etl.Merge.foldMissingBatches(s, path,
       Seq("b0" -> (col("bucket") < 45),
           "b1" -> (col("bucket") >= 45 && col("bucket") < 90))

@@ -698,8 +698,7 @@ object Relational {
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val tag = Tables.datasetTag(s, d, "lineitem")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    graft.etl.Merge.materialize(s, s"$wh/graft_tri16_$tag",
+    graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "tri16", tag),
       li.join(li.select(col("ok"), col("pk").as("pk2")), Seq("ok"))
         .filter(col("pk") < col("pk2"))
         .select(col("pk").as("a"), col("pk2").as("b"))
@@ -718,12 +717,12 @@ object Relational {
     * rows do. Shared by q107 and q136 (one build serves both). */
   private def triBucketed(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val e16 = tri16Edges(s, d)
-    val adjName = s"graft_tri_adjh_${pathTag(d)}"
+    val adjName = graft.etl.Artifacts.name("tri_adjh", pathTag(d))
     ensureBucketed(s, adjName, Seq("u"), 32,
       e16.select(col("a").as("u"), col("b").as("w"), col("h16"))
         .unionByName(
           e16.select(col("b").as("u"), col("a").as("w"), col("h16"))))
-    val edgName = s"graft_tri_edgh_${pathTag(d)}"
+    val edgName = graft.etl.Artifacts.name("tri_edgh", pathTag(d))
     ensureBucketed(s, edgName, Seq("a", "b"), 32, e16)
     (s.table(adjName), s.table(edgName))
   }
@@ -743,15 +742,16 @@ object Relational {
     // and the class decomposition are unchanged — the oracle (full
     // prefix recounts, differenced) independently pins that.
     val tag = Tables.datasetTag(s, d, "lineitem")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val e16 = tri16Edges(s, d)
     val batchOf = pmod(col("h16"), lit(4L)) // == pmod(portableHash, 4): 4 | 16
     val e = e16.select(col("a"), col("b"), batchOf.as("batch"))
     val adjAll = e.select(col("a").as("u"), col("b").as("w"), col("batch"))
       .unionByName(e.select(col("b").as("u"), col("a").as("w"), col("batch")))
-    val degB = graft.etl.Merge.materialize(s, s"$wh/graft_tri_degb_$tag",
+    val degB = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "tri_degb", tag),
       adjAll.groupBy(col("u"), col("batch")).agg(count(lit(1)).as("dg")))
-    val bcnt = graft.etl.Merge.materialize(s, s"$wh/graft_tri_bcnt_$tag",
+    val bcnt = graft.etl.Merge.materialize(s,
+        graft.etl.Artifacts.path(s, "tri_bcnt", tag),
         e.groupBy(col("batch")).agg(count(lit(1)).as("n")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // ≤ 4 rows
     // pack gate for the closing semi-joins (the q104 move): one tiny job
@@ -958,7 +958,6 @@ object Relational {
     * constructed graphs (both Bloom branches). */
   def triangleApply(s: SparkSession, d: String): DataFrame = {
     val tag = Tables.datasetTag(s, d, "lineitem")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val e = tri16Edges(s, d)
     val old = e.filter(col("h16") =!= 15).select("a", "b")
     val delta = e.filter(col("h16") === 15).select("a", "b")
@@ -973,14 +972,17 @@ object Relational {
     val (adjT, edgT) = triBucketed(s, d)
     val adj = adjT.filter(col("h16") =!= 15).select(col("u"), col("w"))
     val edg = edgT.filter(col("h16") =!= 15).select(col("a"), col("b"))
-    val deg = graft.etl.Merge.materialize(s, s"$wh/graft_tri_deg_$tag",
+    val deg = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "tri_deg", tag),
       adj.groupBy(col("u")).agg(count(lit(1)).as("dg")))
     val nOld = graft.etl.Merge.materialize(s,
-        s"$wh/graft_tri_stats_$tag", old.agg(count(lit(1)).as("n")))
+        graft.etl.Artifacts.path(s, "tri_stats", tag),
+        old.agg(count(lit(1)).as("n")))
       .head.getLong(0)
     val bloom =
       if (nOld <= 8L * 1000 * 1000) None
-      else Some(graft.etl.Merge.materialize(s, s"$wh/graft_tri_bloom_$tag",
+      else Some(graft.etl.Merge.materialize(s,
+        graft.etl.Artifacts.path(s, "tri_bloom", tag),
         {
           val bloomAgg = udaf(new graft.functions.Bloom.Agg(
             graft.functions.Bloom.sizeWords(nOld)))
@@ -1255,10 +1257,9 @@ object Relational {
     // exchange × 10 rounds) disappears. Past the broadcast gate the
     // shuffle join returns and the agg re-shuffles — same fallbacks.
     val tag = Tables.datasetTag(s, d, "lineitem")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     // r21: the adjacency carries deg of the TARGET (degv) instead of the
     // source — see the loop note below for why.
-    val adjName = s"graft_pr_adjw_${pathTag(d)}"
+    val adjName = graft.etl.Artifacts.name("pr_adjw", pathTag(d))
     ensureBucketed(s, adjName, Seq("v"), 32,
       adj0.join(deg0.select(col("u").as("v"), col("deg").as("degv")),
         Seq("v")).select(col("u"), col("v"), col("degv")))
@@ -1267,7 +1268,8 @@ object Relational {
     // per-pass re-aggregation of the whole adjacency (contents identical
     // to the old source-keyed carve: the graph is undirected, so the
     // (vertex, degree) set is the same from either end of the edge)
-    val deg = graft.etl.Merge.materialize(s, s"$wh/graft_pr_deg_$tag",
+    val deg = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "pr_deg", tag),
       adj.select(col("v").as("u"), col("degv").as("deg")).distinct())
     val nVerts = deg.count()
     // r21 (guide §2.3/§5): (1) the per-vertex contribution c = r div deg
@@ -1570,8 +1572,8 @@ object Relational {
 
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     val tag = pathTag(d)
-    val bo = s"graft_bkt_orders_$tag"
-    val bl = s"graft_bkt_lineitem_$tag"
+    val bo = graft.etl.Artifacts.name("bkt_orders", tag)
+    val bl = graft.etl.Artifacts.name("bkt_lineitem", tag)
     ensureBucketed(s, bo, Seq("o_orderkey"), 8, Tables.orders(s, d))
     ensureBucketed(s, bl, Seq("l_orderkey"), 8, Tables.lineitem(s, d))
     s.table(bo).join(s.table(bl), col("o_orderkey") === col("l_orderkey"))

@@ -454,9 +454,8 @@ object Similarity {
   def ivfIndexedTopK(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(Tables.embeddings(s, d))
     val tag = Tables.datasetTag(s, d, "embeddings") // stale-proof key
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val cents = graft.etl.Merge.materialize(s, s"$wh/graft_ivf_cents_$tag",
-      trainCentroids(e))
+    val cents = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "ivf_cents", tag), trainCentroids(e))
     ivfProbeWith(e, cents, nprobe = 1, k = 5)
   }
 
@@ -484,20 +483,18 @@ object Similarity {
     * corpus; an external probe set skips even that. Replay duplicates are
     * absorbed at pair grain ([[ivfProbeWith]]'s dedup, cell-bounded) and
     * GC'd permanently by [[compactIvfPostings]] — partition-preserving,
-    * unlike the generic row-clustered [[graft.etl.Merge.compact]].
+    * through [[IvfLedger]]'s `partitionBy`.
     * Batches must be new vec_ids (the append contract everywhere);
     * centroid staleness is q89's department — the drift loop composes
     * unchanged because both read the same shared quantizer artifact. */
   private[graft] def appendIvfBatch(postPath: String, vecs: DataFrame,
-                                    batchId: String): Unit = {
-    val s = vecs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(postPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, postPath) // adopt a crashed compaction
-    vecs.select(col("vec_id"), col("v"), col("nrm"),
-        lit(batchId).as("batch_id"), col("label"))
-      .write.partitionBy("label").mode("append").parquet(postPath)
-  }
+                                    batchId: String): Unit =
+    IvfLedger.append(postPath,
+      vecs.select(col("vec_id"), col("v"), col("nrm"), col("label")), batchId)
+
+  /** The cell-partitioned postings: one row per vector, `label=` cells. */
+  val IvfLedger = graft.etl.Ledger(clusterKey = "label",
+    rowKey = Seq("vec_id"), partitionBy = Some("label"))
 
   /** The postings table in [[ivfProbeWith]]'s corpus shape (label is a
     * partition directory on disk; cast back to the source column type). */
@@ -507,47 +504,17 @@ object Similarity {
       .select(col("vec_id"), col("label").cast("int").as("label"),
         col("v"), col("nrm"))
 
-  /** Partition-preserving compaction: rewrites each cell's small appended
-    * files into size-targeted ones and permanently drops replay
-    * duplicates, keeping the `label=` directory layout the probe's
-    * dynamic pruning needs (Merge.compact would flatten it). Returns
-    * (files before, files after). A probe CONCURRENT with the
-    * delete→rename window (VERDICT r18 item 6) fails on FileNotFound
-    * and retries onto the compacted generation — file-grain listing
-    * means it can never mix generations or see a half-compacted cell;
-    * availability-only, like every swap in the warehouse (see
-    * [[graft.etl.Merge.writeAndSwap]]'s concurrency note). */
-  def compactIvfPostings(s: SparkSession, postPath: String): (Int, Int) = {
-    val target = new org.apache.hadoop.fs.Path(postPath)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, postPath)
-    def parquetFiles(): Int = {
-      val it = fs.listFiles(target, true)
-      var n = 0
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val before = parquetFiles()
-    val rewritten = graft.etl.Merge.readArtifact(s, postPath)
-      .dropDuplicates(Seq("vec_id"))
-      .repartition(col("label"))
-    val tmp = new org.apache.hadoop.fs.Path(s"$postPath.tmp-compact")
-    rewritten.write.mode("overwrite").partitionBy("label")
-      .parquet(tmp.toString)
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new java.io.IOException(s"could not delete old sink $target")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-    (before, parquetFiles())
-  }
+  /** Partition-preserving compaction (the `label=` layout the probe's
+    * dynamic pruning needs survives). Returns (files before, after). */
+  def compactIvfPostings(s: SparkSession, postPath: String): (Int, Int) =
+    IvfLedger.compact(s, postPath)
 
   def ivfIncremental(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(Tables.embeddings(s, d))
       .withColumn("bucket", pmod(graft.functions.Text.portableHash(
         col("vec_id").cast("string")), lit(100L)))
     val tag = Tables.datasetTag(s, d, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val postPath = s"$wh/graft_ivf_post_$tag"
+    val postPath = graft.etl.Artifacts.path(s, "ivf_post", tag)
     graft.etl.Merge.foldMissingBatches(s, postPath,
       Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
         .map { case (id, pred) => id -> (() =>
@@ -563,7 +530,8 @@ object Similarity {
     // cell means a frozen quantizer is built from (ADVICE r18) — a
     // skewed centroid artifact would diverge q141 from its q86 oracle
     // permanently once materialized.
-    val cents = graft.etl.Merge.materialize(s, s"$wh/graft_ivf_cents_$tag",
+    val cents = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "ivf_cents", tag),
       trainCentroids(post.dropDuplicates(Seq("vec_id"))))
     ivfProbeWith(post, cents, nprobe = 1, k = 5, dedupPairs = true)
   }
@@ -576,7 +544,7 @@ object Similarity {
     * retraction pattern: the deleted vec_id set appends to a `del`
     * member (batch-keyed, replay-absorbed by distinct), every probe
     * anti-joins it — O(deleted) rows broadcast, never a corpus shuffle —
-    * and [[compactIvfRetract]] physically drops the masked rows on the
+    * and [[IvfLedger]]`.compact` with `del` physically drops the masked rows on the
     * normal partition-preserving compaction cadence.
     *
     * The coarse quantizer is NOT patched in place: centroids are means
@@ -591,61 +559,13 @@ object Similarity {
     * regardless of quantizer staleness. Query vectors are never
     * retracted (a probe needs its probe set), mirroring the harness
     * carve everywhere else. */
-  private[graft] def retractIvfBatch(postPath: String, delPath: String,
-                                     vecIds: DataFrame,
-                                     batchId: String): Unit = {
-    val s = vecIds.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(delPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, postPath)
-    vecIds.select(col("vec_id"), lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(delPath)
-  }
-
-  /** The tombstone set in probe shape — distinct absorbs replays. */
-  private[graft] def readIvfTombstones(s: SparkSession,
-                                       delPath: String): DataFrame =
-    graft.etl.Merge.readArtifact(s, delPath).select(col("vec_id")).distinct()
-
   /** [[readPostings]] minus the tombstoned vectors — the NET index every
     * q149 consumer (probe AND retrain) reads. The anti-join broadcasts
     * the retention-bounded tombstone set above the partitioned scan, so
     * cell-pruned reads stay cell-pruned. */
   private[graft] def readPostingsNet(s: SparkSession, postPath: String,
                                      delPath: String): DataFrame =
-    readPostings(s, postPath)
-      .join(broadcast(readIvfTombstones(s, delPath)),
-        Seq("vec_id"), "left_anti")
-
-  /** [[compactIvfPostings]] + physical takedown: tombstoned rows vanish
-    * from the parquet while the `label=` partition layout the probe's
-    * dynamic pruning needs survives. */
-  def compactIvfRetract(s: SparkSession, postPath: String,
-                        delPath: String): (Int, Int) = {
-    val target = new org.apache.hadoop.fs.Path(postPath)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.etl.Merge.recoverSwap(fs, postPath)
-    def parquetFiles(): Int = {
-      val it = fs.listFiles(target, true)
-      var n = 0
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val before = parquetFiles()
-    val rewritten = graft.etl.Merge.readArtifact(s, postPath)
-      .join(broadcast(readIvfTombstones(s, delPath)),
-        Seq("vec_id"), "left_anti")
-      .dropDuplicates(Seq("vec_id"))
-      .repartition(col("label"))
-    val tmp = new org.apache.hadoop.fs.Path(s"$postPath.tmp-compact")
-    rewritten.write.mode("overwrite").partitionBy("label")
-      .parquet(tmp.toString)
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new java.io.IOException(s"could not delete old sink $target")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-    (before, parquetFiles())
-  }
+    graft.etl.Ledger.mask(s, readPostings(s, postPath), delPath)
 
   /** q149: ANN serving under takedown — the corpus folds in as two
     * ingest batches (q141's lifecycle), the bucket-[20,30) slice
@@ -657,19 +577,19 @@ object Similarity {
       .withColumn("bucket", pmod(graft.functions.Text.portableHash(
         col("vec_id").cast("string")), lit(100L)))
     val tag = Tables.datasetTag(s, d, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val postPath = s"$wh/graft_ivfr_post_$tag"
-    val delPath = s"$wh/graft_ivfr_del_$tag"
+    val postPath = graft.etl.Artifacts.path(s, "ivfr_post", tag)
+    val delPath = graft.etl.Artifacts.path(s, "ivfr_del", tag)
     graft.etl.Merge.foldMissingBatches(s, postPath, Seq(
       "b0"  -> (() => appendIvfBatch(postPath,
         e.filter(col("bucket") < 50), "b0")),
       "b1"  -> (() => appendIvfBatch(postPath,
         e.filter(col("bucket") >= 50), "b1")),
-      "rm0" -> (() => retractIvfBatch(postPath, delPath,
+      "rm0" -> (() => IvfLedger.tombstone(postPath, delPath,
         e.filter(col("bucket") >= 20 && col("bucket") < 30 && !isQuery)
           .select(col("vec_id")), "rm0"))))
     val post = readPostingsNet(s, postPath, delPath)
-    val cents = graft.etl.Merge.materialize(s, s"$wh/graft_ivfr_cents_$tag",
+    val cents = graft.etl.Merge.materialize(s,
+      graft.etl.Artifacts.path(s, "ivfr_cents", tag),
       trainCentroids(post.dropDuplicates(Seq("vec_id"))))
     ivfProbeWith(post, cents, nprobe = 1, k = 5, dedupPairs = true)
   }
@@ -724,9 +644,8 @@ object Similarity {
       .withColumn("bucket", pmod(graft.functions.Text.portableHash(
         col("vec_id").cast("string")), lit(100L)))
     val tag = Tables.datasetTag(s, d, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val cents = graft.etl.Merge.materialize(s,
-      s"$wh/graft_ivf_cents_c90_$tag",
+      graft.etl.Artifacts.path(s, "ivf_cents_c90", tag),
       trainCentroids(e.filter(col("bucket") < 90)
         .select(col("label"), col("v"))))
     nearestDistMicro(e.select(col("vec_id"), col("bucket"), col("v")), cents)
@@ -864,16 +783,15 @@ object Similarity {
     import graft.operators.Documents
     val e = withNorm(Tables.embeddings(s, d))
     val etag = Tables.datasetTag(s, d, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val cents = graft.etl.Merge.materialize(s,
-      s"$wh/graft_ivf_cents_$etag", trainCentroids(e))
+      graft.etl.Artifacts.path(s, "ivf_cents", etag), trainCentroids(e))
     val dense = ivfProbeWith(e, cents, RrfNprobe, RrfListK)
       .select(col("q_id"), col("n_id").as("id"),
         col("rank").cast("long").as("d_rank"))
     val tag = Tables.datasetTag(s, d, "documents")
     val docs = Tables.documents(s, d)
     val snap = graft.etl.Manifest.ensureMembers(s,
-      s"$wh/graft_search_$tag", Map(
+      graft.etl.Artifacts.path(s, "search", tag), Map(
         "corpus"    -> (() => docs),
         "postings"  -> (() => Documents.postings(docs)),
         "bm25"      -> (() => Documents.bm25Postings(docs)),
@@ -1280,9 +1198,8 @@ object Similarity {
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val aug = semDedupCorpus(s, d)
     val tag = Tables.datasetTag(s, d, "embeddings")
-    val wh = s.conf.get("spark.sql.warehouse.dir")
     val leaders = graft.etl.Merge.materialize(s,
-      s"$wh/graft_canopy_leaders_$tag", canopyLeaders(aug))
+      graft.etl.Artifacts.path(s, "canopy_leaders", tag), canopyLeaders(aug))
     canopyDedup(aug, leaders)
   }
 

@@ -60,8 +60,8 @@ object CurDiagB {
     docs.count()
     // leg 1: frozen-NB gate scoring over the full corpus
     val model = graft.etl.Merge.materialize(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_nb_" +
-        graft.Tables.datasetTag(s, d, "documents"),
+      graft.etl.Artifacts.path(s, "nb",
+        graft.Tables.datasetTag(s, d, "documents")),
       Documents.nbTrainModel(docs.filter(col("bucket") < 90)
         .select(col("doc_id"), col("text"),
           when(col("lang") === "en", 1L).otherwise(0L).as("y"))))
@@ -113,8 +113,8 @@ object CurDiagC {
       pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
         lit(100L)))
     val model = graft.etl.Merge.materialize(s,
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_nb_" +
-        graft.Tables.datasetTag(s, d, "documents"),
+      graft.etl.Artifacts.path(s, "nb",
+        graft.Tables.datasetTag(s, d, "documents")),
       Documents.nbTrainModel(docs.filter(col("bucket") < 90)
         .select(col("doc_id"), col("text"),
           when(col("lang") === "en", 1L).otherwise(0L).as("y"))))

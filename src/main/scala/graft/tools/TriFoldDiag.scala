@@ -41,15 +41,16 @@ object TriFoldDiag {
       val adjAll = e.select(col("a").as("u"), col("b").as("w"), col("batch"))
         .unionByName(
           e.select(col("b").as("u"), col("a").as("w"), col("batch")))
-      val wh = s.conf.get("spark.sql.warehouse.dir")
       val tag = Tables.datasetTag(s, d, "lineitem")
       val degB = time("degB materialize touch") {
-        graft.etl.Merge.materialize(s, s"$wh/graft_tri_degb_$tag",
+        graft.etl.Merge.materialize(s,
+          graft.etl.Artifacts.path(s, "tri_degb", tag),
           adjAll.groupBy(col("u"), col("batch"))
             .agg(count(lit(1)).as("dg")))
       }
       val bcnt = time("bcnt materialize + collect") {
-        graft.etl.Merge.materialize(s, s"$wh/graft_tri_bcnt_$tag",
+        graft.etl.Merge.materialize(s,
+            graft.etl.Artifacts.path(s, "tri_bcnt", tag),
             e.groupBy(col("batch")).agg(count(lit(1)).as("n")))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }

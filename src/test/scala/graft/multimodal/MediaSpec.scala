@@ -374,14 +374,14 @@ class MediaSpec extends SparkSpec {
     Media.appendPhashLedger(path, b1, "b1")
     val want = Media.electPhashClusters(Media.phashPerDoc(ids))
       .collect().toSeq
-    def got() = Media.electPhashClusters(Media.readPhashLedger(spark, path))
+    def got() = Media.electPhashClusters(Media.PhashLedger.read(spark, path))
       .collect().toSeq
     assert(want.nonEmpty)
     assert(got() === want, "fold != one-shot")
     // a crashed-and-replayed append re-derives byte-identical rows
     Media.appendPhashLedger(path, b0, "b0")
     assert(got() === want, "replay changed the clusters")
-    val (before, after) = Media.compactPhashLedger(spark, path)
+    val (before, after) = Media.PhashLedger.compact(spark, path)
     assert(after < before, s"no file reduction: $before -> $after")
     assert(got() === want, "compaction changed the clusters")
   }
@@ -399,7 +399,7 @@ class MediaSpec extends SparkSpec {
     val want = Media.electAudioClusters(Media.audioFpPerDoc(ids))
       .collect().toSeq
     def got() = Media.electAudioClusters(
-        Media.readAudioFpLedger(spark, path))
+        Media.AudioFpLedger.read(spark, path))
       .collect().toSeq
     assert(want.nonEmpty)
     assert(got() === want, "fold != one-shot")
@@ -407,7 +407,7 @@ class MediaSpec extends SparkSpec {
     // (the fingerprint is a pure function of the payload)
     Media.appendAudioFpLedger(path, b1, "b1")
     assert(got() === want, "replay changed the clusters")
-    val (before, after) = Media.compactAudioFpLedger(spark, path)
+    val (before, after) = Media.AudioFpLedger.compact(spark, path)
     assert(after < before, s"no file reduction: $before -> $after")
     assert(got() === want, "compaction changed the clusters")
   }
@@ -426,8 +426,8 @@ class MediaSpec extends SparkSpec {
     // doc 3 is family-3's canonical (pair {3, 53}); taking it down must
     // promote 53 to a singleton canonical of its own hash cluster
     val removed = Seq(3L, 10L, 27L).toDF("doc_id").localCheckpoint(true)
-    Media.retractPhashBatch(path, del, removed, "rm0")
-    Media.retractPhashBatch(path, del, removed, "rm0") // replay
+    Media.PhashLedger.tombstone(path, del, removed, "rm0")
+    Media.PhashLedger.tombstone(path, del, removed, "rm0") // replay
     val reduced = ids.join(removed, Seq("doc_id"), "left_anti")
     val want = Media.electPhashClusters(Media.phashPerDoc(reduced))
       .collect().toSeq
@@ -447,7 +447,7 @@ class MediaSpec extends SparkSpec {
       "a tombstoned doc survived as a cluster canonical")
     assert(d53.getLong(5) === preBy53.getLong(5) - 1L,
       "cluster size did not shrink by the retracted member")
-    val (fb, fa) = Media.compactPhashRetract(spark, path, del)
+    val (fb, fa) = Media.PhashLedger.compact(spark, path, Some(del))
     assert(fa <= fb, s"retraction compaction grew files ($fb -> $fa)")
     assert(spark.read.parquet(path).count() === 77L,
       "tombstoned ledger rows survived retraction compaction")
@@ -465,8 +465,8 @@ class MediaSpec extends SparkSpec {
     Media.appendAudioFpLedger(path, ids.filter($"doc_id" % 2 === 0), "b0")
     Media.appendAudioFpLedger(path, ids.filter($"doc_id" % 2 === 1), "b1")
     val removed = Seq(5L, 12L, 40L).toDF("doc_id").localCheckpoint(true)
-    Media.retractAudioFpBatch(path, del, removed, "rm0")
-    Media.retractAudioFpBatch(path, del, removed, "rm0") // replay
+    Media.AudioFpLedger.tombstone(path, del, removed, "rm0")
+    Media.AudioFpLedger.tombstone(path, del, removed, "rm0") // replay
     val want = Media.electAudioClusters(Media.audioFpPerDoc(
         ids.join(removed, Seq("doc_id"), "left_anti")))
       .collect().toSeq
@@ -474,7 +474,7 @@ class MediaSpec extends SparkSpec {
         Media.readAudioFpLedgerNet(spark, path, del))
       .collect().toSeq
     assert(got() === want, "retracted election != reduced one-shot")
-    val (fb, fa) = Media.compactAudioFpRetract(spark, path, del)
+    val (fb, fa) = Media.AudioFpLedger.compact(spark, path, Some(del))
     assert(fa <= fb, s"retraction compaction grew files ($fb -> $fa)")
     assert(spark.read.parquet(path).count() === 77L,
       "tombstoned ledger rows survived retraction compaction")

@@ -269,6 +269,102 @@ class DupSpansSpec extends SparkSpec {
       "replay-after-compaction changed the collapsed counts")
   }
 
+  test("orphan adoption at append AND at read holds for EVERY ledger " +
+       "family's append: a compaction that crashed in the delete->rename " +
+       "window is adopted before the next batch lands or is read") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array, col, explode, lit}
+    import graft.etl.Ledger
+    import graft.multimodal.Media
+    import graft.streaming.Streams
+    val docs = Seq((1L, "a b c d p1 p2", 1L), (2L, "a b c d p3 p4", 0L),
+                   (3L, "a b c d z1", 1L), (4L, "e f g h z2", 0L))
+      .toDF("doc_id", "text", "y").localCheckpoint(true)
+    def half(i: Int): DataFrame = docs.filter(col("doc_id") % 2 === i % 2)
+    def text(i: Int) = half(i).select(col("doc_id"), col("text"))
+    val dict = Documents.freezeDict(Documents.shingleDocs(docs))
+    val events = Seq((1L, 1L, "2024-01-01 10:00:00", 2.5),
+                     (2L, 1L, "2024-01-01 13:30:00", 4.0),
+                     (3L, 2L, "2024-01-02 08:15:00", 1.25),
+                     (4L, 4L, "2024-01-02 09:45:00", 3.0))
+      .toDF("event_id", "user_id", "ts", "value")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val vecs = docs.select(col("doc_id").as("vec_id"),
+      array(lit(1.0), col("doc_id").cast("double")).as("v"),
+      lit(1.0).as("nrm"), (col("doc_id") % 2).cast("int").as("label"))
+    val words = docs.select(explode(graft.functions.Text.toWords(
+      col("text"))).as("w"))
+    // (family, its ledger, ledger path under the family dir, one batch's
+    // append through the family's own verb)
+    val families: Seq[(String, Ledger, String, (String, Int) => Unit)] = Seq(
+      ("gram", Documents.GramLedger, "led", (d, i) =>
+        Documents.appendGramLedger(s"$d/led", text(i), 4, s"b$i")),
+      ("lm", Documents.LmLedger, "led", (d, i) =>
+        Documents.appendLmLedger(s"$d/led", text(i), s"b$i")),
+      ("word-freq", Documents.WfLedger, "led", (d, i) =>
+        Documents.appendWfLedger(s"$d/led", text(i), s"b$i")),
+      ("nb", Documents.NbLedger, "led", (d, i) =>
+        Documents.appendNbLedger(s"$d/led", half(i), s"b$i")),
+      ("prefix", Documents.PrefixLedger, "led", (d, i) =>
+        Documents.appendPrefixRows(s"$d/led",
+          Documents.shingleDocs(text(i)), dict)),
+      ("and-postings", Documents.TermLedger, "led", (d, i) =>
+        Documents.appendPostings(s"$d/led", text(i))),
+      ("bm25 postings", Documents.TermLedger, "led", (d, i) =>
+        Documents.appendBm25(s"$d/led", s"$d/stats", s"$d/df", text(i),
+          s"b$i")),
+      ("bm25 df", Documents.Bm25DfLedger, "df", (d, i) =>
+        Documents.appendBm25(s"$d/post", s"$d/stats", s"$d/df", text(i),
+          s"b$i")),
+      ("phash", Media.PhashLedger, "led", (d, i) =>
+        Media.appendPhashLedger(s"$d/led", half(i).select(col("doc_id")),
+          s"b$i")),
+      ("audio-fp", Media.AudioFpLedger, "led", (d, i) =>
+        Media.appendAudioFpLedger(s"$d/led", half(i).select(col("doc_id")),
+          s"b$i")),
+      ("ivf", Similarity.IvfLedger, "led", (d, i) =>
+        Similarity.appendIvfBatch(s"$d/led",
+          vecs.filter(col("vec_id") % 2 === i % 2), s"b$i")),
+      ("grid obs", Streams.GridObsLedger, "state/obs", (d, i) =>
+        Streams.applyGridBatch(
+          events.filter(col("user_id") % 2 === i % 2), s"$d/state", s"b$i")),
+      ("dup-span feed", Streams.DupSpanLedger, "out", (d, i) =>
+        Streams.applyDupSpanBatch(text(i), s"$d/state", s"$d/out", 4,
+          s"b$i")),
+      ("shard manifest", Streams.ShardLedger, "led", (d, i) =>
+        Streams.applyShardBatch(text(i), s"$d/led", s"b$i")),
+      ("nb drift", Streams.NbDriftLedger, "led", (d, i) => {
+        if (i == 1) graft.etl.Merge.writeAndSwap(
+          Documents.nbTrainModel(docs), s"$d/model", "build")
+        Streams.applyNbDriftBatch(text(i), s"$d/model", s"$d/led", s"b$i")
+      }),
+      ("bpe drift", Streams.BpeDriftLedger, "led", (d, i) => {
+        Documents.bpeFreezeAt(spark, s"$d/merges", s"$d/types", words)
+        Streams.applyBpeDriftBatch(text(i), s"$d/types", s"$d/led", s"b$i")
+      }))
+    def rows(ledger: Ledger, path: String) =
+      ledger.read(spark, path).collect().toSet
+    families.foreach { case (name, ledger, rel, append) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_orphan")
+        .toString
+      val led = s"$dir/$rel"
+      val fs = new org.apache.hadoop.fs.Path(led)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def crash(): Unit = assert(fs.rename(new org.apache.hadoop.fs.Path(led),
+        new org.apache.hadoop.fs.Path(s"$led.tmp-compact")),
+        s"$name: test setup: simulate the mid-swap crash")
+      append(dir, 1)
+      val want = rows(ledger, led)
+      assert(want.nonEmpty, s"$name: fixture appended nothing")
+      crash()
+      assert(rows(ledger, led) === want, s"$name: read-side adoption failed")
+      crash()
+      append(dir, 2)
+      assert(want.subsetOf(rows(ledger, led)),
+        s"$name: the append stranded the compaction orphan")
+    }
+  }
+
   test("applyDropRanges: overlapping, adjacent, and whole-doc ranges " +
        "all conserve tokens — n_out = n_in - covered positions") {
     val docs = Seq(
@@ -356,7 +452,7 @@ class DupSpansSpec extends SparkSpec {
     Documents.appendGramLedger(
       ledger, Seq((5L, "w1 w2 w3 w4 w5")).toDF("doc_id", "text"), 4, "b2")
     val withB2 = got()
-    val (fb, fa) = Documents.compactGramLedgerNet(spark, ledger)
+    val (fb, fa) = Documents.GramLedger.compactNet(spark, ledger)
     assert(fa <= fb, s"net compaction grew the file count ($fb -> $fa)")
     val raw = spark.read.parquet(ledger)
     assert(raw.filter($"gram" === "a b c d").count() === 0L,
@@ -371,7 +467,7 @@ class DupSpansSpec extends SparkSpec {
         4, "b2"))))
     assert(got() === withB2, "replayed in-flight batch double-counted")
     // a second net compaction folds the _net generation again
-    Documents.compactGramLedgerNet(spark, ledger)
+    Documents.GramLedger.compactNet(spark, ledger)
     assert(got() === withB2, "second net compaction changed a verdict")
   }
 

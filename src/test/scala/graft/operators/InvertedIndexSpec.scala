@@ -40,7 +40,7 @@ class InvertedIndexSpec extends SparkSpec {
       spark.read.parquet(path), terms, 1000)) === expect,
       "appended index probe != from-scratch probe")
 
-    val (before, after) = Merge.compact(spark, path, "term")
+    val (before, after) = Documents.TermLedger.compact(spark, path)
     assert(after < before,
       s"compaction did not shrink the file population ($before -> $after)")
     assert(rows(Documents.searchIndex(
@@ -129,13 +129,13 @@ class InvertedIndexSpec extends SparkSpec {
       "appended df ledger != from-scratch df")
     // and compaction of the df ledger (term-clustered, replay rows
     // GC'd) must not change a single total
-    val (dfB, dfA) = Merge.compact(spark, dfLed, "term")
+    val (dfB, dfA) = Documents.Bm25DfLedger.compact(spark, dfLed)
     assert(dfA < dfB,
       s"df compaction did not shrink the file population ($dfB -> $dfA)")
     assert(dfRows(spark.read.parquet(dfLed)) === dfExpect,
       "df compaction changed per-term totals")
 
-    val (before, after) = Documents.compactBm25Index(spark, idx)
+    val (before, after) = Documents.TermLedger.compact(spark, idx)
     assert(after < before,
       s"compaction did not shrink the file population ($before -> $after)")
     assert(probe(spark.read.parquet(idx), spark.read.parquet(stats))
@@ -212,9 +212,9 @@ class InvertedIndexSpec extends SparkSpec {
     val (idx, del) = (s"$dir/post", s"$dir/del")
     Documents.appendPostings(idx, docs.filter(col("doc_id") % 2 === 0))
     Documents.appendPostings(idx, docs.filter(col("doc_id") % 2 === 1))
-    Documents.retractPostingsBatch(idx, del,
+    Documents.TermLedger.tombstone(idx, del,
       removed.select(col("doc_id")), "rm0")
-    Documents.retractPostingsBatch(idx, del,
+    Documents.TermLedger.tombstone(idx, del,
       removed.select(col("doc_id")), "rm0") // replay
     def tomb() = spark.read.parquet(del).select(col("doc_id")).distinct()
     def netProbe(): Seq[(Long, Long)] =
@@ -231,7 +231,7 @@ class InvertedIndexSpec extends SparkSpec {
     val goneIds = removed.select(col("doc_id")).as[Long].collect().toSet
     assert(servedIds.intersect(goneIds).isEmpty,
       "a tombstoned doc was served before compaction")
-    val (b, a) = Documents.compactPostingsRetract(spark, idx, del)
+    val (b, a) = Documents.TermLedger.compact(spark, idx, Some(del))
     assert(a <= b, s"retraction compaction grew the file count ($b -> $a)")
     val ghost = spark.read.parquet(idx)
       .join(tomb(), Seq("doc_id")).count()

@@ -156,8 +156,8 @@ class IvfIngestSpec extends SparkSpec {
     // (QueryIds are multiples of 50; 50 % 7 == 1)
     val removed = e.filter($"vec_id" % 7 === 3).select($"vec_id")
       .localCheckpoint(true)
-    Similarity.retractIvfBatch(path, del, removed, "rm0")
-    Similarity.retractIvfBatch(path, del, removed, "rm0") // replay
+    Similarity.IvfLedger.tombstone(path, del, removed, "rm0")
+    Similarity.IvfLedger.tombstone(path, del, removed, "rm0") // replay
     val reduced = e.join(removed, Seq("vec_id"), "left_anti")
     val want = probeOf(reduced)
     assert(want.nonEmpty)
@@ -178,7 +178,7 @@ class IvfIngestSpec extends SparkSpec {
     val gone = removed.as[Long].collect().toSet
     assert(netProbe().forall { case (_, _, nId, _) => !gone(nId) })
     // physical drop on the compaction cadence, layout preserved
-    val (before, after) = Similarity.compactIvfRetract(spark, path, del)
+    val (before, after) = Similarity.IvfLedger.compact(spark, path, Some(del))
     assert(after <= before, s"retraction compaction grew files ($before -> $after)")
     assert(spark.read.parquet(path).count() === (100L - gone.size),
       "tombstoned posting rows survived retraction compaction")

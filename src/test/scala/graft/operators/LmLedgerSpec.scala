@@ -50,14 +50,14 @@ class LmLedgerSpec extends SparkSpec {
     fs.mkdirs(mdir)
     Seq("b0", "b1", "rm0").foreach(id =>
       fs.create(new org.apache.hadoop.fs.Path(mdir, id), true).close())
-    val (before, after) = Documents.compactLmLedgerNet(spark, led)
+    val (before, after) = Documents.LmLedger.compactNet(spark, led)
     assert(after <= before,
       s"net compaction grew the file count ($before -> $after)")
     // every marked batch collapsed; only the reserved net id remains
     import spark.implicits._
     val ids = spark.read.parquet(led).select(col("batch_id"))
       .distinct().as[String].collect().toSet
-    assert(ids === Set(Documents.LmNetBatchId),
+    assert(ids === Set(graft.etl.Ledger.NetBatchId),
       s"marked batches not folded: $ids")
     // zero-net bigrams are PHYSICALLY gone: the parquet's bigram domain
     // is exactly the reduced corpus's

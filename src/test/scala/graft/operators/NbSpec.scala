@@ -99,7 +99,7 @@ class NbSpec extends SparkSpec {
     assert(model() === want, "ledger sum != one-shot counts")
     Documents.appendNbLedger(p, b1, "b1") // checkpoint-replayed append
     assert(model() === want, "replayed append changed the model")
-    val (before, after) = Documents.compactNbLedger(spark, p)
+    val (before, after) = Documents.NbLedger.compact(spark, p)
     assert(after < before, s"compaction must shrink files ($before->$after)")
     assert(model() === want, "compaction changed the model")
     // the scoring face is byte-identical under either training path
@@ -158,7 +158,7 @@ class NbSpec extends SparkSpec {
       Documents.nbLedgerModel(spark, p)
         .as[(String, Long, Long)].collect().toSet
     val before = model()
-    val (fb, fa) = Documents.compactNbLedgerNet(spark, p)
+    val (fb, fa) = Documents.NbLedger.compactNet(spark, p)
     assert(fa <= fb, s"net compaction grew the file count ($fb -> $fa)")
     assert(model() === before, "net compaction changed the model")
     val raw = spark.read.parquet(p)
@@ -173,8 +173,26 @@ class NbSpec extends SparkSpec {
         p, labeled((5L, "flight", 1L)), "b2"))))
     assert(model() === before, "replayed in-flight batch double-counted")
     // a second net compaction folds the _net generation again
-    val (_, _) = Documents.compactNbLedgerNet(spark, p)
+    val (_, _) = Documents.NbLedger.compactNet(spark, p)
     assert(model() === before, "second net compaction changed the model")
+    // an UNMARKED in-flight batch whose docs a MARKED batch retracts: the
+    // marked net is negative and must survive the fold to cancel the
+    // in-flight rows, or the takedown is undone
+    val q = tmpPath()
+    val flight = labeled((5L, "flight", 1L))
+    graft.etl.Merge.foldMissingBatches(spark, q, Seq(
+      "b0" -> (() => Documents.appendNbLedger(q, b0, "b0"))))
+    Documents.appendNbLedger(q, flight, "b2")
+    graft.etl.Merge.foldMissingBatches(spark, q, Seq(
+      "rm1" -> (() => Documents.retractNbBatch(q, flight, "rm1"))))
+    def modelQ(): Set[(String, Long, Long)] =
+      Documents.nbLedgerModel(spark, q)
+        .as[(String, Long, Long)].collect().toSet
+    val beforeQ = modelQ()
+    assert(!beforeQ.exists(_._1 == "flight"), "fixture lost its point")
+    Documents.NbLedger.compactNet(spark, q)
+    assert(modelQ() === beforeQ,
+      "net compaction brought back a retracted in-flight term")
   }
 
   test("nbRefreshIfDrifted: an in-distribution batch refreshes nothing; " +

@@ -269,7 +269,7 @@ class PrefixJaccardSpec extends SparkSpec {
     val truth = bruteCross(b2, corpus2)
     assert(probe(b2, corpus2, dict, spark.read.parquet(idxPath)) == truth)
 
-    val (before, after) = Documents.compactPrefixIndex(spark, idxPath)
+    val (before, after) = Documents.PrefixLedger.compact(spark, idxPath)
     assert(before > after,
       s"compaction did not reduce the file count ($before -> $after)")
     assert(after === 1, s"tiny index should compact to 1 file, got $after")
@@ -279,7 +279,7 @@ class PrefixJaccardSpec extends SparkSpec {
     // ...and the replayed-append duplicates were garbage-collected
     assert(spark.read.parquet(idxPath).count() === distinctRows)
 
-    // the single-shuffle claim in Merge.compact's scaladoc: clustering on
+    // the single-shuffle claim in Ledger.compact's scaladoc: clustering on
     // the probe key and the full-row dedup share ONE hash exchange
     // (HashPartitioning(t) satisfies the dedup aggregate's distribution)
     val shape = spark.read.parquet(idxPath)
@@ -311,9 +311,9 @@ class PrefixJaccardSpec extends SparkSpec {
       Documents.prefixRows(toDf(corpus), dict), idxPath, "build")
     val removedIds = Set(corpus.head._1) // family 1's corpus member
     import spark.implicits._
-    Documents.retractPrefixBatch(idxPath, delPath,
+    Documents.PrefixLedger.tombstone(idxPath, delPath,
       removedIds.toSeq.toDF("doc_id"), "rm0")
-    Documents.retractPrefixBatch(idxPath, delPath,
+    Documents.PrefixLedger.tombstone(idxPath, delPath,
       removedIds.toSeq.toDF("doc_id"), "rm0") // replay
     val reduced = corpus.filterNot(c => removedIds(c._1))
     val incoming = fams.map(_.head)
@@ -332,7 +332,7 @@ class PrefixJaccardSpec extends SparkSpec {
       "masked-index probe != rebuild on the reduced corpus")
     assert(!netProbe().exists(p => removedIds(p._2)),
       "a retracted doc was served as a corpus match")
-    val (b, a) = Documents.compactPrefixRetract(spark, idxPath, delPath)
+    val (b, a) = Documents.PrefixLedger.compact(spark, idxPath, Some(delPath))
     assert(a <= b, s"retraction compaction grew the file count ($b -> $a)")
     val ghost = spark.read.parquet(idxPath)
       .join(tomb(), Seq("doc_id")).count()

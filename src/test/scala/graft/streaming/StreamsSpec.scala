@@ -933,12 +933,51 @@ class StreamsSpec extends SparkSpec {
     // the sinks wrote .batches markers, so the net compaction folds the
     // streamed batches: net-zero grams physically vanish and the served
     // counts are unchanged
-    Documents.compactGramLedgerNet(spark, led)
+    Documents.GramLedger.compactNet(spark, led)
     import spark.implicits._
     val batchIds = spark.read.parquet(led).select(col("batch_id"))
       .distinct().as[String].collect().toSet
     assert(!batchIds.exists(_.startsWith("rm-")),
       s"streamed retract batches not folded by net compaction: $batchIds")
+    assert(served().exceptAll(want).count() === 0 &&
+           want.exceptAll(served()).count() === 0,
+      "net compaction changed the served gram counts")
+  }
+
+  test("two dup-span ingest streams with FRESH checkpoints onto one gram " +
+       "ledger keep distinct batch tokens and stamp commit markers: the " +
+       "ledger counts equal the one-shot, and the net compaction folds " +
+       "the streamed batches") {
+    import graft.operators.Documents
+    val K = Documents.DupSpanK
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text"))
+    val led = tmp("graft-dspan2-state") + "/ledger"
+    val out = tmp("graft-dspan2-out") + "/feed"
+    // the two halves of the corpus, each drained by its own stream with
+    // its own fresh checkpoint — both streams' first batch is batchId 0
+    Seq(docs.filter(col("doc_id") % 2 === 0) -> "graft-dspan2-a",
+        docs.filter(col("doc_id") % 2 === 1) -> "graft-dspan2-b").foreach {
+      case (part, ck) =>
+        val in = tmp(ck + "-docs")
+        part.write.mode("overwrite").parquet(in)
+        val q = Streams.dupSpanSink(
+          spark.readStream.schema(part.schema).parquet(in),
+          led, out, tmp(ck + "-ckpt"))
+        assert(q.awaitTermination(120000), "stream did not drain")
+    }
+    val want = Documents.gramCounts(docs, K)
+    def served() = Documents.gramLedgerCounts(spark, led)
+    assert(want.count() > 0 &&
+           served().exceptAll(want).count() === 0 &&
+           want.exceptAll(served()).count() === 0,
+      "two streamed halves != one-shot gram counts (token collision?)")
+    Documents.GramLedger.compactNet(spark, led)
+    import spark.implicits._
+    val batchIds = spark.read.parquet(led).select(col("batch_id"))
+      .distinct().as[String].collect().toSet
+    assert(batchIds === Set(graft.etl.Ledger.NetBatchId),
+      s"streamed ingest batches not folded by net compaction: $batchIds")
     assert(served().exceptAll(want).count() === 0 &&
            want.exceptAll(served()).count() === 0,
       "net compaction changed the served gram counts")
@@ -1271,7 +1310,7 @@ class StreamsSpec extends SparkSpec {
     assert(feed() === want, "replaying a batch changed the manifest")
     // compaction rewrites the file population (and GCs the replay
     // duplicates permanently) without changing what a reader sees
-    val (before, after) = Streams.compactShardLedger(spark, ledger)
+    val (before, after) = Streams.ShardLedger.compact(spark, ledger)
     assert(after < before,
       s"compaction did not reduce files: $before -> $after")
     assert(feed() === want, "compaction changed the manifest feed")
