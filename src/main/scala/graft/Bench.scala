@@ -20,7 +20,10 @@ package graft
   * `{name: {"min","mean","prev","load","reruns"}}` per query (`"prev"`
   * null when the query is new or no prior bench file exists; `"load"` =
   * /proc/loadavg 1-min at the start of the min-producing pass; `"reruns"`
-  * = extra passes granted by the outlier re-run rule). Top level adds
+  * = extra passes granted by the outlier re-run rule;
+  * `"artifact_build_sec"` = first-touch artifact builds;
+  * `"codegen_compiles"`/`"codegen_compile_sec"` = Janino compiles over
+  * the query's passes, see [[Codegen]]). Top level adds
   * `"loadavg_start"`/`"loadavg_end"`/`"wall_sec"` so a contaminated run
   * is diagnosable from the artifact alone (r7 VERDICT item 1: two rounds
   * of poisoned media numbers). A query whose min still sits
@@ -213,6 +216,26 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
+  /** One query's bench result; seconds read -1 when the query failed.
+    * `compiles`/`compileSec` are the Janino compiles its passes ran
+    * ([[Codegen.drain]]) — 0 once every generated class is cached. */
+  case class Timed(min: Double, mean: Double, load: Double, reruns: Int,
+                   capped: Boolean, buildSec: Double,
+                   compiles: Long, compileSec: Double)
+
+  private def jnum(d: Double) = if (d < 0) "-1" else f"$d%.4f"
+  private def jprev(p: Option[Double]) = p.map(v => f"$v%.4f").getOrElse("null")
+  private def codegenJson(t: Timed) =
+    s""""codegen_compiles":${t.compiles},"codegen_compile_sec":${jnum(t.compileSec)}"""
+
+  /** The query's line in `BENCH_stream.jsonl`. */
+  def streamJson(name: String, t: Timed, prev: Option[Double]): String =
+    s"""{"q":"$name","min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"capped":${t.capped},"artifact_build_sec":${jnum(t.buildSec)},${codegenJson(t)}}"""
+
+  /** The query's entry in `queries_detail`. */
+  def detailJson(name: String, t: Timed, prev: Option[Double]): String =
+    s""""$name":{"min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"artifact_build_sec":${jnum(t.buildSec)},${codegenJson(t)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -292,6 +315,7 @@ object Bench {
       // includes nothing extra (warm passes dominate it), but the build
       // cost stops hiding inside whichever family member ran first
       graft.etl.Merge.drainBuildSec(): Unit
+      Codegen.drain(): Unit // and the Janino compiles its passes run
       var passes = Vector.empty[(Double, Double)]
       var failed = false
       while (!failed && passes.length < Passes &&
@@ -317,40 +341,39 @@ object Bench {
       }
       if (!ok) errors ::= name
       val buildSec = graft.etl.Merge.drainBuildSec() // this query's builds
+      val (compiles, compileSec) = Codegen.drain()
       val times = passes.map(_._1)
-      val mn = if (ok) times.min else -1.0
-      val mean = if (ok) times.sum / times.length else -1.0
-      // loadavg recorded at the start of the pass that produced the min —
-      // the number a reader needs to trust (or distrust) the headline
-      val minLoad = if (ok) passes.minBy(_._1)._2 else -1.0
+      val t = Timed(
+        min = if (ok) times.min else -1.0,
+        mean = if (ok) times.sum / times.length else -1.0,
+        // loadavg recorded at the start of the pass that produced the min
+        // — the number a reader needs to trust (or distrust) the headline
+        load = if (ok) passes.minBy(_._1)._2 else -1.0,
+        reruns = reruns, capped = capped, buildSec = buildSec,
+        compiles = compiles, compileSec = compileSec)
       val prevStr = prev.get(name).map(p => f"prev $p%7.2f s").getOrElse("prev     n/a")
       System.err.println(
-        if (ok) f"[bench] $name%-24s min $mn%7.2f s  mean $mean%7.2f s  $prevStr  load $minLoad%5.1f" +
+        if (ok) f"[bench] $name%-24s min ${t.min}%7.2f s  mean ${t.mean}%7.2f s  $prevStr  load ${t.load}%5.1f" +
                 (if (reruns > 0) s"  reruns $reruns" else "") +
                 (if (buildSec > 0.05) f"  build $buildSec%.2f s" else "") +
                 (if (capped) "  CAPPED" else "")
         else    f"[bench] $name%-24s FAILED")
       streamOut.foreach { w =>
-        def j(d: Double) = if (d < 0) "-1" else f"$d%.4f"
-        val p = prev.get(name).map(v => f"$v%.4f").getOrElse("null")
-        w.println(s"""{"q":"$name","min":${j(mn)},"mean":${j(mean)},"prev":$p,"load":${j(minLoad)},"reruns":$reruns,"capped":$capped,"artifact_build_sec":${j(buildSec)}}""")
+        w.println(streamJson(name, t, prev.get(name)))
         w.flush()
       }
-      name -> (mn, mean, minLoad, reruns, buildSec)
+      name -> t
     }
-    def jnum(d: Double) = if (d < 0) "-1" else f"$d%.4f"
-    val qs = results.map { case (k, (mn, _, _, _, _)) => "\"" + k + "\":" + jnum(mn) }
+    val qs = results.map { case (k, t) => "\"" + k + "\":" + jnum(t.min) }
       .mkString("{", ",", "}")
-    val detail = results.map { case (k, (mn, mean, ld, rr, bs)) =>
-      val p = prev.get(k).map(v => f"$v%.4f").getOrElse("null")
-      s""""$k":{"min":${jnum(mn)},"mean":${jnum(mean)},"prev":$p,"load":${jnum(ld)},"reruns":$rr,"artifact_build_sec":${jnum(bs)}}"""
-    }.mkString("{", ",", "}")
+    val detail = results.map { case (k, t) => detailJson(k, t, prev.get(k)) }
+      .mkString("{", ",", "}")
     val errJson = errors.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.values.map(_._1).filter(_ >= 0).sum
+    val total = results.values.map(_.min).filter(_ >= 0).sum
     // round-over-round continuity: the round-1 bench covered only q01-q09,
     // so report that subset's total alongside the full-surface total
     val core9 = results.collect {
-      case (k, (mn, _, _, _, _)) if mn >= 0 && k.matches("q0[1-9].*") => mn }.sum
+      case (k, t) if t.min >= 0 && k.matches("q0[1-9].*") => t.min }.sum
     val wall = (System.nanoTime() - benchT0) / 1e9
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_detail":$detail,"passes":$Passes,"n_queries":${results.size},"core9_total":$core9,"errors":$errJson,"loadavg_start":${jnum(loadStart)},"loadavg_end":${jnum(loadavg())},"gated":$allGated,"gate_wait_sec":${gateSpentMs / 1000},"probe_cpu_sec":${jnum(probeCpu)},"probe_codec_sec":${jnum(probeCodec)},"wall_sec":${jnum(wall)},"sf":"$sfDir"}"""
     println(line)

@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Alongside,
+  * `verify_profile.jsonl` carries one line per query: `"q"`, `"ok"` and
+  * the Janino compiles it ran, `"codegen_compiles"`/`"codegen_compile_sec"`
+  * (drained as Bench drains them, see [[Codegen]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -16,13 +19,22 @@ object Verify {
     val spark = Sessions.local(cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val profile = new java.io.PrintWriter(
+      new java.io.FileWriter(s"$outDir/verify_profile.jsonl", false))
+    Codegen.drain(): Unit
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+                .parquet(s"$outDir/$name"); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
+      val (compiles, compileSec) = Codegen.drain()
+      profile.println(f"""{"q":"$name","ok":$ok,"codegen_compiles":$compiles,"codegen_compile_sec":$compileSec%.4f}""")
+      profile.flush()
     }
+    profile.close()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -55,6 +55,22 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseQueryTimes(txt) === Map("q02_b" -> 0.5))
   }
 
+  test("per-query stream lines and detail entries carry the codegen " +
+       "fields, and the detail still parses back to its min") {
+    val t = Bench.Timed(min = 0.25, mean = 0.3, load = 1.2, reruns = 0,
+      capped = false, buildSec = 0.0, compiles = 17, compileSec = 0.4321)
+    val stream = Bench.streamJson("q07_x", t, Some(0.2))
+    val detail = Bench.detailJson("q07_x", t, None)
+    for (line <- Seq(stream, detail)) {
+      assert(line.contains(""""codegen_compiles":17"""), line)
+      assert(line.contains(""""codegen_compile_sec":0.4321"""), line)
+      assert(line.contains(""""artifact_build_sec":0.0000"""), line)
+    }
+    assert(stream.startsWith("""{"q":"q07_x","min":0.2500,"""), stream)
+    assert(Bench.parseQueryTimes(s"""{"queries_detail":{$detail}}""") ===
+      Map("q07_x" -> 0.25))
+  }
+
   test("container calibration probes return plausible positive times " +
        "and are repeatable to the min-wins contract") {
     val cpu = Bench.probeMin(() => Bench.cpuProbeSec(), 3)
