@@ -22,8 +22,12 @@ package graft
   * /proc/loadavg 1-min at the start of the min-producing pass; `"reruns"`
   * = extra passes granted by the outlier re-run rule;
   * `"artifact_build_sec"` = first-touch artifact builds;
-  * `"codegen_compiles"`/`"codegen_compile_sec"` = Janino compiles over
-  * the query's passes, see [[Codegen]]). Top level adds
+  * `"construct_s"` = the min pass's `fn(spark, d)` call, inside its time;
+  * `"analysis_s"`/`"optimization_s"`/`"planning_s"` = the min pass's
+  * Catalyst phases (`queryExecution.tracker`); `"scans"` = FileScans per
+  * source in the last pass's final adaptive plan, for sources scanned 2+
+  * times; then the [[Profile]] fields over all the query's passes). Top
+  * level adds
   * `"loadavg_start"`/`"loadavg_end"`/`"wall_sec"` so a contaminated run
   * is diagnosable from the artifact alone (r7 VERDICT item 1: two rounds
   * of poisoned media numbers). A query whose min still sits
@@ -217,30 +221,68 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
 
   /** One query's bench result; seconds read -1 when the query failed.
-    * `compiles`/`compileSec` are the Janino compiles its passes ran
-    * ([[Codegen.drain]]) — 0 once every generated class is cached. */
+    * `construct`/`phases` come from the min pass (-1 and zeros when the
+    * query failed), `scans` from the last pass, `profile` from all of
+    * them ([[Profile.drain]]). */
   case class Timed(min: Double, mean: Double, load: Double, reruns: Int,
-                   capped: Boolean, buildSec: Double,
-                   compiles: Long, compileSec: Double)
+                   capped: Boolean, buildSec: Double, construct: Double,
+                   phases: Phases, scans: Seq[(String, Int)],
+                   profile: Profile.Fields)
+
+  /** Catalyst's analysis, optimization and planning seconds. */
+  case class Phases(analysis: Double, optimization: Double, planning: Double)
+
+  /** One successful pass: seconds, loadavg at its start, seconds of
+    * `fn(spark, d)`, and the frame it ran. */
+  private case class Pass(sec: Double, load: Double, construct: Double,
+                          df: org.apache.spark.sql.DataFrame)
+
+  /** A pass's phase times, from its `QueryPlanningTracker`. */
+  private def phases(df: org.apache.spark.sql.DataFrame): Phases = {
+    val ph = df.queryExecution.tracker.phases
+    def sec(p: String) = ph.get(p).map(_.durationMs / 1e3).getOrElse(0.0)
+    Phases(sec("analysis"), sec("optimization"), sec("planning"))
+  }
+
+  /** FileScans per source in an executed frame's final adaptive plan,
+    * sources scanned [[MinScans]]+ times, most-scanned first. A base table
+    * scanned more than once after exchange reuse usually means an
+    * expensive derivation (tokenize, shingle, parse) is re-evaluated per
+    * reference — a staging candidate. */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] = {
+    val tablePat = "([A-Za-z0-9_]+)\\.parquet".r
+    df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0).linesIterator
+      .filter(l => l.contains("FileScan") || l.contains("Scan parquet"))
+      .flatMap(l => tablePat.findFirstMatchIn(l).map(_.group(1)))
+      .toSeq.groupBy(identity).view.mapValues(_.size).toSeq
+      .filter(_._2 >= MinScans).sortBy { case (t, n) => (-n, t) }
+  }
+  val MinScans = 2
 
   private def jnum(d: Double) = if (d < 0) "-1" else f"$d%.4f"
   private def jprev(p: Option[Double]) = p.map(v => f"$v%.4f").getOrElse("null")
-  private def codegenJson(t: Timed) =
-    s""""codegen_compiles":${t.compiles},"codegen_compile_sec":${jnum(t.compileSec)}"""
+  private def profileJson(t: Timed) = {
+    val sc = t.scans.map { case (tb, n) => s"${Profile.quote(tb)}:$n" }
+      .mkString("{", ",", "}")
+    s""""construct_s":${jnum(t.construct)},"analysis_s":${jnum(t.phases.analysis)},"optimization_s":${jnum(t.phases.optimization)},"planning_s":${jnum(t.phases.planning)},"scans":$sc,${t.profile.json}"""
+  }
 
   /** The query's line in `BENCH_stream.jsonl`. */
   def streamJson(name: String, t: Timed, prev: Option[Double]): String =
-    s"""{"q":"$name","min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"capped":${t.capped},"artifact_build_sec":${jnum(t.buildSec)},${codegenJson(t)}}"""
+    s"""{"q":"$name","min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"capped":${t.capped},"artifact_build_sec":${jnum(t.buildSec)},${profileJson(t)}}"""
 
-  /** The query's entry in `queries_detail`. */
+  /** The query's entry in `queries_detail`; `min` stays its first key
+    * ([[parseQueryTimes]] reads it there). */
   def detailJson(name: String, t: Timed, prev: Option[Double]): String =
-    s""""$name":{"min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"artifact_build_sec":${jnum(t.buildSec)},${codegenJson(t)}}"""
+    s""""$name":{"min":${jnum(t.min)},"mean":${jnum(t.mean)},"prev":${jprev(prev)},"load":${jnum(t.load)},"reruns":${t.reruns},"artifact_build_sec":${jnum(t.buildSec)},${profileJson(t)}}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
+    val profile = Profile.install(spark)
     // warm-up: JIT the scan/agg/shuffle paths, read every table family's
     // parquet footers, and initialize the DSv2 source — all untimed
     Tables.lineitem(spark, sfDir)
@@ -293,35 +335,38 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(150.0)
     var errors = List.empty[String]
     val results = SparkEntry.queries.map { case (name, fn) =>
-      // each pass = (seconds, loadavg-at-start); seconds -1 on failure
-      def pass(): (Double, Double) = {
+      // one pass; None on failure
+      def pass(): Option[Pass] = {
         val ld = gate() // spin-wait (bounded) for an idle box, then stamp
         val t0 = System.nanoTime()
         // toRdd executes the query's physical plan AS WRITTEN — df.count()
         // would let the optimizer prune every projected column and time an
         // empty scan instead of the actual kernels
-        try { fn(spark, sfDir).queryExecution.toRdd.count()
-              ((System.nanoTime() - t0) / 1e9, ld) }
+        try { val df = fn(spark, sfDir)
+              val t1 = System.nanoTime()
+              df.queryExecution.toRdd.count()
+              Some(Pass((System.nanoTime() - t0) / 1e9, ld, (t1 - t0) / 1e9, df)) }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          (-1.0, ld)
+          None
         }
       }
-      def spent(ps: Vector[(Double, Double)]): Double =
-        ps.map(_._1).filter(_ >= 0).sum
+      def spent(ps: Vector[Pass]): Double = ps.map(_.sec).sum
       // artifact-build attribution (r21, VERDICT r20 item 8): drain the
       // warehouse build ledger so first-touch artifact builds triggered
       // by THIS query's passes are reported separately — the min still
       // includes nothing extra (warm passes dominate it), but the build
       // cost stops hiding inside whichever family member ran first
       graft.etl.Merge.drainBuildSec(): Unit
-      Codegen.drain(): Unit // and the Janino compiles its passes run
-      var passes = Vector.empty[(Double, Double)]
+      profile.begin(name) // and profile its passes' jobs and compiles
+      var passes = Vector.empty[Pass]
       var failed = false
       while (!failed && passes.length < Passes &&
              (passes.isEmpty || spent(passes) < capSec)) {
-        val p = pass()
-        if (p._1 < 0) failed = true else passes :+= p
+        pass() match {
+          case Some(p) => passes :+= p
+          case None => failed = true
+        }
       }
       val ok = !failed && passes.nonEmpty
       val capped = ok && passes.length < Passes
@@ -333,24 +378,26 @@ object Bench {
       if (ok && !capped) {
         val base = prev.get(name)
         while (reruns < RerunPasses && spent(passes) < capSec &&
-               base.exists(p => passes.map(_._1).min > RerunFactor * p)) {
-          val extra = pass()
+               base.exists(p => passes.map(_.sec).min > RerunFactor * p)) {
           reruns += 1
-          if (extra._1 >= 0) passes :+= extra
+          pass().foreach(passes :+= _)
         }
       }
       if (!ok) errors ::= name
       val buildSec = graft.etl.Merge.drainBuildSec() // this query's builds
-      val (compiles, compileSec) = Codegen.drain()
-      val times = passes.map(_._1)
+      val times = passes.map(_.sec)
+      // the pass that produced the min — its loadavg is the number a
+      // reader needs to trust (or distrust) the headline
+      val best = if (ok) Some(passes.minBy(_.sec)) else None
       val t = Timed(
         min = if (ok) times.min else -1.0,
         mean = if (ok) times.sum / times.length else -1.0,
-        // loadavg recorded at the start of the pass that produced the min
-        // — the number a reader needs to trust (or distrust) the headline
-        load = if (ok) passes.minBy(_._1)._2 else -1.0,
+        load = best.fold(-1.0)(_.load),
         reruns = reruns, capped = capped, buildSec = buildSec,
-        compiles = compiles, compileSec = compileSec)
+        construct = best.fold(-1.0)(_.construct),
+        phases = best.fold(Phases(0, 0, 0))(b => phases(b.df)),
+        scans = if (ok) scans(passes.last.df) else Nil,
+        profile = profile.drain())
       val prevStr = prev.get(name).map(p => f"prev $p%7.2f s").getOrElse("prev     n/a")
       System.err.println(
         if (ok) f"[bench] $name%-24s min ${t.min}%7.2f s  mean ${t.mean}%7.2f s  $prevStr  load ${t.load}%5.1f" +

@@ -640,7 +640,7 @@ object Documents {
     * short). Output: every doc, its cluster representative (= component
     * min id), and the keep/drop decision.
     *
-    * Two scale notes baked in: `localCheckpoint(eager)` after every round
+    * Two scale notes baked in: a `localCheckpoint` every round
     * truncates the lineage — without it the plan DOUBLES per iteration
     * and planning cost alone goes exponential (the classic iterative-
     * Spark trap); convergence is detected from sum(lbl), a strictly
@@ -672,23 +672,23 @@ object Documents {
     * min id). */
   private[graft] def connectedComponents(nodes: DataFrame,
                                          pairs: DataFrame): DataFrame = {
-    // r21 (second pass): the edge flip and the init labels are LAZY
-    // persists materialized by round 1's witness action instead of two
-    // eager localCheckpoint jobs — the reduced-CC callers (repair/fold)
-    // run several CCs per query over tiny subgraphs, where the fixed
-    // per-job latency of the two staging actions dominated the whole
-    // kernel (CurDiagB: repairClusters 2.8 s warm on a 100-doc takedown).
-    // Each round's plan references edges once and the prior labels twice;
-    // after round 1 both resolve to their InMemoryRelations, so the
-    // executed shape is unchanged — only the action count drops.
+    // The edge flip is a LAZY persist materialized by round 1's witness
+    // action instead of an eager localCheckpoint job — the reduced-CC
+    // callers (repair/fold) run several CCs per query over tiny subgraphs,
+    // where the fixed per-job latency of a staging action dominated the
+    // whole kernel (a 100-doc takedown repair ran 2.8 s warm).
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coalesce: sum over zero rows is NULL — an empty corpus must
-    // converge immediately, not NPE (ADVICE r6).
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("lbl")), lit(0L))).head.getLong(0)
-    // r21 loop shape (VERDICT r20 item 4 + the ADVICE r20 analyzer trap):
+    // Summed straight off the round's rows (an RDD fold over the
+    // checkpoint's own result stage): one job, where a SQL sum added an
+    // aggregation exchange, a fourth job per round. An empty corpus folds
+    // to 0 and converges immediately.
+    def labelSum(df: DataFrame): Long = {
+      val i = df.schema.fieldIndex("lbl")
+      df.queryExecution.toRdd.map(_.getLong(i)).fold(0L)(_ + _)
+    }
+    // Loop shape:
     //  - NO separate initial-sum action: prevSum starts as a sentinel,
     //    so the first comparison happens between rounds 1 and 2 — a
     //    min-propagation sum strictly decreases until fixpoint, so the
@@ -701,44 +701,30 @@ object Documents {
     //    1-2, convergence in 2 rounds) the A/B read q63 2.85→3.43 s,
     //    q112 4.81→5.33 s — the duplicated step work costs more than
     //    the saved driver latency. Single-step kept.
-    //  - The round's labels are persisted and materialized by the
-    //    witness aggregation (one action per round, the r20 fusion), and
-    //    every 8 rounds the LOGICAL lineage is truncated with an eager
-    //    checkpoint (ADVICE r20): cache substitution happens after
-    //    analysis and each round references the prior plan twice, so the
-    //    analyzed tree otherwise doubles per round — a high-diameter
-    //    graph would hit exponential analyzer cost long before the loud
-    //    require(converged) below. The common path (diameter 2-3) never
-    //    pays the truncation action.
+    //  - Each round's labels are a LAZY localCheckpoint, materialized by
+    //    the witness fold (one action per round; adaptive execution runs
+    //    the step's edge broadcast and shuffle-map jobs already when the
+    //    checkpoint is declared). The checkpoint cuts the LOGICAL plan
+    //    too: each step references the prior labels twice, so a
+    //    persisted (not checkpointed) frame would let the analyzed tree
+    //    double every round and the analyzer cost grow exponentially with
+    //    the diameter. The result is the last round's checkpoint, already
+    //    materialized.
     def step(l: DataFrame): DataFrame =
       l.unionByName(
           l.join(edges, col("doc_id") === col("src"))
             .select(col("dst").as("doc_id"), col("lbl")))
         .groupBy(col("doc_id")).agg(min(col("lbl")).as("lbl"))
-    val labels0 = nodes
-      .select(col("doc_id"), col("doc_id").as("lbl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = labels0
-    var cached: Option[DataFrame] = None
+    var labels = nodes.select(col("doc_id"), col("doc_id").as("lbl"))
     var prevSum: Option[Long] = None
     var converged = false
     var steps = 0
     while (!converged && steps < maxCcRounds) {
-      val next = step(labels)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val s2 = labelSum(next) // one action: materializes cache + witness
-      if (steps == 0) labels0.unpersist(false) // init fed round 1 only
-      cached.foreach(_.unpersist(false))
-      cached = Some(next)
-      labels = next
+      labels = step(labels).localCheckpoint(false)
+      val s2 = labelSum(labels) // materializes it + witness
       converged = prevSum.contains(s2)
       prevSum = Some(s2)
       steps += 1
-      if (!converged && steps % 8 == 0) {
-        labels = labels.localCheckpoint(true)
-        cached.foreach(_.unpersist(false))
-        cached = None
-      }
     }
     // Hitting the cap means a component's diameter exceeds it and the
     // labels are NOT a fixpoint — returning them would be silently wrong
@@ -748,10 +734,8 @@ object Documents {
     require(converged,
       s"connectedComponents did not converge within $maxCcRounds steps — " +
       "component diameter exceeds the cap; labels would be wrong")
-    val out = labels.localCheckpoint(true)
-    cached.foreach(_.unpersist(false))
     edges.unpersist(false)
-    out
+    labels
   }
 
   /** INCREMENTAL connected components (r12) — the q79/q107 R-S move for
@@ -4411,7 +4395,7 @@ object Documents {
     // repair's node set), and Spark evaluates each reference from
     // scratch: the plan audit counted 6 graft_nb_ scans / 7 corpus
     // scans in ONE curatedDocs pass, i.e. the scoring pipeline ran the
-    // corpus that many times (CurDiagC: repairClusters leg 2.8 s warm).
+    // corpus that many times (the repairClusters leg ran 2.8 s warm).
     // The id set is gate-survivor-sized (key-only). PlanSpec pins the
     // UNstaged gate leg ([[nbGateIds]]) for the no-retrain property the
     // truncation hides.

@@ -579,7 +579,7 @@ object Relational {
     * [[deltaTriangles]] (r21) so the q107 fold can tag each batch's
     * stream and count ALL batches in ONE aggregation instead of paying
     * 12 single-partition agg exchanges + 12 cross-join broadcasts + 4
-    * per-batch count jobs — the TriFoldDiag profile read the fold as
+    * per-batch count jobs — a per-stage profile read the fold as
     * almost pure per-stage fixed latency (batch 0, nearly empty, still
     * cost 1.0 s of its 5.2 s warm total). */
   private def deltaTriCands(old: DataFrame, delta: DataFrame,
@@ -768,8 +768,8 @@ object Relational {
     val nTotal = bcnt.values.sum
     // r21: the 4-batch × 3-class fold is FUSED into three batch-tagged
     // joins + ONE closing-probe family + ONE 4-group aggregation, under
-    // the same ≤8M-edge envelope as q104's broadcast closing choice. The
-    // TriFoldDiag profile read the old per-batch fold (12 separate agg
+    // the same ≤8M-edge envelope as q104's broadcast closing choice. A
+    // per-stage profile read the old per-batch fold (12 separate agg
     // pipelines, ~38 broadcast builds, ~85 codegen stages) as paying its
     // honest per-class compute PLUS a fixed stage-latency tax per probe —
     // batch 0, nearly empty, still cost 1.0 s of the 5.2 s warm total.
@@ -933,7 +933,7 @@ object Relational {
     *
     * RE-PLANNED on the r18 ladder before shipping. The first draft
     * called [[deltaTriangles]] on two filters of the edge artifact and
-    * measured 191 s at sf10 (120M edges) against GraphDiag's 88 s
+    * measured 191 s at sf10 (120M edges) against an 88 s
     * checkpoint-frame apply and 566 s recount — because every standing-
     * side DERIVATION re-ran per apply: the degree table (a 2|E|-row
     * shuffle), the closing Bloom (an |E|-row aggregate), the edge count,

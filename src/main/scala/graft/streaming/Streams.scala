@@ -136,19 +136,13 @@ object Streams {
                   sinkPath: String, quarantinePath: String,
                   checkpoint: String): StreamingQuery = {
     val violation = checks.map(_.violation).reduce(_ || _)
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint() // split reads it twice
-        applyMergeBatch(b.filter(!coalesce(violation, lit(false))),
-          key, sinkPath, batchId)
-        applyMergeBatch(b.filter(coalesce(violation, lit(false))),
-          key, quarantinePath, batchId)
-        ()
-      }
-      .start()
+    foreachBatch(events, checkpoint) { (batch, batchId) =>
+      val b = batch.localCheckpoint() // split reads it twice
+      applyMergeBatch(b.filter(!coalesce(violation, lit(false))),
+        key, sinkPath, batchId)
+      applyMergeBatch(b.filter(coalesce(violation, lit(false))),
+        key, quarantinePath, batchId)
+    }
   }
 
   /** One merge application of [[mergingSink]]'s per-batch body with a
@@ -201,48 +195,41 @@ object Streams {
     * built. */
   def searchPublishSink(docs: DataFrame, root: String,
                         checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.toDF().localCheckpoint()
-        val snap = graft.etl.Manifest.resolve(s, root)
-        val corpus0 = snap.get("corpus")
-          .map(p => s.read.schema(b.schema).parquet(p))
-          .getOrElse(b.limit(0))
-        val fresh = b.join(corpus0.select("doc_id"), Seq("doc_id"),
-          "left_anti").localCheckpoint()
-        val post0 = snap.get("postings").map(p => s.read.parquet(p))
-          .getOrElse(graft.operators.Documents.postings(b.limit(0)))
-        val bm25Updates: Map[String, DataFrame] =
-          if (!snap.contains("bm25")) Map.empty
-          else {
-            val bm250 = s.read.parquet(snap("bm25"))
-            val ledgerRaw = s.read.parquet(snap("bm25stats"))
-            // normalize an r14 single-row stats artifact into the ledger
-            // shape so an existing root upgrades in place
-            val ledger0 =
-              if (ledgerRaw.columns.contains("batch_id")) ledgerRaw
-              else ledgerRaw.select(lit("build").as("batch_id"),
-                col("n_docs"), col("total_tokens"))
-            Map(
-              "bm25" -> bm250.unionByName(
-                graft.operators.Documents.bm25Postings(fresh)),
-              "bm25stats" -> ledger0.unionByName(
-                graft.operators.Documents
-                  .bm25StatsLedger(fresh, s"stream-$batchId")
-                  .filter(col("n_docs") > 0)))
-          }
-        graft.etl.Manifest.publish(s, root, Map(
-          "corpus" -> corpus0.unionByName(fresh),
-          "postings" -> post0.unionByName(
-            graft.operators.Documents.postings(fresh))) ++ bm25Updates)
-        ()
-      }
-      .start()
+    foreachBatch(docs, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val b = batch.localCheckpoint()
+      val snap = graft.etl.Manifest.resolve(s, root)
+      val corpus0 = snap.get("corpus")
+        .map(p => s.read.schema(b.schema).parquet(p))
+        .getOrElse(b.limit(0))
+      val fresh = b.join(corpus0.select("doc_id"), Seq("doc_id"),
+        "left_anti").localCheckpoint()
+      val post0 = snap.get("postings").map(p => s.read.parquet(p))
+        .getOrElse(graft.operators.Documents.postings(b.limit(0)))
+      val bm25Updates: Map[String, DataFrame] =
+        if (!snap.contains("bm25")) Map.empty
+        else {
+          val bm250 = s.read.parquet(snap("bm25"))
+          val ledgerRaw = s.read.parquet(snap("bm25stats"))
+          // normalize an r14 single-row stats artifact into the ledger
+          // shape so an existing root upgrades in place
+          val ledger0 =
+            if (ledgerRaw.columns.contains("batch_id")) ledgerRaw
+            else ledgerRaw.select(lit("build").as("batch_id"),
+              col("n_docs"), col("total_tokens"))
+          Map(
+            "bm25" -> bm250.unionByName(
+              graft.operators.Documents.bm25Postings(fresh)),
+            "bm25stats" -> ledger0.unionByName(
+              graft.operators.Documents
+                .bm25StatsLedger(fresh, s"stream-$batchId")
+                .filter(col("n_docs") > 0)))
+        }
+      graft.etl.Manifest.publish(s, root, Map(
+        "corpus" -> corpus0.unionByName(fresh),
+        "postings" -> post0.unionByName(
+          graft.operators.Documents.postings(fresh))) ++ bm25Updates)
+    }
 
   /** CDC ingest gated by EXPECTATIONS before apply (VERDICT r11 item 6) —
     * the composition production change-capture actually runs: a corrupt
@@ -266,48 +253,35 @@ object Streams {
                    netPath: String, quarantinePath: String,
                    checkpoint: String): StreamingQuery = {
     val violation = checks.map(_.violation).reduce(_ || _)
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val b = batch.toDF().localCheckpoint() // split reads it twice
-        applyBatch(b.filter(!coalesce(violation, lit(false))), key, netPath,
-          batchId, graft.etl.Merge.cdcApply(_, _, _, seqCol))
-        applyMergeBatch(
-          b.filter(coalesce(violation, lit(false)))
-            .withColumn("__change_id",
-              concat_ws(":", col(key), col(seqCol))),
-          "__change_id", quarantinePath, batchId)
-        ()
-      }
-      .start()
+    foreachBatch(changes, checkpoint) { (batch, batchId) =>
+      val b = batch.localCheckpoint() // split reads it twice
+      applyBatch(b.filter(!coalesce(violation, lit(false))), key, netPath,
+        batchId, graft.etl.Merge.cdcApply(_, _, _, seqCol))
+      applyMergeBatch(
+        b.filter(coalesce(violation, lit(false)))
+          .withColumn("__change_id",
+            concat_ws(":", col(key), col(seqCol))),
+        "__change_id", quarantinePath, batchId)
+    }
   }
 
   private def mergingSink(events: DataFrame, key: String, path: String,
       checkpoint: String,
       merge: (DataFrame, DataFrame, String) => DataFrame,
       transform: DataFrame => DataFrame = identity): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val incoming = transform(batch.toDF())
-        val existing =
-          if (graft.etl.Merge.exists(s, path)) // adopt BEFORE reading existing
-            // incoming.schema IS the stream's fixed (post-transform)
-            // schema — unlike the batch sinks, drift cannot arise within
-            // one stream run
-            s.read.schema(incoming.schema).parquet(path)
-          else incoming.limit(0)
-        val merged = merge(existing, incoming, key)
-        graft.etl.Merge.writeAndSwap(merged, path, batchId.toString)
-        ()
-      }
-      .start()
+    foreachBatch(events, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val incoming = transform(batch)
+      val existing =
+        if (graft.etl.Merge.exists(s, path)) // adopt BEFORE reading existing
+          // incoming.schema IS the stream's fixed (post-transform)
+          // schema — unlike the batch sinks, drift cannot arise within
+          // one stream run
+          s.read.schema(incoming.schema).parquet(path)
+        else incoming.limit(0)
+      val merged = merge(existing, incoming, key)
+      graft.etl.Merge.writeAndSwap(merged, path, batchId.toString)
+    }
 
   /** Per-batch incremental near-dup at INGEST time — the streaming twin
     * of q79 ([[graft.operators.Documents.incrementalNearDup]]): each
@@ -452,14 +426,8 @@ object Streams {
     * never the event history. */
   def retentionSketchSink(events: DataFrame, statePath: String,
                           checkpoint: String, k: Int = 64): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyRetentionBatch(batch.toDF(), statePath, k, batchId.toString)
-      }
-      .start()
+    foreachBatch(events, checkpoint)((batch, batchId) =>
+      applyRetentionBatch(batch, statePath, k, batchId.toString))
 
   /** One batch of [[retentionSketchSink]]'s state update — factored out so
     * StreamsSpec can fold explicit in-order batches deterministically
@@ -556,16 +524,8 @@ object Streams {
     * an out-of-order late batch and asserts bit-for-bit parity. */
   def gridMaintSink(events: DataFrame, statePath: String,
                     checkpoint: String): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        applyGridBatch(batch.toDF(), statePath, s"b$batchId")
-        ()
-      }
-      .start()
+    foreachBatch(events, checkpoint)((batch, batchId) =>
+      applyGridBatch(batch, statePath, s"b$batchId"))
 
   /** One grid-maintenance batch application — the directly-callable
     * core ([[applyRetentionBatch]]'s shape). `token` doubles as the
@@ -726,15 +686,8 @@ object Streams {
     * no shuffle beyond the 1-row partial. */
   def bpeDriftSink(docs: DataFrame, typesPath: String, ledgerPath: String,
                    checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBpeDriftBatch(batch.toDF(), typesPath, ledgerPath,
-          batchId.toString)
-      }
-      .start()
+    foreachBatch(docs, checkpoint)((batch, batchId) =>
+      applyBpeDriftBatch(batch, typesPath, ledgerPath, batchId.toString))
 
   /** One batch of [[bpeDriftSink]] — factored so StreamsSpec can fold
     * explicit in-order batches and assert parity with q131's batch-side
@@ -790,15 +743,8 @@ object Streams {
     * one single-row aggregate + an O(1) append. */
   def nbDriftSink(docs: DataFrame, modelPath: String, ledgerPath: String,
                   checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyNbDriftBatch(batch.toDF(), modelPath, ledgerPath,
-          batchId.toString)
-      }
-      .start()
+    foreachBatch(docs, checkpoint)((batch, batchId) =>
+      applyNbDriftBatch(batch, modelPath, ledgerPath, batchId.toString))
 
   /** One batch of [[nbDriftSink]] — factored so StreamsSpec can fold
     * explicit batches and assert parity with q135's batch-side row. */
@@ -840,14 +786,8 @@ object Streams {
     * O(P) offset pass from `globalCumsum` — never a corpus pass. */
   def shardManifestSink(docs: DataFrame, ledgerPath: String,
                         checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyShardBatch(batch.toDF(), ledgerPath, s"b$batchId")
-      }
-      .start()
+    foreachBatch(docs, checkpoint)((batch, batchId) =>
+      applyShardBatch(batch, ledgerPath, s"b$batchId"))
 
   /** One batch of [[shardManifestSink]] — factored so StreamsSpec can
     * fold explicit batches and assert parity with the batch-side
@@ -893,15 +833,8 @@ object Streams {
     * immediately searchable by any q141-style probe. */
   def ivfIngestSink(vecs: DataFrame, postPath: String,
                     checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Similarity.appendIvfBatch(postPath, batch.toDF(),
-          s"b$batchId")
-      }
-      .start()
+    foreachBatch(vecs, checkpoint)((batch, batchId) =>
+      graft.operators.Similarity.appendIvfBatch(postPath, batch, s"b$batchId"))
 
   // ── takedown sink: the q144 retraction verb's streaming face ────────────
   /** Takedown/right-to-be-forgotten events arriving as a STREAM of
@@ -953,19 +886,28 @@ object Streams {
       apply: (DataFrame, String) => Unit): StreamingQuery = {
     // String.hashCode is specified (stable across JVMs/restarts)
     val salt = f"${checkpoint.hashCode & 0xffffff}%06x"
+    foreachBatch(rows, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val token = s"$prefix-$salt-$batchId"
+        apply(batch, token)
+        markers.foreach(graft.etl.Merge.markBatch(batch.sparkSession, _, token))
+      }
+    }
+  }
+
+  /** The preamble every sink above shares: append output, the checkpoint,
+    * an AvailableNow trigger (drain what is there, then stop), and
+    * `apply` on each micro-batch with its batch id. */
+  private def foreachBatch(rows: DataFrame, checkpoint: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
     rows.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val token = s"$prefix-$salt-$batchId"
-          apply(batch.toDF(), token)
-          markers.foreach(graft.etl.Merge.markBatch(batch.sparkSession, _, token))
-        }
+        apply(batch.toDF(), batchId)
       }
       .start()
-  }
 
   /** q149's takedown verb as a stream: (vec_id) rows tombstone the
     * cell-partitioned IVF postings — probes stop serving the vectors at

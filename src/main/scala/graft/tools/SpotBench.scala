@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, Sessions, SparkEntry}
+import graft.{Bench, Profile, Sessions, SparkEntry}
 
 /** Spot-bench a named subset of registered queries at one SF dir and print
   * ONE JSON line — the scale-ladder evidence runner (r7 verdict item 3).
@@ -8,18 +8,24 @@ import graft.{Bench, Sessions, SparkEntry}
   * the 100 TB scaling question only needs the shuffle-heavy handful, timed
   * the same way Bench times (plan-as-written via `toRdd.count()`,
   * construction inside the clock, min of passes, loadavg recorded).
+  * Each query also carries the [[graft.Profile]] fields over its passes:
+  * jobs, stages, tasks, executor time, shuffle/spill bytes, the three
+  * longest jobs with their call sites, and Janino compiles.
   *
-  * Usage: runMain graft.tools.SpotBench <sfDir> <q1,q2,...> [passes=3]
+  * Usage: runMain graft.tools.SpotBench <sfDir> <q1,q2,...|all> [passes=3]
   */
 object SpotBench {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: SpotBench <sfDir> <q1,q2,..> [passes]")
+    require(args.length >= 2, "usage: SpotBench <sfDir> <q1,q2,..|all> [passes]")
     val sfDir = args(0)
-    val names = args(1).split(",").toIndexedSeq
+    val names =
+      if (args(1) == "all") SparkEntry.queries.keys.toIndexedSeq
+      else args(1).split(",").toIndexedSeq
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-spotbench")
     spark.sparkContext.setLogLevel("WARN")
+    val profile = Profile.install(spark)
     // warm-up, mirroring Bench's untimed pre-pass (r9: the first listed
     // query used to absorb ALL of session init + JIT + cold page cache —
     // a q18@sf10 spot measured 25.5 s first-in-run vs 10.4 s for q63,
@@ -39,6 +45,7 @@ object SpotBench {
     val t0All = System.nanoTime()
     val results = names.map { n =>
       val fn = SparkEntry.queries(n)
+      profile.begin(n)
       // failure isolation, Bench's contract (r9: a q35 disk-spill blowup
       // at sf100 killed the whole run with four queries still unmeasured;
       // a ladder probe EXPECTS to find walls — finding one must not cost
@@ -70,14 +77,14 @@ object SpotBench {
       val rows = if (ok) times.head._2 else -1L
       if (ok) System.err.println(
         f"[spot] $n%-24s min $mn%8.2f s  rows $rows")
-      n -> (mn, mean, rows, times.map(_._1))
+      n -> (mn, mean, rows, times.map(_._1), profile.drain())
     }
     // per-pass times ride along explicitly (r17 VERDICT item 8: the
     // ladder's cold/warm split used to be derivable-only; pass 1 IS the
     // cold end-to-end number when the run starts from a fresh session)
-    val qs = results.map { case (n, (mn, mean, rows, ts)) =>
+    val qs = results.map { case (n, (mn, mean, rows, ts, prof)) =>
       val passesJson = ts.map(t => f"$t%.4f").mkString("[", ",", "]")
-      f""""$n":{"min":$mn%.4f,"mean":$mean%.4f,"rows":$rows,"passes_sec":$passesJson}"""
+      f""""$n":{"min":$mn%.4f,"mean":$mean%.4f,"rows":$rows,"passes_sec":$passesJson,${prof.json}}"""
     }.mkString("{", ",", "}")
     val wall = (System.nanoTime() - t0All) / 1e9
     println(s"""{"metric":"spot","sf":"$sfDir","passes":$passes,"loadavg_start":$loadStart,"loadavg_end":${Bench.loadavg()},"wall_sec":${f"$wall%.1f"},"queries":$qs}""")

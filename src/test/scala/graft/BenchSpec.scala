@@ -57,16 +57,39 @@ class BenchSpec extends AnyFunSuite {
 
   test("per-query stream lines and detail entries carry the codegen " +
        "fields, and the detail still parses back to its min") {
+    // and the phase, scan and listener fields beside them
     val t = Bench.Timed(min = 0.25, mean = 0.3, load = 1.2, reruns = 0,
-      capped = false, buildSec = 0.0, compiles = 17, compileSec = 0.4321)
+      capped = false, buildSec = 0.0, construct = 0.05,
+      phases = Bench.Phases(0.011, 0.022, 0.033),
+      scans = Seq("documents" -> 3, "part" -> 2),
+      profile = Profile.Fields(jobs = 4, stages = 6, tasks = 9,
+        taskRunSec = 1.5, taskCpuSec = 1.25, shuffleReadBytes = 123,
+        shuffleWriteBytes = 456, spillBytes = 0,
+        topJobs = Seq(Profile.Job(7, 0.125, "count at Documents.scala:3898"),
+                      Profile.Job(8, 0.0625, "head at \"odd\"\tsite")),
+        codegenCompiles = 17, codegenCompileSec = 0.4321))
     val stream = Bench.streamJson("q07_x", t, Some(0.2))
     val detail = Bench.detailJson("q07_x", t, None)
     for (line <- Seq(stream, detail)) {
-      assert(line.contains(""""codegen_compiles":17"""), line)
-      assert(line.contains(""""codegen_compile_sec":0.4321"""), line)
-      assert(line.contains(""""artifact_build_sec":0.0000"""), line)
+      for (field <- Seq(""""codegen_compiles":17""",
+                        """"codegen_compile_sec":0.4321""",
+                        """"artifact_build_sec":0.0000""",
+                        """"construct_s":0.0500""",
+                        """"analysis_s":0.0110""",
+                        """"optimization_s":0.0220""",
+                        """"planning_s":0.0330""",
+                        """"scans":{"documents":3,"part":2}""",
+                        """"jobs":4,"stages":6,"tasks":9""",
+                        """"task_run_s":1.500,"task_cpu_s":1.250""",
+                        """"shuffle_read_bytes":123""",
+                        """"shuffle_write_bytes":456,"spill_bytes":0""",
+                        """{"job":7,"sec":0.125,"site":"count at Documents.scala:3898"}""",
+                        // call sites are JSON-escaped like Verify's SQL
+                        """"site":"head at \"odd\"\tsite""""))
+        assert(line.contains(field), s"$field missing from $line")
     }
     assert(stream.startsWith("""{"q":"q07_x","min":0.2500,"""), stream)
+    assert(detail.startsWith(""""q07_x":{"min":0.2500,"""), detail)
     assert(Bench.parseQueryTimes(s"""{"queries_detail":{$detail}}""") ===
       Map("q07_x" -> 0.25))
   }

@@ -46,6 +46,15 @@ class DedupClusterSpec extends SparkSpec {
     assert(out.values.toSet === Set(1L), s"bridge not propagated: $out")
   }
 
+  test("a 45-node path (diameter 44) converges under the round cap") {
+    // 44 rounds carry label 0 to the far end and one more sees no change:
+    // 45 of the maxCcRounds = 50, the headroom near-dup graphs never use
+    assert(Documents.maxCcRounds === 50)
+    val out = cc(0L to 44L, (0L until 44L).map(i => (i, i + 1)))
+    assert(out.size === 45 && out.values.toSet === Set(0L),
+      s"path not collapsed to one label: $out")
+  }
+
   test("a duplicated pair and a self-loop change nothing") {
     val out = cc(1L to 3L, Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L)))
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
