@@ -279,8 +279,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-bench")
+    val spark = Sessions.local(Sessions.cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     val profile = Profile.install(spark)
     // warm-up: JIT the scan/agg/shuffle paths, read every table family's

@@ -70,6 +70,12 @@ object Sessions {
       dir
     }
 
+  /** The local session's cores, and so its shuffle partitions:
+    * `SPARK_GRAFT_CPUS`, default 4. Every main reads it here, so a
+    * SpotBench number and a Bench number for one query are planned
+    * alike. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** Local session for Verify/Bench/tests. `cpus` is also the shuffle
     * parallelism — at local scale one partition per core is right.
     *

@@ -15,8 +15,7 @@ object Verify {
       if (args.length > 2) { val pats = args(2).split(",").toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-verify")
+    val spark = Sessions.local(Sessions.cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val jsonl = new java.io.PrintWriter(

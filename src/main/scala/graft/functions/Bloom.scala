@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{broadcast, call_function, col, udaf}
 import org.apache.spark.sql.types._
 
 /** Bloom-filter SEMI-JOIN REDUCTION — the runtime-filter pattern that at
@@ -97,6 +97,31 @@ object Bloom {
     * [[Agg]]'s output struct (`col("bf.bits")`). */
   def mightContainCol(bits: Column, key: Column): Column =
     call_function("bloom_might_contain", bits, key)
+
+  /** The broadcast envelope, in build-side rows: at or under it a gate
+    * broadcasts the exact build side (8M rows of a packed long or a
+    * (doc, range) struct is ~130 MB); past it the build is Bloom-filtered
+    * or shuffled instead. */
+  val BroadcastRows: Long = 8L * 1000 * 1000
+
+  /** The build: a one-row frame of `bits` over `key` of `rows`, sized
+    * for `nKeys`. `coalesce(8)` bounds the partials: each holds a full
+    * m-bit buffer, and in local mode all partials share one heap (32 ×
+    * 134 MB at 10⁸ keys killed the default heap). It narrows without a
+    * shuffle, and the build scan is a small fraction of any query that
+    * probes it. */
+  def build(rows: DataFrame, key: Column, nKeys: Long): DataFrame = {
+    val agg = udaf(new Agg(sizeWords(nKeys)))
+    rows.coalesce(8).agg(agg(key).as("bf")).select(col("bf.bits").as("bits"))
+  }
+
+  /** The probe: `rows` whose `key` may be in the one-row `bloom` frame
+    * (a [[build]], `bits` column). Callers project the `bits` column away.
+    * No false negatives, so an exact join downstream gives the unfiltered
+    * join's answer. */
+  def probe(rows: DataFrame, bloom: DataFrame, key: Column): DataFrame =
+    rows.crossJoin(broadcast(bloom)) // ONE row by construction
+      .filter(mightContainCol(col("bits"), key))
 
   /** Aggregation buffer/output as case classes so Encoders.product keeps
     * everything in Catalyst's serialized format (no kryo blobs). The

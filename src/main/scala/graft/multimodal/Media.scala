@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.etl.Ring
 
 /** Multimodal-column plumbing — images/audio/video as opaque `binary`
   * columns with typed metadata, decoded batch-wise inside partitions.
@@ -452,17 +453,11 @@ object Media {
       col("hash_hi"), col("hash_lo"))
 
   def perceptualNearDupIncremental(s: SparkSession, d: String): DataFrame = {
-    val ids = Tables.documents(s, d).select(col("doc_id"),
-      pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
-        lit(100L)).as("bucket"))
+    val ids = Ring.carve(Tables.documents(s, d).select(col("doc_id")))
     val path = graft.etl.Artifacts.path(s, "phash",
       Tables.datasetTag(s, d, "documents"))
-    graft.etl.Merge.foldMissingBatches(s, path,
-      Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
-        .map { case (id, pred) => id -> (() =>
-          appendPhashLedger(path, ids.filter(pred).select(col("doc_id")),
-            id))
-        })
+    Ring.fold(s, path, ids, 50, 100)((b, id) =>
+      appendPhashLedger(path, b.select(col("doc_id")), id))
     electPhashClusters(phashShape(PhashLedger.read(s, path)))
   }
 
@@ -489,20 +484,14 @@ object Media {
     * as tombstones, and the election runs the net ledger. Gated against
     * q91's one-shot oracle on the REDUCED corpus. */
   def perceptualRetract(s: SparkSession, d: String): DataFrame = {
-    val ids = Tables.documents(s, d).select(col("doc_id"),
-      pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
-        lit(100L)).as("bucket"))
+    val ids = Ring.carve(Tables.documents(s, d).select(col("doc_id")))
     val root = graft.etl.Artifacts.path(s, "phashr",
       Tables.datasetTag(s, d, "documents"))
     val (path, delPath) = (s"$root/led", s"$root/del")
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendPhashLedger(path,
-        ids.filter(col("bucket") < 50).select(col("doc_id")), "b0")),
-      "b1"  -> (() => appendPhashLedger(path,
-        ids.filter(col("bucket") >= 50).select(col("doc_id")), "b1")),
-      "rm0" -> (() => PhashLedger.tombstone(path, delPath,
-        ids.filter(col("bucket") >= 20 && col("bucket") < 30)
-          .select(col("doc_id")), "rm0"))))
+    Ring.fold(s, path, ids, 50, 100)(
+      (b, id) => appendPhashLedger(path, b.select(col("doc_id")), id),
+      Some((b, id) => PhashLedger.tombstone(path, delPath,
+        b.select(col("doc_id")), id)))
     electPhashClusters(readPhashLedgerNet(s, path, delPath))
   }
 
@@ -650,17 +639,11 @@ object Media {
     ledger.select(col("doc_id"), col("n_doc_fps"), col("fp"))
 
   def audioNearDupIncremental(s: SparkSession, d: String): DataFrame = {
-    val ids = Tables.documents(s, d).select(col("doc_id"),
-      pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
-        lit(100L)).as("bucket"))
+    val ids = Ring.carve(Tables.documents(s, d).select(col("doc_id")))
     val path = graft.etl.Artifacts.path(s, "audiofp",
       Tables.datasetTag(s, d, "documents"))
-    graft.etl.Merge.foldMissingBatches(s, path,
-      Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
-        .map { case (id, pred) => id -> (() =>
-          appendAudioFpLedger(path, ids.filter(pred).select(col("doc_id")),
-            id))
-        })
+    Ring.fold(s, path, ids, 50, 100)((b, id) =>
+      appendAudioFpLedger(path, b.select(col("doc_id")), id))
     electAudioClusters(audioShape(AudioFpLedger.read(s, path)))
   }
 
@@ -676,20 +659,14 @@ object Media {
     audioShape(AudioFpLedger.readNet(s, ledgerPath, delPath))
 
   def audioNearDupRetract(s: SparkSession, d: String): DataFrame = {
-    val ids = Tables.documents(s, d).select(col("doc_id"),
-      pmod(graft.functions.Text.portableHash(col("doc_id").cast("string")),
-        lit(100L)).as("bucket"))
+    val ids = Ring.carve(Tables.documents(s, d).select(col("doc_id")))
     val root = graft.etl.Artifacts.path(s, "audiofpr",
       Tables.datasetTag(s, d, "documents"))
     val (path, delPath) = (s"$root/led", s"$root/del")
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendAudioFpLedger(path,
-        ids.filter(col("bucket") < 50).select(col("doc_id")), "b0")),
-      "b1"  -> (() => appendAudioFpLedger(path,
-        ids.filter(col("bucket") >= 50).select(col("doc_id")), "b1")),
-      "rm0" -> (() => AudioFpLedger.tombstone(path, delPath,
-        ids.filter(col("bucket") >= 20 && col("bucket") < 30)
-          .select(col("doc_id")), "rm0"))))
+    Ring.fold(s, path, ids, 50, 100)(
+      (b, id) => appendAudioFpLedger(path, b.select(col("doc_id")), id),
+      Some((b, id) => AudioFpLedger.tombstone(path, delPath,
+        b.select(col("doc_id")), id)))
     electAudioClusters(readAudioFpLedgerNet(s, path, delPath))
   }
   /** Oracle: the envelope formula → exact ratio quantization → base-65

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.etl.Ring
 
 /** The analytic surface SURVEY.md §2 lists as "absent categories" plus A4 —
   * rollup/grouping sets, ranking/analytic window functions, top-k, set
@@ -554,8 +555,7 @@ object Analytics {
     * history. */
   def tabularDrift(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d).select(cents(col("o_totalprice")).as("c"),
-      pmod(graft.functions.Text.portableHash(
-        col("o_orderkey").cast("string")), lit(100L)).as("bk"))
+      Ring.bucket(col("o_orderkey")).as("bk"))
     val mm = o.filter(col("bk") < 90)
       .agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
     val binned = o.crossJoin(broadcast(mm))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{Native, Text}
+import graft.etl.Ring
+import graft.functions.{Bloom, Native, Text}
 
 /** LLM-data-pipeline operators over the `documents` table — the north-star
   * surface the reference's README declares as its downstream purpose
@@ -295,15 +296,17 @@ object Documents {
     // [[prefixJaccardJoin]] reference this frame — four tokenize+shingle
     // passes over the corpus per run. Stage it once; the R-S prefix
     // kernel still computes live.
-    val base = shingleDocs(Tables.documents(s, d))
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
       .localCheckpoint()
     prefixJaccardJoin(
       base.filter(col("bucket") >= 90).select(col("doc_id"), col("sh")),
       base.filter(col("bucket") < 90).select(col("doc_id"), col("sh")))
       .orderBy(col("in_id"), col("corpus_id"))
   }
+
+  /** The (doc_id, text) projection every text ledger appends. */
+  private def docText(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("text"))
 
   /** (doc_id, sh) shingle view of a document frame, empty-shingle rows
     * dropped — the input contract of [[prefixJaccardJoin]], shared by the
@@ -465,9 +468,7 @@ object Documents {
     * the frozen-dict order changes WHICH prefix tokens collide, never
     * which pairs verify. */
   def incrementalNearDupIndexed(s: SparkSession, d: String): DataFrame = {
-    val base = shingleDocs(Tables.documents(s, d))
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
     val incoming = base.filter(col("bucket") >= 90).select(col("doc_id"), col("sh"))
     val corpus = base.filter(col("bucket") < 90).select(col("doc_id"), col("sh"))
     // path + source tag (Tables.datasetTag): an in-place testdata
@@ -528,9 +529,7 @@ object Documents {
     * docs. Gated against the brute-force oracle on the REDUCED
     * corpus. */
   def incrementalNearDupRetract(s: SparkSession, d: String): DataFrame = {
-    val base = shingleDocs(Tables.documents(s, d))
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
     val incoming = base.filter(col("bucket") >= 90)
       .select(col("doc_id"), col("sh"))
     val corpus = base.filter(col("bucket") < 90)
@@ -540,18 +539,14 @@ object Documents {
     // dict frozen on the PRE-takedown corpus — retraction never retrains
     val dict = graft.etl.Merge.materialize(s, dictP,
       freezeDict(corpus.select(col("doc_id"), col("sh"))))
-    def slice(lo: Int, hi: Int): DataFrame =
-      corpus.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("sh"))
-    graft.etl.Merge.foldMissingBatches(s, idxP, Seq(
-      "b0"  -> (() => appendPrefixRows(idxP, slice(0, 50), dict)),
-      "b1"  -> (() => appendPrefixRows(idxP, slice(50, 90), dict)),
-      "rm0" -> (() => PrefixLedger.tombstone(idxP, delP,
-        slice(20, 30).select(col("doc_id")), "rm0"))))
+    Ring.fold(s, idxP, corpus, 50, 90)(
+      (b, _) =>
+        appendPrefixRows(idxP, b.select(col("doc_id"), col("sh")), dict),
+      Some((b, id) => PrefixLedger.tombstone(idxP, delP,
+        b.select(col("doc_id")), id)))
     val idxNet = graft.etl.Ledger.mask(s,
       graft.etl.Merge.readArtifact(s, idxP), delP)
-    val corpusRed = corpus
-      .filter(!(col("bucket") >= 20 && col("bucket") < 30))
+    val corpusRed = corpus.filter(!Ring.takedown)
       .select(col("doc_id"), col("sh"))
     prefixJaccardProbe(incoming, corpusRed, dict, idxNet)
       .orderBy(col("in_id"), col("corpus_id"))
@@ -879,14 +874,12 @@ object Documents {
     * own naive split, leaky ⇔ member bucket disagrees, identity labels
     * degrade to q42) without re-running near-dup discovery. */
   private[graft] def splitByCluster(labels: DataFrame): DataFrame = {
-    def bucket(c: Column): Column =
-      pmod(Text.portableHash(c.cast("string")), lit(100L))
     def splitOf(b: Column): Column =
       when(b < 80, "train").when(b < 90, "valid").otherwise("test")
     labels
       .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        splitOf(bucket(col("lbl"))).as("split"),
-        splitOf(bucket(col("doc_id"))).as("naive_split"))
+        splitOf(Ring.bucket(col("lbl"))).as("split"),
+        splitOf(Ring.bucket(col("doc_id"))).as("naive_split"))
       .withColumn("leaky", col("split") =!= col("naive_split"))
   }
 
@@ -1136,9 +1129,7 @@ object Documents {
   def clusterRepairRetract(s: SparkSession, d: String): DataFrame = {
     val (pairs, standing) = ccrArtifacts(s, d)
     val docs = Tables.documents(s, d).select(col("doc_id"))
-    val deleted = docs.filter(
-      pmod(Text.portableHash(col("doc_id").cast("string")),
-        lit(100L)).between(20, 29))
+    val deleted = Ring.carve(docs).filter(Ring.takedown).select(col("doc_id"))
     val repaired = repairClusters(standing, pairs, deleted)
     val prev = splitByCluster(standing)
       .select(col("doc_id"), col("split").as("prev_split"))
@@ -1675,18 +1666,14 @@ object Documents {
     * the REDUCED corpus (fold(appends + deletes) ≡ rebuild on what
     * remains). */
   def keywordSearchRetract(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val tag = Tables.datasetTag(s, d, "documents")
     val root = graft.etl.Artifacts.path(s, "postr", tag)
     val (idxP, delP) = (s"$root/post", s"$root/del")
-    def slice(lo: Int, hi: Int): DataFrame =
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, idxP, Seq(
-      "b0"  -> (() => appendPostings(idxP, slice(0, 50))),
-      "b1"  -> (() => appendPostings(idxP, slice(50, 100))),
-      "rm0" -> (() => TermLedger.tombstone(idxP, delP,
-        slice(20, 30).select(col("doc_id")), "rm0"))))
+    Ring.fold(s, idxP, docs, 50, 100)(
+      (b, _) => appendPostings(idxP, docText(b)),
+      Some((b, id) => TermLedger.tombstone(idxP, delP,
+        b.select(col("doc_id")), id)))
     searchIndexNet(graft.etl.Merge.readArtifact(s, idxP),
       graft.etl.Ledger.tombstones(s, delP),
       Seq("hash", "join", "scan"), 20)
@@ -1948,19 +1935,14 @@ object Documents {
     * Markers anchor on the postings path and vouch for the whole triple
     * (a batch's marker lands only after all three members committed). */
   def bm25SearchRetract(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val tag = Tables.datasetTag(s, d, "documents")
     val root = graft.etl.Artifacts.path(s, "bm25r", tag)
     val (idxP, statsP, dfP, delP) =
       (s"$root/post", s"$root/stats", s"$root/df", s"$root/del")
-    def slice(lo: Int, hi: Int): DataFrame =
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, idxP, Seq(
-      "b0"  -> (() => appendBm25(idxP, statsP, dfP, slice(0, 50), "b0")),
-      "b1"  -> (() => appendBm25(idxP, statsP, dfP, slice(50, 100), "b1")),
-      "rm0" -> (() => retractBm25(idxP, statsP, dfP, delP,
-        slice(20, 30), "rm0"))))
+    Ring.fold(s, idxP, docs, 50, 100)(
+      (b, id) => appendBm25(idxP, statsP, dfP, docText(b), id),
+      Some((b, id) => retractBm25(idxP, statsP, dfP, delP, docText(b), id)))
     bm25ProbeNet(graft.etl.Merge.readArtifact(s, idxP), readBm25Tombstones(s, delP),
       graft.etl.Merge.readArtifact(s, dfP), bm25StatsTotal(graft.etl.Merge.readArtifact(s, statsP)),
       Seq("hash", "join", "scan"), 20)
@@ -2226,9 +2208,7 @@ object Documents {
     * aggregate; the corpus-wide count shuffles are gone, exactly like
     * q82's corpus-linear term moving into its one-time index. */
   def lmQualityIndexed(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val docs = Ring.carve(Tables.documents(s, d))
     val (bgTop, ctxTop) = frozenLm(s, d, docs)
     lmScore(lmBigrams(docs.filter(col("bucket") >= 90)), bgTop, ctxTop)
   }
@@ -2339,18 +2319,12 @@ object Documents {
     * under the NET model. Gated against q87's one-shot SQL with the
     * model corpus reduced by the takedown slice. */
   def lmQualityRetract(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val docs = Ring.carve(Tables.documents(s, d))
     val path = graft.etl.Artifacts.path(s, "lmr",
       Tables.datasetTag(s, d, "documents"))
-    def slice(lo: Int, hi: Int): DataFrame =
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendLmLedger(path, slice(0, 50), "b0")),
-      "b1"  -> (() => appendLmLedger(path, slice(50, 90), "b1")),
-      "rm0" -> (() => retractLmBatch(path, slice(20, 30), "rm0"))))
+    Ring.fold(s, path, docs, 50, 90)(
+      (b, id) => appendLmLedger(path, docText(b), id),
+      Some((b, id) => retractLmBatch(path, docText(b), id)))
     val (bgTop, ctxTop) = lmLedgerModel(s, path)
     lmScore(lmBigrams(docs.filter(col("bucket") >= 90)), bgTop, ctxTop)
   }
@@ -2380,9 +2354,7 @@ object Documents {
     * fan-out, two broadcast joins, ONE single-row aggregate; no corpus
     * pass at all in steady state. */
   def lmDrift(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val docs = Ring.carve(Tables.documents(s, d))
     val (bgTop, ctxTop) = frozenLm(s, d, docs)
     lmBigrams(docs.filter(col("bucket") >= 90))
       .join(broadcast(bgTop), Seq("bg"), "left")
@@ -2813,15 +2785,11 @@ object Documents {
     * grain. Batch-local shard ids are the design (published shards are
     * immutable; nothing renumbers on append). */
   def shardIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val path = graft.etl.Artifacts.path(s, "shard",
       Tables.datasetTag(s, d, "documents"))
-    graft.etl.Merge.foldMissingBatches(s, path,
-      Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
-        .map { case (id, pred) => id -> (() =>
-          graft.streaming.Streams.applyShardBatch(
-            docs.filter(pred).select(col("doc_id"), col("text")), path, id))
-        })
+    Ring.fold(s, path, docs, 50, 100)((b, id) =>
+      graft.streaming.Streams.applyShardBatch(docText(b), path, id))
     graft.streaming.Streams.shardManifestFeed(s, path)
   }
 
@@ -3072,16 +3040,12 @@ object Documents {
     * from the net types. Gated against q124's unrolled training replay
     * on the REDUCED corpus. */
   def bpeTrainRetract(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val path = graft.etl.Artifacts.path(s, "bper",
       Tables.datasetTag(s, d, "documents"))
-    def slice(lo: Int, hi: Int): DataFrame =
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendWfLedger(path, slice(0, 50), "b0")),
-      "b1"  -> (() => appendWfLedger(path, slice(50, 100), "b1")),
-      "rm0" -> (() => retractWfBatch(path, slice(20, 30), "rm0"))))
+    Ring.fold(s, path, docs, 50, 100)(
+      (b, id) => appendWfLedger(path, docText(b), id),
+      Some((b, id) => retractWfBatch(path, docText(b), id)))
     bpeTrainTypesFromFreq(wfLedgerNet(s, path), BpeMerges)._1
   }
 
@@ -3171,9 +3135,7 @@ object Documents {
   /** The same carve, Spark side: (corpus docs, incoming docs). */
   private def bpeCarve(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val base = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val base = Ring.carve(Tables.documents(s, d))
     (base.filter(col("bucket") < 90), base.filter(col("bucket") >= 90))
   }
 
@@ -3286,9 +3248,7 @@ object Documents {
     * one broadcast segmentation join and a two-row aggregate — no
     * shuffle of occurrences beyond the per-side partial sums. */
   def bpeDrift(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+    val base = Ring.carve(Tables.documents(s, d))
     val (mPath, tPath) = bpePaths(s, d)
     val (_, types) = bpeFreezeAt(s, mPath, tPath,
       docWordsOf(base.filter(col("bucket") < 90)).select(col("w")))
@@ -3423,6 +3383,14 @@ object Documents {
     * so 8 keeps the operator's structure exercised (planted exact/chunk
     * duplicates surface as spans) at a scale the oracle can replay. */
   val DupSpanK = 8
+
+  /** [[dupSpanProbe]]'s Bloom gate, in estimated index bytes. Under it
+    * the probe shuffles the whole (gram, n_idx) index into its join; past
+    * it, pruning the index map-side through a Bloom of the batch's grams
+    * pays for the extra batch-linear build pass (the sf100 probe: 97 →
+    * 34 s warm). 256 MB is the 8M-row broadcast envelope at ~32 bytes
+    * per (gram, n_idx) row. */
+  val DupSpanBloomGateBytes: Long = 256L << 20
 
   /** q126: EXACT SUBSTRING-level deduplication — find every maximal run
     * of positions whose [[DupSpanK]]-token windows are EACH duplicated
@@ -3603,18 +3571,11 @@ object Documents {
     * EXCHANGE — the one that spilled at sf100 — is gone. */
   def spanDedupServed(s: SparkSession, d: String): DataFrame = {
     val K = DupSpanK
-    val docs = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(graft.functions.Text.portableHash(col("doc_id")
-          .cast("string")), lit(100L)))
+    val docs = Ring.carve(Tables.documents(s, d))
     val tag = Tables.datasetTag(s, d, "documents")
     val path = graft.etl.Artifacts.path(s, "spanled", K, tag)
-    def slice(lo: Int, hi: Int): DataFrame =
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0" -> (() => appendGramLedger(path, slice(0, 50), K, "b0")),
-      "b1" -> (() => appendGramLedger(path, slice(50, 100), K, "b1"))))
+    Ring.fold(s, path, docs, 50, 100)((b, id) =>
+      appendGramLedger(path, docText(b), K, id))
     // r21: the DUPLICATED-GRAM SET — the only statistic the serving scan
     // needs — is itself a standing artifact, keyed by the ledger's batch
     // manifest so any future append/retract to this ledger forces a
@@ -3754,10 +3715,7 @@ object Documents {
   def dupSpansIncremental(s: SparkSession, d: String): DataFrame = {
     val K = DupSpanK
     import org.apache.spark.sql.expressions.Window
-    val base = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(graft.functions.Text.portableHash(col("doc_id")
-          .cast("string")), lit(100L)))
+    val base = Ring.carve(Tables.documents(s, d))
     val corpus = base.filter(col("bucket") < 90)
     val incoming = base.filter(col("bucket") >= 90)
     val tag = Tables.datasetTag(s, d, "documents")
@@ -3832,33 +3790,26 @@ object Documents {
     * family. */
   def dupSpansRetract(s: SparkSession, d: String): DataFrame = {
     val K = DupSpanK
-    val base = Tables.documents(s, d)
-      .withColumn("bucket",
-        pmod(graft.functions.Text.portableHash(col("doc_id")
-          .cast("string")), lit(100L)))
+    val base = Ring.carve(Tables.documents(s, d))
     val incoming = base.filter(col("bucket") >= 90)
     val tag = Tables.datasetTag(s, d, "documents")
     val path = graft.etl.Artifacts.path(s, "gramr", K, tag)
-    def slice(lo: Int, hi: Int): DataFrame =
-      base.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("text"))
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendGramLedger(path, slice(0, 45), K, "b0")),
-      "b1"  -> (() => appendGramLedger(path, slice(45, 90), K, "b1")),
-      "rm0" -> (() => retractGramBatch(path, slice(20, 30), K, "rm0"))))
+    Ring.fold(s, path, base, 45, 90)(
+      (b, id) => appendGramLedger(path, docText(b), K, id),
+      Some((b, id) => retractGramBatch(path, docText(b), K, id)))
     dupSpanProbe(incoming, gramLedgerCounts(s, path), K)
   }
 
   /** The batch probe against a (gram, n_idx) count index — factored so
     * DupSpansSpec can prove the decomposition (probe ≡ batch finder
     * restricted to the batch) on constructed corpus/batch splits.
-    * `bloomGateRows` is the index size past which the Bloom runtime
-    * filter switches on — injectable (ADVICE r16) so DupSpansSpec can
-    * force the Bloom branch at unit scale and assert its exactness
+    * `bloomGateBytes` is the estimated index size past which the Bloom
+    * runtime filter switches on — injectable (ADVICE r16) so DupSpansSpec
+    * can force the Bloom branch at unit scale and assert its exactness
     * (probe ≡ batch finder) instead of the branch only ever running at
     * sf100. */
   private[graft] def dupSpanProbe(incoming: DataFrame, idx: DataFrame,
-      K: Int, bloomGateRows: Long = 8L * 1000 * 1000): DataFrame = {
+      K: Int, bloomGateBytes: Long = DupSpanBloomGateBytes): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g0 = incoming
       .select(col("doc_id"), graft.functions.Text.toWords(col("text"))
@@ -3879,8 +3830,13 @@ object Documents {
     // warm). No false negatives, so the left join's result is exact; FPs
     // only add rows the join key kills anyway. Costs one extra
     // batch-linear pass (the bloom build) — batch-bounded, per contract.
-    val nIdx = idx.count()
-    val useBloom = nIdx > bloomGateRows
+    // The gate reads Catalyst's size estimate, which runs no job; a count
+    // of the streaming sink's net gram ledger would run its two-shuffle
+    // aggregation once more than the probe does. A source of unknown
+    // size estimates as spark.sql.defaultSizeInBytes and takes the Bloom
+    // path; both paths are exact, so the gate moves cost, never answers.
+    val useBloom =
+      idx.queryExecution.optimizedPlan.stats.sizeInBytes > bloomGateBytes
     // On the Bloom path g is traversed 3× (count for sizing, bloom
     // build, and the probe body below) — cache it so the batch is
     // tokenized once, not three times (batch-sized by contract).
@@ -3890,13 +3846,8 @@ object Documents {
     val pruned =
       if (!useBloom) idx
       else {
-        val bloomAgg = udaf(new graft.functions.Bloom.Agg(
-          graft.functions.Bloom.sizeWords(g.count())))
-        val bloom = g.coalesce(8) // bounded partials, the q104 note
-          .agg(bloomAgg(xxhash64(col("gram"))).as("bf"))
-        idx.crossJoin(broadcast(bloom))
-          .filter(graft.functions.Bloom.mightContainCol(col("bf.bits"),
-            xxhash64(col("gram"))))
+        val bloom = Bloom.build(g, xxhash64(col("gram")), g.count())
+        Bloom.probe(idx, bloom, xxhash64(col("gram")))
           .select(col("gram"), col("n_idx"))
       }
     val dup = g.groupBy(col("gram")).agg(count(lit(1)).as("n_in"))
@@ -4030,7 +3981,7 @@ object Documents {
     // final sort (no boundary-sampling double-eval).
     val nDrops = drops.count()
     val joined =
-      if (nDrops <= 8L * 1000 * 1000)
+      if (nDrops <= Bloom.BroadcastRows)
         docs.join(broadcast(rs), Seq("doc_id"), "left")
       else docs.join(rs, Seq("doc_id"), "left")
     joined
@@ -4368,7 +4319,7 @@ object Documents {
     * no in-query retrain) now that [[curatedDocs]] stages the verdict
     * through an eager checkpoint. */
   private[graft] def nbGateIds(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val model = frozenNb(s, d, docs)
     nbScoreAgainst(docs, model)
       .crossJoin(broadcast(nbPrior(model)))
@@ -4380,7 +4331,7 @@ object Documents {
     * the UNstaged composition (temperatureCopies and shardManifest stage
     * through localCheckpoint, truncating the served plan to a scan). */
   private[graft] def curatedDocs(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     // 1. quality gate under the SHARED frozen artifact. The cut is
     //    ABOVE-PRIOR, not the absolute 5000 bp of q134's pred flag: the
     //    mean-posterior of a long document compresses toward the prior
@@ -4642,8 +4593,7 @@ object Documents {
   def trainTestSplit(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("lang"),
-        pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L))
-          .as("bucket"))
+        Ring.bucket(col("doc_id")).as("bucket"))
       .select(col("lang"),
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "valid")
@@ -5108,9 +5058,11 @@ object Documents {
       .orderBy((col("c1") + col("c0")).desc, col("w").asc)
       .limit(topK)
 
-  /** Weak label: the target-language flag, as a column. */
-  private def nbLabel: Column =
-    when(col("lang") === "en", 1L).otherwise(0L)
+  /** Training rows (doc_id, text, y) of a document frame; the weak
+    * label y is the target-language flag. */
+  private def nbTrainRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("text"),
+      when(col("lang") === "en", 1L).otherwise(0L).as("y"))
 
   /** The class prior in basis points, derived from the model table
     * itself (1-row aggregate → broadcast) — frozen scoring depends on
@@ -5149,17 +5101,12 @@ object Documents {
                        docs: DataFrame): DataFrame =
     graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "nb", Tables.datasetTag(s, d, "documents")),
-      nbTrainModel(docs.filter(col("bucket") < 90)
-        .select(col("doc_id"), col("text"), nbLabel.as("y"))))
-
-  private def bucketedDocs(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).withColumn("bucket",
-      pmod(Text.portableHash(col("doc_id").cast("string")), lit(100L)))
+      nbTrainModel(nbTrainRows(docs.filter(col("bucket") < 90))))
 
   /** q134: score the incoming batch (≥90 bucket) under the FROZEN
     * corpus-trained classifier. */
   def nbClassifier(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     nbScoreAgainst(docs.filter(col("bucket") >= 90),
       frozenNb(s, d, docs))
   }
@@ -5219,7 +5166,7 @@ object Documents {
     * Cost: batch word fan-out, one broadcast join, ONE single-row
     * aggregate — no corpus pass in steady state. */
   def nbDrift(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     nbDriftRow(docs.filter(col("bucket") >= 90), frozenNb(s, d, docs))
   }
 
@@ -5300,7 +5247,7 @@ object Documents {
     * and scores the ≥90 batch — against q134's ORACLE VERBATIM: the
     * gate itself proves ledger-decomposition ≡ one-shot training (the
     * q112 stance). Build is crash-safe by PRESENCE via
-    * [[graft.etl.Merge.foldMissingBatches]]'s commit markers: a death
+    * [[graft.etl.Ring.fold]]'s commit markers: a death
     * anywhere before a batch's marker write — including mid-job-commit
     * with a partial file set visible — replays that batch in full, and
     * the reader's first-wins absorbs the duplicates. */
@@ -5357,32 +5304,21 @@ object Documents {
     * vocabulary-bounded model collapse at serve time — the corpus is
     * never re-scanned to forget. */
   def nbClassifierRetract(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val path = graft.etl.Artifacts.path(s, "nb_rledger",
       Tables.datasetTag(s, d, "documents"))
-    def train(pred: Column): DataFrame =
-      docs.filter(pred).select(col("doc_id"), col("text"), nbLabel.as("y"))
-    graft.etl.Merge.foldMissingBatches(s, path, Seq(
-      "b0"  -> (() => appendNbLedger(path,
-        train(col("bucket") < 45), "b0")),
-      "b1"  -> (() => appendNbLedger(path,
-        train(col("bucket") >= 45 && col("bucket") < 90), "b1")),
-      "rm0" -> (() => retractNbBatch(path,
-        train(col("bucket") >= 20 && col("bucket") < 30), "rm0"))))
+    Ring.fold(s, path, docs, 45, 90)(
+      (b, id) => appendNbLedger(path, nbTrainRows(b), id),
+      Some((b, id) => retractNbBatch(path, nbTrainRows(b), id)))
     nbScoreAgainst(docs.filter(col("bucket") >= 90), nbLedgerModel(s, path))
   }
 
   def nbClassifierIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = bucketedDocs(s, d)
+    val docs = Ring.carve(Tables.documents(s, d))
     val path = graft.etl.Artifacts.path(s, "nb_ledger",
       Tables.datasetTag(s, d, "documents"))
-    graft.etl.Merge.foldMissingBatches(s, path,
-      Seq("b0" -> (col("bucket") < 45),
-          "b1" -> (col("bucket") >= 45 && col("bucket") < 90))
-        .map { case (id, pred) => id -> (() =>
-          appendNbLedger(path, docs.filter(pred)
-            .select(col("doc_id"), col("text"), nbLabel.as("y")), id))
-        })
+    Ring.fold(s, path, docs, 45, 90)((b, id) =>
+      appendNbLedger(path, nbTrainRows(b), id))
     nbScoreAgainst(docs.filter(col("bucket") >= 90),
       nbLedgerModel(s, path))
   }

@@ -511,22 +511,10 @@ object Relational {
       keyed.join(build, if (packable) Seq("k") else Seq("b", "c"), "left_semi")
     }
     val tri =
-      if (nEdges <= 8L * 1000 * 1000) closeExact(wedges, bcast = true)
+      if (nEdges <= Bloom.BroadcastRows) closeExact(wedges, bcast = true)
       else {
-        val bloomAgg = udaf(new graft.functions.Bloom.Agg(
-          graft.functions.Bloom.sizeWords(nEdges)))
-        // bound the PARTIAL count for the build: every partial holds a
-        // full m-bit buffer, and in local mode all partials share one
-        // heap (32 × 134 MB at 10⁸ edges killed the default heap — on a
-        // real cluster the same allocation is per-executor and fine).
-        // coalesce(8) narrows without a shuffle; the build scan is a
-        // trivial fraction of the query, the wedge stream dominates.
-        val bloom = o.coalesce(8)
-          .agg(bloomAgg(xxhash64(col("s"), col("t"))).as("bf"))
-        closeExact(
-          wedges.crossJoin(broadcast(bloom)) // ONE row by construction
-            .filter(graft.functions.Bloom.mightContainCol(col("bf.bits"),
-              xxhash64(col("b"), col("c")))),
+        val bloom = Bloom.build(o, xxhash64(col("s"), col("t")), nEdges)
+        closeExact(Bloom.probe(wedges, bloom, xxhash64(col("b"), col("c"))),
           bcast = false)
       }
     tri.agg(count(lit(1)).as("n_triangles"))
@@ -609,15 +597,10 @@ object Relational {
     // -1 means count here (the frames are checkpointed in every caller).
     val n = if (nOld >= 0L) nOld else old.count()
     val closeOld: DataFrame => DataFrame =
-      if (n <= 8L * 1000 * 1000) identity
+      if (n <= Bloom.BroadcastRows) identity
       else {
-        val bloomAgg = udaf(new graft.functions.Bloom.Agg(
-          graft.functions.Bloom.sizeWords(n)))
-        val bloom = old.coalesce(8) // bounded partials, the q104 note
-          .agg(bloomAgg(xxhash64(col("a"), col("b"))).as("bf"))
-        cands => cands.crossJoin(broadcast(bloom))
-          .filter(graft.functions.Bloom.mightContainCol(col("bf.bits"),
-            xxhash64(col("a"), col("b"))))
+        val bloom = Bloom.build(old, xxhash64(col("a"), col("b")), n)
+        cands => Bloom.probe(cands, bloom, xxhash64(col("a"), col("b")))
           .select(col("a"), col("b"))
       }
     // class 1: one new edge + two standing. Enumeration from EITHER
@@ -791,7 +774,7 @@ object Relational {
     // keeps its Bloom-prefiltered shape (the candidate stream still must
     // not broadcast-probe a >128 MB edge relation).
     val cands: DataFrame =
-      if (nTotal > 0 && nTotal <= 8L * 1000 * 1000)
+      if (nTotal > 0 && nTotal <= Bloom.BroadcastRows)
         fusedTriCands(e, degB, packable)
       else (0L until 4L).map { i =>
       val degO = degB.filter(col("batch") < i)
@@ -980,16 +963,10 @@ object Relational {
         old.agg(count(lit(1)).as("n")))
       .head.getLong(0)
     val bloom =
-      if (nOld <= 8L * 1000 * 1000) None
+      if (nOld <= Bloom.BroadcastRows) None
       else Some(graft.etl.Merge.materialize(s,
         graft.etl.Artifacts.path(s, "tri_bloom", tag),
-        {
-          val bloomAgg = udaf(new graft.functions.Bloom.Agg(
-            graft.functions.Bloom.sizeWords(nOld)))
-          old.coalesce(8)
-            .agg(bloomAgg(xxhash64(col("a"), col("b"))).as("bf"))
-            .select(col("bf.bits").as("bits"))
-        })
+        Bloom.build(old, xxhash64(col("a"), col("b")), nOld))
         // the parquet round-trip erases the element non-nullability
         // bloom_might_contain requires; the writer is the Agg's
         // containsNull=false output, so the coalesce is a type-level
@@ -1021,10 +998,9 @@ object Relational {
       delta: DataFrame): DataFrame = {
     val closeOld: DataFrame => DataFrame = bloom match {
       case None => identity
-      case Some(b) => cands => cands.crossJoin(broadcast(b))
-        .filter(graft.functions.Bloom.mightContainCol(col("bits"),
-          xxhash64(col("a"), col("b"))))
-        .select(col("a"), col("b"))
+      case Some(b) => cands =>
+        Bloom.probe(cands, b, xxhash64(col("a"), col("b")))
+          .select(col("a"), col("b"))
         .localCheckpoint() // barrier: keep the Bloom BELOW the exact probe
     }
     // exact closing check, edge index in place (bucketed on (a,b))
@@ -1610,14 +1586,12 @@ object Relational {
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select(col("o_orderkey"), col("o_orderpriority"))
     val nBuild = o.count() // build-side stat: ONE long to the driver
-    val bloomAgg = udaf(new Bloom.Agg(Bloom.sizeWords(nBuild)))
-    val bloom = o.agg(bloomAgg(col("o_orderkey")).as("bf"))
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"),
         asCents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("rev_cents"))
-    val pre = li.crossJoin(broadcast(bloom)) // ONE row by construction
-      .filter(Bloom.mightContainCol(col("bf.bits"), col("l_orderkey")))
+    val pre = Bloom.probe(li, Bloom.build(o, col("o_orderkey"), nBuild),
+        col("l_orderkey"))
       .select(col("l_orderkey"), col("rev_cents"))
     pre.join(o, pre("l_orderkey") === o("o_orderkey"))
       .groupBy(col("o_orderpriority"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.etl.Ring
 import graft.functions.Native
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -510,16 +511,10 @@ object Similarity {
     IvfLedger.compact(s, postPath)
 
   def ivfIncremental(s: SparkSession, d: String): DataFrame = {
-    val e = withNorm(Tables.embeddings(s, d))
-      .withColumn("bucket", pmod(graft.functions.Text.portableHash(
-        col("vec_id").cast("string")), lit(100L)))
+    val e = Ring.carve(withNorm(Tables.embeddings(s, d)), "vec_id")
     val tag = Tables.datasetTag(s, d, "embeddings")
     val postPath = graft.etl.Artifacts.path(s, "ivf_post", tag)
-    graft.etl.Merge.foldMissingBatches(s, postPath,
-      Seq("b0" -> (col("bucket") < 50), "b1" -> (col("bucket") >= 50))
-        .map { case (id, pred) => id -> (() =>
-          appendIvfBatch(postPath, e.filter(pred), id))
-        })
+    Ring.fold(s, postPath, e, 50, 100)(appendIvfBatch(postPath, _, _))
     val post = readPostings(s, postPath)
     // the SAME quantizer artifact q86/q133 serve from — one coarse model
     // for the whole ANN family; content is identical whichever query
@@ -573,20 +568,15 @@ object Similarity {
     * and the probe answers from the net index. Gated against q86's
     * one-shot oracle on the REDUCED corpus. */
   def ivfRetract(s: SparkSession, d: String): DataFrame = {
-    val e = withNorm(Tables.embeddings(s, d))
-      .withColumn("bucket", pmod(graft.functions.Text.portableHash(
-        col("vec_id").cast("string")), lit(100L)))
+    val e = Ring.carve(withNorm(Tables.embeddings(s, d)), "vec_id")
     val tag = Tables.datasetTag(s, d, "embeddings")
     val postPath = graft.etl.Artifacts.path(s, "ivfr_post", tag)
     val delPath = graft.etl.Artifacts.path(s, "ivfr_del", tag)
-    graft.etl.Merge.foldMissingBatches(s, postPath, Seq(
-      "b0"  -> (() => appendIvfBatch(postPath,
-        e.filter(col("bucket") < 50), "b0")),
-      "b1"  -> (() => appendIvfBatch(postPath,
-        e.filter(col("bucket") >= 50), "b1")),
-      "rm0" -> (() => IvfLedger.tombstone(postPath, delPath,
-        e.filter(col("bucket") >= 20 && col("bucket") < 30 && !isQuery)
-          .select(col("vec_id")), "rm0"))))
+    Ring.fold(s, postPath, e, 50, 100)(
+      appendIvfBatch(postPath, _, _),
+      // query vectors are never retracted: a probe needs its probe set
+      Some((b, id) => IvfLedger.tombstone(postPath, delPath,
+        b.filter(!isQuery).select(col("vec_id")), id)))
     val post = readPostingsNet(s, postPath, delPath)
     val cents = graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "ivfr_cents", tag),
@@ -640,9 +630,7 @@ object Similarity {
   }
 
   def centroidDrift(s: SparkSession, d: String): DataFrame = {
-    val e = withNorm(Tables.embeddings(s, d))
-      .withColumn("bucket", pmod(graft.functions.Text.portableHash(
-        col("vec_id").cast("string")), lit(100L)))
+    val e = Ring.carve(withNorm(Tables.embeddings(s, d)), "vec_id")
     val tag = Tables.datasetTag(s, d, "embeddings")
     val cents = graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "ivf_cents_c90", tag),

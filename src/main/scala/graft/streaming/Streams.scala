@@ -877,7 +877,7 @@ object Streams {
     * marker AFTER the apply returns (ADVICE r19): without it the net
     * compactions ([[graft.etl.Ledger.compactNet]]) treat every stream-fed
     * batch as in-flight forever. Writing the marker after the apply is
-    * the [[graft.etl.Merge.foldMissingBatches]] crash argument verbatim:
+    * the [[graft.etl.Ring.fold]] crash argument verbatim:
     * a death before the marker replays the batch in full from the
     * checkpoint and the ledger's first-wins absorption collapses the
     * crashed attempt's rows. */

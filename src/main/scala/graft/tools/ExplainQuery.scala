@@ -21,8 +21,7 @@ object ExplainQuery {
       sys.error("usage: ExplainQuery <q1,q2,...> [sfDir] [nobroadcast]"))
       .split(",").toIndexedSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-explain")
+    val spark = Sessions.local(Sessions.cpus, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     if (args.lift(2).contains("nobroadcast"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

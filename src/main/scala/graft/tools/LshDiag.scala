@@ -36,8 +36,7 @@ object LshDiag {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: LshDiag <sfDir>")
     val dir = args(0)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-lshdiag")
+    val spark = Sessions.local(Sessions.cpus, "graft-lshdiag")
     spark.sparkContext.setLogLevel("WARN")
     // q35's exact corpus: embeddings + the %25 scaled twins
     val base = Tables.embeddings(spark, dir)

@@ -44,8 +44,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleUp <srcSfDir> <dstDir> [replicas] [tables]")
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-scaleup")
+    val spark = Sessions.local(Sessions.cpus, "graft-scaleup")
     spark.sparkContext.setLogLevel("WARN")
     run(spark, args(0), args(1), args.lift(2).map(_.toInt).getOrElse(10),
       args.lift(3).map(_.split(",").toSet).getOrElse(Set.empty))

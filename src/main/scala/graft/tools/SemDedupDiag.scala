@@ -19,8 +19,7 @@ import graft.functions.Native
 object SemDedupDiag {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val sp = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      "graft-semdedup-diag")
+    val sp = Sessions.local(Sessions.cpus, "graft-semdedup-diag")
     sp.sparkContext.setLogLevel("WARN")
     val base = Tables.embeddings(sp, d).filter(col("embedding").isNotNull)
       .select(col("vec_id"),

@@ -22,8 +22,7 @@ object SpotBench {
       if (args(1) == "all") SparkEntry.queries.keys.toIndexedSeq
       else args(1).split(",").toIndexedSeq
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-spotbench")
+    val spark = Sessions.local(Sessions.cpus, "graft-spotbench")
     spark.sparkContext.setLogLevel("WARN")
     val profile = Profile.install(spark)
     // warm-up, mirroring Bench's untimed pre-pass (r9: the first listed

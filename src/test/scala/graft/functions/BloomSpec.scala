@@ -113,4 +113,22 @@ class BloomSpec extends SparkSpec {
       .collect().map(_.toSeq)
     assert(got.toSeq === plain.toSeq)
   }
+
+  test("build + probe + exact semi-join equals the exact semi-join on a " +
+       "2-column hashed key, false positives forced") {
+    // 3000 build pairs into a filter sized for ONE key (the 8192-bit
+    // floor): saturated, so most non-joining probe pairs pass it
+    val build = (0L until 3000L).map(i => (i, i * 7 % 101)).toDF("a", "b")
+    val fact = (0L until 6000L).map(i => (i / 2, i % 101)).toDF("a", "b")
+    val key = xxhash64(col("a"), col("b"))
+    val probed = Bloom.probe(fact, Bloom.build(build, key, 1L), key)
+      .select(col("a"), col("b"))
+    def exact(df: org.apache.spark.sql.DataFrame) =
+      df.join(build, Seq("a", "b"), "left_semi")
+        .as[(Long, Long)].collect().sorted.toSeq
+    val want = exact(fact)
+    assert(want.nonEmpty)
+    assert(probed.count() > want.size.toLong, "no false positive was forced")
+    assert(exact(probed) === want)
+  }
 }

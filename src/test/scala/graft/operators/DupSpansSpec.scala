@@ -191,7 +191,7 @@ class DupSpansSpec extends SparkSpec {
 
   test("Bloom index-pruning branch is EXACT: forcing the gate to 0 " +
        "(every index qualifies) changes no probe verdict") {
-    // the branch normally only activates past 8M index rows — never at
+    // the branch normally only activates past 256 MB of index — never at
     // unit or oracle scale (ADVICE r16) — so force it and assert
     // equality against both the unbloomed probe and the batch finder
     val corpus = Seq(
@@ -202,7 +202,7 @@ class DupSpansSpec extends SparkSpec {
       (12L, "j k l m t1"), (13L, "t2 j k l m"))
     val idx = Documents.gramCounts(corpus.toDF("doc_id", "text"), 4)
     val bloomed = Documents.dupSpanProbe(incoming.toDF("doc_id", "text"),
-      idx, 4, bloomGateRows = 0L)
+      idx, 4, bloomGateBytes = 0L)
       .as[(Long, Long, Long, Long)].collect().toSeq
     val plain = probe(4, corpus, incoming)
     assert(bloomed === plain, "Bloom branch changed a probe verdict")

@@ -84,12 +84,8 @@ class TriangleDeltaSpec extends SparkSpec {
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("dg"))
     val bloom =
       if (!withBloom) None
-      else {
-        val agg = udaf(new graft.functions.Bloom.Agg(
-          graft.functions.Bloom.sizeWords(math.max(1L, old.count()))))
-        Some(old.agg(agg(xxhash64(col("a"), col("b"))).as("bf"))
-          .select(col("bf.bits").as("bits")))
-      }
+      else Some(graft.functions.Bloom.build(old,
+        xxhash64(col("a"), col("b")), math.max(1L, old.count())))
     val r = Relational.applyTriangles(adj, old, deg, bloom, d)
       .collect().head
     (r.getAs[Long]("n_new_edges"), r.getAs[Long]("delta_triangles"))

@@ -34,7 +34,7 @@ if [[ "${1:-}" == "--full" ]]; then
   grep -q ", 0 fail ==" /tmp/gate_oracle01.log
 
   echo "== gate: bench @ sf0.1 =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
     sbt -batch "runMain graft.Bench" 2>&1 | grep -o '"metric":"total","value":[0-9.]*'
 fi
 
