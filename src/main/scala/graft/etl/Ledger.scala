@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *    [[compactNet]] folds every MARKED batch into one net row per key.
   *
   * The marker rule: a batch's `<path>.batches/<id>` commit marker lands
-  * strictly after its rows ([[Merge.foldMissingBatches]], the streaming
-  * batch sinks). A marked batch can never replay, so only marked rows
+  * strictly after its rows ([[Merge.foldMissingBatches]], and every
+  * stream sink that passes `markers` to `Streams.batchSink`). A marked
+  * batch can never replay, so only marked rows
   * may be folded by [[compactNet]]; unmarked rows are in flight and pass
   * through verbatim, so a replay still absorbs against them.
   *

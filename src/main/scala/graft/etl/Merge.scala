@@ -298,45 +298,59 @@ object Merge {
   def upsertWrite(incoming: DataFrame, key: String, path: String): Unit =
     mergedWrite(incoming, key, path, upsertMerge)
 
+  /** The key checks the keyed sink writes add to [[mergeSwap]]. */
   private def mergedWrite(incoming: DataFrame, key: String, path: String,
       merge: (DataFrame, DataFrame, String) => DataFrame): Unit = {
-    val incomingTypes =
-      incoming.schema.fields.map(f => f.name -> f.dataType).toMap
     // Guard BOTH branches (ADVICE r7): a keyless incoming batch on a
     // first run (no sink yet) would otherwise fail later as an opaque
     // 'cannot resolve' analysis error inside firstWinsMerge — exactly the
     // failure this check exists to name.
-    require(incomingTypes.contains(key),
+    require(incoming.columns.contains(key),
       s"incoming batch has no merge-key column '$key' " +
       s"(incoming columns: ${incoming.columns.mkString(", ")})")
+    mergeSwap(incoming, path) { existing =>
+      // the key must exist on disk too (anything else makes "first wins"
+      // meaningless); its type is one of the shared columns mergeSwap
+      // has already checked
+      if (!existing.columns.contains(key))
+        throw new IllegalStateException(
+          s"sink $path has no merge-key column '$key' " +
+          s"(on-disk columns: ${existing.columns.mkString(", ")})")
+      merge(existing, incoming, key)
+    }
+  }
+
+  /** The one read → merge → swap by which a standing table at `path`
+    * absorbs `incoming`: adopt a crashed swap ([[exists]] runs
+    * [[recoverSwap]] BEFORE the read — ADVICE r4), read the table, or
+    * start from `incoming.limit(0)` on a first run, and publish
+    * `merge(existing)` through [[writeAndSwap]] (temp dir
+    * `$path.tmp-$token`).
+    *
+    * The table is read under its OWN footer schema, never a forced
+    * incoming schema (ADVICE r5): forcing would silently null-fill a
+    * renamed or dropped on-disk column and the merge would run against a
+    * reshaped ghost of the table. Columns both sides carry must agree on
+    * type (nullability aside — a parquet read makes every field
+    * nullable); a column present on one side only is left to the
+    * merge's union (U1's null-fill). */
+  def mergeSwap(incoming: DataFrame, path: String, token: String = "merge")(
+      merge: DataFrame => DataFrame): Unit = {
+    val s = incoming.sparkSession
     val existing =
-      if (exists(incoming.sparkSession, path)) {
-        // Read the sink under its OWN footer schema, never a forced
-        // incoming.schema (ADVICE r5): forcing would silently null-fill a
-        // renamed/dropped on-disk column and the first-wins merge would
-        // key against a reshaped ghost of the sink. Drift is handled
-        // explicitly instead — the key column must exist with the same
-        // type (anything else makes "first wins" meaningless), and shared
-        // columns must agree on type; columns PRESENT on one side only
-        // flow through unionByNameTolerant's documented U1 null-fill.
-        val onDisk = incoming.sparkSession.read.parquet(path)
-        val diskKey = onDisk.schema.fields.find(_.name == key).getOrElse(
-          throw new IllegalStateException(
-            s"sink $path has no merge-key column '$key' " +
-            s"(on-disk columns: ${onDisk.columns.mkString(", ")})"))
-        require(incomingTypes(key) == diskKey.dataType,
-          s"merge-key '$key' type drift: sink has ${diskKey.dataType}, " +
-          s"incoming has ${incomingTypes(key)}")
+      if (exists(s, path)) {
+        val onDisk = s.read.parquet(path)
         onDisk.schema.fields.foreach { f =>
-          incomingTypes.get(f.name).foreach { t =>
-            require(t == f.dataType,
+          incoming.schema.find(_.name == f.name).foreach { in =>
+            require(org.apache.spark.sql.catalyst.types.DataTypeUtils
+                .equalsIgnoreNullability(in.dataType, f.dataType),
               s"sink column '${f.name}' type drift at $path: " +
-              s"on-disk ${f.dataType} vs incoming $t")
+              s"on-disk ${f.dataType} vs incoming ${in.dataType}")
           }
         }
         onDisk
       } else incoming.limit(0)
-    writeAndSwap(merge(existing, incoming, key), path, "merge")
+    writeAndSwap(merge(existing), path, token)
   }
 
   /** Crash-safe publish of a dataframe to `path`: drain to

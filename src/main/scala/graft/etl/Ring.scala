@@ -27,6 +27,12 @@ object Ring {
   /** The takedown slice, buckets [20, 30), over a carved frame. */
   val takedown: Column = inBuckets(20, 30)
 
+  /** The standing corpus of the 90/10 carve, buckets [0, 90). */
+  val corpus: Column = col("bucket") < 90
+
+  /** The incoming batch of the 90/10 carve, buckets [90, 100). */
+  val incoming: Column = col("bucket") >= 90
+
   private def inBuckets(lo: Int, hi: Int): Column =
     col("bucket") >= lo && col("bucket") < hi
 

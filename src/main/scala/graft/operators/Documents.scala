@@ -299,8 +299,8 @@ object Documents {
     val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
       .localCheckpoint()
     prefixJaccardJoin(
-      base.filter(col("bucket") >= 90).select(col("doc_id"), col("sh")),
-      base.filter(col("bucket") < 90).select(col("doc_id"), col("sh")))
+      base.filter(Ring.incoming).select(col("doc_id"), col("sh")),
+      base.filter(Ring.corpus).select(col("doc_id"), col("sh")))
       .orderBy(col("in_id"), col("corpus_id"))
   }
 
@@ -469,8 +469,8 @@ object Documents {
     * which pairs verify. */
   def incrementalNearDupIndexed(s: SparkSession, d: String): DataFrame = {
     val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
-    val incoming = base.filter(col("bucket") >= 90).select(col("doc_id"), col("sh"))
-    val corpus = base.filter(col("bucket") < 90).select(col("doc_id"), col("sh"))
+    val incoming = base.filter(Ring.incoming).select(col("doc_id"), col("sh"))
+    val corpus = base.filter(Ring.corpus).select(col("doc_id"), col("sh"))
     // path + source tag (Tables.datasetTag): an in-place testdata
     // regeneration must invalidate the materialized index, never adopt it
     val tag = Tables.datasetTag(s, d, "documents")
@@ -530,9 +530,9 @@ object Documents {
     * corpus. */
   def incrementalNearDupRetract(s: SparkSession, d: String): DataFrame = {
     val base = Ring.carve(shingleDocs(Tables.documents(s, d)))
-    val incoming = base.filter(col("bucket") >= 90)
+    val incoming = base.filter(Ring.incoming)
       .select(col("doc_id"), col("sh"))
-    val corpus = base.filter(col("bucket") < 90)
+    val corpus = base.filter(Ring.corpus)
     val tag = Tables.datasetTag(s, d, "documents")
     val root = graft.etl.Artifacts.path(s, "pfxrr", tag)
     val (dictP, idxP, delP) = (s"$root/dict", s"$root/idx", s"$root/del")
@@ -1875,26 +1875,39 @@ object Documents {
       delPath: String): (Int, Int) =
     TermLedger.compact(s, idxPath, Some(delPath))
 
+  /** The integer-exact BM25 term score in basis points (k1 = 1.2 and
+    * b = 0.75, as k1 + 1 = 22/10, k1(1 - b) = 3/10, k1 b = 9/10) over the
+    * columns tf, dl, df, n_docs and total_tokens. Every BM25 probe
+    * scores with it. */
+  private[graft] val bm25Score: Column = floor(
+    lit(10000) *
+      log((col("n_docs") + 1).cast("double") / (col("df") + 1)) *
+      ((lit(22L) * col("tf") * col("total_tokens")) /
+       (lit(10L) * col("tf") * col("total_tokens") +
+         lit(3L) * col("total_tokens") +
+         lit(9L) * col("dl") * col("n_docs")))).cast("long")
+
   /** The BM25 probe over a denormalized index and its 1-row stats. */
   private[graft] def bm25Probe(idx: DataFrame, stats: DataFrame,
                                terms: Seq[String], k: Int): DataFrame = {
     val probe = idx.filter(col("term").isin(terms: _*)).dropDuplicates()
-    val df_ = probe.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    probe.join(broadcast(df_), "term")
+    bm25Rank(probe, probe.groupBy(col("term")).agg(count(lit(1)).as("df")),
+      stats, k)
+  }
+
+  /** The rank tail every BM25 probe shares: the probe-term postings
+    * joined to their (term, df) rows and the 1-row stats, summed per doc,
+    * the top `k` by score then doc_id. */
+  private def bm25Rank(probe: DataFrame, df: DataFrame, stats: DataFrame,
+                       k: Int): DataFrame =
+    probe.join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
-      .withColumn("sc", floor(
-        lit(10000) *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)) *
-          ((lit(22L) * col("tf") * col("total_tokens")) /
-           (lit(10L) * col("tf") * col("total_tokens") +
-             lit(3L) * col("total_tokens") +
-             lit(9L) * col("dl") * col("n_docs")))).cast("long"))
+      .withColumn("sc", bm25Score)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"), sum(col("sc")).as("score_bp"))
       .select(col("doc_id"), col("n_terms"), col("score_bp"))
       .orderBy(col("score_bp").desc, col("doc_id").asc)
       .limit(k)
-  }
 
   /** The q144 probe: like [[bm25Probe]] but over a RETRACTION-maintained
     * triple — postings masked by the tombstone anti-join, df read from
@@ -1908,21 +1921,8 @@ object Documents {
       k: Int): DataFrame = {
     val probe = idx.filter(col("term").isin(terms: _*)).dropDuplicates()
       .join(broadcast(del), Seq("doc_id"), "left_anti")
-    val dfq = bm25DfTotal(dfLedger.filter(col("term").isin(terms: _*)))
-    probe.join(broadcast(dfq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("sc", floor(
-        lit(10000) *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)) *
-          ((lit(22L) * col("tf") * col("total_tokens")) /
-           (lit(10L) * col("tf") * col("total_tokens") +
-             lit(3L) * col("total_tokens") +
-             lit(9L) * col("dl") * col("n_docs")))).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("sc")).as("score_bp"))
-      .select(col("doc_id"), col("n_terms"), col("score_bp"))
-      .orderBy(col("score_bp").desc, col("doc_id").asc)
-      .limit(k)
+    bm25Rank(probe,
+      bm25DfTotal(dfLedger.filter(col("term").isin(terms: _*))), stats, k)
   }
 
   /** q144: BM25 search under TAKEDOWN — the full lifecycle in one gate:
@@ -2210,7 +2210,7 @@ object Documents {
   def lmQualityIndexed(s: SparkSession, d: String): DataFrame = {
     val docs = Ring.carve(Tables.documents(s, d))
     val (bgTop, ctxTop) = frozenLm(s, d, docs)
-    lmScore(lmBigrams(docs.filter(col("bucket") >= 90)), bgTop, ctxTop)
+    lmScore(lmBigrams(docs.filter(Ring.incoming)), bgTop, ctxTop)
   }
 
   /** The frozen corpus LM as warehouse artifacts — q87's model, shared
@@ -2219,7 +2219,7 @@ object Documents {
   private def frozenLm(s: SparkSession, d: String,
                        docs: DataFrame): (DataFrame, DataFrame) = {
     val tag = Tables.datasetTag(s, d, "documents") // stale-proof key
-    lazy val corpusBg = lmBigrams(docs.filter(col("bucket") < 90))
+    lazy val corpusBg = lmBigrams(docs.filter(Ring.corpus))
     (graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "lm_bg", tag),
        lmTrain(corpusBg)._1),
      graft.etl.Merge.materialize(s, graft.etl.Artifacts.path(s, "lm_ctx", tag),
@@ -2326,7 +2326,7 @@ object Documents {
       (b, id) => appendLmLedger(path, docText(b), id),
       Some((b, id) => retractLmBatch(path, docText(b), id)))
     val (bgTop, ctxTop) = lmLedgerModel(s, path)
-    lmScore(lmBigrams(docs.filter(col("bucket") >= 90)), bgTop, ctxTop)
+    lmScore(lmBigrams(docs.filter(Ring.incoming)), bgTop, ctxTop)
   }
 
   /** The q156 oracle: q87's scoring with the model corpus reduced. */
@@ -2356,7 +2356,7 @@ object Documents {
   def lmDrift(s: SparkSession, d: String): DataFrame = {
     val docs = Ring.carve(Tables.documents(s, d))
     val (bgTop, ctxTop) = frozenLm(s, d, docs)
-    lmBigrams(docs.filter(col("bucket") >= 90))
+    lmBigrams(docs.filter(Ring.incoming))
       .join(broadcast(bgTop), Seq("bg"), "left")
       .join(broadcast(ctxTop), Seq("w1"), "left")
       .agg(count(lit(1)).as("n_occ"),
@@ -3136,7 +3136,7 @@ object Documents {
   private def bpeCarve(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val base = Ring.carve(Tables.documents(s, d))
-    (base.filter(col("bucket") < 90), base.filter(col("bucket") >= 90))
+    (base.filter(Ring.corpus), base.filter(Ring.incoming))
   }
 
   /** A (doc_id, w) word-occurrence stream of a documents frame. */
@@ -3251,11 +3251,11 @@ object Documents {
     val base = Ring.carve(Tables.documents(s, d))
     val (mPath, tPath) = bpePaths(s, d)
     val (_, types) = bpeFreezeAt(s, mPath, tPath,
-      docWordsOf(base.filter(col("bucket") < 90)).select(col("w")))
+      docWordsOf(base.filter(Ring.corpus)).select(col("w")))
     bpeStatRow(
       bpeEncodeStats(base.select(col("bucket"),
         explode(Text.toWords(col("text"))).as("w")), types),
-      when(col("bucket") >= 90, lit("batch")).otherwise(lit("corpus")),
+      when(Ring.incoming, lit("batch")).otherwise(lit("corpus")),
       "side")
       .orderBy(col("side"))
   }
@@ -3716,8 +3716,8 @@ object Documents {
     val K = DupSpanK
     import org.apache.spark.sql.expressions.Window
     val base = Ring.carve(Tables.documents(s, d))
-    val corpus = base.filter(col("bucket") < 90)
-    val incoming = base.filter(col("bucket") >= 90)
+    val corpus = base.filter(Ring.corpus)
+    val incoming = base.filter(Ring.incoming)
     val tag = Tables.datasetTag(s, d, "documents")
     // K is part of the artifact identity: a gram index built under a
     // different window length is a DIFFERENT index, and materialize only
@@ -3791,7 +3791,7 @@ object Documents {
   def dupSpansRetract(s: SparkSession, d: String): DataFrame = {
     val K = DupSpanK
     val base = Ring.carve(Tables.documents(s, d))
-    val incoming = base.filter(col("bucket") >= 90)
+    val incoming = base.filter(Ring.incoming)
     val tag = Tables.datasetTag(s, d, "documents")
     val path = graft.etl.Artifacts.path(s, "gramr", K, tag)
     Ring.fold(s, path, base, 45, 90)(
@@ -5101,13 +5101,13 @@ object Documents {
                        docs: DataFrame): DataFrame =
     graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "nb", Tables.datasetTag(s, d, "documents")),
-      nbTrainModel(nbTrainRows(docs.filter(col("bucket") < 90))))
+      nbTrainModel(nbTrainRows(docs.filter(Ring.corpus))))
 
   /** q134: score the incoming batch (≥90 bucket) under the FROZEN
     * corpus-trained classifier. */
   def nbClassifier(s: SparkSession, d: String): DataFrame = {
     val docs = Ring.carve(Tables.documents(s, d))
-    nbScoreAgainst(docs.filter(col("bucket") >= 90),
+    nbScoreAgainst(docs.filter(Ring.incoming),
       frozenNb(s, d, docs))
   }
 
@@ -5167,7 +5167,7 @@ object Documents {
     * aggregate — no corpus pass in steady state. */
   def nbDrift(s: SparkSession, d: String): DataFrame = {
     val docs = Ring.carve(Tables.documents(s, d))
-    nbDriftRow(docs.filter(col("bucket") >= 90), frozenNb(s, d, docs))
+    nbDriftRow(docs.filter(Ring.incoming), frozenNb(s, d, docs))
   }
 
   /** The q135 statistic of an arbitrary (doc_id, text) frame against a
@@ -5310,7 +5310,7 @@ object Documents {
     Ring.fold(s, path, docs, 45, 90)(
       (b, id) => appendNbLedger(path, nbTrainRows(b), id),
       Some((b, id) => retractNbBatch(path, nbTrainRows(b), id)))
-    nbScoreAgainst(docs.filter(col("bucket") >= 90), nbLedgerModel(s, path))
+    nbScoreAgainst(docs.filter(Ring.incoming), nbLedgerModel(s, path))
   }
 
   def nbClassifierIncremental(s: SparkSession, d: String): DataFrame = {
@@ -5319,7 +5319,7 @@ object Documents {
       Tables.datasetTag(s, d, "documents"))
     Ring.fold(s, path, docs, 45, 90)((b, id) =>
       appendNbLedger(path, nbTrainRows(b), id))
-    nbScoreAgainst(docs.filter(col("bucket") >= 90),
+    nbScoreAgainst(docs.filter(Ring.incoming),
       nbLedgerModel(s, path))
   }
 

@@ -270,15 +270,21 @@ object Similarity {
     * false-negative risk, the property that makes the exact oracle safe.
     * Angular near-dups would carry the usual LSH miss probability — that
     * trade (recall vs candidate count) is tuned via bits-per-chunk. */
-  def cosineNearDup(s: SparkSession, d: String): DataFrame = {
+  def cosineNearDup(s: SparkSession, d: String): DataFrame =
+    nearDupPairs(twinCorpus(s, d))
+
+  /** The q35/q90 corpus: the non-null embeddings as double vectors
+    * `(vec_id, v)`, plus a twin of every `vec_id % 25 == 0` vector scaled
+    * by 1.0001 under `vec_id + 100000` (the planted near-dups). */
+  private[graft] def twinCorpus(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d)
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    nearDupPairs(base.unionByName(
+    base.unionByName(
       base.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("v"), x => x * 1.0001).as("v"))))
+          transform(col("v"), x => x * 1.0001).as("v")))
   }
 
   /** Core of the sketch-bucketed near-dup scan over a `(vec_id, v)` corpus
@@ -634,10 +640,10 @@ object Similarity {
     val tag = Tables.datasetTag(s, d, "embeddings")
     val cents = graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "ivf_cents_c90", tag),
-      trainCentroids(e.filter(col("bucket") < 90)
+      trainCentroids(e.filter(Ring.corpus)
         .select(col("label"), col("v"))))
     nearestDistMicro(e.select(col("vec_id"), col("bucket"), col("v")), cents)
-      .groupBy(when(col("bucket") >= 90, lit("batch")).otherwise(lit("corpus"))
+      .groupBy(when(Ring.incoming, lit("batch")).otherwise(lit("corpus"))
         .as("side"))
       .agg(count(lit(1)).as("n_vecs"),
         expr("sum(dist_micro) div count(1)").as("mean_dist_micro"))
@@ -825,13 +831,7 @@ object Similarity {
     val lexScored = post.join(broadcast(qTerms), Seq("term"))
       .filter(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(stats))
-      .withColumn("sc", floor(
-        lit(10000) *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)) *
-          ((lit(22L) * col("tf") * col("total_tokens")) /
-           (lit(10L) * col("tf") * col("total_tokens") +
-             lit(3L) * col("total_tokens") +
-             lit(9L) * col("dl") * col("n_docs")))).cast("long"))
+      .withColumn("sc", Documents.bm25Score)
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("sc")).as("score_bp"))
     val wl = Window.partitionBy(col("q_id"))
@@ -1046,16 +1046,9 @@ object Similarity {
 
   /** The corpus under dedup: embeddings ∪ planted scaled twins, with
     * elementwise-double vectors and norms (q35's planting convention). */
-  private def semDedupCorpus(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).filter(col("embedding").isNotNull)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    base.unionByName(
-        base.filter(col("vec_id") % 25 === 0)
-          .select((col("vec_id") + 100000L).as("vec_id"),
-            transform(col("v"), x => x * 1.0001).as("v")))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-  }
+  private[graft] def semDedupCorpus(s: SparkSession, d: String)
+      : DataFrame =
+    twinCorpus(s, d).withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
   /** Canopy leader election over an `(vec_id, v, nrm)` corpus — the k ∝ N
     * model build (steps 1–2 of the q90 scaladoc). Pure function of the

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.Tables
+import graft.etl.Merge
 
 /** Structured Streaming surface — the streaming form of the engine's
   * event-time operators, plus the reference's micro-batch checkpoint sink
@@ -87,8 +88,7 @@ object Streams {
     * crash-recovery case replays exactly that death. */
   def mergeSink(events: DataFrame, key: String, path: String,
                 checkpoint: String): StreamingQuery =
-    mergingSink(events, key, path, checkpoint,
-      graft.etl.Merge.firstWinsMerge)
+    batchSink(events, checkpoint, "b")((b, _) => Merge.mergeWrite(b, key, path))
 
   /** [[mergeSink]]'s last-write-wins twin — each micro-batch UPSERTS into
     * the sink ([[graft.etl.Merge.upsertMerge]]): re-stated keys replace
@@ -100,7 +100,8 @@ object Streams {
     * ordering. */
   def upsertSink(events: DataFrame, key: String, path: String,
                  checkpoint: String): StreamingQuery =
-    mergingSink(events, key, path, checkpoint, graft.etl.Merge.upsertMerge)
+    batchSink(events, checkpoint, "b")((b, _) =>
+      Merge.upsertWrite(b, key, path))
 
   /** The CDC twin of [[upsertSink]] — each micro-batch of change rows
     * (key, seq, op, attrs…) folds into the sink's net table via
@@ -115,8 +116,8 @@ object Streams {
     * [[graft.etl.Merge.cdcView]]. */
   def cdcSink(changes: DataFrame, key: String, seqCol: String, path: String,
               checkpoint: String): StreamingQuery =
-    mergingSink(changes, key, path, checkpoint,
-      (existing, batch, k) => graft.etl.Merge.cdcApply(existing, batch, k, seqCol))
+    batchSink(changes, checkpoint, "b")((b, _) =>
+      Merge.cdcWrite(b, key, seqCol, path))
 
   /** Expectations-gated ingestion — the streaming face of
     * [[graft.etl.Quality]] (the Delta-Live-Tables expectations pattern):
@@ -135,35 +136,13 @@ object Streams {
                   checks: Seq[graft.etl.Quality.RowCheck],
                   sinkPath: String, quarantinePath: String,
                   checkpoint: String): StreamingQuery = {
-    val violation = checks.map(_.violation).reduce(_ || _)
-    foreachBatch(events, checkpoint) { (batch, batchId) =>
+    val violation = coalesce(checks.map(_.violation).reduce(_ || _), lit(false))
+    batchSink(events, checkpoint, "b") { (batch, _) =>
       val b = batch.localCheckpoint() // split reads it twice
-      applyMergeBatch(b.filter(!coalesce(violation, lit(false))),
-        key, sinkPath, batchId)
-      applyMergeBatch(b.filter(coalesce(violation, lit(false))),
-        key, quarantinePath, batchId)
+      Merge.mergeWrite(b.filter(!violation), key, sinkPath)
+      Merge.mergeWrite(b.filter(violation), key, quarantinePath)
     }
   }
-
-  /** One merge application of [[mergingSink]]'s per-batch body with a
-    * pluggable merge rule — shared by [[dqSplitSink]]'s two-target split
-    * and [[gatedCdcSink]]'s gate-then-apply composition. */
-  private def applyBatch(incoming: DataFrame, key: String, path: String,
-      batchId: Long,
-      merge: (DataFrame, DataFrame, String) => DataFrame): Unit = {
-    val s = incoming.sparkSession
-    val existing =
-      if (graft.etl.Merge.exists(s, path)) // adopt BEFORE reading existing
-        s.read.schema(incoming.schema).parquet(path)
-      else incoming.limit(0)
-    graft.etl.Merge.writeAndSwap(merge(existing, incoming, key), path,
-      batchId.toString)
-  }
-
-  private def applyMergeBatch(incoming: DataFrame, key: String,
-                              path: String, batchId: Long): Unit =
-    applyBatch(incoming, key, path, batchId,
-      graft.etl.Merge.firstWinsMerge(_, _, _))
 
   /** Streaming SEARCH-INDEX publication through the cross-artifact
     * manifest (r12 — [[graft.etl.Manifest]]'s streaming face): each
@@ -195,7 +174,7 @@ object Streams {
     * built. */
   def searchPublishSink(docs: DataFrame, root: String,
                         checkpoint: String): StreamingQuery =
-    foreachBatch(docs, checkpoint) { (batch, batchId) =>
+    batchSink(docs, checkpoint, "stream") { (batch, token) =>
       val s = batch.sparkSession
       val b = batch.localCheckpoint()
       val snap = graft.etl.Manifest.resolve(s, root)
@@ -222,7 +201,7 @@ object Streams {
               graft.operators.Documents.bm25Postings(fresh)),
             "bm25stats" -> ledger0.unionByName(
               graft.operators.Documents
-                .bm25StatsLedger(fresh, s"stream-$batchId")
+                .bm25StatsLedger(fresh, token)
                 .filter(col("n_docs") > 0)))
         }
       graft.etl.Manifest.publish(s, root, Map(
@@ -252,36 +231,15 @@ object Streams {
                    checks: Seq[graft.etl.Quality.RowCheck],
                    netPath: String, quarantinePath: String,
                    checkpoint: String): StreamingQuery = {
-    val violation = checks.map(_.violation).reduce(_ || _)
-    foreachBatch(changes, checkpoint) { (batch, batchId) =>
+    val violation = coalesce(checks.map(_.violation).reduce(_ || _), lit(false))
+    batchSink(changes, checkpoint, "b") { (batch, _) =>
       val b = batch.localCheckpoint() // split reads it twice
-      applyBatch(b.filter(!coalesce(violation, lit(false))), key, netPath,
-        batchId, graft.etl.Merge.cdcApply(_, _, _, seqCol))
-      applyMergeBatch(
-        b.filter(coalesce(violation, lit(false)))
-          .withColumn("__change_id",
-            concat_ws(":", col(key), col(seqCol))),
-        "__change_id", quarantinePath, batchId)
+      Merge.cdcWrite(b.filter(!violation), key, seqCol, netPath)
+      Merge.mergeWrite(b.filter(violation)
+          .withColumn("__change_id", concat_ws(":", col(key), col(seqCol))),
+        "__change_id", quarantinePath)
     }
   }
-
-  private def mergingSink(events: DataFrame, key: String, path: String,
-      checkpoint: String,
-      merge: (DataFrame, DataFrame, String) => DataFrame,
-      transform: DataFrame => DataFrame = identity): StreamingQuery =
-    foreachBatch(events, checkpoint) { (batch, batchId) =>
-      val s = batch.sparkSession
-      val incoming = transform(batch)
-      val existing =
-        if (graft.etl.Merge.exists(s, path)) // adopt BEFORE reading existing
-          // incoming.schema IS the stream's fixed (post-transform)
-          // schema — unlike the batch sinks, drift cannot arise within
-          // one stream run
-          s.read.schema(incoming.schema).parquet(path)
-        else incoming.limit(0)
-      val merged = merge(existing, incoming, key)
-      graft.etl.Merge.writeAndSwap(merged, path, batchId.toString)
-    }
 
   /** Per-batch incremental near-dup at INGEST time — the streaming twin
     * of q79 ([[graft.operators.Documents.incrementalNearDup]]): each
@@ -304,13 +262,13 @@ object Streams {
   def nearDupStream(docs: DataFrame, corpus: DataFrame, path: String,
                     checkpoint: String): StreamingQuery = {
     val corpusSh = graft.operators.Documents.shingleDocs(corpus)
-    mergingSink(docs, "pair_key", path, checkpoint,
-      graft.etl.Merge.firstWinsMerge,
-      batch => graft.operators.Documents
-        .prefixJaccardJoin(graft.operators.Documents.shingleDocs(batch),
-          corpusSh)
-        .withColumn("pair_key",
-          concat_ws(":", col("in_id"), col("corpus_id"))))
+    batchSink(docs, checkpoint, "b")((batch, _) =>
+      Merge.mergeWrite(graft.operators.Documents
+          .prefixJaccardJoin(graft.operators.Documents.shingleDocs(batch),
+            corpusSh)
+          .withColumn("pair_key",
+            concat_ws(":", col("in_id"), col("corpus_id"))),
+        "pair_key", path))
   }
 
   /** Stream–static enrichment join: each micro-batch joins against a
@@ -426,8 +384,7 @@ object Streams {
     * never the event history. */
   def retentionSketchSink(events: DataFrame, statePath: String,
                           checkpoint: String, k: Int = 64): StreamingQuery =
-    foreachBatch(events, checkpoint)((batch, batchId) =>
-      applyRetentionBatch(batch, statePath, k, batchId.toString))
+    batchSink(events, checkpoint, "b")(applyRetentionBatch(_, statePath, k, _))
 
   /** One batch of [[retentionSketchSink]]'s state update — factored out so
     * StreamsSpec can fold explicit in-order batches deterministically
@@ -442,14 +399,9 @@ object Streams {
       .distinct()
     val batchFirst = act.groupBy(col("user_id"))
       .agg(min(col("day")).as("cohort"))
-    val oldFirst =
-      if (graft.etl.Merge.exists(s, firstPath))
-        s.read.parquet(firstPath)
-      else batchFirst.limit(0)
-    graft.etl.Merge.writeAndSwap(
-      oldFirst.unionByName(batchFirst)
-        .groupBy(col("user_id")).agg(min(col("cohort")).as("cohort")),
-      firstPath, s"first-$token")
+    Merge.mergeSwap(batchFirst, firstPath, s"first-$token")(
+      _.unionByName(batchFirst)
+        .groupBy(col("user_id")).agg(min(col("cohort")).as("cohort")))
     val kmv = udaf(new graft.functions.KmvSketch.Agg(k))
     val batchSketch = act
       .join(s.read.parquet(firstPath), Seq("user_id"))
@@ -461,14 +413,9 @@ object Streams {
       .groupBy(col("cohort"), col("day_offset"))
       .agg(kmv(col("h")).as("sk"))
       .select(col("cohort"), col("day_offset"), col("sk.hashes").as("hashes"))
-    val oldSketch =
-      if (graft.etl.Merge.exists(s, sketchPath))
-        s.read.parquet(sketchPath)
-      else batchSketch.limit(0)
-    graft.etl.Merge.writeAndSwap(
-      graft.functions.KmvSketch.mergeTables(oldSketch, batchSketch,
-        Seq("cohort", "day_offset"), "hashes", k),
-      sketchPath, s"sketch-$token")
+    Merge.mergeSwap(batchSketch, sketchPath, s"sketch-$token")(
+      graft.functions.KmvSketch.mergeTables(_, batchSketch,
+        Seq("cohort", "day_offset"), "hashes", k))
   }
 
   /** Read [[retentionSketchSink]]'s standing sketch table in q93's output
@@ -524,13 +471,13 @@ object Streams {
     * an out-of-order late batch and asserts bit-for-bit parity. */
   def gridMaintSink(events: DataFrame, statePath: String,
                     checkpoint: String): StreamingQuery =
-    foreachBatch(events, checkpoint)((batch, batchId) =>
-      applyGridBatch(batch, statePath, s"b$batchId"))
+    batchSink(events, checkpoint, "b")(applyGridBatch(_, statePath, _))
 
   /** One grid-maintenance batch application — the directly-callable
     * core ([[applyRetentionBatch]]'s shape). `token` doubles as the
     * ledger's batch identity: replays MUST reuse the original token
-    * (foreachBatch replays do — the batch id is stable across restarts). */
+    * ([[batchSink]] replays do — the salt and the batch id are stable
+    * across restarts of one checkpoint). */
   private[graft] def applyGridBatch(batch: DataFrame, statePath: String,
                                     token: String): Unit = {
     import graft.operators.Events
@@ -555,23 +502,17 @@ object Streams {
     GridObsLedger.append(obsPath, part)
     val users = part.select(col("user_id")).distinct()
     val touched = Events.fillForward(Events.collapseObsPartials(
-      graft.etl.Merge.readArtifact(s, obsPath)
+      Merge.readArtifact(s, obsPath)
         .join(users, Seq("user_id"), "left_semi")
         .dropDuplicates("__obs_id")))
-    val oldGrid =
-      if (graft.etl.Merge.exists(s, gridPath))
-        s.read.schema(touched.schema).parquet(gridPath)
-      else touched.limit(0)
-    graft.etl.Merge.writeAndSwap(
-      oldGrid.join(users, Seq("user_id"), "left_anti")
-        .unionByName(touched),
-      gridPath, s"grid-$token")
+    Merge.mergeSwap(touched, gridPath, s"grid-$token")(
+      _.join(users, Seq("user_id"), "left_anti").unionByName(touched))
   }
 
   /** The maintained grid table (columns of q119's
     * `resampleGrid`). */
   def gridState(s: SparkSession, statePath: String): DataFrame =
-    graft.etl.Merge.readArtifact(s, s"$statePath/grid")
+    Merge.readArtifact(s, s"$statePath/grid")
 
   /** The grid's `obs` partials: user-clustered, full-row replay dedup. */
   val GridObsLedger = graft.etl.Ledger(clusterKey = "user_id")
@@ -627,7 +568,7 @@ object Streams {
     import graft.operators.Documents
     val s = batch.sparkSession
     val idx =
-      if (graft.etl.Merge.exists(s, statePath))
+      if (Merge.exists(s, statePath))
         Documents.gramLedgerCounts(s, statePath, excludeBatch = Some(token))
       else // first batch ever: empty index in the probe's (gram, n_idx) shape
         Documents.gramCounts(batch.limit(0), K)
@@ -686,8 +627,8 @@ object Streams {
     * no shuffle beyond the 1-row partial. */
   def bpeDriftSink(docs: DataFrame, typesPath: String, ledgerPath: String,
                    checkpoint: String): StreamingQuery =
-    foreachBatch(docs, checkpoint)((batch, batchId) =>
-      applyBpeDriftBatch(batch, typesPath, ledgerPath, batchId.toString))
+    batchSink(docs, checkpoint, "b")(
+      applyBpeDriftBatch(_, typesPath, ledgerPath, _))
 
   /** One batch of [[bpeDriftSink]] — factored so StreamsSpec can fold
     * explicit in-order batches and assert parity with q131's batch-side
@@ -702,7 +643,7 @@ object Streams {
         graft.operators.Documents.bpeEncodeStats(
           batch.select(
             explode(graft.functions.Text.toWords(col("text"))).as("w")),
-          graft.etl.Merge.readArtifact(batch.sparkSession, typesPath)),
+          Merge.readArtifact(batch.sparkSession, typesPath)),
         lit(batchId), "batch_id"))
   }
 
@@ -714,18 +655,31 @@ object Streams {
   /** Arrival-order sort key for string batch ids: plain lexicographic
     * ordering breaks at 10+ batches ("10" < "2", "b10" < "b2"); under
     * (length, value) decimal ids — bare or with a constant prefix — sort
-    * numerically, so the feeds below really are the time series their
-    * consumers threshold. */
+    * numerically, so within one checkpoint the feeds below really are
+    * the time series their consumers threshold ([[batchSink]]'s
+    * `<prefix>-<salt>-<batchId>` has a constant-length prefix).
+    *
+    * Between two checkpoints there is no arrival order: their tokens
+    * differ in the salt, a hash of the checkpoint path, so one stream's
+    * batches sort wholly before or after the other's whatever the
+    * order they landed in. Both streams' rows are in the feed; ordering
+    * them needs an arrival-order key in the ledger. */
   private def batchIdOrder: Seq[Column] =
     Seq(length(col("batch_id")).asc, col("batch_id").asc)
 
-  /** The drift ledger as its consumer reads it: first-wins on batch_id
-    * (a replayed batch's row is byte-identical; min over the stat struct
-    * is exact), ordered as a time series. */
+  /** A per-batch ledger as its consumer reads it: first-wins on
+    * (batch_id, rowKey) — a replayed batch's rows are byte-identical, so
+    * the min over the sums struct is exact — ordered by arrival, then by
+    * rowKey. */
+  private def feed(l: graft.etl.Ledger, s: SparkSession,
+                   path: String): DataFrame =
+    l.read(s, path)
+      .select((("batch_id" +: l.rowKey) ++ l.sums).map(col): _*)
+      .orderBy(batchIdOrder ++ l.rowKey.map(col): _*)
+
+  /** The drift ledger, first-wins on batch_id, as a time series. */
   def bpeDriftFeed(s: SparkSession, ledgerPath: String): DataFrame =
-    BpeDriftLedger.read(s, ledgerPath)
-      .select(col("batch_id") +: BpeDriftLedger.sums.map(col): _*)
-      .orderBy(batchIdOrder: _*)
+    feed(BpeDriftLedger, s, ledgerPath)
 
   // ── classifier-drift sink: the q135 statistic per ingest micro-batch ────
   /** The q134/q135 supervised classifier's streaming face — with this,
@@ -743,15 +697,15 @@ object Streams {
     * one single-row aggregate + an O(1) append. */
   def nbDriftSink(docs: DataFrame, modelPath: String, ledgerPath: String,
                   checkpoint: String): StreamingQuery =
-    foreachBatch(docs, checkpoint)((batch, batchId) =>
-      applyNbDriftBatch(batch, modelPath, ledgerPath, batchId.toString))
+    batchSink(docs, checkpoint, "b")(
+      applyNbDriftBatch(_, modelPath, ledgerPath, _))
 
   /** One batch of [[nbDriftSink]] — factored so StreamsSpec can fold
     * explicit batches and assert parity with q135's batch-side row. */
   private[graft] def applyNbDriftBatch(batch: DataFrame, modelPath: String,
                                        ledgerPath: String,
                                        batchId: String): Unit = {
-    val model = graft.etl.Merge.readArtifact(batch.sparkSession, modelPath)
+    val model = Merge.readArtifact(batch.sparkSession, modelPath)
     NbDriftLedger.append(ledgerPath,
       graft.operators.Documents.nbDriftRow(batch, model)
         .select(lit(batchId).as("batch_id") +: NbDriftLedger.sums.map(col): _*)
@@ -765,9 +719,7 @@ object Streams {
 
   /** The classifier-drift ledger, first-wins on batch_id. */
   def nbDriftFeed(s: SparkSession, ledgerPath: String): DataFrame =
-    NbDriftLedger.read(s, ledgerPath)
-      .select(col("batch_id") +: NbDriftLedger.sums.map(col): _*)
-      .orderBy(batchIdOrder: _*)
+    feed(NbDriftLedger, s, ledgerPath)
 
   // ── shard-manifest sink: q139's export at ingest grain ──────────────────
   /** The q139 shard export's streaming face. A corpus-GLOBAL hash order
@@ -786,8 +738,7 @@ object Streams {
     * O(P) offset pass from `globalCumsum` — never a corpus pass. */
   def shardManifestSink(docs: DataFrame, ledgerPath: String,
                         checkpoint: String): StreamingQuery =
-    foreachBatch(docs, checkpoint)((batch, batchId) =>
-      applyShardBatch(batch, ledgerPath, s"b$batchId"))
+    batchSink(docs, checkpoint, "b")(applyShardBatch(_, ledgerPath, _))
 
   /** One batch of [[shardManifestSink]] — factored so StreamsSpec can
     * fold explicit batches and assert parity with the batch-side
@@ -811,12 +762,9 @@ object Streams {
       "last_h"))
 
   /** The manifest ledger as a training job reads it: first-wins on
-    * (batch_id, shard) — a replayed batch's rows are byte-identical —
-    * ordered by arrival then shard. */
+    * (batch_id, shard), ordered by arrival then shard. */
   def shardManifestFeed(s: SparkSession, ledgerPath: String): DataFrame =
-    ShardLedger.read(s, ledgerPath)
-      .select(col("batch_id") +: col("shard") +: ShardLedger.sums.map(col): _*)
-      .orderBy(batchIdOrder :+ col("shard"): _*)
+    feed(ShardLedger, s, ledgerPath)
 
   // ── IVF ingest sink: q141's arrival path as a stream ────────────────────
   /** The q141 incremental IVF ingest driven by Structured Streaming:
@@ -833,8 +781,8 @@ object Streams {
     * immediately searchable by any q141-style probe. */
   def ivfIngestSink(vecs: DataFrame, postPath: String,
                     checkpoint: String): StreamingQuery =
-    foreachBatch(vecs, checkpoint)((batch, batchId) =>
-      graft.operators.Similarity.appendIvfBatch(postPath, batch, s"b$batchId"))
+    batchSink(vecs, checkpoint, "b")(
+      graft.operators.Similarity.appendIvfBatch(postPath, _, _))
 
   // ── takedown sink: the q144 retraction verb's streaming face ────────────
   /** Takedown/right-to-be-forgotten events arriving as a STREAM of
@@ -857,21 +805,23 @@ object Streams {
       graft.operators.Documents.retractBm25(idxPath, statsPath, dfPath,
         delPath, b, id))
 
-  /** The one streaming face of every ledger-fed batch sink — the
-    * takedown verbs and the dup-span ingest differ only in which apply a
-    * micro-batch calls: empty idle ticks apply nothing, a
-    * checkpoint-replayed batch re-derives byte-identical rows under the
-    * same token and the ledger's own absorption (tombstone distinct /
-    * first-wins partials) makes replay a no-op.
+  /** The one path from a micro-batch to storage: every sink above and
+    * below is `batchSink(rows, checkpoint, prefix, markers)` plus the
+    * apply its micro-batch calls. Append output, the checkpoint, an
+    * AvailableNow trigger (drain what is there, then stop); empty idle
+    * ticks apply nothing, and a checkpoint-replayed batch re-derives
+    * byte-identical rows under the same token, which the target's own
+    * absorption (first-wins merge, tombstone distinct, first-wins
+    * partials) makes a no-op.
     *
     * The batch token `<prefix>-<salt>-<batchId>` is SALTED with a hash
     * of the checkpoint path (ADVICE r19): Structured Streaming's batchId
-    * restarts at 0 for every fresh checkpoint, so a bare `rm$batchId`
-    * reused tokens when a SECOND stream (new checkpoint, same ledger)
-    * started — and the count ledgers' (key, batch_id) first-wins
-    * absorption then silently dropped one wave's partials. Replay safety
-    * is preserved: a restart of the SAME checkpoint re-derives the same
-    * salt and the same batchId, so the replayed rows still absorb.
+    * restarts at 0 for every fresh checkpoint, so a bare batch-id token
+    * was reused when a SECOND stream (new checkpoint, same ledger)
+    * started — and the ledgers' (key, batch_id) first-wins absorption
+    * then silently dropped one wave's rows. Replay safety is preserved:
+    * a restart of the SAME checkpoint re-derives the same salt and the
+    * same batchId, so the replayed rows still absorb.
     *
     * `markers`: ledger paths to stamp with a `.batches/<token>` commit
     * marker AFTER the apply returns (ADVICE r19): without it the net
@@ -886,28 +836,19 @@ object Streams {
       apply: (DataFrame, String) => Unit): StreamingQuery = {
     // String.hashCode is specified (stable across JVMs/restarts)
     val salt = f"${checkpoint.hashCode & 0xffffff}%06x"
-    foreachBatch(rows, checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val token = s"$prefix-$salt-$batchId"
-        apply(batch, token)
-        markers.foreach(graft.etl.Merge.markBatch(batch.sparkSession, _, token))
-      }
-    }
-  }
-
-  /** The preamble every sink above shares: append output, the checkpoint,
-    * an AvailableNow trigger (drain what is there, then stop), and
-    * `apply` on each micro-batch with its batch id. */
-  private def foreachBatch(rows: DataFrame, checkpoint: String)(
-      apply: (DataFrame, Long) => Unit): StreamingQuery =
     rows.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        apply(batch.toDF(), batchId)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) {
+          val token = s"$prefix-$salt-$batchId"
+          apply(batch.toDF(), token)
+          markers.foreach(Merge.markBatch(batch.sparkSession, _, token))
+        }
       }
       .start()
+  }
 
   /** q149's takedown verb as a stream: (vec_id) rows tombstone the
     * cell-partitioned IVF postings — probes stop serving the vectors at

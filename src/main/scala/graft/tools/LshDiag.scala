@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Sessions, Tables}
+import graft.Sessions
 import graft.functions.Native
 import graft.operators.Similarity
 
@@ -39,14 +39,7 @@ object LshDiag {
     val spark = Sessions.local(Sessions.cpus, "graft-lshdiag")
     spark.sparkContext.setLogLevel("WARN")
     // q35's exact corpus: embeddings + the %25 scaled twins
-    val base = Tables.embeddings(spark, dir)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val corpus = base.unionByName(
-      base.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("v"), x => x * 1.0001).as("v")))
+    val corpus = Similarity.twinCorpus(spark, dir)
     val chunks = corpus.select(col("vec_id"),
         Native.signSketchBands(col("v"),
           Similarity.SketchBits, Similarity.NChunks).as("bands"))

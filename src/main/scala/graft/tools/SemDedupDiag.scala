@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Sessions, Tables}
+import graft.Sessions
 import graft.functions.Native
 
 /** q90 recall diagnostic: brute-force ground-truth drop count over the
@@ -21,14 +21,7 @@ object SemDedupDiag {
     val d = args(0)
     val sp = Sessions.local(Sessions.cpus, "graft-semdedup-diag")
     sp.sparkContext.setLogLevel("WARN")
-    val base = Tables.embeddings(sp, d).filter(col("embedding").isNotNull)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val aug = base.unionByName(
-        base.filter(col("vec_id") % 25 === 0)
-          .select((col("vec_id") + 100000L).as("vec_id"),
-            transform(col("v"), x => x * 1.0001).as("v")))
-      .withColumn("nrm", sqrt(Native.dotProduct(col("v"), col("v"))))
+    val aug = graft.operators.Similarity.semDedupCorpus(sp, d)
     val a = aug.select(col("vec_id").as("a_id"), col("v").as("av"),
       col("nrm").as("an"))
     val b = aug.repartition(64).select(col("vec_id").as("b_id"),

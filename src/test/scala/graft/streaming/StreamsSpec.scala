@@ -983,6 +983,70 @@ class StreamsSpec extends SparkSpec {
       "net compaction changed the served gram counts")
   }
 
+  test("two streams with FRESH checkpoints onto one shard, drift or grid " +
+       "ledger both land: each batch token is checkpoint-salted") {
+    import graft.operators.{Documents, Events}
+    import spark.implicits._
+    // each wave drains through its own stream and fresh checkpoint, so
+    // both streams' first batch is batchId 0
+    def drain(rows: org.apache.spark.sql.DataFrame, name: String)(
+        sink: (org.apache.spark.sql.DataFrame, String) =>
+          org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      val in = tmp(s"graft-2wave-$name")
+      rows.write.mode("overwrite").parquet(in)
+      val q = sink(spark.readStream.schema(rows.schema).parquet(in),
+        tmp(s"graft-2wave-$name-ckpt"))
+      assert(q.awaitTermination(120000), "stream did not drain")
+    }
+    def doc(id: Long, n: Int) = (id, Seq.fill(n)("w").mkString(" "))
+    val docWaves = Seq(Seq(doc(1L, 300), doc(2L, 200)),
+                       Seq(doc(3L, 400), doc(4L, 100)))
+      .map(_.toDF("doc_id", "text"))
+    // shard manifest: the feed holds both waves, each its own manifest
+    val shards = tmp("graft-2wave-shards") + "/manifest"
+    docWaves.zipWithIndex.foreach { case (w, i) =>
+      drain(w, s"shard$i")(Streams.shardManifestSink(_, shards, _))
+    }
+    val cols = Seq("shard", "n_docs", "sum_tokens", "first_h", "last_h")
+    val got = Streams.shardManifestFeed(spark, shards).collect().toSeq
+      .groupBy(_.getAs[String]("batch_id")).values
+      .map(_.map(r => cols.map(r.getAs[Any]))).toSet
+    val want = docWaves.map(w => Documents.shardManifest(w.select(
+        col("doc_id"),
+        graft.functions.Text.portableHash(col("doc_id").cast("string"))
+          .as("h"),
+        size(graft.functions.Text.toWords(col("text"))).cast("long")
+          .as("n_tokens")))
+      .select(cols.map(col): _*).collect().toSeq.map(_.toSeq)).toSet
+    assert(got === want, "a wave's manifest rows are missing")
+    // classifier drift: one row per wave
+    val base = tmp("graft-2wave-nb")
+    val (mp, drift) = (s"$base/model", s"$base/drift")
+    graft.etl.Merge.materialize(spark, mp, Documents.nbTrainModel(
+      Seq((1L, "good day", 1L), (2L, "bad day", 0L))
+        .toDF("doc_id", "text", "y")))
+    Seq(Seq((10L, "good day")), Seq((11L, "zzz qqq"))).zipWithIndex
+      .foreach { case (w, i) =>
+        drain(w.toDF("doc_id", "text"), s"nb$i")(
+          Streams.nbDriftSink(_, mp, drift, _))
+      }
+    assert(Streams.nbDriftFeed(spark, drift).count() === 2,
+      "a wave's drift row is missing")
+    // grid: the waves split events by parity, so both touch the same
+    // (user, hour) and the grid needs both waves' partials
+    val e = Tables.events(spark, sfDir)
+    val grid = tmp("graft-2wave-grid")
+    Seq(0, 1).foreach { p =>
+      drain(e.filter(col("event_id") % 2 === p), s"grid$p")(
+        Streams.gridMaintSink(_, grid, _))
+    }
+    val gridGot = Streams.gridState(spark, grid)
+    val gridWant = Events.resampleGrid(Events.gridEventProjection(e))
+    assert(gridGot.exceptAll(gridWant).count() === 0 &&
+           gridWant.exceptAll(gridGot).count() === 0,
+      "two-wave grid != batch q119 over all events")
+  }
+
   test("grid maintenance == batch q119 bit-for-bit after day-split " +
        "batches, an OUT-OF-ORDER late batch, and a replay (the resample " +
        "ring's streaming face, r15)") {
@@ -1237,6 +1301,15 @@ class StreamsSpec extends SparkSpec {
       .select("batch_id").as[String].collect().toSeq
     assert(order === Seq("2", "10"),
       s"feed is not in arrival order: $order")
+    // the same order over tokens shaped as the stream sinks write them,
+    // `<prefix>-<salt>-<batchId>`
+    val salted = s"$base/drift-salted"
+    Streams.applyNbDriftBatch(b, mp, salted, "b-00c0de-2")
+    Streams.applyNbDriftBatch(b, mp, salted, "b-00c0de-10")
+    val saltedOrder = Streams.nbDriftFeed(spark, salted)
+      .select("batch_id").as[String].collect().toSeq
+    assert(saltedOrder === Seq("b-00c0de-2", "b-00c0de-10"),
+      s"feed is not in arrival order: $saltedOrder")
   }
 
   test("classifier-drift sink wires end-to-end through foreachBatch") {
