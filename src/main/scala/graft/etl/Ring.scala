@@ -10,15 +10,21 @@ import org.apache.spark.sql.functions._
   * the schedule to [[fold]].
   *
   * The carve is a pure function of the key — the portable hash mod 100 —
-  * so Spark and the DuckDB oracle (`md5`-prefix `% 100`) see identical
-  * batches. Batch ids, bucket ranges and fold order are part of every
-  * existing warehouse's `.batches` markers: changing any of them re-folds
-  * (or worse, mis-serves) standing ledgers. */
+  * so Spark and the DuckDB oracle see identical batches: each `…Sql`
+  * member is the DuckDB twin of the Scala member of the same name, and
+  * every oracle that carves interpolates them. Batch ids, bucket ranges
+  * and fold order are part of every existing warehouse's `.batches`
+  * markers: changing any of them re-folds (or worse, mis-serves)
+  * standing ledgers. */
 object Ring {
 
   /** The one carve: `key`'s portable-hash bucket in [0, 100). */
   def bucket(key: Column): Column =
     pmod(graft.functions.Text.portableHash(key.cast("string")), lit(100L))
+
+  /** [[bucket]] in DuckDB, over the SQL expression `key`. */
+  def bucketSql(key: String): String =
+    s"(${graft.functions.Text.portableHashSql(s"CAST($key AS VARCHAR)")} % 100)"
 
   /** `rows` with its `key` carve as column `bucket`. */
   def carve(rows: DataFrame, key: String = "doc_id"): DataFrame =
@@ -26,12 +32,23 @@ object Ring {
 
   /** The takedown slice, buckets [20, 30), over a carved frame. */
   val takedown: Column = inBuckets(20, 30)
+  def takedownSql(bucket: String): String = s"$bucket BETWEEN 20 AND 29"
 
   /** The standing corpus of the 90/10 carve, buckets [0, 90). */
   val corpus: Column = col("bucket") < 90
+  def corpusSql(bucket: String): String = s"$bucket < 90"
 
   /** The incoming batch of the 90/10 carve, buckets [90, 100). */
   val incoming: Column = col("bucket") >= 90
+  def incomingSql(bucket: String): String = s"$bucket >= 90"
+
+  /** The 80/10/10 train/valid/test split of a bucket: [0, 80) train,
+    * [80, 90) valid, [90, 100) test. */
+  def split(bucket: Column): Column =
+    when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
+  def splitSql(bucket: String): String =
+    s"CASE WHEN $bucket < 80 THEN 'train' WHEN $bucket < 90 THEN 'valid' " +
+      "ELSE 'test' END"
 
   private def inBuckets(lo: Int, hi: Int): Column =
     col("bucket") >= lo && col("bucket") < hi

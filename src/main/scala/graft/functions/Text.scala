@@ -43,6 +43,11 @@ object Text {
   def portableHash(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** [[portableHash]]'s one DuckDB spelling, over a VARCHAR expression:
+    * every oracle that hashes a key interpolates this. */
+  def portableHashSql(varchar: String): String =
+    s"CAST(concat('0x', substr(md5($varchar), 1, 15)) AS BIGINT)"
+
   /** Non-portable 64-bit hash (xxhash64) — the production-path hash. */
   def fastHash(c: Column): Column = xxhash64(c)
 

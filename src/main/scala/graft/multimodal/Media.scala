@@ -421,8 +421,7 @@ object Media {
     * the takedown slice (hash bucket [20,30)) contributes no hash row,
     * so its clusters re-elect among the survivors. */
   val perceptualRetractSql: String = perceptualSqlFor(
-    "NOT (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-      "AS BIGINT) % 100 BETWEEN 20 AND 29)")
+    graft.operators.Documents.untakenSql)
 
   // ── q142: INCREMENTAL perceptual dedup — the multimodal ledger face ─────
   /** The q82/q128/q137 ledger move applied to the media ring (previously
@@ -676,8 +675,7 @@ object Media {
 
   /** q153's oracle: q113's one-shot election on the REDUCED corpus. */
   val audioRetractSql: String = audioSqlFor(
-    "NOT (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-      "AS BIGINT) % 100 BETWEEN 20 AND 29)")
+    graft.operators.Documents.untakenSql)
 
   private def audioSqlFor(where: String): String = {
     val mults = (0 until 8).map(b =>

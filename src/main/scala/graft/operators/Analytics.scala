@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.etl.Ring
+import graft.functions.Text
 
 /** The analytic surface SURVEY.md §2 lists as "absent categories" plus A4 —
   * rollup/grouping sets, ranking/analytic window functions, top-k, set
@@ -248,9 +249,9 @@ object Analytics {
       .orderBy(col("o_orderpriority"))
   }
   val kmvDistinctSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT o_orderpriority,
-      |    CAST(concat('0x', substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      |    ${Text.portableHashSql("CAST(o_custkey AS VARCHAR)")} AS h
       |  FROM orders),
       |sk AS (
       |  SELECT o_orderpriority,
@@ -577,25 +578,25 @@ object Analytics {
       .orderBy(col("bin"))
   }
   val tabularDriftSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(floor(o_totalprice*100 + 0.5) AS BIGINT) AS c,
-      |    CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 100 AS bk
+      |    ${Ring.bucketSql("o_orderkey")} AS bk
       |  FROM orders),
-      |mm AS (SELECT min(c) AS lo, max(c) AS hi FROM o WHERE bk < 90),
+      |mm AS (SELECT min(c) AS lo, max(c) AS hi FROM o
+      |  WHERE ${Ring.corpusSql("bk")}),
       |binned AS (
       |  SELECT greatest(0, least(19, ((c - lo) * 20) // (hi - lo + 1)))
       |    AS bin, bk
       |  FROM o, mm),
       |tots AS (
-      |  SELECT count(*) FILTER (bk < 90) AS tc,
-      |    count(*) FILTER (bk >= 90) AS tb
+      |  SELECT count(*) FILTER (${Ring.corpusSql("bk")}) AS tc,
+      |    count(*) FILTER (${Ring.incomingSql("bk")}) AS tb
       |  FROM binned),
       |shares AS (
       |  SELECT bin,
-      |    CAST(count(*) FILTER (bk < 90) * 10000 // tc AS BIGINT)
+      |    CAST(count(*) FILTER (${Ring.corpusSql("bk")}) * 10000 // tc AS BIGINT)
       |      AS corpus_bp,
-      |    CAST(count(*) FILTER (bk >= 90) * 10000 // tb AS BIGINT)
+      |    CAST(count(*) FILTER (${Ring.incomingSql("bk")}) * 10000 // tb AS BIGINT)
       |      AS batch_bp
       |  FROM binned, tots GROUP BY bin, tc, tb),
       |d AS (SELECT *, abs(corpus_bp - batch_bp) AS drift_bp FROM shares)
@@ -640,9 +641,9 @@ object Analytics {
       .orderBy(col("grp"))
   }
   val quantileSketchSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderpriority AS grp,
-      |    CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+      |    ${Text.portableHashSql("CAST(o_orderkey AS VARCHAR)")} AS h,
       |    CAST(floor(o_totalprice*100 + 0.5) AS BIGINT) AS v
       |  FROM orders),
       |d AS (
@@ -703,9 +704,9 @@ object Analytics {
       .orderBy(col("bucket"))
   }
   val quantileBucketsSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT
-      |    CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+      |    ${Text.portableHashSql("CAST(o_orderkey AS VARCHAR)")} AS h,
       |    CAST(floor(o_totalprice*100 + 0.5) AS BIGINT) AS v
       |  FROM orders),
       |d AS (SELECT h, min(v) AS v FROM o GROUP BY h),

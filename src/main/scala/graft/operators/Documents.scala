@@ -68,6 +68,71 @@ object Documents {
        |      range(1, greatest(len(w) - 2, 0) + 1),
        |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))""".stripMargin
 
+  // ── Oracle stages shared by the near-dup and cluster oracles ────────────
+  // Each is SQL text only; a fragment spliced into a `stripMargin`
+  // template must have no line that starts with `|` once stripped.
+
+  /** Exact Jaccard of the shingle sets `a.s` and `b.s`, in basis points. */
+  private def jaccardBpSql(a: String, b: String): String =
+    s"""CAST(len(list_intersect($a.s, $b.s)) AS BIGINT) * 10000
+       |    // CAST(len(list_distinct($a.s || $b.s)) AS BIGINT)""".stripMargin
+
+  /** `sh`/`ok`: the shingle sets of the `docs` relation, non-empty ones in
+    * `ok`. */
+  private def shingleSetsSql(docs: String): String =
+    s"""sh AS (
+       |  SELECT doc_id, $shinglesSql AS s
+       |  FROM (SELECT doc_id, $wordsSql AS w FROM $docs)),
+       |ok AS (SELECT * FROM sh WHERE len(s) > 0)""".stripMargin
+
+  /** The near-dup pair graph of `docs`: [[shingleSetsSql]] and `pairs`
+    * (a_id < b_id at Jaccard >= 0.8), each pair carrying `extra`
+    * columns. */
+  private def nearDupPairsSql(docs: String = "documents",
+                              extra: String = ""): String =
+    s"""${shingleSetsSql(docs)},
+       |pairs AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id$extra
+       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
+       |  WHERE ${jaccardBpSql("a", "b")} >= 8000)""".stripMargin
+
+  /** CTE `name`: both directions of the `pairs` that satisfy `where`. */
+  private def edgesSql(name: String, where: String = "TRUE"): String =
+    s"""$name AS (
+       |  SELECT a_id AS src, b_id AS dst FROM pairs WHERE $where
+       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs WHERE $where)"""
+      .stripMargin
+
+  /** The recursive min-label component CTE, `cc(doc_id, lbl) AS (…)`
+    * under the CTE name `name`: every node of `nodes` paired with each id
+    * that reaches it over the `edges` CTE, so a node's component rep is
+    * its min label — DuckDB's declarative twin of [[connectedComponents]].
+    * Needs `WITH RECURSIVE`. */
+  private def componentsSql(name: String, edges: String,
+                            nodes: String): String =
+    s"""$name(doc_id, lbl) AS (
+       |  SELECT doc_id, doc_id AS lbl FROM $nodes
+       |  UNION
+       |  SELECT e.dst AS doc_id, $name.lbl
+       |  FROM $name JOIN $edges e ON $name.doc_id = e.src)""".stripMargin
+
+  /** CTE `name`: each doc's component rep (min label of `cc`) as `rep`. */
+  private def repsSql(name: String, cc: String, rep: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS $rep
+       |  FROM $cc GROUP BY doc_id)""".stripMargin
+
+  /** The docs outside the takedown slice: the reduced corpus of the
+    * takedown oracles. */
+  private[graft] def untakenSql: String =
+    s"NOT (${Ring.takedownSql(Ring.bucketSql("doc_id"))})"
+
+  /** q63's one-shot components over the whole corpus: `edges` and `cc`. */
+  private def corpusComponentsSql: String =
+    s"""${nearDupPairsSql()},
+       |${edgesSql("edges")},
+       |${componentsSql("cc", "edges", "documents")}""".stripMargin
+
   // ── q17: exact dedup — content-hash groupBy, keep-first by doc_id ───────
   /** Exact dedup at document level: normalize → sha2-256 digest → group on
     * the DIGEST (64 chars shuffled, not document text — at 100 TB the
@@ -489,22 +554,16 @@ object Documents {
     * Parameterized on the corpus-side predicate so q155 can reduce the
     * corpus by the takedown slice. */
   private def incrementalNearDupSqlOn(corpusPred: String): String =
-    s"""WITH sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (
-       |  SELECT doc_id, s,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b
-       |  FROM sh WHERE len(s) > 0)
+    s"""WITH ${shingleSetsSql("documents")},
+       |okb AS (SELECT doc_id, s, ${Ring.bucketSql("doc_id")} AS b FROM ok)
        |SELECT a.doc_id AS in_id, b.doc_id AS corpus_id,
-       |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |    // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) AS jaccard_bp
-       |FROM ok a JOIN ok b ON a.b >= 90 AND ($corpusPred)
-       |WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |    // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000
+       |  ${jaccardBpSql("a", "b")} AS jaccard_bp
+       |FROM okb a JOIN okb b ON ${Ring.incomingSql("a.b")} AND ($corpusPred)
+       |WHERE ${jaccardBpSql("a", "b")} >= 8000
        |ORDER BY in_id, corpus_id""".stripMargin
 
-  val incrementalNearDupSql: String = incrementalNearDupSqlOn("b.b < 90")
+  val incrementalNearDupSql: String =
+    incrementalNearDupSqlOn(Ring.corpusSql("b.b"))
 
   // ── q155: TAKEDOWN propagation through the prefix index ────────────────
   /** The retraction verb reaching q82's frozen-dict prefix index
@@ -555,7 +614,7 @@ object Documents {
   /** The q155 oracle: q82's brute force with the corpus side reduced by
     * the takedown slice. */
   val incrementalNearDupRetractSql: String = incrementalNearDupSqlOn(
-    "b.b < 90 AND b.b NOT BETWEEN 20 AND 29")
+    s"${Ring.corpusSql("b.b")} AND NOT (${Ring.takedownSql("b.b")})")
 
   // ── q69: test-set DECONTAMINATION — benchmark n-gram containment scan ───
   val DecontamGramN = 8
@@ -606,21 +665,25 @@ object Documents {
 
   /** Oracle: identical gram construction (normalized words → distinct
     * 8-gram windows) + containment join, declaratively. */
-  val decontaminateSql: String = {
-    val k = DecontamGramN
-    val concat8 = (0 until k).map(o => s"w[i+$o]").mkString(" || ' ' || ")
-    s"""WITH ww AS (SELECT doc_id, $wordsSql AS w FROM documents),
-       |g AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, greatest(len(w) - ${k - 1}, 0) + 1),
-       |    i -> $concat8))) AS gram
-       |  FROM ww),
+  val decontaminateSql: String =
+    s"""WITH ${decontamGramsSql("g")},
        |b AS (SELECT doc_id AS bench_id, gram FROM g WHERE doc_id % 17 = 3)
        |SELECT g.doc_id,
        |  CAST(count(DISTINCT g.gram) AS BIGINT) AS n_grams_hit,
        |  CAST(count(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
        |FROM g JOIN b USING (gram)
        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin
+
+  /** CTE `name`: each doc's distinct normalized word 8-grams (q69's
+    * containment grams), one row per (doc_id, gram). */
+  private def decontamGramsSql(name: String): String = {
+    val k = DecontamGramN
+    val concatK = (0 until k).map(o => s"w[i+$o]").mkString(" || ' ' || ")
+    s"""$name AS (
+       |  SELECT doc_id, unnest(list_distinct(list_transform(
+       |    range(1, greatest(len(w) - ${k - 1}, 0) + 1),
+       |    i -> $concatK))) AS gram
+       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents))""".stripMargin
   }
 
   // ── q63: near-dup clusters → the dedup DECISION (connected components) ──
@@ -784,23 +847,7 @@ object Documents {
     * min labels to the transitive closure — DuckDB's declarative twin of
     * the engine's iterative fixpoint. */
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN edges e ON cc.doc_id = e.src)
+    s"""WITH RECURSIVE $corpusComponentsSql
        |SELECT doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep,
        |  (doc_id = min(lbl)) AS keep
        |FROM cc GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -873,57 +920,27 @@ object Documents {
     * can prove the invariants (cluster-uniform split, split = the rep's
     * own naive split, leaky ⇔ member bucket disagrees, identity labels
     * degrade to q42) without re-running near-dup discovery. */
-  private[graft] def splitByCluster(labels: DataFrame): DataFrame = {
-    def splitOf(b: Column): Column =
-      when(b < 80, "train").when(b < 90, "valid").otherwise("test")
+  private[graft] def splitByCluster(labels: DataFrame): DataFrame =
     labels
       .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        splitOf(Ring.bucket(col("lbl"))).as("split"),
-        splitOf(Ring.bucket(col("doc_id"))).as("naive_split"))
+        Ring.split(Ring.bucket(col("lbl"))).as("split"),
+        Ring.split(Ring.bucket(col("doc_id"))).as("naive_split"))
       .withColumn("leaky", col("split") =!= col("naive_split"))
-  }
 
   /** Oracle: q63's recursive-CTE components + q42's md5 bucket, composed
     * declaratively — the leak flag falls out of comparing the two split
     * functions on the same row. */
   val leakageSafeSplitSql: String =
-    s"""WITH RECURSIVE sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN edges e ON cc.doc_id = e.src),
-       |lbl AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
-       |  FROM cc GROUP BY doc_id),
-       |b AS (
+    s"""WITH RECURSIVE $corpusComponentsSql,
+       |${repsSql("lbl", "cc", "cluster_rep")},
+       |f AS (
        |  SELECT doc_id, cluster_rep,
-       |    CAST(concat('0x', substr(md5(CAST(cluster_rep AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bc,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bd
+       |    ${Ring.splitSql(Ring.bucketSql("cluster_rep"))} AS split,
+       |    ${Ring.splitSql(Ring.bucketSql("doc_id"))} AS naive_split
        |  FROM lbl)
-       |SELECT doc_id, cluster_rep,
-       |  CASE WHEN bc < 80 THEN 'train' WHEN bc < 90 THEN 'valid'
-       |       ELSE 'test' END AS split,
-       |  CASE WHEN bd < 80 THEN 'train' WHEN bd < 90 THEN 'valid'
-       |       ELSE 'test' END AS naive_split,
-       |  (CASE WHEN bc < 80 THEN 'train' WHEN bc < 90 THEN 'valid'
-       |        ELSE 'test' END
-       |   != CASE WHEN bd < 80 THEN 'train' WHEN bd < 90 THEN 'valid'
-       |           ELSE 'test' END) AS leaky
-       |FROM b ORDER BY doc_id""".stripMargin
+       |SELECT doc_id, cluster_rep, split, naive_split,
+       |  (split != naive_split) AS leaky
+       |FROM f ORDER BY doc_id""".stripMargin
 
   // ── q146: INCREMENTAL leakage-safe split (q138 ∘ q112) ──────────────────
   /** The two standing loops composed (VERDICT r18 item 2): an arriving
@@ -986,59 +1003,30 @@ object Documents {
     * labels + splits) joined with the batch-0-only CC (prev split) —
     * both engines carve the pair batches with the same md5 portable
     * hash of "a_id,b_id" (the engine guarantees a_id < b_id). */
-  val leakageSafeSplitIncrementalSql: String =
-    s"""WITH RECURSIVE sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |    CAST(concat('0x', substr(md5(
-       |      CAST(a.doc_id AS VARCHAR) || ',' || CAST(b.doc_id AS VARCHAR)
-       |    ), 1, 15)) AS BIGINT) % 2 AS ph
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN edges e ON cc.doc_id = e.src),
-       |edges0 AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs WHERE ph = 0
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs WHERE ph = 0),
-       |cc0(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc0.lbl
-       |  FROM cc0 JOIN edges0 e ON cc0.doc_id = e.src),
-       |lbl AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
-       |  FROM cc GROUP BY doc_id),
-       |lbl0 AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS rep0
-       |  FROM cc0 GROUP BY doc_id),
-       |b AS (
-       |  SELECT l.doc_id, l.cluster_rep,
-       |    CAST(concat('0x', substr(md5(CAST(l.cluster_rep AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bc,
-       |    CAST(concat('0x', substr(md5(CAST(l.doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bd,
-       |    CAST(concat('0x', substr(md5(CAST(l0.rep0 AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bp
-       |  FROM lbl l JOIN lbl0 l0 ON l.doc_id = l0.doc_id),
+  val leakageSafeSplitIncrementalSql: String = {
+    val ph = Text.portableHashSql(
+      "CAST(a.doc_id AS VARCHAR) || ',' || CAST(b.doc_id AS VARCHAR)")
+    s"""WITH RECURSIVE ${nearDupPairsSql(extra = s", $ph % 2 AS ph")},
+       |${edgesSql("edges")},
+       |${componentsSql("cc", "edges", "documents")},
+       |${edgesSql("edges0", "ph = 0")},
+       |${componentsSql("cc0", "edges0", "documents")},
+       |$reassignTailSql""".stripMargin
+  }
+
+  /** The q146/q152 oracle tail over the final components `cc` and the
+    * standing ones `cc0`: each doc's split, naive split and previous
+    * split (Ring.splitSql of the rep's, the doc's and the standing rep's
+    * bucket), the leak flag and the reassignment flag. */
+  private def reassignTailSql: String =
+    s"""${repsSql("lbl", "cc", "cluster_rep")},
+       |${repsSql("lbl0", "cc0", "rep0")},
        |f AS (
-       |  SELECT doc_id, cluster_rep,
-       |    CASE WHEN bc < 80 THEN 'train' WHEN bc < 90 THEN 'valid'
-       |         ELSE 'test' END AS split,
-       |    CASE WHEN bd < 80 THEN 'train' WHEN bd < 90 THEN 'valid'
-       |         ELSE 'test' END AS naive_split,
-       |    CASE WHEN bp < 80 THEN 'train' WHEN bp < 90 THEN 'valid'
-       |         ELSE 'test' END AS prev_split
-       |  FROM b)
+       |  SELECT l.doc_id, l.cluster_rep,
+       |    ${Ring.splitSql(Ring.bucketSql("l.cluster_rep"))} AS split,
+       |    ${Ring.splitSql(Ring.bucketSql("l.doc_id"))} AS naive_split,
+       |    ${Ring.splitSql(Ring.bucketSql("l0.rep0"))} AS prev_split
+       |  FROM lbl l JOIN lbl0 l0 ON l.doc_id = l0.doc_id)
        |SELECT doc_id, cluster_rep, split, naive_split,
        |  (split != naive_split) AS leaky, prev_split,
        |  (split != prev_split) AS reassigned
@@ -1142,65 +1130,19 @@ object Documents {
     * corpus CC (post-takedown truth) chained like q146's two-sided CTE —
     * both engines carve the takedown set with the portable md5 bucket. */
   val clusterRepairRetractSql: String =
-    s"""WITH RECURSIVE sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
+    s"""WITH RECURSIVE ${nearDupPairsSql()},
        |del AS (
        |  SELECT doc_id FROM documents
-       |  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-       |    1, 15)) AS BIGINT) % 100 BETWEEN 20 AND 29),
-       |edges0 AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc0(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc0.lbl
-       |  FROM cc0 JOIN edges0 e ON cc0.doc_id = e.src),
+       |  WHERE ${Ring.takedownSql(Ring.bucketSql("doc_id"))}),
+       |${edgesSql("edges0")},
+       |${componentsSql("cc0", "edges0", "documents")},
        |redges AS (
        |  SELECT src, dst FROM edges0
        |  WHERE src NOT IN (SELECT doc_id FROM del)
        |    AND dst NOT IN (SELECT doc_id FROM del)),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM del)
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN redges e ON cc.doc_id = e.src),
-       |lbl AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
-       |  FROM cc GROUP BY doc_id),
-       |lbl0 AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS rep0
-       |  FROM cc0 GROUP BY doc_id),
-       |b AS (
-       |  SELECT l.doc_id, l.cluster_rep,
-       |    CAST(concat('0x', substr(md5(CAST(l.cluster_rep AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bc,
-       |    CAST(concat('0x', substr(md5(CAST(l.doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bd,
-       |    CAST(concat('0x', substr(md5(CAST(l0.rep0 AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS bp
-       |  FROM lbl l JOIN lbl0 l0 ON l.doc_id = l0.doc_id),
-       |f AS (
-       |  SELECT doc_id, cluster_rep,
-       |    CASE WHEN bc < 80 THEN 'train' WHEN bc < 90 THEN 'valid'
-       |         ELSE 'test' END AS split,
-       |    CASE WHEN bd < 80 THEN 'train' WHEN bd < 90 THEN 'valid'
-       |         ELSE 'test' END AS naive_split,
-       |    CASE WHEN bp < 80 THEN 'train' WHEN bp < 90 THEN 'valid'
-       |         ELSE 'test' END AS prev_split
-       |  FROM b)
-       |SELECT doc_id, cluster_rep, split, naive_split,
-       |  (split != naive_split) AS leaky, prev_split,
-       |  (split != prev_split) AS reassigned
-       |FROM f ORDER BY doc_id""".stripMargin
+       |${componentsSql("cc", "redges",
+          "documents WHERE doc_id NOT IN (SELECT doc_id FROM del)")},
+       |$reassignTailSql""".stripMargin
 
   // ── q80: quality-ranked canonical election over near-dup clusters ───────
   /** Dedup with QUALITY-RANKED canonical selection. q63 answers "which
@@ -1252,26 +1194,8 @@ object Documents {
   /** Oracle: q63's recursive-CTE clustering + a window election of the
     * max-n_words member (doc_id tiebreak) joined back via rk = 1. */
   val qualityCanonicalSql: String =
-    s"""WITH RECURSIVE sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM documents
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN edges e ON cc.doc_id = e.src),
-       |grp AS (
-       |  SELECT doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
-       |  FROM cc GROUP BY doc_id),
+    s"""WITH RECURSIVE $corpusComponentsSql,
+       |${repsSql("grp", "cc", "cluster_rep")},
        |nw AS (
        |  SELECT doc_id, CAST(len($wordsSql) AS INT) AS n_words
        |  FROM documents),
@@ -1290,16 +1214,8 @@ object Documents {
   /** Oracle: sf0.01 is small enough to brute-force ALL pairs exactly; the
     * engine must find the same >= 0.8 set through LSH. */
   val minhashNearDupSql: String =
-    s"""WITH sh AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
-       |ok AS (SELECT * FROM sh WHERE len(s) > 0)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |    // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) AS jaccard_bp
-       |FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |    // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000
+    s"""WITH ${nearDupPairsSql(extra = s", ${jaccardBpSql("a", "b")} AS jaccard_bp")}
+       |SELECT a_id, b_id, jaccard_bp FROM pairs
        |ORDER BY a_id, b_id""".stripMargin
 
   // ── q19: SimHash signatures (portable, oracle-reproduced bit-for-bit) ───
@@ -1321,7 +1237,7 @@ object Documents {
     }.mkString(" +\n  ")
     s"""WITH hw AS (
        |  SELECT doc_id, list_transform($wordsSql,
-       |    wd -> CAST(concat('0x', substr(md5(wd), 1, 15)) AS BIGINT)) AS hw
+       |    wd -> ${Text.portableHashSql("wd")}) AS hw
        |  FROM documents)
        |SELECT doc_id, $bitTerms AS simhash
        |FROM hw ORDER BY doc_id""".stripMargin
@@ -1406,16 +1322,7 @@ object Documents {
     * — each < 2^32, so DuckDB stays in BIGINT; sh_k is the per-word
     * majority vote over word k's 32 bits, exactly the kernel's layout. */
   val simhashNearDupSql: String = {
-    def bitTerms(k: Int): String = (0 until 32).map { p =>
-      s"""CASE WHEN list_sum(list_transform(hw$k,
-         |    h -> CASE WHEN ((h >> $p) & 1) = 1 THEN 1 ELSE -1 END)) >= 0
-         |  THEN CAST(${1L << p} AS BIGINT) ELSE 0 END""".stripMargin
-    }.mkString(" +\n  ")
-    val hwCols = (0 until 4).map { k =>
-      s"""list_transform($wordsSql,
-         |    wd -> CAST(concat('0x', substr(md5(wd), ${1 + 8 * k}, 8)) AS BIGINT)) AS hw$k""".stripMargin
-    }.mkString(",\n  ")
-    val shCols = (0 until 4).map(k => s"${bitTerms(k)} AS sh$k").mkString(",\n  ")
+    val (hwCols, shCols) = simhash128Sql(wordsSql)
     val hammingSql = (0 until 4)
       .map(k => s"bit_count(xor(a.sh$k, b.sh$k))").mkString(" + ")
     s"""WITH $corpusSql,
@@ -1428,6 +1335,23 @@ object Documents {
        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
        |WHERE $hammingSql <= 3
        |ORDER BY a_id, b_id""".stripMargin
+  }
+
+  /** The 128-bit SimHash of the word list `words`, as the select lists of
+    * two projections: `hw0`..`hw3` (word k's hashes, each word's k-th
+    * 8-hex md5 chunk) and then `sh0`..`sh3` (the per-bit majority vote
+    * over `hwk`). */
+  private def simhash128Sql(words: String): (String, String) = {
+    def bitTerms(k: Int): String = (0 until 32).map { p =>
+      s"""CASE WHEN list_sum(list_transform(hw$k,
+         |    h -> CASE WHEN ((h >> $p) & 1) = 1 THEN 1 ELSE -1 END)) >= 0
+         |  THEN CAST(${1L << p} AS BIGINT) ELSE 0 END""".stripMargin
+    }.mkString(" +\n  ")
+    val hwCols = (0 until 4).map { k =>
+      s"""list_transform($words,
+         |    wd -> CAST(concat('0x', substr(md5(wd), ${1 + 8 * k}, 8)) AS BIGINT)) AS hw$k""".stripMargin
+    }.mkString(",\n  ")
+    (hwCols, (0 until 4).map(k => s"${bitTerms(k)} AS sh$k").mkString(",\n  "))
   }
 
   // ── q20: text-quality stats ─────────────────────────────────────────────
@@ -1681,9 +1605,7 @@ object Documents {
 
   /** The q154 oracle: q99's search, corpus reduced by the takedown
     * slice. */
-  val keywordSearchRetractSql: String = keywordSearchSqlWhere(
-    "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-    "AS BIGINT) % 100 NOT BETWEEN 20 AND 29")
+  val keywordSearchRetractSql: String = keywordSearchSqlWhere(untakenSql)
 
   // ── q122: BM25 ranked retrieval over the shared search snapshot ─────────
   /** Disjunctive (OR) keyword retrieval ranked by BM25 (k1 = 1.2,
@@ -1964,15 +1886,7 @@ object Documents {
   /** q122's oracle parameterized on the corpus predicate — q144 reuses
     * the identical scoring over the REDUCED corpus. */
   private def bm25SearchSqlWhere(where: String): String =
-    s"""WITH toks AS (SELECT doc_id, unnest($wordsSql) AS term
-       |              FROM documents WHERE $where),
-       |tf AS (
-       |  SELECT doc_id, term, count(*) AS tf FROM toks
-       |  WHERE length(term) > 0 GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-       |       FROM tf GROUP BY 1),
-       |st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS t
-       |       FROM dl),
+    s"""WITH ${bm25StatsSql(where)},
        |probe AS (
        |  SELECT tf.doc_id, tf.term, tf.tf, dl.dl
        |  FROM tf JOIN dl USING (doc_id)
@@ -1995,11 +1909,23 @@ object Documents {
 
   val bm25SearchSql: String = bm25SearchSqlWhere("TRUE")
 
+  /** BM25's corpus statistics over the docs `where` selects: `toks`,
+    * `tf` (term counts per doc), `dl` (doc lengths) and `st` (doc count
+    * and total length) — shared by q122/q144 and q133's lexical list. */
+  private[graft] def bm25StatsSql(where: String): String =
+    s"""toks AS (SELECT doc_id, unnest($wordsSql) AS term
+       |         FROM documents WHERE $where),
+       |tf AS (
+       |  SELECT doc_id, term, count(*) AS tf FROM toks
+       |  WHERE length(term) > 0 GROUP BY 1, 2),
+       |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
+       |       FROM tf GROUP BY 1),
+       |st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS t
+       |       FROM dl)""".stripMargin
+
   /** The q144 oracle: identical scoring, corpus reduced by the takedown
     * slice (the md5 portable-hash bucket both engines share). */
-  val bm25SearchRetractSql: String = bm25SearchSqlWhere(
-    "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-    "AS BIGINT) % 100 NOT BETWEEN 20 AND 29")
+  val bm25SearchRetractSql: String = bm25SearchSqlWhere(untakenSql)
 
   // ── q70: TF-IDF top-k keywords per document ─────────────────────────────
   /** Per-document top-5 keywords by smoothed TF-IDF — the feature-
@@ -2164,32 +2090,46 @@ object Documents {
     val (bgTop, ctxTop) = lmTrain(bg)
     lmScore(bg, bgTop, ctxTop)
   }
-  val lmQualitySql: String =
-    s"""WITH w AS (SELECT doc_id, $wordsSql AS w FROM documents),
-       |b AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-       |                          i -> w[i] || ' ' || w[i+1])) AS bg
-       |  FROM w),
-       |b2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM b),
-       |bc AS (
+  /** CTE `name`: the word bigrams (`bg`, first word `w1`) of the docs
+    * in `docs`, a relation of (doc_id, text). */
+  private def lmBigramsSql(name: String, docs: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM (
+       |    SELECT doc_id,
+       |      unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
+       |                            i -> w[i] || ' ' || w[i+1])) AS bg
+       |    FROM (SELECT doc_id, $wordsSql AS w FROM $docs)))""".stripMargin
+
+  /** The capped LM trained on the bigrams `b`: `bc` and `uc`, the top
+    * 100,000 bigram and context counts. */
+  private def lmModelSql(b: String): String =
+    s"""bc AS (
        |  SELECT bg, cb FROM (
        |    SELECT bg, count(*) AS cb,
        |      row_number() OVER (ORDER BY count(*) DESC, bg ASC) AS rk
-       |    FROM b2 GROUP BY bg) WHERE rk <= 100000),
+       |    FROM $b GROUP BY bg) WHERE rk <= 100000),
        |uc AS (
        |  SELECT w1, cu FROM (
        |    SELECT w1, count(*) AS cu,
        |      row_number() OVER (ORDER BY count(*) DESC, w1 ASC) AS rk
-       |    FROM b2 GROUP BY w1) WHERE rk <= 100000),
-       |v AS (SELECT count(*) AS v FROM uc),
+       |    FROM $b GROUP BY w1) WHERE rk <= 100000)""".stripMargin
+
+  /** The bigrams `b` scored under the model `bc`/`uc`: the per-doc mean
+    * smoothed bigram probability in basis points. */
+  private def lmScoreSql(b: String): String =
+    s"""v AS (SELECT count(*) AS v FROM uc),
        |scored AS (
-       |  SELECT b2.doc_id,
+       |  SELECT $b.doc_id,
        |    (10000 * (coalesce(bc.cb, 0) + 1)) // (coalesce(uc.cu, 0) + v.v) AS sbp
-       |  FROM b2 LEFT JOIN bc USING (bg) LEFT JOIN uc USING (w1) CROSS JOIN v)
+       |  FROM $b LEFT JOIN bc USING (bg) LEFT JOIN uc USING (w1) CROSS JOIN v)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
        |  CAST(sum(sbp) // count(*) AS BIGINT) AS lm_score_bp
        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  val lmQualitySql: String =
+    s"""WITH ${lmBigramsSql("b2", "documents")},
+       |${lmModelSql("b2")},
+       |${lmScoreSql("b2")}""".stripMargin
 
   // ── q87: per-batch scoring under a FROZEN, materialized corpus LM ───────
   /** q83's per-batch ingest form, completing the amortized trio (q82
@@ -2229,44 +2169,22 @@ object Documents {
     * reuses the identical scoring with the corpus reduced by the
     * takedown slice. */
   private def lmQualityIndexedSqlOn(corpusPred: String): String =
-    s"""WITH d AS (
-       |  SELECT doc_id, text,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
-       |  FROM documents),
-       |cw AS (SELECT doc_id, $wordsSql AS w FROM d WHERE $corpusPred),
-       |iw AS (SELECT doc_id, $wordsSql AS w FROM d WHERE bucket >= 90),
-       |cb0 AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-       |                          i -> w[i] || ' ' || w[i+1])) AS bg
-       |  FROM cw),
-       |ib0 AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-       |                          i -> w[i] || ' ' || w[i+1])) AS bg
-       |  FROM iw),
-       |cb2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM cb0),
-       |ib2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM ib0),
-       |bc AS (
-       |  SELECT bg, cb FROM (
-       |    SELECT bg, count(*) AS cb,
-       |      row_number() OVER (ORDER BY count(*) DESC, bg ASC) AS rk
-       |    FROM cb2 GROUP BY bg) WHERE rk <= 100000),
-       |uc AS (
-       |  SELECT w1, cu FROM (
-       |    SELECT w1, count(*) AS cu,
-       |      row_number() OVER (ORDER BY count(*) DESC, w1 ASC) AS rk
-       |    FROM cb2 GROUP BY w1) WHERE rk <= 100000),
-       |v AS (SELECT count(*) AS v FROM uc),
-       |scored AS (
-       |  SELECT ib2.doc_id,
-       |    (10000 * (coalesce(bc.cb, 0) + 1)) // (coalesce(uc.cu, 0) + v.v) AS sbp
-       |  FROM ib2 LEFT JOIN bc USING (bg) LEFT JOIN uc USING (w1) CROSS JOIN v)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |  CAST(sum(sbp) // count(*) AS BIGINT) AS lm_score_bp
-       |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    s"""WITH ${frozenLmSql(corpusPred)},
+       |${lmScoreSql("ib2")}""".stripMargin
 
-  val lmQualityIndexedSql: String = lmQualityIndexedSqlOn("bucket < 90")
+  /** The frozen-LM oracle stages of q87/q88/q156: the carved docs `d`,
+    * the model `bc`/`uc` trained on the corpus bigrams `cb2` of the docs
+    * `corpusPred` selects, and the incoming bigrams `ib2`. */
+  private def frozenLmSql(corpusPred: String): String =
+    s"""d AS (
+       |  SELECT doc_id, text, ${Ring.bucketSql("doc_id")} AS bucket
+       |  FROM documents),
+       |${lmBigramsSql("cb2", s"d WHERE $corpusPred")},
+       |${lmBigramsSql("ib2", s"d WHERE ${Ring.incomingSql("bucket")}")},
+       |${lmModelSql("cb2")}""".stripMargin
+
+  val lmQualityIndexedSql: String =
+    lmQualityIndexedSqlOn(Ring.corpusSql("bucket"))
 
   // ── q156: TAKEDOWN propagation through the LM bigram counts ────────────
   /** The retraction verb reaching the q87/q88 frozen-LM family (VERDICT
@@ -2331,7 +2249,7 @@ object Documents {
 
   /** The q156 oracle: q87's scoring with the model corpus reduced. */
   val lmQualityRetractSql: String = lmQualityIndexedSqlOn(
-    "bucket < 90 AND bucket NOT BETWEEN 20 AND 29")
+    s"${Ring.corpusSql("bucket")} AND NOT (${Ring.takedownSql("bucket")})")
 
   // ── q88: LM drift statistic — the data-driven refresh decision ──────────
   /** Backoff fraction of an incoming batch under the FROZEN q87 model —
@@ -2370,34 +2288,7 @@ object Documents {
   /** Oracle: identical split, identical capped model, counts instead of
     * scores. */
   val lmDriftSql: String =
-    s"""WITH d AS (
-       |  SELECT doc_id, text,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
-       |  FROM documents),
-       |cw AS (SELECT doc_id, $wordsSql AS w FROM d WHERE bucket < 90),
-       |iw AS (SELECT doc_id, $wordsSql AS w FROM d WHERE bucket >= 90),
-       |cb0 AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-       |                          i -> w[i] || ' ' || w[i+1])) AS bg
-       |  FROM cw),
-       |ib0 AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, greatest(len(w) - 1, 0) + 1),
-       |                          i -> w[i] || ' ' || w[i+1])) AS bg
-       |  FROM iw),
-       |cb2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM cb0),
-       |ib2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS w1 FROM ib0),
-       |bc AS (
-       |  SELECT bg, cb FROM (
-       |    SELECT bg, count(*) AS cb,
-       |      row_number() OVER (ORDER BY count(*) DESC, bg ASC) AS rk
-       |    FROM cb2 GROUP BY bg) WHERE rk <= 100000),
-       |uc AS (
-       |  SELECT w1, cu FROM (
-       |    SELECT w1, count(*) AS cu,
-       |      row_number() OVER (ORDER BY count(*) DESC, w1 ASC) AS rk
-       |    FROM cb2 GROUP BY w1) WHERE rk <= 100000),
+    s"""WITH ${frozenLmSql(Ring.corpusSql("bucket"))},
        |j AS (
        |  SELECT ib2.doc_id, bc.cb, uc.cu
        |  FROM ib2 LEFT JOIN bc USING (bg) LEFT JOIN uc USING (w1))
@@ -2427,10 +2318,10 @@ object Documents {
       .orderBy(col("source"), col("rk"))
   }
   val groupSampleSql: String =
-    """SELECT source, rk, doc_id FROM (
+    s"""SELECT source, rk, doc_id FROM (
       |  SELECT source, doc_id, row_number() OVER (
       |    PARTITION BY source
-      |    ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
+      |    ORDER BY ${Text.portableHashSql("CAST(doc_id AS VARCHAR)")} ASC,
       |             doc_id ASC) AS rk
       |  FROM documents)
       |WHERE rk <= 3
@@ -2484,8 +2375,8 @@ object Documents {
        |  FROM documents),
        |draws AS (
        |  SELECT doc_id, weight,
-       |    CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':',
-       |      CAST(j AS VARCHAR))), 1, 15)) AS BIGINT) AS h
+       |    ${Text.portableHashSql(
+             "concat(CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))")} AS h
        |  FROM wts, range(0, 8) t(j) WHERE j < weight),
        |keys AS (
        |  SELECT doc_id, CAST(weight AS BIGINT) AS weight, min(h) AS minh
@@ -2533,14 +2424,19 @@ object Documents {
   val sequencePackSql: String =
     s"""WITH t AS (
        |  SELECT source, doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+       |    ${Text.portableHashSql("CAST(doc_id AS VARCHAR)")} AS h,
        |    len($wordsSql) AS n_tokens
        |  FROM documents),
-       |c AS (
+       |${sourcePackSql("t")}""".stripMargin
+
+  /** q71's packing of `rows(source, doc_id, h, n_tokens)`: per source in
+    * (h, doc_id) order, into bins of 2,048 tokens. */
+  private def sourcePackSql(rows: String): String =
+    s"""c AS (
        |  SELECT source, n_tokens,
        |    sum(n_tokens) OVER (PARTITION BY source ORDER BY h ASC, doc_id ASC
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM t)
+       |  FROM $rows)
        |SELECT source,
        |  CAST(floor((cum - n_tokens) / 2048.0) AS BIGINT) AS bin,
        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
@@ -2604,18 +2500,10 @@ object Documents {
        |  FROM w2 JOIN cnt USING (wid) GROUP BY 1, 2),
        |t2 AS (
        |  SELECT source, n_tokens,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+       |    ${Text.portableHashSql("CAST(doc_id AS VARCHAR)")} AS h,
        |    doc_id
        |  FROM t),
-       |c AS (
-       |  SELECT source, n_tokens,
-       |    sum(n_tokens) OVER (PARTITION BY source ORDER BY h ASC, doc_id ASC
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM t2)
-       |SELECT source, CAST(floor((cum - n_tokens) / 2048.0) AS BIGINT) AS bin,
-       |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-       |FROM c GROUP BY source, bin
-       |ORDER BY source, bin""".stripMargin
+       |${sourcePackSql("t2")}""".stripMargin
   }
 
   // ── q139: GLOBAL shard export — corpus shuffle-order manifest ───────────
@@ -2750,20 +2638,25 @@ object Documents {
     * bottleneck [[globalCumsum]] exists to avoid. */
   val shardExportSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+       |  SELECT doc_id, ${Text.portableHashSql("CAST(doc_id AS VARCHAR)")} AS h,
        |    len($wordsSql) AS n_tokens
        |  FROM documents),
-       |c AS (
+       |${shardManifestSql("t", "doc_id")}""".stripMargin
+
+  /** q139's manifest over the rows `(h, n_tokens)` of `rows`, packed in
+    * (h, `tiebreak`) order: `c` (the single-window cumsum) and the final
+    * per-shard SELECT with its conservation columns. */
+  private def shardManifestSql(rows: String, tiebreak: String): String =
+    s"""c AS (
        |  SELECT h, n_tokens,
-       |    sum(n_tokens) OVER (ORDER BY h ASC, doc_id ASC
+       |    sum(n_tokens) OVER (ORDER BY h ASC, $tiebreak ASC
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM t)
+       |  FROM $rows)
        |SELECT CAST((cum - n_tokens) // $ShardBudgetTokens AS BIGINT) AS shard,
        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
        |  CAST(min(h) AS BIGINT) AS first_h, CAST(max(h) AS BIGINT) AS last_h,
-       |  (SELECT count(*) FROM t) AS corpus_docs,
-       |  (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM t)
+       |  (SELECT count(*) FROM $rows) AS corpus_docs,
+       |  (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM $rows)
        |    AS corpus_tokens,
        |  (SELECT count(*) FROM c) AS docs_accounted,
        |  (SELECT CAST(coalesce(max(cum), 0) AS BIGINT) FROM c)
@@ -2798,11 +2691,9 @@ object Documents {
   val shardIncrementalSql: String =
     s"""WITH t AS (
        |  SELECT doc_id,
-       |    CASE WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-       |        1, 15)) AS BIGINT) % 100 < 50 THEN 'b0' ELSE 'b1' END
+       |    CASE WHEN ${Ring.bucketSql("doc_id")} < 50 THEN 'b0' ELSE 'b1' END
        |      AS batch_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) AS h,
+       |    ${Text.portableHashSql("CAST(doc_id AS VARCHAR)")} AS h,
        |    len($wordsSql) AS n_tokens
        |  FROM documents),
        |c AS (
@@ -2948,13 +2839,10 @@ object Documents {
     * evolving symbol string `s` — the char-spacing map w → s is
     * injective, so grouping w0 by (w, s) partitions identically to
     * grouping by s alone, and the type table doubles as the ENCODE
-    * lookup (q125). */
-  private def bpeChainSql: String = bpeChainSqlOn("")
-
-  /** [[bpeChainSql]] with a WHERE predicate restricting which DOCUMENTS
-    * the vocab trains on — "" trains on all (q124/q125); the frozen-
-    * tokenizer oracles (q130/q131) train on the corpus side of the
-    * portable 90/10 carve. */
+    * lookup (q125). `docPred` restricts which DOCUMENTS the vocab
+    * trains on — "" trains on all (q124/q125); the frozen-tokenizer
+    * oracles (q130/q131) train on the corpus side of the portable 90/10
+    * carve, q157 on the docs outside the takedown slice. */
   private def bpeChainSqlOn(docPred: String): String = {
     val where = if (docPred.isEmpty) "" else s" WHERE $docPred"
     val rounds = (1 to BpeMerges).map { k =>
@@ -2985,16 +2873,27 @@ object Documents {
        |$rounds""".stripMargin
   }
 
-  val bpeTrainSql: String = {
+  val bpeTrainSql: String = bpeTrainSqlOn("")
+
+  /** The merge table of [[bpeChainSqlOn]]`(docPred)`, one row per round. */
+  private def bpeTrainSqlOn(docPred: String): String = {
     val out = (1 to BpeMerges).map(k =>
       s"  SELECT $k AS step, lhs, rhs, lhs || rhs AS merged, cnt FROM b$k")
       .mkString("\n  UNION ALL\n")
-    s"""WITH $bpeChainSql
+    s"""WITH ${bpeChainSqlOn(docPred)}
        |SELECT CAST(step AS BIGINT) AS step, lhs, rhs, merged, cnt
        |FROM (
        |$out)
        |ORDER BY step""".stripMargin
   }
+
+  /** [[bpeChainSqlOn]] plus `types`: every word type's final token
+    * count, the encode lookup of q125/q130/q131. */
+  private def bpeTypesSql(docPred: String): String =
+    s"""${bpeChainSqlOn(docPred)},
+       |types AS (
+       |  SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_tok
+       |  FROM w$BpeMerges)""".stripMargin
 
   // ── q157: TAKEDOWN propagation through the BPE vocabulary ──────────────
   /** The retraction verb reaching the tokenizer family (VERDICT r19
@@ -3051,18 +2950,7 @@ object Documents {
 
   /** The q157 oracle: q124's unrolled replay with the training corpus
     * reduced by the takedown slice. */
-  val bpeTrainRetractSql: String = {
-    val out = (1 to BpeMerges).map(k =>
-      s"  SELECT $k AS step, lhs, rhs, lhs || rhs AS merged, cnt FROM b$k")
-      .mkString("\n  UNION ALL\n")
-    s"""WITH ${bpeChainSqlOn(
-        "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-        "AS BIGINT) % 100 NOT BETWEEN 20 AND 29")}
-       |SELECT CAST(step AS BIGINT) AS step, lhs, rhs, merged, cnt
-       |FROM (
-       |$out)
-       |ORDER BY step""".stripMargin
-  }
+  val bpeTrainRetractSql: String = bpeTrainSqlOn(untakenSql)
 
   // ── q125: BPE encode — tokenize the corpus under the learned vocab ─────
   /** q125: subword TOKENIZATION under the q124-learned merge table — the
@@ -3106,10 +2994,7 @@ object Documents {
   }
 
   val bpeEncodeSql: String =
-    s"""WITH $bpeChainSql,
-       |types AS (
-       |  SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_tok
-       |  FROM w$BpeMerges),
+    s"""WITH ${bpeTypesSql("")},
        |dw AS (
        |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt FROM (
        |    SELECT doc_id, unnest($wordsSql) AS w FROM documents)
@@ -3128,9 +3013,7 @@ object Documents {
   // ── q130/q131: FROZEN tokenizer — materialize, probe, drift, refresh ───
   /** The portable doc-hash predicate of the 90/10 carve, oracle side
     * (identical to the q42/q82/q128 split). */
-  private val corpusPredSql =
-    "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) " +
-    "AS BIGINT) % 100 < 90"
+  private val corpusPredSql = Ring.corpusSql(Ring.bucketSql("doc_id"))
 
   /** The same carve, Spark side: (corpus docs, incoming docs). */
   private def bpeCarve(s: SparkSession, d: String)
@@ -3216,10 +3099,7 @@ object Documents {
   }
 
   val bpeFrozenEncodeSql: String =
-    s"""WITH ${bpeChainSqlOn(corpusPredSql)},
-       |types AS (
-       |  SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_tok
-       |  FROM w$BpeMerges),
+    s"""WITH ${bpeTypesSql(corpusPredSql)},
        |dw AS (
        |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt FROM (
        |    SELECT doc_id, unnest($wordsSql) AS w FROM documents
@@ -3291,10 +3171,7 @@ object Documents {
         expr("10000 * n_unseen div n_words").as("unseen_bp"))
 
   val bpeDriftSql: String =
-    s"""WITH ${bpeChainSqlOn(corpusPredSql)},
-       |types AS (
-       |  SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_tok
-       |  FROM w$BpeMerges),
+    s"""WITH ${bpeTypesSql(corpusPredSql)},
        |dw AS (
        |  SELECT CASE WHEN $corpusPredSql THEN 'corpus' ELSE 'batch' END
        |      AS side, w, CAST(count(*) AS BIGINT) AS cnt FROM (
@@ -3487,20 +3364,27 @@ object Documents {
   }
 
   /** The shared oracle CTE chain scan → grams → dup → islands → spans
-    * (q126's full pipeline minus the final projection), reused by q127. */
-  private def dupSpanChainSql: String = {
+    * (q126's full pipeline minus the final projection), reused by q127
+    * and q128/q151: only the grams of docs `countWhere` selects count
+    * toward the ≥2 rule, and spans are found in the docs `probeWhere`
+    * selects (`d` carries each doc's ring bucket `b`). */
+  private def dupSpanChainSql(countWhere: String = "TRUE",
+                              probeWhere: String = "TRUE"): String = {
     val K = DupSpanK
     s"""d AS (
-       |  SELECT doc_id, $wordsSql AS w FROM documents),
-       |d2 AS (SELECT doc_id, w FROM d WHERE len(w) >= $K),
+       |  SELECT doc_id, $wordsSql AS w, ${Ring.bucketSql("doc_id")} AS b
+       |  FROM documents),
+       |d2 AS (SELECT doc_id, w, b FROM d WHERE len(w) >= $K),
        |g AS (
-       |  SELECT doc_id,
+       |  SELECT doc_id, b,
        |    unnest(range(1, len(w) - $K + 2)) AS pos,
        |    unnest(list_transform(range(1, len(w) - $K + 2),
        |      i -> array_to_string(w[i:i+$K-1], ' '))) AS gram
        |  FROM d2),
-       |dup AS (SELECT gram FROM g GROUP BY 1 HAVING count(*) >= 2),
-       |dpos AS (SELECT doc_id, pos FROM g JOIN dup USING (gram)),
+       |dup AS (SELECT gram FROM g WHERE $countWhere
+       |        GROUP BY 1 HAVING count(*) >= 2),
+       |dpos AS (SELECT doc_id, pos FROM g JOIN dup USING (gram)
+       |         WHERE $probeWhere),
        |isl AS (SELECT doc_id, pos,
        |          pos - row_number() OVER (PARTITION BY doc_id
        |                                   ORDER BY pos) AS k
@@ -3510,14 +3394,17 @@ object Documents {
        |       FROM isl GROUP BY doc_id, k)""".stripMargin
   }
 
-  val dupSpansSql: String =
-    s"""WITH $dupSpanChainSql
+  /** q126's spans out of [[dupSpanChainSql]]. */
+  private def dupSpanRowsSql(countWhere: String, probeWhere: String): String =
+    s"""WITH ${dupSpanChainSql(countWhere, probeWhere)}
        |SELECT doc_id,
        |  CAST(start_pos AS BIGINT) AS start_pos,
        |  CAST(end_pos AS BIGINT) AS end_pos,
        |  CAST(end_pos - start_pos + 1 AS BIGINT) AS n_tokens
        |FROM sp
        |ORDER BY doc_id, start_pos""".stripMargin
+
+  val dupSpansSql: String = dupSpanRowsSql("TRUE", "TRUE")
 
   // ── q127: span dedup apply — canonical-occurrence election ─────────────
   /** q127: the ACT half of substring dedup — q126 finds the duplicated
@@ -3886,41 +3773,11 @@ object Documents {
     * `corpusWhere` restricts which docs' grams COUNT toward the global
     * ≥2 rule (q151's takedown oracle: retracted docs count nothing),
     * while the probed incoming side stays the full ≥90 carve. */
-  private def dupSpansIncrSqlFor(corpusWhere: String): String = {
-    val K = DupSpanK
-    s"""WITH d AS (
-       |  SELECT doc_id, $wordsSql AS w,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 100 AS b
-       |  FROM documents),
-       |d2 AS (SELECT doc_id, w, b FROM d WHERE len(w) >= $K),
-       |g AS (
-       |  SELECT doc_id, b,
-       |    unnest(range(1, len(w) - $K + 2)) AS pos,
-       |    unnest(list_transform(range(1, len(w) - $K + 2),
-       |      i -> array_to_string(w[i:i+$K-1], ' '))) AS gram
-       |  FROM d2),
-       |dup AS (SELECT gram FROM g WHERE $corpusWhere
-       |        GROUP BY 1 HAVING count(*) >= 2),
-       |dpos AS (SELECT doc_id, pos FROM g JOIN dup USING (gram)
-       |         WHERE b >= 90),
-       |isl AS (SELECT doc_id, pos,
-       |          pos - row_number() OVER (PARTITION BY doc_id
-       |                                   ORDER BY pos) AS k
-       |        FROM dpos),
-       |sp AS (SELECT doc_id, min(pos) AS start_pos,
-       |              max(pos) + $K - 1 AS end_pos
-       |       FROM isl GROUP BY doc_id, k)
-       |SELECT doc_id,
-       |  CAST(start_pos AS BIGINT) AS start_pos,
-       |  CAST(end_pos AS BIGINT) AS end_pos,
-       |  CAST(end_pos - start_pos + 1 AS BIGINT) AS n_tokens
-       |FROM sp
-       |ORDER BY doc_id, start_pos""".stripMargin
-  }
+  private def dupSpansIncrSqlFor(corpusWhere: String): String =
+    dupSpanRowsSql(corpusWhere, Ring.incomingSql("b"))
 
   val spanDedupSql: String =
-    s"""WITH $dupSpanChainSql,
+    s"""WITH ${dupSpanChainSql()},
        |st AS (
        |  SELECT sp.doc_id, sp.start_pos, sp.end_pos,
        |    sp.end_pos - sp.start_pos + 1 AS n_tokens,
@@ -4029,7 +3886,7 @@ object Documents {
   }
 
   val spanRewriteSql: String =
-    s"""WITH $dupSpanChainSql,
+    s"""WITH ${dupSpanChainSql()},
        |st AS (
        |  SELECT sp.doc_id, sp.start_pos, sp.end_pos,
        |    array_to_string(d2.w[sp.start_pos:sp.end_pos], ' ')
@@ -4097,10 +3954,10 @@ object Documents {
       .orderBy(col("source"), col("doc_id"), col("copy"))
   }
   val sourceMixSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT source, doc_id,
-      |    (1 + CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 4) * 7500 AS w_bp,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 15)) AS BIGINT) % 10000 AS h
+      |    (1 + CAST(regexp_extract(source, '(\\d+)', 1) AS BIGINT) % 4) * 7500 AS w_bp,
+      |    ${Text.portableHashSql("CAST(doc_id AS VARCHAR) || 'mix'")} % 10000 AS h
       |  FROM documents),
       |n AS (
       |  SELECT source, doc_id,
@@ -4395,53 +4252,19 @@ object Documents {
     * cumsum + manifest (conservation columns included). */
   // lazy: references NbModelTopK, declared further down the object —
   // an eager val here would interpolate the still-uninitialized 0
-  lazy val curationPipelineSql: String = {
-    val k = DecontamGramN
-    val concat8 = (0 until k).map(o => s"w[i+$o]").mkString(" || ' ' || ")
-    s"""WITH RECURSIVE d AS (
-       |  SELECT doc_id, text, lang, source,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
-       |  FROM documents),
-       |cw AS (
-       |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-       |    unnest($wordsSql) AS w
-       |  FROM d WHERE bucket < 90),
-       |m AS (
-       |  SELECT w, c1, c0 FROM (
-       |    SELECT w, sum(y) AS c1, count(*) - sum(y) AS c0,
-       |      row_number() OVER (ORDER BY count(*) DESC, w ASC) AS rk
-       |    FROM cw GROUP BY w) WHERE rk <= $NbModelTopK),
-       |p AS (
-       |  SELECT (10000 * (sum(c1) + 1)) // (sum(c1) + sum(c0) + 2) AS prior_bp
-       |  FROM m),
+  lazy val curationPipelineSql: String =
+    s"""WITH RECURSIVE ${nbTrainSql(Ring.corpusSql("bucket"))},
        |aw AS (SELECT doc_id, unnest($wordsSql) AS w FROM d),
        |sc AS (
-       |  SELECT aw.doc_id,
-       |    CASE WHEN m.c1 IS NULL THEN p.prior_bp
-       |         ELSE (10000 * (m.c1 + 1)) // (m.c1 + m.c0 + 2) END AS sbp
+       |  SELECT aw.doc_id, $nbWordBpSql AS sbp
        |  FROM aw LEFT JOIN m USING (w) CROSS JOIN p),
        |gate AS (
        |  SELECT doc_id FROM sc GROUP BY doc_id
        |  HAVING sum(sbp) // count(*) > (SELECT prior_bp FROM p)),
-       |shg AS (
-       |  SELECT doc_id, $shinglesSql AS s
-       |  FROM (SELECT doc_id, $wordsSql AS w
-       |        FROM documents JOIN gate USING (doc_id))),
-       |ok AS (SELECT * FROM shg WHERE len(s) > 0),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ok a JOIN ok b ON a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 10000
-       |      // CAST(len(list_distinct(a.s || b.s)) AS BIGINT) >= 8000),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |cc(doc_id, lbl) AS (
-       |  SELECT doc_id, doc_id AS lbl FROM gate
-       |  UNION
-       |  SELECT e.dst AS doc_id, cc.lbl
-       |  FROM cc JOIN edges e ON cc.doc_id = e.src),
-       |lbl AS (SELECT doc_id, min(lbl) AS rep FROM cc GROUP BY doc_id),
+       |${nearDupPairsSql("documents JOIN gate USING (doc_id)")},
+       |${edgesSql("edges")},
+       |${componentsSql("cc", "edges", "gate")},
+       |${repsSql("lbl", "cc", "rep")},
        |nw AS (
        |  SELECT doc_id, CAST(len($wordsSql) AS BIGINT) AS n_words
        |  FROM documents JOIN gate USING (doc_id)),
@@ -4450,11 +4273,7 @@ object Documents {
        |      ORDER BY nw.n_words DESC, l.doc_id ASC) AS rk
        |  FROM lbl l JOIN nw ON nw.doc_id = l.doc_id),
        |kept AS (SELECT doc_id FROM el WHERE rk = 1),
-       |gg AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, greatest(len(w) - ${k - 1}, 0) + 1),
-       |    i -> $concat8))) AS gram
-       |  FROM (SELECT doc_id, $wordsSql AS w FROM documents)),
+       |${decontamGramsSql("gg")},
        |dirty AS (
        |  SELECT DISTINCT g.doc_id FROM gg g
        |  JOIN (SELECT DISTINCT gram FROM gg WHERE doc_id % 17 = 3) b
@@ -4462,106 +4281,32 @@ object Documents {
        |clean AS (
        |  SELECT doc_id FROM kept
        |  WHERE doc_id NOT IN (SELECT doc_id FROM dirty)),
-       |dt AS (
-       |  SELECT d.source, d.doc_id, CAST(len($wordsSql) AS BIGINT) AS n_tok
-       |  FROM d JOIN clean USING (doc_id)),
-       |src AS (
-       |  SELECT source, CAST(sum(n_tok) AS BIGINT) AS t
-       |  FROM dt GROUP BY 1),
-       |w2 AS (
-       |  SELECT source,
-       |    least(CAST(floor(10000.0 *
-       |        sqrt(CAST((SELECT max(t) FROM src) AS DOUBLE)
-       |             / greatest(t, 1))) AS BIGINT), $TempMixCapBp) AS e_bp
-       |  FROM src),
-       |pd AS (
-       |  SELECT dt.doc_id, dt.n_tok,
-       |    (w2.e_bp // 10000) + CASE WHEN
-       |      CAST(concat('0x', substr(md5(CAST(dt.doc_id AS VARCHAR)
-       |        || 'tmix'), 1, 15)) AS BIGINT) % 10000 < w2.e_bp % 10000
-       |      THEN 1 ELSE 0 END AS n_copies
-       |  FROM dt JOIN w2 USING (source)),
-       |x AS (
-       |  SELECT doc_id, n_tok,
-       |    CAST(unnest(range(1, n_copies + 1)) AS BIGINT) AS copy
-       |  FROM pd WHERE n_copies >= 1),
-       |inst AS (
-       |  SELECT doc_id * 16 + copy AS uid,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':'
-       |      || CAST(copy AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
-       |    n_tok AS n_tokens
-       |  FROM x),
-       |c AS (
-       |  SELECT h, n_tokens,
-       |    sum(n_tokens) OVER (ORDER BY h ASC, uid ASC
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM inst)
-       |SELECT CAST((cum - n_tokens) // $ShardBudgetTokens AS BIGINT) AS shard,
-       |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-       |  CAST(min(h) AS BIGINT) AS first_h, CAST(max(h) AS BIGINT) AS last_h,
-       |  (SELECT count(*) FROM inst) AS corpus_docs,
-       |  (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM inst)
-       |    AS corpus_tokens,
-       |  (SELECT count(*) FROM c) AS docs_accounted,
-       |  (SELECT CAST(coalesce(max(cum), 0) AS BIGINT) FROM c)
-       |    AS tokens_accounted
-       |FROM c GROUP BY shard ORDER BY shard""".stripMargin
-  }
+       |${temperatureSql("d JOIN clean USING (doc_id)")},
+       |$copyShardsSql""".stripMargin
 
   /** Oracle: q129's weight CTEs chained into q139's single-window cumsum
     * over the exploded copy stream. */
   val epochShardsSql: String =
-    s"""WITH dt AS (
-       |  SELECT source, doc_id,
-       |    CAST(len($wordsSql) AS BIGINT) AS n_tok
-       |  FROM documents),
-       |src AS (
-       |  SELECT source, CAST(sum(n_tok) AS BIGINT) AS t
-       |  FROM dt GROUP BY 1),
-       |w AS (
-       |  SELECT source,
-       |    least(CAST(floor(10000.0 *
-       |        sqrt(CAST((SELECT max(t) FROM src) AS DOUBLE)
-       |             / greatest(t, 1))) AS BIGINT), $TempMixCapBp) AS e_bp
-       |  FROM src),
-       |pd AS (
-       |  SELECT dt.doc_id, dt.n_tok,
-       |    (w.e_bp // 10000) + CASE WHEN
-       |      CAST(concat('0x', substr(md5(CAST(dt.doc_id AS VARCHAR)
-       |        || 'tmix'), 1, 15)) AS BIGINT) % 10000 < w.e_bp % 10000
-       |      THEN 1 ELSE 0 END AS n_copies
-       |  FROM dt JOIN w USING (source)),
-       |x AS (
-       |  SELECT doc_id, n_tok,
-       |    CAST(unnest(range(1, n_copies + 1)) AS BIGINT) AS copy
-       |  FROM pd WHERE n_copies >= 1),
-       |inst AS (
-       |  SELECT doc_id * 16 + copy AS uid,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':'
-       |      || CAST(copy AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
-       |    n_tok AS n_tokens
-       |  FROM x),
-       |c AS (
-       |  SELECT h, n_tokens,
-       |    sum(n_tokens) OVER (ORDER BY h ASC, uid ASC
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM inst)
-       |SELECT CAST((cum - n_tokens) // $ShardBudgetTokens AS BIGINT) AS shard,
-       |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-       |  CAST(min(h) AS BIGINT) AS first_h, CAST(max(h) AS BIGINT) AS last_h,
-       |  (SELECT count(*) FROM inst) AS corpus_docs,
-       |  (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM inst)
-       |    AS corpus_tokens,
-       |  (SELECT count(*) FROM c) AS docs_accounted,
-       |  (SELECT CAST(coalesce(max(cum), 0) AS BIGINT) FROM c)
-       |    AS tokens_accounted
-       |FROM c GROUP BY shard ORDER BY shard""".stripMargin
+    s"""WITH ${temperatureSql("documents")},
+       |$copyShardsSql""".stripMargin
 
   val temperatureMixSql: String =
-    s"""WITH dt AS (
-       |  SELECT source, doc_id,
-       |    CAST(len($wordsSql) AS BIGINT) AS n_tok
-       |  FROM documents),
+    s"""WITH ${temperatureSql("documents")}
+       |SELECT w.source AS source, w.t AS n_tokens, w.n_docs AS n_docs,
+       |  w.e_bp AS e_bp, CAST(sum(pd.n_copies) AS BIGINT) AS n_copies
+       |FROM pd JOIN w USING (source)
+       |GROUP BY w.source, w.t, w.n_docs, w.e_bp
+       |ORDER BY w.source""".stripMargin
+
+  /** q129's temperature stages over the docs of `docs`: `dt` (tokens per
+    * doc), `src` (tokens and docs per source), `w` (the source's epoch
+    * weight, √(max t / t) in basis points capped at [[TempMixCapBp]]) and
+    * `pd` (each doc's whole copies plus one more when its salted
+    * portable hash falls under the weight's fraction). */
+  private def temperatureSql(docs: String): String =
+    s"""dt AS (
+       |  SELECT source, doc_id, CAST(len($wordsSql) AS BIGINT) AS n_tok
+       |  FROM $docs),
        |src AS (
        |  SELECT source, CAST(sum(n_tok) AS BIGINT) AS t,
        |         CAST(count(*) AS BIGINT) AS n_docs
@@ -4573,17 +4318,28 @@ object Documents {
        |             / greatest(t, 1))) AS BIGINT), $TempMixCapBp) AS e_bp
        |  FROM src),
        |pd AS (
-       |  SELECT dt.source,
+       |  SELECT dt.source, dt.doc_id, dt.n_tok,
        |    (w.e_bp // 10000) + CASE WHEN
-       |      CAST(concat('0x', substr(md5(CAST(dt.doc_id AS VARCHAR)
-       |        || 'tmix'), 1, 15)) AS BIGINT) % 10000 < w.e_bp % 10000
+       |      ${Text.portableHashSql("CAST(dt.doc_id AS VARCHAR) || 'tmix'")}
+       |        % 10000 < w.e_bp % 10000
        |      THEN 1 ELSE 0 END AS n_copies
-       |  FROM dt JOIN w USING (source))
-       |SELECT w.source AS source, w.t AS n_tokens, w.n_docs AS n_docs,
-       |  w.e_bp AS e_bp, CAST(sum(pd.n_copies) AS BIGINT) AS n_copies
-       |FROM pd JOIN w USING (source)
-       |GROUP BY w.source, w.t, w.n_docs, w.e_bp
-       |ORDER BY w.source""".stripMargin
+       |  FROM dt JOIN w USING (source))""".stripMargin
+
+  /** q139's packing of the copy stream `pd` ([[temperatureSql]]): `x`
+    * (one row per copy), `inst` (each copy's uid and portable hash) and
+    * [[shardManifestSql]] over `inst`. */
+  private def copyShardsSql: String =
+    s"""x AS (
+       |  SELECT doc_id, n_tok,
+       |    CAST(unnest(range(1, n_copies + 1)) AS BIGINT) AS copy
+       |  FROM pd WHERE n_copies >= 1),
+       |inst AS (
+       |  SELECT doc_id * 16 + copy AS uid,
+       |    ${Text.portableHashSql(
+             "CAST(doc_id AS VARCHAR) || ':' || CAST(copy AS VARCHAR)")} AS h,
+       |    n_tok AS n_tokens
+       |  FROM x),
+       |${shardManifestSql("inst", "uid")}""".stripMargin
 
   // ── q42: reproducible hash-bucket train/test split ──────────────────────
   /** Split assignment as a pure function of the key (hash mod 100:
@@ -4594,21 +4350,13 @@ object Documents {
     Tables.documents(s, d)
       .select(col("lang"),
         Ring.bucket(col("doc_id")).as("bucket"))
-      .select(col("lang"),
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "valid")
-          .otherwise("test").as("split"))
+      .select(col("lang"), Ring.split(col("bucket")).as("split"))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("lang"), col("split"))
   val trainTestSplitSql: String =
-    """SELECT lang,
-      |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'valid' ELSE 'test' END AS split,
-      |  count(*) AS n_docs
-      |FROM (
-      |  SELECT lang,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b
-      |  FROM documents)
+    s"""SELECT lang, ${Ring.splitSql("b")} AS split, count(*) AS n_docs
+      |FROM (SELECT lang, ${Ring.bucketSql("doc_id")} AS b FROM documents)
       |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin
 
   // ── q43: PII/URL scrubbing ──────────────────────────────────────────────
@@ -4831,19 +4579,23 @@ object Documents {
           / col("n_chunks")).cast("long"))
       .orderBy(col("doc_id"))
   }
+  /** `c`: one row per 32-word, stride-16 chunk `ci` of each doc of
+    * `docs` (its words `w`), the chunking of q76/q77/q78. */
+  private def chunkRowsSql(docs: String): String =
+    s"""c AS (
+       |  SELECT doc_id, w, unnest(range(0, nc)) AS ci FROM (
+       |    SELECT doc_id, w,
+       |      CASE WHEN len(w) = 0 THEN 0
+       |           ELSE 1 + (greatest(len(w) - 32, 0) + 15) // 16 END AS nc
+       |    FROM (SELECT doc_id, $wordsSql AS w FROM $docs))
+       |  WHERE nc > 0)""".stripMargin
+
   val chunkDedupSql: String =
-    s"""WITH ww AS (SELECT doc_id, $wordsSql AS w FROM documents),
-       |n AS (
-       |  SELECT doc_id, w, len(w) AS len,
-       |    CASE WHEN len(w) = 0 THEN 0
-       |         ELSE 1 + (greatest(len(w) - 32, 0) + 15) // 16 END AS nc
-       |  FROM ww),
-       |c AS (
-       |  SELECT doc_id, w, unnest(range(0, nc)) AS ci FROM n WHERE nc > 0),
+    s"""WITH ${chunkRowsSql("documents")},
        |f AS (
        |  SELECT doc_id, ci AS chunk_idx,
-       |    CAST(concat('0x', substr(md5(array_to_string(
-       |      list_slice(w, ci*16 + 1, ci*16 + 32), ' ')), 1, 15)) AS BIGINT) AS fp
+       |    ${Text.portableHashSql(
+             "array_to_string(list_slice(w, ci*16 + 1, ci*16 + 32), ' ')")} AS fp
        |  FROM c),
        |r AS (
        |  SELECT doc_id, chunk_idx, fp,
@@ -4856,21 +4608,14 @@ object Documents {
        |    * 10000.0 / count(*)) AS BIGINT) AS dup_bp
        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin
   val docChunksSql: String =
-    s"""WITH ww AS (SELECT doc_id, $wordsSql AS w FROM documents),
-       |n AS (
-       |  SELECT doc_id, w, len(w) AS len,
-       |    CASE WHEN len(w) = 0 THEN 0
-       |         ELSE 1 + (greatest(len(w) - 32, 0) + 15) // 16 END AS nc
-       |  FROM ww),
-       |c AS (
-       |  SELECT doc_id, w, unnest(range(0, nc)) AS ci FROM n WHERE nc > 0),
+    s"""WITH ${chunkRowsSql("documents")},
        |s AS (
        |  SELECT doc_id, ci AS chunk_idx,
        |    list_slice(w, ci*16 + 1, ci*16 + 32) AS chunk
        |  FROM c)
        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
        |  CAST(len(chunk) AS BIGINT) AS n_tokens,
-       |  CAST(concat('0x', substr(md5(array_to_string(chunk, ' ')), 1, 15)) AS BIGINT) AS fp
+       |  ${Text.portableHashSql("array_to_string(chunk, ' ')")} AS fp
        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin
 
   // ── q78: RAG chunk index — LSH retrieval over the chunked corpus ────────
@@ -4950,30 +4695,14 @@ object Documents {
     * candidate SET are bit-identical cross-engine, so top-5 agreement is
     * exact, not statistical. */
   val ragChunkTopKSql: String = {
-    def bitTerms(k: Int): String = (0 until 32).map { p =>
-      s"""CASE WHEN list_sum(list_transform(hw$k,
-         |    h -> CASE WHEN ((h >> $p) & 1) = 1 THEN 1 ELSE -1 END)) >= 0
-         |  THEN CAST(${1L << p} AS BIGINT) ELSE 0 END""".stripMargin
-    }.mkString(" +\n  ")
-    val hwCols = (0 until 4).map { k =>
-      s"""list_transform(chunk,
-         |    wd -> CAST(concat('0x', substr(md5(wd), ${1 + 8 * k}, 8)) AS BIGINT)) AS hw$k""".stripMargin
-    }.mkString(",\n  ")
-    val shCols = (0 until 4).map(k => s"${bitTerms(k)} AS sh$k").mkString(",\n  ")
+    val (hwCols, shCols) = simhash128Sql("chunk")
     val bandCase =
       "CASE t.k WHEN 0 THEN sh0 WHEN 1 THEN sh1 WHEN 2 THEN sh2 ELSE sh3 END"
     val hammingSql = (0 until 4)
       .map(k => s"bit_count(xor(q.sh$k, e.sh$k))").mkString(" + ")
     val qDocs = RagQueryDocs.mkString("(", ", ", ")")
     s"""WITH $corpusSql,
-       |ww AS (SELECT doc_id, $wordsSql AS w FROM corpus),
-       |n AS (
-       |  SELECT doc_id, w, len(w) AS len,
-       |    CASE WHEN len(w) = 0 THEN 0
-       |         ELSE 1 + (greatest(len(w) - 32, 0) + 15) // 16 END AS nc
-       |  FROM ww),
-       |c AS (
-       |  SELECT doc_id, w, unnest(range(0, nc)) AS ci FROM n WHERE nc > 0),
+       |${chunkRowsSql("corpus")},
        |tk AS (
        |  SELECT doc_id, doc_id * 10000 + ci AS cid,
        |    list_slice(w, ci*16 + 1, ci*16 + 32) AS chunk
@@ -5114,15 +4843,26 @@ object Documents {
   /** The q134 oracle's model CTEs, parameterized on the TRAINING
     * predicate — q145's reduced-corpus oracle reuses them verbatim. */
   private def nbModelSqlWhere(trainWhere: String): String =
+    s"""${nbTrainSql(trainWhere)},
+       |bw AS (SELECT doc_id, unnest($wordsSql) AS w FROM d
+       |       WHERE ${Ring.incomingSql("bucket")}),
+       |scored AS (
+       |  SELECT bw.doc_id, $nbWordBpSql AS sbp,
+       |    CASE WHEN m.c1 IS NULL THEN 1 ELSE 0 END AS oov
+       |  FROM bw LEFT JOIN m USING (w) CROSS JOIN p)""".stripMargin
+
+  /** q134's capped NB model trained on the carved docs `d` that
+    * `trainWhere` selects: `d`, `cw` (labelled word occurrences), `m`
+    * (the top-[[NbModelTopK]] words' class counts) and `p` (the smoothed
+    * prior). Shared with q148's quality gate. */
+  private def nbTrainSql(trainWhere: String): String =
     s"""d AS (
-       |  SELECT doc_id, text, lang,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
+       |  SELECT doc_id, text, lang, source, ${Ring.bucketSql("doc_id")} AS bucket
        |  FROM documents),
        |cw AS (
        |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
        |    unnest($wordsSql) AS w
        |  FROM d WHERE $trainWhere),
-       |bw AS (SELECT doc_id, unnest($wordsSql) AS w FROM d WHERE bucket >= 90),
        |m AS (
        |  SELECT w, c1, c0 FROM (
        |    SELECT w, sum(y) AS c1, count(*) - sum(y) AS c0,
@@ -5130,15 +4870,14 @@ object Documents {
        |    FROM cw GROUP BY w) WHERE rk <= $NbModelTopK),
        |p AS (
        |  SELECT (10000 * (sum(c1) + 1)) // (sum(c1) + sum(c0) + 2) AS prior_bp
-       |  FROM m),
-       |scored AS (
-       |  SELECT bw.doc_id,
-       |    CASE WHEN m.c1 IS NULL THEN p.prior_bp
-       |         ELSE (10000 * (m.c1 + 1)) // (m.c1 + m.c0 + 2) END AS sbp,
-       |    CASE WHEN m.c1 IS NULL THEN 1 ELSE 0 END AS oov
-       |  FROM bw LEFT JOIN m USING (w) CROSS JOIN p)""".stripMargin
+       |  FROM m)""".stripMargin
 
-  private val nbModelSql: String = nbModelSqlWhere("bucket < 90")
+  /** A word's smoothed en probability in basis points under `m`/`p`. */
+  private def nbWordBpSql: String =
+    """CASE WHEN m.c1 IS NULL THEN p.prior_bp
+      |         ELSE (10000 * (m.c1 + 1)) // (m.c1 + m.c0 + 2) END""".stripMargin
+
+  private val nbModelSql: String = nbModelSqlWhere(Ring.corpusSql("bucket"))
 
   private val nbScoreTailSql: String =
     s"""SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
@@ -5156,7 +4895,7 @@ object Documents {
     * is OOV and backs off to the (reduced) prior. */
   val nbClassifierRetractSql: String =
     s"""WITH ${nbModelSqlWhere(
-           "bucket < 90 AND bucket NOT BETWEEN 20 AND 29")}
+           s"${Ring.corpusSql("bucket")} AND NOT (${Ring.takedownSql("bucket")})")}
        |$nbScoreTailSql""".stripMargin
 
   /** q135: classifier drift — the q88 statistic for the frozen NB model.
@@ -5439,7 +5178,7 @@ object Documents {
     "q145_nb_retract"     -> nbClassifierRetractSql,
     "q146_leakage_incremental" -> leakageSafeSplitIncrementalSql,
     // q151's oracle: the global >=2 rule counting only what remains
-    "q151_gram_retract"   -> dupSpansIncrSqlFor("NOT (b BETWEEN 20 AND 29)"),
+    "q151_gram_retract"   -> dupSpansIncrSqlFor(s"NOT (${Ring.takedownSql("b")})"),
     "q152_cluster_repair" -> clusterRepairRetractSql,
     "q148_curation_pipeline" -> curationPipelineSql,
     "q139_shard_export"   -> shardExportSql,

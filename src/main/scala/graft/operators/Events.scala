@@ -118,20 +118,27 @@ object Events {
               date_format(col("session_window.start"), tsFmt)
                 .as("session_start"),
               col("n_events"), col("sum_value_cents"))
+  /** The 30-minute sessionization of `e(user_id, ts, …)` in `order`:
+    * `marked` (brk = 1 where a gap opens a session) and `grouped` (each
+    * event's session ordinal `sid`). */
+  private def sessionIdsSql(order: String): String =
+    s"""marked AS (
+       |  SELECT *, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
+       |                                         ORDER BY $order)
+       |                      <= INTERVAL 30 MINUTE
+       |                 THEN 0 ELSE 1 END AS brk
+       |  FROM e),
+       |grouped AS (
+       |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY $order
+       |                           ROWS UNBOUNDED PRECEDING) AS sid
+       |  FROM marked)""".stripMargin
+
   val sessionWindowsSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
       |    CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
       |  FROM events),
-      |marked AS (
-      |  SELECT *, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-      |                      <= INTERVAL 30 MINUTE
-      |                 THEN 0 ELSE 1 END AS brk
-      |  FROM e),
-      |grouped AS (
-      |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-      |                           ROWS UNBOUNDED PRECEDING) AS sid
-      |  FROM marked)
+      |${sessionIdsSql("ts")}
       |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
       |  count(*) AS n_events, CAST(sum(v_cents) AS BIGINT) AS sum_value_cents
       |FROM grouped GROUP BY user_id, sid
@@ -654,19 +661,10 @@ object Events {
       .orderBy(col("n_sessions").desc, col("path").asc)
       .limit(20)
   val sessionPathsSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
       |  FROM events),
-      |marked AS (
-      |  SELECT *, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-      |                                         ORDER BY ts, event_id)
-      |                      <= INTERVAL 30 MINUTE
-      |                 THEN 0 ELSE 1 END AS brk
-      |  FROM e),
-      |grouped AS (
-      |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |                           ROWS UNBOUNDED PRECEDING) AS sid
-      |  FROM marked),
+      |${sessionIdsSql("ts, event_id")},
       |ranked AS (
       |  SELECT *, row_number() OVER (PARTITION BY user_id, sid
       |                               ORDER BY ts, event_id) AS rn,
@@ -782,14 +780,14 @@ object Events {
       .orderBy(col("cohort_day"), col("day_offset"))
   }
   val retentionSketchSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
       |f AS (SELECT user_id, min(day) AS cohort FROM e GROUP BY user_id),
       |a AS (SELECT DISTINCT user_id, day FROM e),
       |r AS (
       |  SELECT f.cohort, datediff('day', f.cohort, a.day) AS day_offset,
       |    a.user_id,
-      |    CAST(concat('0x', substr(md5(CAST(a.user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      |    ${graft.functions.Text.portableHashSql("CAST(a.user_id AS VARCHAR)")} AS h
       |  FROM a JOIN f USING (user_id)
       |  WHERE datediff('day', f.cohort, a.day) BETWEEN 0 AND 7),
       |sk AS (

@@ -166,8 +166,11 @@ object Linkage {
       .select(col("dname"), col("b.ckey").as("match_key"),
         col("b.dist").cast("long").as("distance"))
 
-  val fuzzyJoinSql: String =
-    s"""WITH clean AS (
+  /** The two sides of both linkage oracles: `clean` (every part name
+    * with its first-word block) and `db` (the dirty copies of
+    * [[dirtySide]], blocked alike), with `dirty0`/`dirty` between. */
+  private def linkageSidesSql: String =
+    s"""clean AS (
        |  SELECT p_partkey AS ckey, p_name AS cname,
        |         split_part(p_name, ' ', 1) AS blk
        |  FROM part),
@@ -186,7 +189,10 @@ object Linkage {
        |         ELSE reverse(p_name) END AS dname
        |  FROM dirty0),
        |db AS (SELECT dirty_id, dname, split_part(dname, ' ', 1) AS blk
-       |       FROM dirty),
+       |       FROM dirty)""".stripMargin
+
+  val fuzzyJoinSql: String =
+    s"""WITH $linkageSidesSql,
        |cand AS (
        |  SELECT dirty_id, ckey, levenshtein(dname, cname) AS dist
        |  FROM db JOIN clean USING (blk)
@@ -309,28 +315,9 @@ object Linkage {
   }
 
   val fuzzyJoinMultipassSql: String =
-    s"""WITH clean AS (
-       |  SELECT p_partkey AS ckey, p_name AS cname,
-       |         split_part(p_name, ' ', 1) AS blk
-       |  FROM part),
+    s"""WITH $linkageSidesSql,
        |cn AS (
        |  SELECT blk, cname, min(ckey) AS ckey FROM clean GROUP BY 1, 2),
-       |dirty0 AS (
-       |  SELECT p_partkey, p_name, p_partkey % 7 AS m,
-       |         string_split(p_name, ' ') AS w
-       |  FROM part WHERE p_partkey % 7 IN (0, 1, 3, 5)),
-       |dirty AS (
-       |  SELECT p_partkey + 1000000 AS dirty_id,
-       |    CASE WHEN m = 0 THEN substr(p_name, 1, length(p_name) - 1)
-       |         WHEN m = 1 THEN CASE WHEN len(w) >= 2
-       |           THEN array_to_string(
-       |                  list_concat([w[2], w[1]], w[3:]), ' ')
-       |           ELSE p_name END
-       |         WHEN m = 3 THEN p_name || 's'
-       |         ELSE reverse(p_name) END AS dname
-       |  FROM dirty0),
-       |db AS (SELECT dirty_id, dname, split_part(dname, ' ', 1) AS blk
-       |       FROM dirty),
        |dn AS (SELECT DISTINCT blk, dname FROM db),
        |c1 AS (
        |  SELECT dn.dname, cn.ckey, levenshtein(dn.dname, cn.cname) AS dist

@@ -414,6 +414,31 @@ object Relational {
     * high-degree, the standard fix making wedge counts Σ min-degree —
     * robust to power-law hubs); id orientation suffices for the harness
     * graph and keeps the oracle trivially identical. */
+  /** The graph gates' vertex envelope: a vertex-sized table of at most
+    * this many rows (64M ≈ 1 GB of longs) is broadcast into its join. */
+  val BroadcastVertices: Long = 64L * 1000 * 1000
+
+  /** [[packKey]]'s bound: x·2³¹ + y is injective and overflow-free for
+    * ids in [0, 2³¹). */
+  private val PackBound = 2147483648L
+
+  /** Whether every vertex id in [minId, maxId] packs into one long. */
+  private[graft] def packable(minId: Long, maxId: Long): Boolean =
+    minId >= 0L && maxId < PackBound
+
+  /** CTE `name`: the part co-purchase graph, one (a < b) edge per pair of
+    * parts sharing an order — the edge set of every graph oracle. */
+  private def partEdgesSql(name: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+       |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+       |   AND a.l_partkey < b.l_partkey)""".stripMargin
+
+  /** The portable hash of an edge's "a,b" key: q107's 4-batch and
+    * q136's 16-way edge carves. */
+  private def edgeHashSql: String = graft.functions.Text.portableHashSql(
+    "concat(CAST(a AS VARCHAR), ',', CAST(b AS VARCHAR))")
+
   def triangleCount(s: SparkSession, d: String): DataFrame = {
     // r21: the edge set feeds FOUR consumers (degree table, orientation,
     // closing bloom, exact verify) — read it from the SHARED graph-family
@@ -456,7 +481,7 @@ object Relational {
         (r.getLong(0), r.getLong(1))
       }
     def degSide(keyed: DataFrame): DataFrame =
-      if (nVerts <= 64L * 1000 * 1000) broadcast(keyed) else keyed
+      if (nVerts <= BroadcastVertices) broadcast(keyed) else keyed
     val withDeg = e
       .join(degSide(degC.select(col("v").as("a"), col("deg").as("da"))),
         Seq("a"))
@@ -501,7 +526,7 @@ object Relational {
     // two-column row hashing — measured 5.4 s → 1.9 s on the 41M-wedge
     // closing job at sf0.1. The probed SET is identical (injective key),
     // so the count cannot move.
-    val packable = minId >= 0L && maxId < 2147483648L
+    val packable = Relational.packable(minId, maxId)
     def packed(df: DataFrame): DataFrame =
       df.select(packKey(col("b"), col("c")).as("k"))
     def closeExact(cands: DataFrame, bcast: Boolean): DataFrame = {
@@ -522,10 +547,7 @@ object Relational {
         col("n_triangles"))
   }
   val triangleCountSql: String =
-    """WITH e AS (
-      |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_partkey < b.l_partkey)
+    s"""WITH ${partEdgesSql("e")}
       |SELECT
       |  (SELECT count(*) FROM e) AS n_edges,
       |  (SELECT count(DISTINCT v) FROM (
@@ -675,7 +697,7 @@ object Relational {
     * two-column key at the call sites. */
   private def packKey(x: org.apache.spark.sql.Column,
       y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    x * lit(2147483648L) + y
+    x * lit(PackBound) + y
 
   private[graft] def tri16Edges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -747,7 +769,7 @@ object Relational {
         val r = degB.agg(min(col("u")), max(col("u"))).head
         (r.getLong(0), r.getLong(1))
       }
-    val packable = minId >= 0L && maxId < 2147483648L
+    val packable = Relational.packable(minId, maxId)
     val nTotal = bcnt.values.sum
     // r21: the 4-batch × 3-class fold is FUSED into three batch-tagged
     // joins + ONE closing-probe family + ONE 4-group aggregation, under
@@ -876,15 +898,8 @@ object Relational {
   /** Oracle: the INDEPENDENT method — full prefix recount per batch,
     * differenced; must equal the class-decomposed incremental counts. */
   val triangleDeltaSql: String =
-    """WITH e0 AS (
-      |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_partkey < b.l_partkey),
-      |e AS (
-      |  SELECT a, b, CAST(concat('0x', substr(md5(concat(
-      |      CAST(a AS VARCHAR), ',', CAST(b AS VARCHAR))), 1, 15))
-      |    AS BIGINT) % 4 AS batch
-      |  FROM e0),
+    s"""WITH ${partEdgesSql("e0")},
+      |e AS (SELECT a, b, $edgeHashSql % 4 AS batch FROM e0),
       |tc AS (
       |  SELECT r.i AS batch,
       |    (SELECT count(*) FROM e e1
@@ -1048,15 +1063,8 @@ object Relational {
   }
 
   val triangleApplySql: String =
-    """WITH e0 AS (
-      |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-      |   AND a.l_partkey < b.l_partkey),
-      |e AS (
-      |  SELECT a, b, CAST(concat('0x', substr(md5(concat(
-      |      CAST(a AS VARCHAR), ',', CAST(b AS VARCHAR))), 1, 15))
-      |    AS BIGINT) % 16 AS h16
-      |  FROM e0),
+    s"""WITH ${partEdgesSql("e0")},
+      |e AS (SELECT a, b, $edgeHashSql % 16 AS h16 FROM e0),
       |tall AS (
       |  SELECT count(*) AS t FROM e e1
       |    JOIN e e2 ON e2.a = e1.b
@@ -1275,7 +1283,7 @@ object Relational {
       // cannot change a bit of the result; past the gate the shuffle
       // join returns (and the agg re-shuffles) — same fallbacks.
       val rkc = r.select(col("v").as("u"), expr("r div deg").as("c"))
-      val rkb = if (nVerts <= 64L * 1000 * 1000) broadcast(rkc) else rkc
+      val rkb = if (nVerts <= BroadcastVertices) broadcast(rkc) else rkc
       r = adjC.join(rkb, Seq("u"))
         .groupBy(col("v"))
         .agg(expr("CAST(150000 + (85 * sum(c)) div 100 AS BIGINT)").as("r"),
@@ -1300,10 +1308,7 @@ object Relational {
          |    FROM adj JOIN i${k - 1} p ON p.v = adj.u
          |    GROUP BY adj.v) t)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-       |   AND a.l_partkey < b.l_partkey),
+    s"""WITH ${partEdgesSql("e")},
        |adj0 AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
        |deg AS (SELECT u, count(*) AS deg FROM adj0 GROUP BY u),
        |adj AS (SELECT adj0.u, adj0.v, deg.deg

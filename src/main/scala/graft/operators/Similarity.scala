@@ -110,17 +110,61 @@ object Similarity {
     s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |      list_transform(range(1, 65), i -> $a[i] * $b[i])), (x, y) -> x + y)""".stripMargin
 
-  val cosineTopKSql: String =
-    s"""WITH $normedSql,
-       |pairs AS (
+  /** `pairs`: each query vector's cosine `sim` to every vector `e` of
+    * `corpus` that satisfies `on`. */
+  private def queryPairsSql(corpus: String, on: String): String =
+    s"""pairs AS (
        |  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
        |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
-       |  FROM n q JOIN n e ON q.vec_id IN $queryIdsSql AND e.vec_id <> q.vec_id)
-       |SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
+       |  FROM n q JOIN $corpus e ON q.vec_id IN $queryIdsSql AND $on)""".stripMargin
+
+  /** The top-`k` of `pairs(q_id, n_id, sim)` per query, ranked by
+    * (sim desc, n_id), with the cosine in integer micros. */
+  private def simMicroTopKSql(k: Int): String =
+    s"""SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
        |FROM (SELECT *, row_number() OVER (
        |        PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
        |      FROM pairs)
-       |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
+       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+
+  /** q86's quantized centroids of the vectors `rows(label, v)`: `perdim`
+    * (each dimension in integer milli-units) and `cents`. */
+  private def centroidsSql(rows: String): String =
+    s"""perdim AS (
+       |  SELECT label, i AS pos, CAST(floor(v[i + 1] * 1000.0 + 0.5) AS BIGINT) AS qx
+       |  FROM $rows, range(0, 64) t(i)),
+       |cents AS (
+       |  SELECT label, list(c ORDER BY pos) AS cv FROM (
+       |    SELECT label, pos,
+       |      CAST(sum(qx) AS DOUBLE) / 1000.0 / CAST(count(*) AS DOUBLE) AS c
+       |    FROM perdim GROUP BY label, pos)
+       |  GROUP BY label)""".stripMargin
+
+  /** The centroid probe after [[centroidsSql]]: `assigned` (each query's
+    * `nprobe` nearest centroids as `probe_label`) and `pairs` (its cosine
+    * to the other vectors of `corpus` under those labels). */
+  private def probePairsSql(nprobe: Int, corpus: String): String =
+    s"""assigned AS (
+       |  SELECT q_id, label AS probe_label FROM (
+       |    SELECT q.vec_id AS q_id, c.label,
+       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |          list_transform(range(1, 65),
+       |            i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))),
+       |          (a, b) -> a + b) ASC, c.label ASC) AS arank
+       |    FROM n q, cents c WHERE q.vec_id IN $queryIdsSql)
+       |  WHERE arank <= $nprobe),
+       |pairs AS (
+       |  SELECT a.q_id, e.vec_id AS n_id,
+       |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
+       |  FROM assigned a
+       |  JOIN n q ON q.vec_id = a.q_id
+       |  JOIN $corpus e ON e.label = a.probe_label AND e.vec_id <> a.q_id)""".stripMargin
+
+  val cosineTopKSql: String =
+    s"""WITH $normedSql,
+       |${queryPairsSql("n", "e.vec_id <> q.vec_id")}
+       |${simMicroTopKSql(10)}""".stripMargin
 
   // ── q24: IVF-style partition-pruned top-k (nprobe=1) ────────────────────
   /** Probes only the query's own coarse cluster: the equi-join on `label`
@@ -141,16 +185,8 @@ object Similarity {
   }
   val ivfTopKSql: String =
     s"""WITH $normedSql,
-       |pairs AS (
-       |  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-       |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
-       |  FROM n q JOIN n e ON q.vec_id IN $queryIdsSql AND e.label = q.label
-       |                    AND e.vec_id <> q.vec_id)
-       |SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
-       |FROM (SELECT *, row_number() OVER (
-       |        PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |      FROM pairs)
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+       |${queryPairsSql("n", "e.label = q.label AND e.vec_id <> q.vec_id")}
+       |${simMicroTopKSql(5)}""".stripMargin
 
   // ── q81: metadata-filtered vector search (pre-filter, then exact) ───────
   /** Filtered ANN — "find the 5 nearest ENGLISH documents": top-k cosine
@@ -190,15 +226,8 @@ object Similarity {
        |  SELECT n.vec_id AS vec_id, n.v AS v, n.nrm AS nrm
        |  FROM n JOIN documents d ON n.vec_id = d.doc_id
        |  WHERE d.lang = 'en'),
-       |pairs AS (
-       |  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-       |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
-       |  FROM n q JOIN f e ON q.vec_id IN $queryIdsSql AND e.vec_id <> q.vec_id)
-       |SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
-       |FROM (SELECT *, row_number() OVER (
-       |        PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |      FROM pairs)
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+       |${queryPairsSql("f", "e.vec_id <> q.vec_id")}
+       |${simMicroTopKSql(5)}""".stripMargin
 
   // ── q35: embedding-cosine near-dup via random-hyperplane LSH ────────────
   /** Fixed pseudo-random hyperplanes (Knuth-hash doubles in [-0.5, 0.5)).
@@ -595,7 +624,7 @@ object Similarity {
     * the standing corpus, under a model FROZEN on the corpus — the
     * refresh-decision statistic for the materialized q86 quantizer
     * (VERDICT r10 item 1b). The split is the q42 portable-hash carve
-    * (vec_id bucket < 90 = standing corpus, ≥ 90 = incoming batch) so
+    * (vec_id buckets [0, 90) = standing corpus, [90, 100) = incoming) so
     * both engines see the identical sides; centroids train on the CORPUS
     * side only and land as their own warehouse artifact (the held-out
     * model a drift test needs — q86's all-corpus artifact would leak the
@@ -693,18 +722,9 @@ object Similarity {
   val centroidDriftSql: String =
     s"""WITH $normedSql,
        |b AS (
-       |  SELECT vec_id, label, v,
-       |    CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
+       |  SELECT vec_id, label, v, ${Ring.bucketSql("vec_id")} AS bucket
        |  FROM n),
-       |perdim AS (
-       |  SELECT label, i AS pos, CAST(floor(v[i + 1] * 1000.0 + 0.5) AS BIGINT) AS qx
-       |  FROM b, range(0, 64) t(i) WHERE bucket < 90),
-       |cents AS (
-       |  SELECT label, list(c ORDER BY pos) AS cv FROM (
-       |    SELECT label, pos,
-       |      CAST(sum(qx) AS DOUBLE) / 1000.0 / CAST(count(*) AS DOUBLE) AS c
-       |    FROM perdim GROUP BY label, pos)
-       |  GROUP BY label),
+       |${centroidsSql(s"(SELECT * FROM b WHERE ${Ring.corpusSql("bucket")}) bc")},
        |ass AS (
        |  SELECT vec_id, bucket, dist, row_number() OVER (
        |      PARTITION BY vec_id ORDER BY dist ASC, label ASC) AS arank
@@ -715,7 +735,8 @@ object Similarity {
        |          i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))),
        |        (a, b) -> a + b) AS dist
        |    FROM b e, cents c))
-       |SELECT CASE WHEN bucket >= 90 THEN 'batch' ELSE 'corpus' END AS side,
+       |SELECT CASE WHEN ${Ring.incomingSql("bucket")} THEN 'batch' ELSE 'corpus' END
+       |    AS side,
        |  CAST(count(*) AS BIGINT) AS n_vecs,
        |  CAST(sum(CAST(floor(dist * 1000000.0 + 0.5) AS BIGINT)) // count(*) AS BIGINT) AS mean_dist_micro
        |FROM ass WHERE arank = 1
@@ -870,47 +891,15 @@ object Similarity {
 
   val hybridRrfSql: String =
     s"""WITH $normedSql,
-       |perdim AS (
-       |  SELECT label, i AS pos,
-       |    CAST(floor(v[i + 1] * 1000.0 + 0.5) AS BIGINT) AS qx
-       |  FROM n, range(0, 64) t(i)),
-       |cents AS (
-       |  SELECT label, list(c ORDER BY pos) AS cv FROM (
-       |    SELECT label, pos,
-       |      CAST(sum(qx) AS DOUBLE) / 1000.0 / CAST(count(*) AS DOUBLE) AS c
-       |    FROM perdim GROUP BY label, pos)
-       |  GROUP BY label),
-       |assigned AS (
-       |  SELECT q_id, label AS probe_label FROM (
-       |    SELECT q.vec_id AS q_id, c.label,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |          list_transform(range(1, 65),
-       |            i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))),
-       |          (a, b) -> a + b) ASC, c.label ASC) AS arank
-       |    FROM n q, cents c WHERE q.vec_id IN $queryIdsSql)
-       |  WHERE arank <= $RrfNprobe),
-       |pairs AS (
-       |  SELECT a.q_id, e.vec_id AS n_id,
-       |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
-       |  FROM assigned a
-       |  JOIN n q ON q.vec_id = a.q_id
-       |  JOIN n e ON e.label = a.probe_label AND e.vec_id <> a.q_id),
+       |${centroidsSql("n")},
+       |${probePairsSql(RrfNprobe, "n")},
        |dns AS (
        |  SELECT q_id, n_id AS id, CAST(rank AS BIGINT) AS d_rank FROM (
        |    SELECT *, row_number() OVER (
        |      PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
        |    FROM pairs)
        |  WHERE rank <= $RrfListK),
-       |toks AS (SELECT doc_id, unnest(${Documents.wordsSql}) AS term
-       |         FROM documents),
-       |tf AS (
-       |  SELECT doc_id, term, count(*) AS tf FROM toks
-       |  WHERE length(term) > 0 GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-       |       FROM tf GROUP BY 1),
-       |st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS t
-       |       FROM dl),
+       |${Documents.bm25StatsSql("TRUE")},
        |qt AS (
        |  SELECT DISTINCT doc_id AS q_id, term FROM toks
        |  WHERE doc_id IN $queryIdsSql AND length(term) > 0),
@@ -1201,8 +1190,7 @@ object Similarity {
        |  SELECT vec_id, v,
        |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |      list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm,
-       |    CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) AS h
+       |    ${graft.functions.Text.portableHashSql("CAST(vec_id AS VARCHAR)")} AS h
        |  FROM corpus),
        |sc AS (SELECT vec_id, v, nrm FROM m WHERE h % $CanopySeedModCoarse = 0),
        |dropc AS (SELECT DISTINCT b.vec_id FROM sc a, sc b
@@ -1257,36 +1245,9 @@ object Similarity {
                                 corpusWhere: String = "TRUE"): String =
     s"""WITH $normedSql,
        |nc AS (SELECT * FROM n WHERE $corpusWhere),
-       |perdim AS (
-       |  SELECT label, i AS pos, CAST(floor(v[i + 1] * 1000.0 + 0.5) AS BIGINT) AS qx
-       |  FROM nc, range(0, 64) t(i)),
-       |cents AS (
-       |  SELECT label, list(c ORDER BY pos) AS cv FROM (
-       |    SELECT label, pos,
-       |      CAST(sum(qx) AS DOUBLE) / 1000.0 / CAST(count(*) AS DOUBLE) AS c
-       |    FROM perdim GROUP BY label, pos)
-       |  GROUP BY label),
-       |assigned AS (
-       |  SELECT q_id, label AS probe_label FROM (
-       |    SELECT q.vec_id AS q_id, c.label,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |          list_transform(range(1, 65),
-       |            i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))),
-       |          (a, b) -> a + b) ASC, c.label ASC) AS arank
-       |    FROM n q, cents c WHERE q.vec_id IN $queryIdsSql)
-       |  WHERE arank <= $nprobe),
-       |pairs AS (
-       |  SELECT a.q_id, e.vec_id AS n_id,
-       |    ${dotSql("q.v", "e.v")} / (q.nrm * e.nrm) AS sim
-       |  FROM assigned a
-       |  JOIN n q ON q.vec_id = a.q_id
-       |  JOIN nc e ON e.label = a.probe_label AND e.vec_id <> a.q_id)
-       |SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
-       |FROM (SELECT *, row_number() OVER (
-       |        PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |      FROM pairs)
-       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |${centroidsSql("nc")},
+       |${probePairsSql(nprobe, "nc")}
+       |${simMicroTopKSql(k)}""".stripMargin
 
   val ivfCentroidTopKSql: String = ivfCentroidSqlFor(nprobe = 1, k = 5)
   val ivfMultiProbeTopKSql: String = ivfCentroidSqlFor(nprobe = 3, k = 5)
@@ -1295,8 +1256,7 @@ object Similarity {
     * slice (hash bucket [20,30), query vectors exempt) neither trains the
     * quantizer nor appears as a candidate. */
   val ivfRetractSql: String = ivfCentroidSqlFor(nprobe = 1, k = 5,
-    corpusWhere = "NOT (CAST(concat('0x', substr(md5(CAST(vec_id AS " +
-      s"VARCHAR)), 1, 15)) AS BIGINT) % 100 BETWEEN 20 AND 29) " +
+    corpusWhere = s"NOT (${Ring.takedownSql(Ring.bucketSql("vec_id"))}) " +
       s"OR vec_id IN $queryIdsSql")
 
   // ── q62: LSH-bucketed ANN top-k (sign-sketch buckets + exact rerank) ────
@@ -1364,11 +1324,7 @@ object Similarity {
        |  FROM cand c
        |  JOIN n q ON q.vec_id = c.q_id
        |  JOIN n e ON e.vec_id = c.n_id)
-       |SELECT q_id, rank, n_id, CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro
-       |FROM (SELECT *, row_number() OVER (
-       |        PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |      FROM pairs)
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+       |${simMicroTopKSql(5)}""".stripMargin
   }
 
   // ── q39: int8 embedding quantization with error-bound verification ─────

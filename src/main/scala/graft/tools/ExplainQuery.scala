@@ -11,6 +11,11 @@ import graft.{Sessions, SparkEntry}
   * initial plan can still cost 1× per row. Per-query times, jobs and
   * repeated scans are in the Bench/SpotBench output.
   *
+  * Only the initial plan is evidence that a change left a plan alone:
+  * the final adaptive plan differs between runs of identical code (AQE
+  * re-plans from runtime statistics), so compare initial plans, with
+  * `#<id>` expression ids ignored.
+  *
   * Usage: runMain graft.tools.ExplainQuery <q1,q2,...> [sfDir] [nobroadcast]
   * `nobroadcast` disables auto-broadcast so small-SF plans take the
   * shuffle-join shape they would have at scale.

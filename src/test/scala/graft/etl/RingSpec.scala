@@ -46,6 +46,26 @@ class RingSpec extends SparkSpec {
       assert(Merge.markedBatches(spark, path).toSet === Set("b0", "b1", "rm0"))
     }
 
+  test("the Scala carve and hash equal their DuckDB spellings; split " +
+       "cuts at 80 and 90") {
+    // DuckDB's answers to Ring.bucketSql("x") and Text.portableHashSql
+    // over the same keys, from this one-line command:
+    // duckdb -c "SELECT x, (CAST(concat('0x', substr(md5(CAST(x AS VARCHAR)), 1, 15)) AS BIGINT) % 100) FROM (VALUES (0::BIGINT), (1), (42), (2147483655), (1099511627776)) t(x); SELECT CAST(concat('0x', substr(md5('12,34'), 1, 15)) AS BIGINT), CAST(concat('0x', substr(md5(CAST(42 AS VARCHAR) || 'tmix'), 1, 15)) AS BIGINT)"
+    val ids = Seq(0L, 1L, 42L, (1L << 31) + 7, 1L << 40)
+    val buckets = ids.toDF("x").select(col("x"), Ring.bucket(col("x")))
+      .as[(Long, Long)].collect().toMap
+    assert(buckets === ids.zip(Seq(98L, 48L, 26L, 40L, 19L)).toMap)
+    val hashes = Seq("12,34", "42tmix").toDF("k")
+      .select(col("k"), graft.functions.Text.portableHash(col("k")))
+      .as[(String, Long)].collect().toMap
+    assert(hashes === Map("12,34" -> 406681905331491972L,
+      "42tmix" -> 815293906027496291L))
+    val splits = Seq(79L, 80L, 89L, 90L).toDF("b")
+      .select(col("b"), Ring.split(col("b"))).as[(Long, String)].collect()
+    assert(splits.toSeq === Seq(79L -> "train", 80L -> "valid",
+      89L -> "valid", 90L -> "test"))
+  }
+
   test("without a retract closure the fold is b0 then b1 only") {
     val path = java.nio.file.Files
       .createTempDirectory("graft-ring").toString + "/led"
