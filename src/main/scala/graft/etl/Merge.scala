@@ -20,11 +20,9 @@ import org.apache.spark.sql.functions._
   * `MERGE WHEN NOT MATCHED THEN INSERT`, deterministic on any cluster.
   *
   * Scale notes (100 TB): the anti-join shuffles both sides on the key unless
-  * one side is broadcast-able. For the scrape-resume pattern the incoming
-  * batch is small vs the sink, so Spark broadcasts the INCOMING side of the
-  * left_anti automatically under AQE; when the sink table is the small side
-  * (first runs) pass `broadcastExisting = true`. On a real lake the sink
-  * would be bucketed by the key so this join is shuffle-free.
+  * its build side (the keys it removes) is small enough to broadcast, which
+  * AQE decides from runtime sizes. On a real lake the sink would be
+  * bucketed by the key so this join is shuffle-free.
   */
 object Merge {
 
@@ -35,14 +33,17 @@ object Merge {
     * join would keep them (NULL never matches), while the SQL `NOT IN`
     * formulation drops everything when the subquery yields a NULL — the
     * reference never has null keys, so we pick the strict semantic and
-    * make engine and oracle agree on nullable inputs (ADVICE r1). */
-  def incrementalSkip(frontier: DataFrame, existing: DataFrame, key: String,
-                      broadcastExisting: Boolean = false): DataFrame = {
-    val keys = existing.filter(col(key).isNotNull).select(key).distinct()
+    * make engine and oracle agree on nullable inputs (ADVICE r1).
+    *
+    * The existing keys are NOT de-duplicated: a left-anti join answers the
+    * same with or without repeated build keys, and a `distinct` cost one
+    * extra shuffle stage whenever AQE broadcast the build side. At shuffle
+    * join scale the exchange on the key is planned either way. */
+  def incrementalSkip(frontier: DataFrame, existing: DataFrame,
+                      key: String): DataFrame =
     frontier.filter(col(key).isNotNull)
-      .join(if (broadcastExisting) broadcast(keys) else keys,
+      .join(existing.filter(col(key).isNotNull).select(key),
             Seq(key), "left_anti")
-  }
 
   /** U1 — union-by-name with missing-column tolerance, the
     * `pd.concat(ignore_index=True)` alignment (`fighters_scraper.py:200-203`). */

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -29,6 +30,45 @@ class MergeSpec extends SparkSpec {
     val out = Merge.incrementalSkip(frontier, existing, "k")
       .select(col("v")).as[String].collect()
     assert(out.toSet === Set("b"))
+  }
+
+  /** The skip as it read with a `distinct` on the existing keys. */
+  private def distinctSkip(frontier: DataFrame, existing: DataFrame) =
+    frontier.filter(col("k").isNotNull).join(
+      existing.filter(col("k").isNotNull).select("k").distinct(),
+      Seq("k"), "left_anti")
+
+  private def nullableKv(rows: Seq[(Option[Long], String)]) =
+    rows.map { case (k, v) => (k.map(Long.box).orNull, v) }.toDF("k", "v")
+
+  private def sortedRows(df: DataFrame) =
+    df.select(col("k"), col("v")).as[(Option[Long], String)].collect()
+      .sortBy { case (k, v) => (k.getOrElse(Long.MinValue), v) }
+
+  test("incrementalSkip with duplicate and NULL existing keys equals the " +
+       "distinct formulation") {
+    val frontier = nullableKv(Seq(Some(1L) -> "a", Some(2L) -> "b",
+      None -> "n", Some(3L) -> "c", Some(3L) -> "c2", Some(4L) -> "d"))
+    val existing = nullableKv(Seq(Some(1L) -> "x", Some(1L) -> "y",
+      None -> "z", Some(3L) -> "w", Some(3L) -> "w", None -> "z2"))
+    val got = sortedRows(Merge.incrementalSkip(frontier, existing, "k"))
+    assert(got === sortedRows(distinctSkip(frontier, existing)))
+    assert(got === Array(Some(2L) -> "b", Some(4L) -> "d"))
+  }
+
+  test("firstWinsMerge and upsertMerge: duplicate keys on the anti-join's " +
+       "build side give the distinct formulation's rows") {
+    val existing = kv(Seq(1L -> "o1", 1L -> "o1b", 2L -> "o2", 2L -> "o2"))
+    val incoming = kv(Seq(2L -> "n2", 3L -> "n3", 3L -> "n3b", 4L -> "n4"))
+    // firstWinsMerge builds on the existing keys
+    assert(sortedRows(Merge.firstWinsMerge(existing, incoming, "k")) ===
+      sortedRows(existing.unionByName(distinctSkip(incoming, existing))))
+    // upsertMerge builds on the incoming keys
+    val existingUnique = kv(Seq(1L -> "o1", 2L -> "o2", 5L -> "o5"))
+    assert(sortedRows(Merge.upsertMerge(existingUnique, incoming, "k")) ===
+      sortedRows(distinctSkip(existingUnique, incoming).unionByName(incoming)))
+    assert(sortedRows(Merge.upsertMerge(existingUnique, incoming, "k"))
+      .map(_._2) === Array("o1", "n2", "n3", "n3b", "n4", "o5"))
   }
 
   test("dedupKeepFirst keeps exactly the first row under the explicit order") {
