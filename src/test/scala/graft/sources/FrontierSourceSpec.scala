@@ -24,12 +24,14 @@ class FrontierSourceSpec extends SparkSpec {
     read(mode, pages).select(col("page"), col("url"), col("ord")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
 
-  test("letters mode packs 26 pages into min(26, defaultParallelism) partitions") {
+  test("letters mode plans 26 input partitions") {
+    // 26 pages, packed into min(26, defaultParallelism) splits
     assert(read("letters").rdd.getNumPartitions ===
       math.min(26, parallelism))
   }
 
-  test("pages mode packs N pages into min(N, defaultParallelism) partitions") {
+  test("pages mode plans N numbered partitions") {
+    // N pages, packed into min(N, defaultParallelism) splits
     for (n <- Seq(1, 5, 12))
       assert(read("pages", n).rdd.getNumPartitions ===
         math.min(n, parallelism), s"pages=$n")
