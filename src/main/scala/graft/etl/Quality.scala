@@ -52,13 +52,13 @@ object Quality {
   }
 
   /** Referential-integrity check: violations = child rows whose non-null
-    * `key` has no match in `parent.pkey` (FK orphans). */
+    * `key` has no match in `parent.pkey` (FK orphans); the parent's
+    * distinct keys are broadcast into the anti-join. */
   def fkCovered(child: DataFrame, key: String,
-                parent: DataFrame, pkey: String,
-                broadcastParent: Boolean = true): DataFrame = {
+                parent: DataFrame, pkey: String): DataFrame = {
     val pk = parent.select(col(pkey).as(key)).distinct()
     val orphans = child.filter(col(key).isNotNull)
-      .join(if (broadcastParent) broadcast(pk) else pk, Seq(key), "left_anti")
+      .join(broadcast(pk), Seq(key), "left_anti")
       .agg(count(lit(1)).as("__o"))
     val total = child.filter(col(key).isNotNull).agg(count(lit(1)).as("__t"))
     total.crossJoin(orphans)

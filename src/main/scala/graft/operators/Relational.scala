@@ -519,29 +519,15 @@ object Relational {
     // bits/edge with the exact semi-join clearing the ~0.8% FP tail.
     val oriented = o.select(col("s").as("b"), col("t").as("c"))
     // r20: the closing probe keys on ONE packed long instead of the
-    // (b, c) pair whenever every vertex id < 2³¹ ([[packKey]] — injective
-    // and overflow-free under the gate, gated on the measured max id, so
-    // a billion-id graph falls back to the pair key): a single-long
-    // build is Spark's dense LongHashedRelation and the probe drops the
-    // two-column row hashing — measured 5.4 s → 1.9 s on the 41M-wedge
-    // closing job at sf0.1. The probed SET is identical (injective key),
-    // so the count cannot move.
+    // (b, c) pair whenever every vertex id < 2³¹ (gated on the measured
+    // id range, so a billion-id graph falls back to the pair key) —
+    // measured 5.4 s → 1.9 s on the 41M-wedge closing job at sf0.1.
     val packable = Relational.packable(minId, maxId)
-    def packed(df: DataFrame): DataFrame =
-      df.select(packKey(col("b"), col("c")).as("k"))
-    def closeExact(cands: DataFrame, bcast: Boolean): DataFrame = {
-      val edges = if (packable) packed(oriented) else oriented
-      val keyed = if (packable) packed(cands) else cands.select(col("b"), col("c"))
-      val build = if (bcast) broadcast(edges) else edges
-      keyed.join(build, if (packable) Seq("k") else Seq("b", "c"), "left_semi")
-    }
     val tri =
-      if (nEdges <= Bloom.BroadcastRows) closeExact(wedges, bcast = true)
-      else {
-        val bloom = Bloom.build(o, xxhash64(col("s"), col("t")), nEdges)
-        closeExact(Bloom.probe(wedges, bloom, xxhash64(col("b"), col("c"))),
-          bcast = false)
-      }
+      if (nEdges <= Bloom.BroadcastRows)
+        closeSemi(wedges, broadcast(oriented), None, packable)
+      else closeSemi(wedges, oriented,
+        Some(Bloom.build(o, xxhash64(col("s"), col("t")), nEdges)), packable)
     tri.agg(count(lit(1)).as("n_triangles"))
       .select(lit(nEdges).as("n_edges"), lit(nVerts).as("n_vertices"),
         col("n_triangles"))
@@ -557,11 +543,66 @@ object Relational {
       |     JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b) AS n_triangles""".stripMargin
 
   // ── q107: INCREMENTAL triangle maintenance (Δ-edge batches) ─────────────
-  /** The r11 verdict's q104 follow-up: a growing graph must not pay a
-    * full recount per new-edge batch — the graph analog of q79's R-S
-    * move (batch × corpus, never corpus × corpus). New triangles for a
-    * batch ΔE against standing edges E split EXACTLY by how many batch
-    * edges they contain:
+  /** The undirected adjacency (u, w) of an (a, b) edge frame — both
+    * directions of every edge — carrying the `carry` columns along. */
+  private def undir(df: DataFrame, carry: String*): DataFrame = {
+    def side(u: String, w: String): DataFrame =
+      df.select(col(u).as("u") +: col(w).as("w") +: carry.map(col): _*)
+    side("a", "b").unionByName(side("b", "a"))
+  }
+
+  /** Injective (x, y) → single-long key: x·2³¹ + y. Valid only when every
+    * id < 2³¹ (callers gate on the MEASURED id range, [[packable]]): y < 2³¹
+    * keeps the pack collision-free and x·2³¹ + y < 2⁶² overflow-free. A
+    * single long join key gets Spark's dense LongHashedRelation build and
+    * a one-word probe instead of two-column row hashing — measured ~3× on
+    * the 41M-wedge closing probe at sf0.1. Billion-id graphs fall back to
+    * the two-column key. */
+  private def packKey(x: org.apache.spark.sql.Column,
+      y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    x * lit(PackBound) + y
+
+  /** The closing probe of the triangle kernels (q104's one-shot count,
+    * [[deltaTriCands]]): the `cands` rows whose key is an edge of `edges`,
+    * a two-column frame whose columns name the key (q104 closes on
+    * (b, c), the Δ-kernel on (a, b)). A caller that broadcasts its edges
+    * passes `broadcast(edges)`.
+    *
+    * With a `bloom` of the edges' keys (the q73 runtime-filter pattern,
+    * past the [[Bloom.BroadcastRows]] envelope) the candidate stream is
+    * filtered map-side first, so only ~triangles + the ~0.8% false-
+    * positive tail reach the exact semi-join's shuffle, and the survivors
+    * are staged through an EAGER localCheckpoint — not for reuse but as
+    * an optimizer barrier: `PushLeftSemiLeftAntiThroughJoin` otherwise
+    * pushes the exact semi (its keys reference only the candidate side)
+    * below the Bloom's crossJoin, so the full unfiltered stream shuffles
+    * into the exact join and the Bloom filters rows the join already
+    * killed. TriangleDeltaSpec pins that no left-semi plans beneath the
+    * Bloom filter.
+    *
+    * The exact semi keys on one [[packKey]] long when `packIds` (the key
+    * is injective, so the matched SET is identical), on the pair
+    * otherwise. */
+  private def closeSemi(cands: DataFrame, edges: DataFrame,
+      bloom: Option[DataFrame], packIds: Boolean): DataFrame = {
+    val Array(x, y) = edges.columns
+    val key = Seq(col(x), col(y))
+    val pre = bloom.fold(cands.select(key: _*))(b =>
+      Bloom.probe(cands, b, xxhash64(key: _*)).select(key: _*)
+        .localCheckpoint()) // barrier: keep the Bloom BELOW the exact probe
+    if (packIds)
+      pre.select(packKey(col(x), col(y)).as("k"))
+        .join(edges.select(packKey(col(x), col(y)).as("k")), Seq("k"),
+          "left_semi")
+    else pre.join(edges, Seq(x, y), "left_semi")
+  }
+
+  /** The per-batch Δ-triangle kernel — the r11 verdict's q104 follow-up:
+    * a growing graph must not pay a full recount per new-edge batch, the
+    * graph analog of q79's R-S move (batch × corpus, never corpus ×
+    * corpus). New triangles for a batch `delta` (a, b) against the
+    * standing edges `edges` (a, b) split EXACTLY by how many batch edges
+    * they contain:
     *  - class 1 (one new): for each (u,v) ∈ ΔE, wedge through u's
     *    STANDING neighbors w, closing (min,max)(v,w) probed against E —
     *    candidates Σ_{(u,v)∈ΔE} deg(u), Δ-proportional;
@@ -570,114 +611,61 @@ object Relational {
     *  - class 3 (all new): the node-iterator within ΔE alone.
     * Each new triangle lands in exactly one class exactly once (its new
     * edge; its unique two-new wedge; its oriented all-new wedge), so the
-    * fold over batches reproduces the one-shot q104 count — the oracle
-    * checks that INDEPENDENTLY, as a difference of full prefix recounts,
-    * against this class decomposition. TriangleDeltaSpec drives each
-    * class on a constructed graph and the fold-equality on real data.
+    * result is one row per new triangle and a fold over batches
+    * reproduces the one-shot q104 count — q107's and q136's oracles check
+    * that INDEPENDENTLY, as differences of full recounts.
     *
     * Scale: every join is keyed by a batch-side column — the standing
-    * edge set is probed (semi-join on the closing pair; the q73
-    * Bloom-before-exact pattern drops in when the probe set outgrows the
-    * shuffle), never self-joined; batch cost tracks Δ-wedges. The
-    * standing set would live as the materialized artifact at a real
-    * deployment (datasetTag + append + compact, the q82 plumbing); the
-    * registered query folds a 4-way portable-hash split of the edge log
-    * (q79's convention) so both engines see identical batches. */
-  /** The three Δ-classes' SURVIVING closing candidates as one unioned
-    * stream (one row per new triangle — the classes are disjoint by
-    * construction, so `count(union) = t1 + t2 + t3`). Factored out of
-    * [[deltaTriangles]] (r21) so the q107 fold can tag each batch's
-    * stream and count ALL batches in ONE aggregation instead of paying
-    * 12 single-partition agg exchanges + 12 cross-join broadcasts + 4
-    * per-batch count jobs — a per-stage profile read the fold as
-    * almost pure per-stage fixed latency (batch 0, nearly empty, still
-    * cost 1.0 s of its 5.2 s warm total). */
-  private def deltaTriCands(old: DataFrame, delta: DataFrame,
-      nOld: Long = -1L, degOld: Option[DataFrame] = None,
-      packIds: Boolean = false): DataFrame = {
-    def undir(df: DataFrame): DataFrame =
-      df.select(col("a").as("u"), col("b").as("w"))
-        .unionByName(df.select(col("b").as("u"), col("a").as("w")))
-    // exact closing semi against an edge frame — packed single-long key
-    // when the caller proved every id < 2³¹ ([[packKey]]; injective, so
-    // the matched SET is identical), two-column key otherwise
-    def semiEdges(cands: DataFrame, edges: DataFrame): DataFrame =
-      if (packIds)
-        cands.select(packKey(col("a"), col("b")).as("k"))
-          .join(edges.select(packKey(col("a"), col("b")).as("k")),
-            Seq("k"), "left_semi")
-      else cands.join(edges, Seq("a", "b"), "left_semi")
-    val adjO = undir(old)
-    // both closing probes (class 1 and class 2) check candidate pairs
-    // against the STANDING edge set: past the q104 gate, pre-filter the
-    // candidate stream map-side through ONE shared Bloom of the standing
-    // keys (10 bits/edge) so only ~triangles + the FP tail reach the
-    // exact semi-join's shuffle — the r12 sf10 diag measured the unfiltered
-    // apply shuffling 450M Δ-wedge candidates into the semi-join, most of
-    // which die there; the exact join downstream keeps the count exact.
-    // `nOld` rides in from callers that already counted (the q107 fold);
-    // -1 means count here (the frames are checkpointed in every caller).
-    val n = if (nOld >= 0L) nOld else old.count()
-    val closeOld: DataFrame => DataFrame =
-      if (n <= Bloom.BroadcastRows) identity
-      else {
-        val bloom = Bloom.build(old, xxhash64(col("a"), col("b")), n)
-        cands => Bloom.probe(cands, bloom, xxhash64(col("a"), col("b")))
-          .select(col("a"), col("b"))
-      }
+    * edge set is probed, never self-joined, so batch cost tracks
+    * Δ-wedges. The caller keeps the standing side: `adj` its undirected
+    * adjacency (u, w), `deg` its (u, dg) degree table, `bloom` its
+    * closing Bloom (None inside the broadcast envelope) — q136 as
+    * bucketed and materialized artifacts read in place, q107's fold as
+    * prefix filters of its per-batch artifacts. Classes 1 and 2 close
+    * against `edges` through [[closeSemi]] (Bloom, barrier, exact semi);
+    * class 3 closes against the batch itself. `packIds` is the caller's
+    * [[packable]] gate. */
+  private[graft] def deltaTriCands(delta: DataFrame, adj: DataFrame,
+      deg: DataFrame, edges: DataFrame, bloom: Option[DataFrame],
+      packIds: Boolean): DataFrame = {
+    def closeOld(cands: DataFrame): DataFrame =
+      closeSemi(cands, edges, bloom, packIds)
     // class 1: one new edge + two standing. Enumeration from EITHER
     // endpoint is complete (w must neighbor both; the closing semi-join
     // checks the other side), so enumerate from the LOWER-degree one —
     // the q104 degree-orientation idea applied to the Δ-wedge: fan-out
     // Σ min(deg u, deg v) instead of Σ deg(first endpoint), the bound
     // that survives hub vertices. The degree lookup joins are keyed by
-    // the (small) batch; a production deployment would maintain deg as
-    // an incrementally-updated artifact next to the edge set.
-    // `degOld` rides in from callers that maintain degrees as a standing
-    // per-(u, batch) artifact (the q107 fold — r20); None derives them
-    // here with a full adjacency aggregation.
-    val degO = degOld.getOrElse(
-      adjO.groupBy(col("u")).agg(count(lit(1)).as("dg")))
+    // the (small) batch.
     val dPick = delta
-      .join(degO.select(col("u").as("a"), col("dg").as("dga")),
+      .join(deg.select(col("u").as("a"), col("dg").as("dga")),
         Seq("a"), "left")
-      .join(degO.select(col("u").as("b"), col("dg").as("dgb")),
+      .join(deg.select(col("u").as("b"), col("dg").as("dgb")),
         Seq("b"), "left")
       .select(when(
           coalesce(col("dga"), lit(0L)) <= coalesce(col("dgb"), lit(0L)),
           struct(col("a").as("u"), col("b").as("v")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
-    val t1 = semiEdges(closeOld(dPick
-      .join(adjO, Seq("u"))
+    val t1 = closeOld(dPick
+      .join(adj, Seq("u"))
       .filter(col("w") =!= col("v"))
       .select(least(col("v"), col("w")).as("a"),
-              greatest(col("v"), col("w")).as("b"))), old)
+              greatest(col("v"), col("w")).as("b")))
     // class 2: two new edges wedged at x, standing closing edge
     val adjD = undir(delta)
-    val t2 = semiEdges(closeOld(adjD.select(col("u").as("x"), col("w").as("y"))
+    val t2 = closeOld(adjD.select(col("u").as("x"), col("w").as("y"))
       .join(adjD.select(col("u").as("x"), col("w").as("z")), Seq("x"))
       .filter(col("y") < col("z"))
-      .select(col("y").as("a"), col("z").as("b"))), old)
+      .select(col("y").as("a"), col("z").as("b")))
     // class 3: all three new — oriented node-iterator within the batch
-    val t3 = semiEdges(delta.select(col("a").as("s"), col("b").as("p"))
+    val t3 = closeSemi(delta.select(col("a").as("s"), col("b").as("p"))
       .join(delta.select(col("a").as("s"), col("b").as("q")), Seq("s"))
       .filter(col("p") < col("q"))
-      .select(col("p").as("a"), col("q").as("b")), delta)
+      .select(col("p").as("a"), col("q").as("b")), delta, None, packIds)
     Seq(t1, t2, t3).map(_.select(lit(1L).as("one")))
       .reduce(_.unionByName(_))
   }
-
-  /** One-batch Δ-triangle count against a standing edge set — see
-    * [[deltaTriCands]] for the class decomposition; this face aggregates
-    * the candidate stream to the (n_new_edges, delta_triangles) row the
-    * q136 apply-equality spec and constructed-graph tests pin. */
-  private[graft] def deltaTriangles(old: DataFrame, delta: DataFrame,
-      nOld: Long = -1L, degOld: Option[DataFrame] = None,
-      packIds: Boolean = false): DataFrame =
-    delta.agg(count(lit(1)).as("n_new_edges"))
-      .crossJoin(deltaTriCands(old, delta, nOld, degOld, packIds)
-        .agg(count(lit(1)).as("delta_triangles")))
 
   /** The SHARED standing edge artifact of the whole graph family
     * (r20 optimization): one li⋈li + distinct per corpus, materialized
@@ -688,17 +676,6 @@ object Relational {
     * q107 and q136 each materialized their own byte-identical pair
     * derivation (graft_tri_edges vs graft_tri16) and q108 re-derived it
     * per pass inside its adjacency build. */
-  /** Injective (x, y) → single-long key: x·2³¹ + y. Valid only when every
-    * id < 2³¹ (callers gate on the MEASURED max id): y < 2³¹ keeps the
-    * pack collision-free and x·2³¹ + y < 2⁶² overflow-free. A single long
-    * join key gets Spark's dense LongHashedRelation build and a one-word
-    * probe instead of two-column row hashing — measured ~3× on the
-    * 41M-wedge closing probe at sf0.1. Billion-id graphs fall back to the
-    * two-column key at the call sites. */
-  private def packKey(x: org.apache.spark.sql.Column,
-      y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    x * lit(PackBound) + y
-
   private[graft] def tri16Edges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -723,17 +700,14 @@ object Relational {
   private def triBucketed(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val e16 = tri16Edges(s, d)
     val adjName = graft.etl.Artifacts.name("tri_adjh", pathTag(d))
-    ensureBucketed(s, adjName, Seq("u"), 32,
-      e16.select(col("a").as("u"), col("b").as("w"), col("h16"))
-        .unionByName(
-          e16.select(col("b").as("u"), col("a").as("w"), col("h16"))))
+    ensureBucketed(s, adjName, Seq("u"), 32, undir(e16, "h16"))
     val edgName = graft.etl.Artifacts.name("tri_edgh", pathTag(d))
     ensureBucketed(s, edgName, Seq("a", "b"), 32, e16)
     (s.table(adjName), s.table(edgName))
   }
 
   def triangleDelta(s: SparkSession, d: String): DataFrame = {
-    // r20: the fold keeps [[deltaTriangles]]' join structure (at any SF
+    // r20: the fold keeps [[deltaTriCands]]' join structure (at any SF
     // where the prefix fits the broadcast envelope, AQE already serves
     // every closing/orientation join as a broadcast — plan-audited; a
     // bucketed-SMJ variant was tried and REJECTED: with no exchange on
@@ -750,11 +724,10 @@ object Relational {
     val e16 = tri16Edges(s, d)
     val batchOf = pmod(col("h16"), lit(4L)) // == pmod(portableHash, 4): 4 | 16
     val e = e16.select(col("a"), col("b"), batchOf.as("batch"))
-    val adjAll = e.select(col("a").as("u"), col("b").as("w"), col("batch"))
-      .unionByName(e.select(col("b").as("u"), col("a").as("w"), col("batch")))
     val degB = graft.etl.Merge.materialize(s,
       graft.etl.Artifacts.path(s, "tri_degb", tag),
-      adjAll.groupBy(col("u"), col("batch")).agg(count(lit(1)).as("dg")))
+      undir(e, "batch").groupBy(col("u"), col("batch"))
+        .agg(count(lit(1)).as("dg")))
     val bcnt = graft.etl.Merge.materialize(s,
         graft.etl.Artifacts.path(s, "tri_bcnt", tag),
         e.groupBy(col("batch")).agg(count(lit(1)).as("n")))
@@ -792,20 +765,23 @@ object Relational {
     //    edge set is distinct and each edge has exactly one batch.
     // count(candidates) per batch ≡ t1+t2+t3 (the classes are disjoint),
     // and n_new_edges comes from the already-collected 4-row batch-count
-    // artifact as literals. Past the envelope the per-batch fold below
-    // keeps its Bloom-prefiltered shape (the candidate stream still must
-    // not broadcast-probe a >128 MB edge relation).
+    // artifact as literals. Past the envelope the fold runs the per-batch
+    // kernel, Bloom-prefiltered once a prefix outgrows the envelope (the
+    // candidate stream still must not broadcast-probe a >128 MB edge
+    // relation).
     val cands: DataFrame =
       if (nTotal > 0 && nTotal <= Bloom.BroadcastRows)
         fusedTriCands(e, degB, packable)
       else (0L until 4L).map { i =>
+      val prefix = e.filter(col("batch") < i).select("a", "b")
       val degO = degB.filter(col("batch") < i)
         .groupBy(col("u")).agg(sum(col("dg")).as("dg"))
       val nOld = (0L until i).map(j => bcnt.getOrElse(j, 0L)).sum
-      deltaTriCands(e.filter(col("batch") < i).select("a", "b"),
-                    e.filter(col("batch") === i).select("a", "b"),
-                    nOld, Some(degO),
-                    packIds = packable)
+      val bloom =
+        if (nOld <= Bloom.BroadcastRows) None
+        else Some(Bloom.build(prefix, xxhash64(col("a"), col("b")), nOld))
+      deltaTriCands(e.filter(col("batch") === i).select("a", "b"),
+          undir(prefix), degO, prefix, bloom, packable)
         .select(lit(i).as("batch"))
     }.reduce(_.unionByName(_))
     val nNew = (0L until 4L).map(i =>
@@ -826,14 +802,13 @@ object Relational {
     * carrying the prefix/within-batch predicate in the join condition —
     * one row per new triangle, tagged with its batch. `degB` is the
     * per-(u, batch) degree-count frame; `packable` gates the single-long
-    * closing key ([[packKey]]'s id-range precondition). Factored out so
-    * TriangleDeltaSpec can pin `count per batch ≡ deltaTriangles` on
-    * constructed graphs. */
+    * closing key ([[packKey]]'s id-range precondition). Batch 0 has an
+    * empty prefix, so only class 3 enumerates it. Factored out so
+    * TriangleDeltaSpec can pin `count per batch ≡` the per-batch
+    * [[deltaTriCands]] on random graphs. */
   private[graft] def fusedTriCands(e: DataFrame, degB: DataFrame,
       packable: Boolean): DataFrame = {
-    val adjAll = e.select(col("a").as("u"), col("b").as("w"), col("batch"))
-      .unionByName(
-        e.select(col("b").as("u"), col("a").as("w"), col("batch")))
+    val adjAll = undir(e, "batch")
     // prefix degrees per vertex, one |V|-row frame: cN = deg before
     // batch N (same values the per-batch degO aggregation produced)
     val degb = degB.groupBy(col("u")).agg(
@@ -846,7 +821,8 @@ object Relational {
       coalesce(when(col("batch") === 1L, c1)
         .when(col("batch") === 2L, c2)
         .when(col("batch") === 3L, c3), lit(0L))
-    val pick = e
+    val late = col("batch") > 0L // classes 1 and 2 need a non-empty prefix
+    val pick = e.filter(late)
       .join(degb.select(col("u").as("a"), col("c1").as("a1"),
         col("c2").as("a2"), col("c3").as("a3")), Seq("a"), "left")
       .join(degb.select(col("u").as("b"), col("c1").as("b1"),
@@ -879,9 +855,10 @@ object Relational {
       .filter(col("bw") < col("batch") && col("w") =!= col("v"))
       .select(least(col("v"), col("w")).as("a"),
         greatest(col("v"), col("w")).as("b"), col("batch"))
-    val cand2 = adjAll.select(col("u").as("x"), col("w").as("y"),
+    val adjLate = adjAll.filter(late)
+    val cand2 = adjLate.select(col("u").as("x"), col("w").as("y"),
         col("batch"))
-      .join(adjAll.select(col("u").as("x"), col("w").as("z"),
+      .join(adjLate.select(col("u").as("x"), col("w").as("z"),
         col("batch")), Seq("x", "batch"))
       .filter(col("y") < col("z"))
       .select(col("y").as("a"), col("z").as("b"), col("batch"))
@@ -924,13 +901,14 @@ object Relational {
     * the fold re-derives every triangle exactly once. What a deployment
     * actually pays per maintenance cycle is THIS query: one Δ-batch (a
     * 1/16 hash slice of the edge log) applied against the standing 15/16
-    * corpus. Same class decomposition as [[deltaTriangles]], same
-    * independent-oracle idea at single-batch grain: a difference of two
-    * full recounts (with/without the batch) must equal the incremental
-    * count.
+    * corpus. It runs the per-batch kernel [[deltaTriCands]] once; its
+    * oracle is the same independent idea at single-batch grain: a
+    * difference of two full recounts (with/without the batch) must equal
+    * the incremental count.
     *
     * RE-PLANNED on the r18 ladder before shipping. The first draft
-    * called [[deltaTriangles]] on two filters of the edge artifact and
+    * ran the kernel on two filters of the edge artifact, deriving the
+    * standing side per call, and
     * measured 191 s at sf10 (120M edges) against an 88 s
     * checkpoint-frame apply and 566 s recount — because every standing-
     * side DERIVATION re-ran per apply: the degree table (a 2|E|-row
@@ -951,9 +929,8 @@ object Relational {
     *    incrementally with the edge append (degree and count are
     *    mergeable sums; the Bloom is a bitwise-OR fold);
     * leaving the steady state: batch scans + batch-sized shuffles +
-    * in-place standing scans. [[applyTriangles]] holds the class logic;
-    * TriangleDeltaSpec pins applyTriangles ≡ deltaTriangles on
-    * constructed graphs (both Bloom branches). */
+    * in-place standing scans. TriangleDeltaSpec pins the kernel against
+    * differenced recounts on both closing-key and both Bloom branches. */
   def triangleApply(s: SparkSession, d: String): DataFrame = {
     val tag = Tables.datasetTag(s, d, "lineitem")
     val e = tri16Edges(s, d)
@@ -988,78 +965,9 @@ object Relational {
         // witness re-established once on the 1-row frame, not a data path
         .select(transform(col("bits"), x => coalesce(x, lit(0L)))
           .as("bits")))
-    applyTriangles(adj, edg, deg, bloom, delta)
-  }
-
-  /** The per-batch class-decomposed count over PREBUILT standing-side
-    * artifacts: `adj` the undirected adjacency (u, w), bucketed by u at
-    * the registered query so the wedge fan-out reads it in place; `edg`
-    * the directed edge list, bucketed by (a, b) so the closing probe
-    * reads IT in place; `deg` the (u, dg) degree table; `bloom` the
-    * standing edges' Bloom bits (None below the cost-based threshold).
-    * Classes and orientation arguments are [[deltaTriangles]]'s —
-    * TriangleDeltaSpec pins the two equal on constructed graphs.
-    *
-    * The post-Bloom candidate stream is staged through an EAGER
-    * localCheckpoint — not (only) for reuse, but as an optimizer
-    * barrier: `PushLeftSemiLeftAntiThroughJoin` otherwise pushes the
-    * exact closing semi-join below the Bloom's crossJoin+filter (the
-    * semi's keys reference only the candidate side), which re-plans the
-    * Bloom ABOVE the exact join — the full unfiltered fan-out then
-    * shuffles into the probe and the Bloom filters rows the exact join
-    * already killed. The r18 plan audit caught exactly that shape. */
-  private[graft] def applyTriangles(adj: DataFrame, edg: DataFrame,
-      deg: DataFrame, bloom: Option[DataFrame],
-      delta: DataFrame): DataFrame = {
-    val closeOld: DataFrame => DataFrame = bloom match {
-      case None => identity
-      case Some(b) => cands =>
-        Bloom.probe(cands, b, xxhash64(col("a"), col("b")))
-          .select(col("a"), col("b"))
-        .localCheckpoint() // barrier: keep the Bloom BELOW the exact probe
-    }
-    // exact closing check, edge index in place (bucketed on (a,b))
-    def probeStanding(cands: DataFrame): DataFrame =
-      closeOld(cands).join(edg, Seq("a", "b"), "left_semi")
-    // class 1: one new edge + two standing — enumerate from the
-    // lower-degree endpoint (the q104 orientation bound)
-    val dPick = delta
-      .join(deg.select(col("u").as("a"), col("dg").as("dga")),
-        Seq("a"), "left")
-      .join(deg.select(col("u").as("b"), col("dg").as("dgb")),
-        Seq("b"), "left")
-      .select(when(
-          coalesce(col("dga"), lit(0L)) <= coalesce(col("dgb"), lit(0L)),
-          struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-    val t1 = probeStanding(dPick
-      .join(adj, Seq("u"))
-      .filter(col("w") =!= col("v"))
-      .select(least(col("v"), col("w")).as("a"),
-              greatest(col("v"), col("w")).as("b")))
-      .agg(count(lit(1)).as("t1"))
-    // class 2: two new edges wedged at x, standing closing edge
-    def undirD(df: DataFrame): DataFrame =
-      df.select(col("a").as("u"), col("b").as("w"))
-        .unionByName(df.select(col("b").as("u"), col("a").as("w")))
-    val adjD = undirD(delta)
-    val t2 = probeStanding(adjD.select(col("u").as("x"), col("w").as("y"))
-      .join(adjD.select(col("u").as("x"), col("w").as("z")), Seq("x"))
-      .filter(col("y") < col("z"))
-      .select(col("y").as("a"), col("z").as("b")))
-      .agg(count(lit(1)).as("t2"))
-    // class 3: all three new — oriented node-iterator within the batch
-    val t3 = delta.select(col("a").as("s"), col("b").as("p"))
-      .join(delta.select(col("a").as("s"), col("b").as("q")), Seq("s"))
-      .filter(col("p") < col("q"))
-      .select(col("p").as("a"), col("q").as("b"))
-      .join(delta, Seq("a", "b"), "left_semi")
-      .agg(count(lit(1)).as("t3"))
     delta.agg(count(lit(1)).as("n_new_edges"))
-      .crossJoin(t1).crossJoin(t2).crossJoin(t3)
-      .select(col("n_new_edges"),
-        (col("t1") + col("t2") + col("t3")).as("delta_triangles"))
+      .crossJoin(deltaTriCands(delta, adj, deg, edg, bloom, packIds = false)
+        .agg(count(lit(1)).as("delta_triangles")))
   }
 
   val triangleApplySql: String =
