@@ -198,11 +198,7 @@ object Documents {
     // each reference from scratch — three full tokenize+shingle passes
     // over the corpus text per run. Stage it once; the banding/verify
     // kernels — what q18 prices — still compute live below.
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        Native.shingles(Text.toWords(col("text")), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint()
+    val docs = shingleDocs(Tables.documents(s, d)).localCheckpoint()
     // Signature+banding runs as ONE native expression ([[Native]]): the
     // higher-order-function formulation re-evaluates the shingle pipeline
     // once per permutation after CollapseProject inlining — O(k²·|sh|)
@@ -216,22 +212,35 @@ object Documents {
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
         col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+      .select(col("x.doc_id").as("in_id"), col("y.doc_id").as("corpus_id"))
       .distinct()
-    val withSh = cand
-      .join(docs.withColumnRenamed("doc_id", "a_id")
-                .withColumnRenamed("sh", "a_sh"), Seq("a_id"))
-      .join(docs.withColumnRenamed("doc_id", "b_id")
-                .withColumnRenamed("sh", "b_sh"), Seq("b_id"))
-    withSh
-      .select(col("a_id"), col("b_id"),
+    asPairs(jaccardVerify(cand, docs, docs))
+  }
+
+  /** A self-join's verified pairs under q18/q68's names, in output
+    * order. */
+  private def asPairs(verified: DataFrame): DataFrame =
+    verified.select(col("in_id").as("a_id"), col("corpus_id").as("b_id"),
+        col("jaccard_bp"))
+      .orderBy(col("a_id"), col("b_id"))
+
+  /** The exact verify every near-dup join ends in: candidate
+    * (in_id, corpus_id) pairs re-join the full shingle sets of their
+    * sides by doc id and keep j >= 0.8 as `jaccard_bp` >= 8000. Shingle
+    * arrays move for candidates only. */
+  private def jaccardVerify(cand: DataFrame, incoming: DataFrame,
+                            corpus: DataFrame): DataFrame =
+    cand
+      .join(incoming.select(col("doc_id").as("in_id"), col("sh").as("a_sh")),
+        Seq("in_id"))
+      .join(corpus.select(col("doc_id").as("corpus_id"), col("sh").as("b_sh")),
+        Seq("corpus_id"))
+      .select(col("in_id"), col("corpus_id"),
         // r9: fused counting kernel — the sf100 ladder caught this exact
         // expression (as array_intersect/array_union) pinning every
         // executor thread once candidate growth went superlinear
         Native.jaccardBp(col("a_sh"), col("b_sh")).as("jaccard_bp"))
       .filter(col("jaccard_bp") >= 8000L)
-      .orderBy(col("a_id"), col("b_id"))
-  }
 
   // ── q68: EXACT n-gram Jaccard join via prefix filtering ─────────────────
   /** Exact 3-gram Jaccard near-dup join at tau = 0.8 — the guaranteed-
@@ -278,62 +287,17 @@ object Documents {
   /** Core of the prefix-filtered exact join over a `(doc_id, sh)` frame —
     * factored so PrefixJaccardSpec can drive the production path over
     * constructed corpora (threshold-straddling pairs, prefix-boundary
-    * lengths) and prove completeness against brute force. */
+    * lengths) and prove completeness against brute force. The self-join
+    * is the R-S tail with both sides the corpus under its own dictionary;
+    * keeping `in_id < corpus_id` drops self and mirrored pairs, and
+    * Catalyst pushes it into the token join's condition, before the
+    * min-slack aggregate. */
   private[graft] def prefixJaccardPairs(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col("doc_id"), size(col("sh")).as("len"),
-      explode(col("sh")).as("t"))
-    val dfreq = toks.groupBy(col("t")).agg(count(lit(1)).as("df"))
-    // ceil(0.8*len) in EXACT integer arithmetic, (4*len+4) div 5: the
-    // double literal 0.8 rounds UP (0x3FE999...A > 4/5), so
-    // ceil(len * 0.8D) overshoots by one at every multiple of 5 and would
-    // silently SHORTEN the prefix — a completeness hole the oracle would
-    // only catch on a corpus that happens to plant a near-threshold pair
-    // at one of those lengths. floor of an exact-integer-valued double
-    // quotient is safe (numerator < 2^50, margin 1/5 >> ulp).
-    val needed = floor((col("len") * 4 + 4) / 5).cast("long")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
-    val prefix = toks.join(dfreq, "t")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= col("len") - needed + 1)
-      .select(col("doc_id"), col("len"), col("t"), col("rk"))
-    // PPJoin POSITIONAL filter (r8 VERDICT item 3): `rk` is the token's
-    // position in the doc's FULL rarest-first order (row_number ran before
-    // the prefix cut), so a match on token t at positions (i, j) bounds
-    // the true overlap: tokens before i in x and before j in y are all
-    // strictly below t in the shared total order (≤ min(i-1, j-1) can
-    // pair up), and from t onward the suffixes hold len-i+1 and len-j+1
-    // tokens. Jaccard ≥ 4/5 needs overlap ≥ τ/(1+τ)·(|x|+|y|) =
-    // ceil(4(lx+ly)/9) — same exact-integer ceil discipline as `needed`.
-    // EVERY matching prefix token yields a valid bound, so the pair-dedup
-    // distinct() becomes a min-aggregate over the bound (identical
-    // shuffle key and partial-agg shape, one extra long of payload) and
-    // a pair dies if its TIGHTEST bound misses — strictly stronger than
-    // filtering per match, and it prunes candidates BEFORE any shingle
-    // array is re-joined, which is where q68's cost lives at scale.
-    val ub = least(col("x.rk") - 1, col("y.rk") - 1) +
-      least(col("x.len") - col("x.rk"), col("y.len") - col("y.rk")) + 1
-    val need = floor(((col("x.len") + col("y.len")) * 4 + 8) / 9).cast("long")
-    val cand = prefix.as("x").join(prefix.as("y"),
-        col("x.t") === col("y.t") && col("x.doc_id") < col("y.doc_id") &&
-        col("x.len") * 4 <= col("y.len") * 5 &&
-        col("y.len") * 4 <= col("x.len") * 5)
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
-        (ub - need).as("slack"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(min(col("slack")).as("min_slack"))
-      .filter(col("min_slack") >= 0)
-      .select(col("a_id"), col("b_id"))
-    cand
-      .join(docs.select(col("doc_id").as("a_id"), col("sh").as("a_sh")),
-        Seq("a_id"))
-      .join(docs.select(col("doc_id").as("b_id"), col("sh").as("b_sh")),
-        Seq("b_id"))
-      .select(col("a_id"), col("b_id"),
-        Native.jaccardBp(col("a_sh"), col("b_sh")).as("jaccard_bp"))
-      .filter(col("jaccard_bp") >= 8000L)
-      .orderBy(col("a_id"), col("b_id"))
+    val p = prefixRows(docs, freezeDict(docs))
+    asPairs(jaccardVerify(ppjoinCandidates(p, p)
+      .filter(col("in_id") < col("corpus_id")), docs, docs))
   }
+
   /** Oracle: brute-force exact all-pairs Jaccard — identical text to q18's
     * oracle, and that is the point: q18 must REACH the exact answer
     * through LSH luck (quantified above), q68 must reach it by
@@ -374,65 +338,55 @@ object Documents {
     docs.select(col("doc_id"), col("text"))
 
   /** (doc_id, sh) shingle view of a document frame, empty-shingle rows
-    * dropped — the input contract of [[prefixJaccardJoin]], shared by the
-    * batch split (q79) and the streaming twin
-    * ([[graft.streaming.Streams.nearDupStream]]) so both surfaces carve
+    * dropped — the input contract of every near-dup join (q18, q68, q79,
+    * q82, q155) and of the streaming twin
+    * ([[graft.streaming.Streams.nearDupStream]]), so every surface carves
     * identical shingle sets. */
   private[graft] def shingleDocs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         Native.shingles(Text.toWords(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** R-S (two-sided) core of the prefix-filtered exact Jaccard join.
-    * Same completeness argument as [[prefixJaccardPairs]] — prefix length
-    * `len − ceil(τ·len) + 1` per side, PPJoin positional min-slack bound,
-    * exact `jaccard_bp` verify — with two R-S-specific points:
-    *   - token frequencies (the rarest-first total order) are computed
-    *     over the UNION of both sides: completeness holds for ANY total
-    *     order, but it must be the SAME order on both sides, and union
-    *     frequency keeps the prefix-selectivity argument honest for
-    *     tokens rare in one side but common in the other;
-    *   - the window that assigns in-doc positions partitions by
-    *     (side, doc_id) so overlapping id spaces between the two inputs
-    *     cannot interleave one document's rank sequence with another's.
-    * Callers own disjointness: if the same document appears on both
-    * sides it will match itself at j = 1.0, which is the honest answer
-    * to "is this batch doc already in the corpus". */
+  /** R-S (two-sided) core of the prefix-filtered exact Jaccard join:
+    * both sides' prefixes rank under one dictionary frozen over the UNION
+    * of both sides. Completeness holds for ANY total order, but it must
+    * be the SAME order on both sides, and union frequency keeps the
+    * prefix-selectivity argument honest for tokens rare in one side but
+    * common in the other. Callers own disjointness: if the same document
+    * appears on both sides it will match itself at j = 1.0, which is the
+    * honest answer to "is this batch doc already in the corpus". */
   private[graft] def prefixJaccardJoin(incoming: DataFrame,
                                        corpus: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = incoming.select(lit(0L).as("side"), col("doc_id"), col("sh"))
-      .unionByName(corpus.select(lit(1L).as("side"), col("doc_id"), col("sh")))
-    val toks = docs.select(col("side"), col("doc_id"),
-      size(col("sh")).as("len"), explode(col("sh")).as("t"))
-    val dfreq = toks.groupBy(col("t")).agg(count(lit(1)).as("df"))
-    val needed = floor((col("len") * 4 + 4) / 5).cast("long")
-    val w = Window.partitionBy(col("side"), col("doc_id"))
-      .orderBy(col("df"), col("t"))
-    val prefix = toks.join(dfreq, "t")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= col("len") - needed + 1)
-      .select(col("side"), col("doc_id"), col("len"), col("t"), col("rk"))
-    rsCandidateVerify(
-      prefix.filter(col("side") === 0L).drop("side"),
-      prefix.filter(col("side") === 1L).drop("side"),
-      incoming, corpus)
+    val dict = freezeDict(
+      incoming.select(col("sh")).unionByName(corpus.select(col("sh"))))
+    prefixJaccardProbe(incoming, corpus, dict, prefixRows(corpus, dict))
   }
 
-  /** Candidate + verify tail shared by [[prefixJaccardJoin]] (union-order
-    * prefixes) and [[prefixJaccardProbe]] (frozen-dict index): `px`/`py`
-    * are (doc_id, len, t, rk) prefix rows of the incoming/corpus side
-    * UNDER ONE COMMON TOTAL ORDER — the only property the completeness
-    * theorem needs from them. Equi-join on the token with the tau-length
-    * bounds as residual, PPJoin positional min-slack aggregate, then the
-    * exact `jaccard_bp` verify against the full shingle frames. */
-  private def rsCandidateVerify(px: DataFrame, py: DataFrame,
-                                incoming: DataFrame,
-                                corpus: DataFrame): DataFrame = {
+  /** PPJoin candidates of two sides' prefix rows (doc_id, len, t, rk),
+    * ranked UNDER ONE COMMON TOTAL ORDER — the only property the
+    * completeness theorem needs from them: an equi-join on the token with
+    * the tau-length bounds 4|x| <= 5|y| and 4|y| <= 5|x| as residual, then
+    * the positional min-slack aggregate, as (in_id, corpus_id) pairs.
+    *
+    * PPJoin POSITIONAL filter (r8 VERDICT item 3): `rk` is the token's
+    * position in the doc's FULL rarest-first order (row_number ran before
+    * the prefix cut), so a match on token t at positions (i, j) bounds
+    * the true overlap: tokens before i in x and before j in y are all
+    * strictly below t in the shared total order (≤ min(i-1, j-1) can
+    * pair up), and from t onward the suffixes hold len-i+1 and len-j+1
+    * tokens. Jaccard ≥ 4/5 needs overlap ≥ τ/(1+τ)·(|x|+|y|) =
+    * ceil(4(lx+ly)/9) — the same exact-integer ceil as [[prefixRows]].
+    * EVERY matching prefix token yields a valid bound, so the pair-dedup
+    * becomes a min-aggregate over the bound (identical shuffle key and
+    * partial-agg shape, one extra long of payload) and a pair dies if its
+    * TIGHTEST bound misses — strictly stronger than filtering per match,
+    * and it prunes candidates BEFORE any shingle array is re-joined,
+    * which is where the exact join's cost lives at scale. */
+  private def ppjoinCandidates(px: DataFrame, py: DataFrame): DataFrame = {
     val ub = least(col("x.rk") - 1, col("y.rk") - 1) +
       least(col("x.len") - col("x.rk"), col("y.len") - col("y.rk")) + 1
     val need = floor(((col("x.len") + col("y.len")) * 4 + 8) / 9).cast("long")
-    val cand = px.as("x")
+    px.as("x")
       .join(py.as("y"),
         col("x.t") === col("y.t") &&
         col("x.len") * 4 <= col("y.len") * 5 &&
@@ -443,14 +397,6 @@ object Documents {
       .agg(min(col("slack")).as("min_slack"))
       .filter(col("min_slack") >= 0)
       .select(col("in_id"), col("corpus_id"))
-    cand
-      .join(incoming.select(col("doc_id").as("in_id"), col("sh").as("a_sh")),
-        Seq("in_id"))
-      .join(corpus.select(col("doc_id").as("corpus_id"), col("sh").as("b_sh")),
-        Seq("corpus_id"))
-      .select(col("in_id"), col("corpus_id"),
-        Native.jaccardBp(col("a_sh"), col("b_sh")).as("jaccard_bp"))
-      .filter(col("jaccard_bp") >= 8000L)
   }
 
   // ── q82: frozen-dictionary prefix INDEX — q79's amortized form ──────────
@@ -468,7 +414,17 @@ object Documents {
     * new corpus docs index under the same frozen order without touching
     * any existing row, and dictionary drift costs prefix SELECTIVITY
     * (more candidates), never pairs. A production deployment refreezes on
-    * its rebuild cadence purely as a selectivity tune. */
+    * its rebuild cadence purely as a selectivity tune.
+    *
+    * The prefix is the first `len - ceil(0.8*len) + 1` tokens in
+    * rarest-first order (df, then the token). The ceil is EXACT integer
+    * arithmetic, (4*len+4) div 5: the double literal 0.8 rounds UP
+    * (0x3FE999...A > 4/5), so ceil(len * 0.8D) overshoots by one at every
+    * multiple of 5 and would silently SHORTEN the prefix — a completeness
+    * hole the oracle would only catch on a corpus that happens to plant a
+    * near-threshold pair at one of those lengths. floor of an
+    * exact-integer-valued double quotient is safe (numerator < 2^50,
+    * margin 1/5 >> ulp). */
   private[graft] def prefixRows(docs: DataFrame, dict: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"), size(col("sh")).as("len"),
@@ -516,11 +472,13 @@ object Documents {
 
   /** Probe a prefix index: incoming docs rank under the index's frozen
     * `dict`, candidates come from the probe-vs-index token equi-join, and
-    * the verify stage reads the full shingle frames as in
-    * [[prefixJaccardJoin]]. Exact — returns the identical pair set. */
+    * the verify stage reads the full shingle frames. Exact — returns the
+    * pair set of [[prefixJaccardJoin]], which is this probe over an index
+    * built on the fly under the union dictionary. */
   private[graft] def prefixJaccardProbe(incoming: DataFrame,
       corpus: DataFrame, dict: DataFrame, idx: DataFrame): DataFrame =
-    rsCandidateVerify(prefixRows(incoming, dict), idx, incoming, corpus)
+    jaccardVerify(ppjoinCandidates(prefixRows(incoming, dict), idx),
+      incoming, corpus)
 
   /** q82: q79 through a MATERIALIZED corpus prefix index — the amortized
     * production shape the q79 plan audit points at. The corpus side's
@@ -1568,27 +1526,13 @@ object Documents {
     * [[graft.etl.Ledger.compact]]. Unlike BM25 there is NO
     * statistics half — conjunctive tf ranking reads nothing
     * corpus-global — so the takedown is a single fail-safe write. */
-  /** [[searchIndex]] over a retraction-maintained index: tombstoned docs
-    * are masked by one broadcast anti-join placed AFTER the pushed term
-    * filter — the anti-join sees rows ∝ the probed terms' df, never the
-    * corpus. */
-  private[graft] def searchIndexNet(idx: DataFrame, del: DataFrame,
-      terms: Seq[String], k: Int): DataFrame =
-    idx.filter(col("term").isin(terms: _*))
-      .dropDuplicates()
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("score"))
-      .filter(col("n_terms") === terms.size)
-      .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-
   /** q154: conjunctive search under TAKEDOWN — corpus folds in as two
     * appended batches, the bucket-[20,30) slice retracts as tombstones,
-    * the probe runs the net index. Gated against q99's one-shot SQL on
-    * the REDUCED corpus (fold(appends + deletes) ≡ rebuild on what
-    * remains). */
+    * the probe runs [[searchIndex]] over the index masked by
+    * [[graft.etl.Ledger.mask]] (Catalyst pushes the term filter beneath
+    * the anti-join, so it sees rows ∝ the probed terms' df, never the
+    * corpus). Gated against q99's one-shot SQL on the REDUCED corpus
+    * (fold(appends + deletes) ≡ rebuild on what remains). */
   def keywordSearchRetract(s: SparkSession, d: String): DataFrame = {
     val docs = Ring.carve(Tables.documents(s, d))
     val tag = Tables.datasetTag(s, d, "documents")
@@ -1598,8 +1542,8 @@ object Documents {
       (b, _) => appendPostings(idxP, docText(b)),
       Some((b, id) => TermLedger.tombstone(idxP, delP,
         b.select(col("doc_id")), id)))
-    searchIndexNet(graft.etl.Merge.readArtifact(s, idxP),
-      graft.etl.Ledger.tombstones(s, delP),
+    searchIndex(graft.etl.Ledger.mask(s,
+      graft.etl.Merge.readArtifact(s, idxP), delP),
       Seq("hash", "join", "scan"), 20)
   }
 
@@ -4105,16 +4049,22 @@ object Documents {
   def epochShards(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d).select(col("source"), col("doc_id"),
       size(Text.toWords(col("text"))).cast("long").as("n_tok"))
-    val instances = temperatureCopies(base)
+    copyShards(temperatureCopies(base))
+  }
+
+  /** q139's packing of a per-doc copy frame ([[temperatureCopies]]) —
+    * the engine twin of [[copyShardsSql]]: one row per (doc, copy), keyed
+    * uid = doc_id·16 + copy with its portable hash `h`, cut by
+    * [[shardManifest]]. */
+  private def copyShards(copies: DataFrame): DataFrame =
+    shardManifest(copies
       .select(col("doc_id"), col("n_tok"),
         explode(sequence(lit(1L), col("n_copies"))).as("copy"))
       .select(
         (col("doc_id") * 16L + col("copy")).as("doc_id"),
         Text.portableHash(concat(col("doc_id").cast("string"), lit(":"),
           col("copy").cast("string"))).as("h"),
-        col("n_tok").as("n_tokens"))
-    shardManifest(instances)
-  }
+        col("n_tok").as("n_tokens")))
 
   // ── q148: the END-TO-END curation pipeline as ONE gated query ───────────
   /** The composition production pipelines actually run — and where they
@@ -4158,18 +4108,7 @@ object Documents {
     * q69's bench-broadcast gram join, the export q143's one epoch-sized
     * range shuffle. The stages meet at doc_id semi-joins (key-only). */
   def curationPipeline(s: SparkSession, d: String): DataFrame =
-    shardManifest(curationBase(s, d))
-
-  /** The curated, mixed instance stream q148 shards. */
-  private[graft] def curationBase(s: SparkSession, d: String): DataFrame =
-    temperatureCopies(curatedDocs(s, d))
-      .select(col("doc_id"), col("n_tok"),
-        explode(sequence(lit(1L), col("n_copies"))).as("copy"))
-      .select(
-        (col("doc_id") * 16L + col("copy")).as("doc_id"),
-        Text.portableHash(concat(col("doc_id").cast("string"), lit(":"),
-          col("copy").cast("string"))).as("h"),
-        col("n_tok").as("n_tokens"))
+    copyShards(temperatureCopies(curatedDocs(s, d)))
 
   /** The q148 gate leg UNstaged — the doc ids scoring above the frozen
     * prior — factored so PlanSpec can pin its plan (graft_nb_ FileScan,

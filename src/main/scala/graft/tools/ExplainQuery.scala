@@ -14,7 +14,13 @@ import graft.{Sessions, SparkEntry}
   * Only the initial plan is evidence that a change left a plan alone:
   * the final adaptive plan differs between runs of identical code (AQE
   * re-plans from runtime statistics), so compare initial plans, with
-  * `#<id>` expression ids ignored.
+  * `#<id>` expression ids and `.scala:<line>` call sites ignored (a
+  * checkpointed frame's LogicalRDD names the source line of its
+  * `localCheckpoint`, as q108's does, so an edit above that line moves
+  * the text of a plan it did not change). One initial plan still varies
+  * between JVMs running identical code: q69's two count-distinct
+  * `Expand` projections, and the `gid` filters over them, come out in
+  * either order, so read q69's diff by hand.
   *
   * Usage: runMain graft.tools.ExplainQuery <q1,q2,...> [sfDir] [nobroadcast]
   * `nobroadcast` disables auto-broadcast so small-SF plans take the

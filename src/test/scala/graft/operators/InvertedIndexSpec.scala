@@ -218,7 +218,9 @@ class InvertedIndexSpec extends SparkSpec {
       removed.select(col("doc_id")), "rm0") // replay
     def tomb() = spark.read.parquet(del).select(col("doc_id")).distinct()
     def netProbe(): Seq[(Long, Long)] =
-      Documents.searchIndexNet(spark.read.parquet(idx), tomb(), terms, 1000)
+      Documents.searchIndex(
+        graft.etl.Ledger.mask(spark, spark.read.parquet(idx), del),
+        terms, 1000)
         .as[(Long, Long)].collect().toSeq.sorted
     val expect = rows(Documents.searchIndex(
       Documents.postings(reduced), terms, 1000))

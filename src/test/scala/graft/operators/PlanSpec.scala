@@ -97,6 +97,11 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") &&
            !p.contains("BroadcastNestedLoopJoin"),
       "prefix join degenerated to all-pairs")
+    // the self-join's doc_id < doc_id is a residual of the token join, so
+    // self and mirrored pairs never reach the min-slack aggregate
+    val residual = "SortMergeJoin ?\\[t#.*doc_id#\\d+L? < doc_id#\\d+".r
+    assert(p.linesIterator.exists(residual.findFirstIn(_).isDefined),
+      s"doc_id < doc_id is not in the token join's condition:\n$p")
     // the prefix cut exists (rank over (df, t) per doc)
     assert(p.contains("row_number"), "prefix window missing")
     // the registered query stages the shingled frame ONCE (r21, guide §5:
